@@ -73,8 +73,11 @@ def merge_into_parquet(
     merged = merge_frames(target, source, keys, when_matched, when_not_matched, evolve_schema)
 
     if partition_col:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        merged.write.mode("overwrite").partitionBy(partition_col).parquet(target_path)
+        # per-write option, not the session conf: the caller's later
+        # full overwrites must keep replacing every partition
+        merged.write.mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).partitionBy(partition_col).parquet(target_path)
     else:
         staging = target_path.rstrip("/") + ".__merge_staging__"
         merged.write.mode("overwrite").parquet(staging)

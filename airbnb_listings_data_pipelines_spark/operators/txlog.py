@@ -40,15 +40,36 @@ and is implemented in :meth:`_replay` via `_checkpoint`).
 
 from __future__ import annotations
 
+import contextlib
 import json
 import math
 import os
 import re
 import uuid
+from urllib.parse import quote
 
 from ..localframe import local_df
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
+
+
+def _uri_safe(name: str) -> bool:
+    """True when a file name reads the same in the percent-encoded URI a
+    scan reports as ``_metadata.file_path``: unreserved characters only
+    (every Spark-written name; an adopted layout may hold anything)."""
+    return quote(name, safe=".-_") == name
+
+
+def _scan_basename(uri, files: list[str]):
+    """Basename of a scan's file-URI column, comparable with the raw
+    basenames of ``files``. Decoded JVM-side only when one of them is not
+    URI-safe; a literal '+' (left raw in the URI) is escaped first so URL
+    decoding cannot turn it into a space."""
+    b = F.element_at(F.split(uri, "/"), -1)
+    if all(_uri_safe(f.rsplit("/", 1)[-1]) for f in files):
+        return b
+    return F.url_decode(F.regexp_replace(b, r"\+", "%2B"))
 
 
 def _generated_checks(gen: dict[str, str]) -> dict[str, str]:
@@ -1409,9 +1430,9 @@ class TxLogTable:
             _scan(fs).select(
                 *cols,
                 F.lit(g).alias("__dvg"),
-                F.element_at(
-                    F.split(F.col("_metadata.file_path"), "/"), -1
-                ).alias("__dvf"),
+                _scan_basename(F.col("_metadata.file_path"), fs).alias(
+                    "__dvf"
+                ),
                 F.col("_metadata.row_index").alias("__dvi"),
             )
             for g, fs in enumerate(groups)
@@ -1571,8 +1592,9 @@ class TxLogTable:
         against. Within one scan group basenames are unique, so (group,
         basename) identifies the file exactly — and the scan side can
         compute its key from ``_metadata.file_path`` without parsing the
-        URI-encoded directory components (only the basename, whose
-        Spark-written characters are URI-safe, is extracted JVM-side).
+        URI-encoded directory components (only the basename is
+        extracted JVM-side, decoded by :func:`_scan_basename` when an
+        adopted name is not URI-safe).
         Single group: a pure projection. Multiple groups: one tiny
         broadcast-joined (relative path -> group) mapping."""
         if len(groups) == 1:
@@ -2094,9 +2116,7 @@ class TxLogTable:
         parts = [
             _scan(fs)
             .withColumn("__dvg", F.lit(g))
-            .withColumn(
-                "__dvf", F.element_at(F.split(F.col("__file"), "/"), -1)
-            )
+            .withColumn("__dvf", _scan_basename(F.col("__file"), fs))
             .withColumn("__dvi", F.col("__ridx"))
             for g, fs in enumerate(groups)
         ]
@@ -2139,9 +2159,9 @@ class TxLogTable:
                     for p, l in zip(physical.fields, schema.fields)
                 ],
                 F.lit(g).alias("__dvg"),
-                F.element_at(
-                    F.split(F.col("_metadata.file_path"), "/"), -1
-                ).alias("__dvf"),
+                _scan_basename(F.col("_metadata.file_path"), subset).alias(
+                    "__dvf"
+                ),
                 F.col("_metadata.row_index").alias("__dvi"),
             )
 
@@ -2259,8 +2279,6 @@ class TxLogTable:
                     # sidecar partition the file's rows EXACTLY — a
                     # nondeterministic condition evaluated twice could
                     # both keep and record-as-deleted the same row
-                    from pyspark.storagelevel import StorageLevel
-
                     persisted = base_df.withColumn("__hit", hit).persist(
                         StorageLevel.MEMORY_AND_DISK
                     )
@@ -2454,8 +2472,6 @@ class TxLogTable:
                     # recomputes are materialized once, so the feed can
                     # never diverge from the committed rows (the
                     # recomputed post-images land in the sidecar)
-                    from pyspark.storagelevel import StorageLevel
-
                     persisted = flat.persist(StorageLevel.MEMORY_AND_DISK)
                     flat = persisted
                 try:
@@ -2665,8 +2681,6 @@ class TxLogTable:
             # disagrees with the masked positions and wrongly retire a
             # file with live rows; one materialization (O(matched rows),
             # the DV cost model's own budget) single-sources all three.
-            from pyspark.storagelevel import StorageLevel
-
             matched = scan.filter(hit).persist(StorageLevel.MEMORY_AND_DISK)
             # per-file match counts keyed by the scan's file-path URI,
             # decoded to relative paths driver-side (_rel_path handles
@@ -2816,7 +2830,14 @@ class TxLogTable:
         the key set when small (the daily-batch case); a genuinely huge
         source degrades to one shuffle semi-join, still O(|target| +
         |source|). NULL source keys never match (SQL equality) — they
-        surface as inserts downstream, touching no file."""
+        surface as inserts downstream, touching no file.
+
+        ``source`` must be the SAME materialized rows the merge join
+        reads (:func:`merge_into_txlog` passes its read-once copy): the
+        discovery is only correct for the keys it saw — a key the join
+        sees in a file discovery missed would merge as a duplicate
+        insert — and re-running the source's lineage here is the
+        dominant cost of a small upsert."""
         if not files:
             return []
         scan = self._scan_with_filepath(files, self._schema_at(), dvs=dvs)
@@ -5616,6 +5637,27 @@ def _simple_form_clauses(
     }
 
 
+@contextlib.contextmanager
+def _read_once(source: DataFrame):
+    """Yield ``source`` materialized for the length of one MERGE call.
+    Touched-file discovery, the merge join and every commit retry are
+    separate Spark jobs; without this each one re-runs the source's
+    whole lineage (a Python-built or streaming batch pays its Python
+    stage per consumer), and a nondeterministic source shows each
+    consumer different rows — discovery misses a file the join then
+    treats as an insert, duplicating the key. Lazy: a txn replay that
+    returns before any job builds nothing. A source the caller already
+    cached is read from that cache and left cached."""
+    if source.storageLevel != StorageLevel.NONE:
+        yield source
+        return
+    held = source.persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        yield held
+    finally:
+        held.unpersist()
+
+
 def _merge_into_dv(
     spark: SparkSession,
     table: TxLogTable,
@@ -5628,8 +5670,9 @@ def _merge_into_dv(
     gen_recompute: dict[str, str] | None = None,
 ) -> DataFrame:
     """Merge-on-read MERGE (Delta's deletion-vector MERGE physical
-    design), the :func:`merge_into_txlog` ``mode='dv'`` body. Per
-    attempt:
+    design), the :func:`merge_into_txlog` ``mode='dv'`` body. ``source``
+    arrives read-once from there, so every attempt sees the same rows.
+    Per attempt:
 
     1. touched-file discovery — the same one-semi-join scan as
        copy-on-write (every live file when a NOT MATCHED BY SOURCE
@@ -5736,8 +5779,6 @@ def _merge_into_dv(
         # doomed_pos fix covered only counts-vs-sidecar; this covers the
         # data files too). Rows in no class are filtered out, so the
         # persist is O(changed rows + inserts), the DV budget.
-        from pyspark.storagelevel import StorageLevel
-
         flat = (
             j.select(
                 *[pick(c) for c in data_cols],
@@ -5767,12 +5808,15 @@ def _merge_into_dv(
         # encoded directory components), so the per-file counts derive
         # from a driver-side pyarrow read of the one sidecar AFTER it is
         # written instead of a groupBy/collect job BEFORE it. Foreign-
-        # adopted layouts with colliding basenames keep the collect path.
+        # adopted layouts keep the collect path when basenames collide
+        # or a basename is not URI-safe: the scan reports percent-encoded
+        # URIs, so a raw basename holding a space or '%' would match no
+        # doomed position and silently keep the old rows live.
         _bn_rel: dict[str, str] | None = {}
         for _f in touched_files:
             _b = _f.rsplit("/", 1)[-1]
-            if _b in _bn_rel:
-                _bn_rel = None  # collision: foreign layout, slow path
+            if _b in _bn_rel or not _uri_safe(_b):
+                _bn_rel = None  # foreign layout: slow path
                 break
             _bn_rel[_b] = _f
         counts: dict[str, int] = {}
@@ -5992,6 +6036,19 @@ def merge_into_txlog(
     snapshot and retries — correct because the merge result is a pure
     function of (target snapshot, source).
 
+    The source is READ ONCE per call: it is persisted
+    (``MEMORY_AND_DISK``) before the retry loop and released when the
+    call returns or raises, so touched-file discovery, the merge join
+    and every retry read the same rows. That makes the result a
+    function of the source even when the source is not deterministic
+    (``rand()``, a nondeterministic UDF, a tie-broken window, a view
+    over shifting data) — evaluated per consumer, discovery and the join
+    would see different keys and duplicate them — and it spares a
+    Python-built or streaming batch one full evaluation per consumer. A
+    source the caller already cached (``storageLevel`` not ``NONE``) is
+    read from the caller's cache and left cached; no setting turns the
+    materialization off.
+
     ``txn=(app_id, version)`` makes the merge idempotent per transaction
     (checked before work and inside the retry loop): a crash-replayed
     streaming micro-batch that already committed is a no-op — see
@@ -6046,435 +6103,434 @@ def merge_into_txlog(
     DV delta) and merge-on-read never rewrites touched files."""
     from .merge import merge_clauses, merge_clauses_with_cdc, merge_frames
 
-    assert rewrite in ("touched", "full")
-    if table.row_tracking_enabled():
-        # the physical id column is ENGINE-OWNED (same contract as
-        # identity columns): no clause may SET/INSERT it — the target
-        # frame carries it as an ordinary column for the rewrite, so
-        # clause validation alone would accept the assignment and
-        # silently corrupt stable ids — and the source may not carry it
-        # (SET */INSERT * under evolve_schema would pick it up).
-        # Review finding, round 12. Guards BOTH physical modes.
-        if _ROW_ID_PHYS in source.columns:
-            raise ValueError(
-                f"source carries reserved column {_ROW_ID_PHYS!r} — it "
-                "is engine-assigned row-tracking state; rename or drop "
-                "it from the source"
+    with _read_once(source) as source:
+        assert rewrite in ("touched", "full")
+        if table.row_tracking_enabled():
+            # the physical id column is ENGINE-OWNED (same contract as
+            # identity columns): no clause may SET/INSERT it — the target
+            # frame carries it as an ordinary column for the rewrite, so
+            # clause validation alone would accept the assignment and
+            # silently corrupt stable ids — and the source may not carry it
+            # (SET */INSERT * under evolve_schema would pick it up).
+            # Review finding, round 12. Guards BOTH physical modes.
+            if _ROW_ID_PHYS in source.columns:
+                raise ValueError(
+                    f"source carries reserved column {_ROW_ID_PHYS!r} — it "
+                    "is engine-assigned row-tracking state; rename or drop "
+                    "it from the source"
+                )
+            _cl_rt = clauses if clauses is not None else _simple_form_clauses(
+                when_matched, when_not_matched, matched_set, insert_values
             )
-        _cl_rt = clauses if clauses is not None else _simple_form_clauses(
-            when_matched, when_not_matched, matched_set, insert_values
-        )
-        for _kind, _key in (
-            ("matched", "set"),
-            ("not_matched", "values"),
-            ("not_matched_by_source", "set"),
-        ):
-            for _c in _cl_rt.get(_kind) or []:
-                if _ROW_ID_PHYS in (_c.get(_key) or {}):
-                    raise ValueError(
-                        f"{_kind} clause assigns {_ROW_ID_PHYS!r} — row-"
-                        "tracking ids are engine-assigned and cannot be "
-                        "set by MERGE"
-                    )
-    ident_meta = table.identity_meta()
-    if ident_meta:
-        # identity columns are GENERATED ALWAYS: no clause may assign
-        # them and the source may not carry them. Matched rows keep
-        # their stored ids (the clause plan's baseline is the target
-        # value), NOT MATCHED inserts surface with NULL ids and are
-        # assigned beyond the current high watermark inside the merge
-        # projection below — Delta's identity MERGE contract.
-        _cl_i = clauses if clauses is not None else _simple_form_clauses(
-            when_matched, when_not_matched, matched_set, insert_values
-        )
-        _ident_assigned: set[str] = set()
-        for _c in (_cl_i.get("matched") or []) + (
-            _cl_i.get("not_matched_by_source") or []
-        ):
-            _ident_assigned |= set(_c.get("set") or {})
-        for _c in _cl_i.get("not_matched") or []:
-            _ident_assigned |= set(_c.get("values") or {})
-        _bad = sorted(
-            (_ident_assigned | set(source.columns)) & set(ident_meta)
-        )
-        if _bad:
-            raise ValueError(
-                f"identity column(s) {_bad} are GENERATED ALWAYS "
-                "(allowExplicitInsert=false): a MERGE clause may not "
-                "assign them and the source may not carry them — matched "
-                "rows keep their ids, inserted rows are assigned beyond "
-                "the watermark by the engine"
+            for _kind, _key in (
+                ("matched", "set"),
+                ("not_matched", "values"),
+                ("not_matched_by_source", "set"),
+            ):
+                for _c in _cl_rt.get(_kind) or []:
+                    if _ROW_ID_PHYS in (_c.get(_key) or {}):
+                        raise ValueError(
+                            f"{_kind} clause assigns {_ROW_ID_PHYS!r} — row-"
+                            "tracking ids are engine-assigned and cannot be "
+                            "set by MERGE"
+                        )
+        ident_meta = table.identity_meta()
+        if ident_meta:
+            # identity columns are GENERATED ALWAYS: no clause may assign
+            # them and the source may not carry them. Matched rows keep
+            # their stored ids (the clause plan's baseline is the target
+            # value), NOT MATCHED inserts surface with NULL ids and are
+            # assigned beyond the current high watermark inside the merge
+            # projection below — Delta's identity MERGE contract.
+            _cl_i = clauses if clauses is not None else _simple_form_clauses(
+                when_matched, when_not_matched, matched_set, insert_values
             )
-        if clauses is None:
-            # the simple whole-row form requires source/target schema
-            # equality, which an identity table's source can never meet
-            # (the engine owns the column). Route through the clause
-            # machinery instead: UPDATE SET * / INSERT * ignore columns
-            # ABSENT from the source — exactly identity's contract
-            # (matched rows keep their ids, inserts NULL-fill).
-            clauses = _cl_i
-            when_matched, when_not_matched = "update", "insert"
-            matched_set = insert_values = None
-    # Delta's generated-column MERGE rule: generated columns no clause
-    # assigns (explicitly via SET/VALUES, or implicitly by appearing in
-    # a whole-row source) RECOMPUTE over the merge output — deterministic
-    # expressions reproduce the stored value for untouched rows, so one
-    # whole-frame projection is exact. Explicitly assigned generated
-    # columns stay writer-supplied and the _write_data chokepoint
-    # validates them.
-    gen_recompute: dict[str, str] = {}
-    _gen_all = table.generated_exprs()
-    if _gen_all:
-        _cl = clauses if clauses is not None else _simple_form_clauses(
-            when_matched, when_not_matched, matched_set, insert_values
-        )
-        _assigned: set[str] = set()
-        _whole_row = False
-        for _c in _cl.get("matched") or []:
-            if _c.get("action", "update") == "update":
-                if _c.get("set"):
-                    _assigned |= set(_c["set"])
+            _ident_assigned: set[str] = set()
+            for _c in (_cl_i.get("matched") or []) + (
+                _cl_i.get("not_matched_by_source") or []
+            ):
+                _ident_assigned |= set(_c.get("set") or {})
+            for _c in _cl_i.get("not_matched") or []:
+                _ident_assigned |= set(_c.get("values") or {})
+            _bad = sorted(
+                (_ident_assigned | set(source.columns)) & set(ident_meta)
+            )
+            if _bad:
+                raise ValueError(
+                    f"identity column(s) {_bad} are GENERATED ALWAYS "
+                    "(allowExplicitInsert=false): a MERGE clause may not "
+                    "assign them and the source may not carry them — matched "
+                    "rows keep their ids, inserted rows are assigned beyond "
+                    "the watermark by the engine"
+                )
+            if clauses is None:
+                # the simple whole-row form requires source/target schema
+                # equality, which an identity table's source can never meet
+                # (the engine owns the column). Route through the clause
+                # machinery instead: UPDATE SET * / INSERT * ignore columns
+                # ABSENT from the source — exactly identity's contract
+                # (matched rows keep their ids, inserts NULL-fill).
+                clauses = _cl_i
+                when_matched, when_not_matched = "update", "insert"
+                matched_set = insert_values = None
+        # Delta's generated-column MERGE rule: generated columns no clause
+        # assigns (explicitly via SET/VALUES, or implicitly by appearing in
+        # a whole-row source) RECOMPUTE over the merge output — deterministic
+        # expressions reproduce the stored value for untouched rows, so one
+        # whole-frame projection is exact. Explicitly assigned generated
+        # columns stay writer-supplied and the _write_data chokepoint
+        # validates them.
+        gen_recompute: dict[str, str] = {}
+        _gen_all = table.generated_exprs()
+        if _gen_all:
+            _cl = clauses if clauses is not None else _simple_form_clauses(
+                when_matched, when_not_matched, matched_set, insert_values
+            )
+            _assigned: set[str] = set()
+            _whole_row = False
+            for _c in _cl.get("matched") or []:
+                if _c.get("action", "update") == "update":
+                    if _c.get("set"):
+                        _assigned |= set(_c["set"])
+                    else:
+                        _whole_row = True
+            for _c in _cl.get("not_matched") or []:
+                if _c.get("values"):
+                    _assigned |= set(_c["values"])
                 else:
                     _whole_row = True
-        for _c in _cl.get("not_matched") or []:
-            if _c.get("values"):
-                _assigned |= set(_c["values"])
-            else:
-                _whole_row = True
-        for _c in _cl.get("not_matched_by_source") or []:
-            if _c.get("action") == "update" and _c.get("set"):
-                _assigned |= set(_c["set"])
-        if _whole_row:
-            _assigned |= set(source.columns)
-        # recompute only where values can actually change: inserted rows
-        # always need their generated columns computed; updated rows only
-        # when the expression references an assigned column (a delete-only
-        # merge recomputes NOTHING — and keeps cdc=True usable)
-        _has_insert = bool(_cl.get("not_matched"))
-        gen_recompute = {
-            g: e
-            for g, e in _gen_all.items()
-            if g not in _assigned
-            and (
-                _has_insert
-                or any(
-                    re.search(rf"\b{re.escape(c)}\b", e) for c in _assigned
+            for _c in _cl.get("not_matched_by_source") or []:
+                if _c.get("action") == "update" and _c.get("set"):
+                    _assigned |= set(_c["set"])
+            if _whole_row:
+                _assigned |= set(source.columns)
+            # recompute only where values can actually change: inserted rows
+            # always need their generated columns computed; updated rows only
+            # when the expression references an assigned column (a delete-only
+            # merge recomputes NOTHING — and keeps cdc=True usable)
+            _has_insert = bool(_cl.get("not_matched"))
+            gen_recompute = {
+                g: e
+                for g, e in _gen_all.items()
+                if g not in _assigned
+                and (
+                    _has_insert
+                    or any(
+                        re.search(rf"\b{re.escape(c)}\b", e) for c in _assigned
+                    )
                 )
-            )
-        }
-        if gen_recompute and clauses is None and not matched_set and not insert_values:
-            # whole-row form requires source/target schema equality;
-            # sources naturally omit generated columns, so widen with
-            # typed NULLs — the post-merge recompute overwrites them
-            from pyspark.sql.types import StructType as _ST0
-
-            _gt0 = {
-                f.name: f.dataType
-                for f in _ST0.fromJson(
-                    json.loads(table._schema_at())
-                ).fields
             }
-            for g in gen_recompute:
-                if g not in source.columns and g in _gt0:
-                    source = source.withColumn(
-                        g, F.lit(None).cast(_gt0[g])
-                    )
-    if clauses is not None and (
-        matched_set or insert_values
-        or when_matched != "update" or when_not_matched != "insert"
-    ):
-        raise ValueError(
-            "clauses= is the full MERGE surface — it cannot combine "
-            "with when_matched/when_not_matched/matched_set/"
-            "insert_values (evolve_schema composes with it)"
-        )
-    if mode == "dv":
-        if cdc:
-            raise ValueError(
-                "cdc=True is redundant with mode='dv': deletion-"
-                "vector commits already feed row-exact deltas — "
-                "read_changes() derives the changed rows from the "
-                "DV delta directly; drop cdc=True"
-            )
-        if rewrite != "touched":
-            raise ValueError(
-                "rewrite= applies to copy-on-write only — mode='dv' "
-                "never rewrites touched files"
-            )
-        cl = clauses if clauses is not None else _simple_form_clauses(
-            when_matched, when_not_matched, matched_set, insert_values
-        )
-        return _merge_into_dv(
-            spark, table, source, keys, cl, evolve_schema, max_retries, txn,
-            gen_recompute=gen_recompute,
-        )
-    if mode != "cow":
-        raise ValueError(f"unknown MERGE mode {mode!r} (cow|dv)")
-    rt_on = table.row_tracking_enabled()
-    if rt_on and clauses is None:
-        # row tracking rides the CLAUSE plan: the target frame carries
-        # the physical-only id column as an ordinary extra column, which
-        # the whole-row merge_frames contract would reject — convert the
-        # simple form (the documented-equivalent conversion the cdc and
-        # dv paths already share), preserving its loud whole-row schema
-        # contract against the LOGICAL columns first
-        if not (matched_set or insert_values) and not evolve_schema:
-            _sj = table._schema_at()
-            _tcols = (
-                {f["name"] for f in json.loads(_sj)["fields"]}
-                if _sj is not None
-                else set(table.read().columns) - {_ROW_ID_PHYS}
-            )
-            if set(source.columns) != _tcols:
-                raise AssertionError("source/target schemas must match")
-        clauses = _simple_form_clauses(
-            when_matched, when_not_matched, matched_set, insert_values
-        )
-        matched_set = insert_values = None
-    for _attempt in range(max_retries + 1):
-        # base_version FIRST, txn check SECOND (same reasoning as
-        # TxLogTable.append): a same-batch racer committing after our
-        # check then conflicts with our commit, which re-runs the check.
-        base_version, base_files, dvs = table._replay_full()
-        if txn is not None:
-            last = table.last_txn_version(txn[0])
-            if last is not None and txn[1] <= last:
-                return table.read()
-        # rewrite='full' forces the whole-table path, so the insert-only
-        # source pruning (src_eff) never runs there — gate on the mode or
-        # the merge call below would read an unbound src_eff
-        insert_only = rewrite != "full" and clauses is not None and not (
-            clauses.get("matched") or clauses.get("not_matched_by_source")
-        )
-        if rewrite == "full" or (
-            clauses is not None and clauses.get("not_matched_by_source")
-        ):
-            # a NOT MATCHED BY SOURCE clause can hit any target row:
-            # every live file is a rewrite candidate (Delta's rule)
-            removes = base_files
-            if rt_on:
-                # row tracking: surviving rows carry their stable ids BY
-                # VALUE through the rewrite (matched post-images and
-                # carried rows keep the attached id — the clause plan's
-                # baseline is the target value; inserts surface NULL and
-                # derive fresh ids from their file's base at read)
-                target = (
-                    table._rt_cow_read(base_files, table._schema_at(), dvs)
-                    if base_files
-                    else table._empty().withColumn(
-                        _ROW_ID_PHYS, F.lit(None).cast("long")
-                    )
-                )
-            else:
-                target = table.read()
-        elif insert_only:
-            # Delta's insert-only MERGE optimization: matched rows keep
-            # their target values by construction, so nothing is
-            # rewritten — one key-pruned anti-join filters the source
-            # to genuinely-new keys, and the commit only ADDS files
-            removes = []
-            target = table._empty()
-            src_eff = source
-            if base_files:
-                src_eff = source.join(
-                    table._read_files(
-                        base_files, table._schema_at(), dvs=dvs
-                    ).select(*keys),
-                    keys,
-                    "left_anti",
-                )
-        else:
-            removes = table._touched_by_keys(base_files, source, keys, dvs=dvs)
-            if removes:
-                target = (
-                    table._rt_cow_read(removes, table._schema_at(), dvs)
-                    if rt_on
-                    else table._read_files(
-                        removes, table._schema_at(), dvs=dvs
-                    )
-                )
-            else:
-                target = table._empty()
-                if rt_on:
-                    target = target.withColumn(
-                        _ROW_ID_PHYS, F.lit(None).cast("long")
-                    )
-        # post-image transform shared by every construction path below:
-        # generated-column recompute then identity assignment, operating
-        # on plain post-image columns — so it applies identically to the
-        # merged frame (non-cdc paths) and to the single-pass flat frame
-        # (cdc path), and the values are single-sourced either way
-        cur_ident: dict[str, dict] = (
-            # re-read per attempt: a racing commit may have advanced a
-            # high watermark — assignment must start beyond the CURRENT
-            # one (a lost conflict drops our files and re-runs this)
-            table.identity_meta()
-            if ident_meta
-            else {}
-        )
+            if gen_recompute and clauses is None and not matched_set and not insert_values:
+                # whole-row form requires source/target schema equality;
+                # sources naturally omit generated columns, so widen with
+                # typed NULLs — the post-merge recompute overwrites them
+                from pyspark.sql.types import StructType as _ST0
 
-        def _post(df: DataFrame) -> DataFrame:
-            if gen_recompute:
-                from pyspark.sql.types import StructType as _ST
-
-                _gt = {
+                _gt0 = {
                     f.name: f.dataType
-                    for f in _ST.fromJson(
+                    for f in _ST0.fromJson(
                         json.loads(table._schema_at())
                     ).fields
                 }
-                for g, e in gen_recompute.items():
-                    df = df.withColumn(g, F.expr(e).cast(_gt[g]))
-            for c, m in cur_ident.items():
-                base = m["start"] if m["hw"] is None else m["hw"] + m["step"]
-                df = df.withColumn(
-                    c,
-                    F.when(
-                        F.col(c).isNull(),
-                        (
-                            F.lit(base)
-                            + F.lit(m["step"])
-                            * F.monotonically_increasing_id()
-                        ).cast("long"),
-                    ).otherwise(F.col(c)),
+                for g in gen_recompute:
+                    if g not in source.columns and g in _gt0:
+                        source = source.withColumn(
+                            g, F.lit(None).cast(_gt0[g])
+                        )
+        if clauses is not None and (
+            matched_set or insert_values
+            or when_matched != "update" or when_not_matched != "insert"
+        ):
+            raise ValueError(
+                "clauses= is the full MERGE surface — it cannot combine "
+                "with when_matched/when_not_matched/matched_set/"
+                "insert_values (evolve_schema composes with it)"
+            )
+        if mode == "dv":
+            if cdc:
+                raise ValueError(
+                    "cdc=True is redundant with mode='dv': deletion-"
+                    "vector commits already feed row-exact deltas — "
+                    "read_changes() derives the changed rows from the "
+                    "DV delta directly; drop cdc=True"
                 )
-            return df
-
-        persisted = None
-        cdc_df: DataFrame | None = None
-        if cdc and not insert_only:
-            # SINGLE-PASS cdc (round 11): one persisted clause-plan
-            # evaluation feeds BOTH the committed rows and the change
-            # sidecar — nondeterministic conditions/SET expressions,
-            # generated-column recomputes, and identity assignment can
-            # no longer desynchronize the feed (they are materialized
-            # once). merge_clauses_with_cdc shares prepare_clause_plan,
-            # so the semantics cannot drift from the non-cdc paths.
-            if clauses is None and not (matched_set or insert_values):
-                # preserve the simple whole-row form's loud contract
-                # (merge_frames asserts it; the clause plan would
-                # silently keep target values for absent columns)
-                if not evolve_schema and set(source.columns) != set(
-                    target.columns
-                ):
-                    raise AssertionError(
-                        "source/target schemas must match"
-                    )
+            if rewrite != "touched":
+                raise ValueError(
+                    "rewrite= applies to copy-on-write only — mode='dv' "
+                    "never rewrites touched files"
+                )
             cl = clauses if clauses is not None else _simple_form_clauses(
                 when_matched, when_not_matched, matched_set, insert_values
             )
-            merged, cdc_df, persisted = merge_clauses_with_cdc(
-                target,
-                source,
-                keys,
-                matched=cl.get("matched"),
-                not_matched=cl.get("not_matched"),
-                not_matched_by_source=cl.get("not_matched_by_source"),
-                evolve_schema=evolve_schema,
-                post_transform=_post,
+            return _merge_into_dv(
+                spark, table, source, keys, cl, evolve_schema, max_retries, txn,
+                gen_recompute=gen_recompute,
             )
-        elif clauses is not None:
-            merged = _post(
-                merge_clauses(
-                    target,
-                    src_eff if insert_only else source,
-                    keys,
-                    matched=clauses.get("matched"),
-                    not_matched=clauses.get("not_matched"),
-                    not_matched_by_source=clauses.get(
-                        "not_matched_by_source"
-                    ),
-                    evolve_schema=evolve_schema,
+        if mode != "cow":
+            raise ValueError(f"unknown MERGE mode {mode!r} (cow|dv)")
+        rt_on = table.row_tracking_enabled()
+        if rt_on and clauses is None:
+            # row tracking rides the CLAUSE plan: the target frame carries
+            # the physical-only id column as an ordinary extra column, which
+            # the whole-row merge_frames contract would reject — convert the
+            # simple form (the documented-equivalent conversion the cdc and
+            # dv paths already share), preserving its loud whole-row schema
+            # contract against the LOGICAL columns first
+            if not (matched_set or insert_values) and not evolve_schema:
+                _sj = table._schema_at()
+                _tcols = (
+                    {f["name"] for f in json.loads(_sj)["fields"]}
+                    if _sj is not None
+                    else set(table.read().columns) - {_ROW_ID_PHYS}
                 )
+                if set(source.columns) != _tcols:
+                    raise AssertionError("source/target schemas must match")
+            clauses = _simple_form_clauses(
+                when_matched, when_not_matched, matched_set, insert_values
             )
-        else:
-            merged = _post(
-                merge_frames(
-                    target, source, keys, when_matched, when_not_matched,
-                    evolve_schema, matched_set=matched_set,
-                    insert_values=insert_values,
-                )
+            matched_set = insert_values = None
+        for _attempt in range(max_retries + 1):
+            # base_version FIRST, txn check SECOND (same reasoning as
+            # TxLogTable.append): a same-batch racer committing after our
+            # check then conflicts with our commit, which re-runs the check.
+            base_version, base_files, dvs = table._replay_full()
+            if txn is not None:
+                last = table.last_txn_version(txn[0])
+                if last is not None and txn[1] <= last:
+                    return table.read()
+            # rewrite='full' forces the whole-table path, so the insert-only
+            # source pruning (src_eff) never runs there — gate on the mode or
+            # the merge call below would read an unbound src_eff
+            insert_only = rewrite != "full" and clauses is not None and not (
+                clauses.get("matched") or clauses.get("not_matched_by_source")
             )
-        if cdc and insert_only:
-            # insert-only: the merge output IS the change set — persist
-            # it so the data write and the sidecar write read the SAME
-            # materialized rows (identity assignment is not stable
-            # across executions)
-            from pyspark.storagelevel import StorageLevel
+            if rewrite == "full" or (
+                clauses is not None and clauses.get("not_matched_by_source")
+            ):
+                # a NOT MATCHED BY SOURCE clause can hit any target row:
+                # every live file is a rewrite candidate (Delta's rule)
+                removes = base_files
+                if rt_on:
+                    # row tracking: surviving rows carry their stable ids BY
+                    # VALUE through the rewrite (matched post-images and
+                    # carried rows keep the attached id — the clause plan's
+                    # baseline is the target value; inserts surface NULL and
+                    # derive fresh ids from their file's base at read)
+                    target = (
+                        table._rt_cow_read(base_files, table._schema_at(), dvs)
+                        if base_files
+                        else table._empty().withColumn(
+                            _ROW_ID_PHYS, F.lit(None).cast("long")
+                        )
+                    )
+                else:
+                    target = table.read()
+            elif insert_only:
+                # Delta's insert-only MERGE optimization: matched rows keep
+                # their target values by construction, so nothing is
+                # rewritten — one key-pruned anti-join filters the source
+                # to genuinely-new keys, and the commit only ADDS files
+                removes = []
+                target = table._empty()
+                src_eff = source
+                if base_files:
+                    src_eff = source.join(
+                        table._read_files(
+                            base_files, table._schema_at(), dvs=dvs
+                        ).select(*keys),
+                        keys,
+                        "left_anti",
+                    )
+            else:
+                removes = table._touched_by_keys(base_files, source, keys, dvs=dvs)
+                if removes:
+                    target = (
+                        table._rt_cow_read(removes, table._schema_at(), dvs)
+                        if rt_on
+                        else table._read_files(
+                            removes, table._schema_at(), dvs=dvs
+                        )
+                    )
+                else:
+                    target = table._empty()
+                    if rt_on:
+                        target = target.withColumn(
+                            _ROW_ID_PHYS, F.lit(None).cast("long")
+                        )
+            # post-image transform shared by every construction path below:
+            # generated-column recompute then identity assignment, operating
+            # on plain post-image columns — so it applies identically to the
+            # merged frame (non-cdc paths) and to the single-pass flat frame
+            # (cdc path), and the values are single-sourced either way
+            cur_ident: dict[str, dict] = (
+                # re-read per attempt: a racing commit may have advanced a
+                # high watermark — assignment must start beyond the CURRENT
+                # one (a lost conflict drops our files and re-runs this)
+                table.identity_meta()
+                if ident_meta
+                else {}
+            )
 
-            persisted = merged.persist(StorageLevel.MEMORY_AND_DISK)
-            merged = persisted
-            cdc_df = persisted.withColumn("_change_type", F.lit("insert"))
-        # column-mapped table + schema evolution: any column NEW to the
-        # mapping writes under a FRESH physical name and the merge
-        # commit records the extended mapping — otherwise a previously
-        # DROPPED column's identity-mapped name would resurrect the old
-        # files' values (or collide with a renamed column's physical
-        # name). Same rule as add_column.
-        mapping = table._mapping_at()
-        new_mapping = None
-        if mapping:
-            # the physical-only row-id column is never column-mapped —
-            # it lives under its fixed physical name in every file
-            absent = [
-                c
-                for c in merged.columns
-                if c not in mapping and c != _ROW_ID_PHYS
-            ]
-            if absent:
-                new_mapping = dict(mapping)
-                for c in absent:
-                    new_mapping[c] = f"col_{uuid.uuid4().hex[:12]}"
-        try:
-            adds = table._write_data(
-                merged,
-                _mapping=new_mapping
-                if new_mapping is not None
-                else _MAPPING_DEFAULT,
-            )
-            cdc_rel: str | None = None
-            if cdc_df is not None:
-                # the change feed is LOGICAL rows — drop the physical-
-                # only row-id column (lenient no-op when absent)
-                cdc_rel = table._write_cdc(cdc_df.drop(_ROW_ID_PHYS))
-        except Exception:
-            # pre-commit failure (CheckViolation, IO): don't leak the
-            # cached single-pass frame
-            if persisted is not None:
-                persisted.unpersist()
-            raise
-        # record the STORED schema (field metadata intact — a projection
-        # strips identity/generation annotations) widened by evolution,
-        # plus any identity watermark advance read from the new files'
-        # footer stats (clamped monotone: a no-insert merge's files hold
-        # only preserved ids at/below the current watermark)
-        commit_schema = _dml_evolved_schema(
-            table._schema_at(), merged.schema.json()
-        )
-        if cur_ident and adds:
-            hws = table._identity_new_hw(adds, cur_ident)
-            ident_hws = {}
-            for c, m in cur_ident.items():
-                far = max if m["step"] > 0 else min
-                ident_hws[c] = (
-                    hws[c] if m["hw"] is None else far(m["hw"], hws[c])
+            def _post(df: DataFrame) -> DataFrame:
+                if gen_recompute:
+                    from pyspark.sql.types import StructType as _ST
+
+                    _gt = {
+                        f.name: f.dataType
+                        for f in _ST.fromJson(
+                            json.loads(table._schema_at())
+                        ).fields
+                    }
+                    for g, e in gen_recompute.items():
+                        df = df.withColumn(g, F.expr(e).cast(_gt[g]))
+                for c, m in cur_ident.items():
+                    base = m["start"] if m["hw"] is None else m["hw"] + m["step"]
+                    df = df.withColumn(
+                        c,
+                        F.when(
+                            F.col(c).isNull(),
+                            (
+                                F.lit(base)
+                                + F.lit(m["step"])
+                                * F.monotonically_increasing_id()
+                            ).cast("long"),
+                        ).otherwise(F.col(c)),
+                    )
+                return df
+
+            persisted = None
+            cdc_df: DataFrame | None = None
+            if cdc and not insert_only:
+                # SINGLE-PASS cdc (round 11): one persisted clause-plan
+                # evaluation feeds BOTH the committed rows and the change
+                # sidecar — nondeterministic conditions/SET expressions,
+                # generated-column recomputes, and identity assignment can
+                # no longer desynchronize the feed (they are materialized
+                # once). merge_clauses_with_cdc shares prepare_clause_plan,
+                # so the semantics cannot drift from the non-cdc paths.
+                if clauses is None and not (matched_set or insert_values):
+                    # preserve the simple whole-row form's loud contract
+                    # (merge_frames asserts it; the clause plan would
+                    # silently keep target values for absent columns)
+                    if not evolve_schema and set(source.columns) != set(
+                        target.columns
+                    ):
+                        raise AssertionError(
+                            "source/target schemas must match"
+                        )
+                cl = clauses if clauses is not None else _simple_form_clauses(
+                    when_matched, when_not_matched, matched_set, insert_values
                 )
-            commit_schema = _identity_hw_update(commit_schema, ident_hws)
-        try:
-            table._commit_dml(
-                adds=adds, removes=removes, base_version=base_version,
-                op="merge", schema=commit_schema, txn=txn,
-                column_mapping=new_mapping, cdc=cdc_rel,
+                merged, cdc_df, persisted = merge_clauses_with_cdc(
+                    target,
+                    source,
+                    keys,
+                    matched=cl.get("matched"),
+                    not_matched=cl.get("not_matched"),
+                    not_matched_by_source=cl.get("not_matched_by_source"),
+                    evolve_schema=evolve_schema,
+                    post_transform=_post,
+                )
+            elif clauses is not None:
+                merged = _post(
+                    merge_clauses(
+                        target,
+                        src_eff if insert_only else source,
+                        keys,
+                        matched=clauses.get("matched"),
+                        not_matched=clauses.get("not_matched"),
+                        not_matched_by_source=clauses.get(
+                            "not_matched_by_source"
+                        ),
+                        evolve_schema=evolve_schema,
+                    )
+                )
+            else:
+                merged = _post(
+                    merge_frames(
+                        target, source, keys, when_matched, when_not_matched,
+                        evolve_schema, matched_set=matched_set,
+                        insert_values=insert_values,
+                    )
+                )
+            if cdc and insert_only:
+                # insert-only: the merge output IS the change set — persist
+                # it so the data write and the sidecar write read the SAME
+                # materialized rows (identity assignment is not stable
+                # across executions)
+                persisted = merged.persist(StorageLevel.MEMORY_AND_DISK)
+                merged = persisted
+                cdc_df = persisted.withColumn("_change_type", F.lit("insert"))
+            # column-mapped table + schema evolution: any column NEW to the
+            # mapping writes under a FRESH physical name and the merge
+            # commit records the extended mapping — otherwise a previously
+            # DROPPED column's identity-mapped name would resurrect the old
+            # files' values (or collide with a renamed column's physical
+            # name). Same rule as add_column.
+            mapping = table._mapping_at()
+            new_mapping = None
+            if mapping:
+                # the physical-only row-id column is never column-mapped —
+                # it lives under its fixed physical name in every file
+                absent = [
+                    c
+                    for c in merged.columns
+                    if c not in mapping and c != _ROW_ID_PHYS
+                ]
+                if absent:
+                    new_mapping = dict(mapping)
+                    for c in absent:
+                        new_mapping[c] = f"col_{uuid.uuid4().hex[:12]}"
+            try:
+                adds = table._write_data(
+                    merged,
+                    _mapping=new_mapping
+                    if new_mapping is not None
+                    else _MAPPING_DEFAULT,
+                )
+                cdc_rel: str | None = None
+                if cdc_df is not None:
+                    # the change feed is LOGICAL rows — drop the physical-
+                    # only row-id column (lenient no-op when absent)
+                    cdc_rel = table._write_cdc(cdc_df.drop(_ROW_ID_PHYS))
+            except Exception:
+                # pre-commit failure (CheckViolation, IO): don't leak the
+                # cached single-pass frame
+                if persisted is not None:
+                    persisted.unpersist()
+                raise
+            # record the STORED schema (field metadata intact — a projection
+            # strips identity/generation annotations) widened by evolution,
+            # plus any identity watermark advance read from the new files'
+            # footer stats (clamped monotone: a no-insert merge's files hold
+            # only preserved ids at/below the current watermark)
+            commit_schema = _dml_evolved_schema(
+                table._schema_at(), merged.schema.json()
             )
-            return table.read()
-        except CommitConflict:
-            # loser's data files are orphans; drop them and retry on the
-            # winner's snapshot
-            for f in adds:
-                os.remove(os.path.join(table.path, f))
-            if cdc_rel is not None:
-                os.remove(os.path.join(table.path, cdc_rel))
-        finally:
-            if persisted is not None:
-                persisted.unpersist()
-    raise CommitConflict(f"merge gave up after {max_retries} retries")
+            if cur_ident and adds:
+                hws = table._identity_new_hw(adds, cur_ident)
+                ident_hws = {}
+                for c, m in cur_ident.items():
+                    far = max if m["step"] > 0 else min
+                    ident_hws[c] = (
+                        hws[c] if m["hw"] is None else far(m["hw"], hws[c])
+                    )
+                commit_schema = _identity_hw_update(commit_schema, ident_hws)
+            try:
+                table._commit_dml(
+                    adds=adds, removes=removes, base_version=base_version,
+                    op="merge", schema=commit_schema, txn=txn,
+                    column_mapping=new_mapping, cdc=cdc_rel,
+                )
+                return table.read()
+            except CommitConflict:
+                # loser's data files are orphans; drop them and retry on the
+                # winner's snapshot
+                for f in adds:
+                    os.remove(os.path.join(table.path, f))
+                if cdc_rel is not None:
+                    os.remove(os.path.join(table.path, cdc_rel))
+            finally:
+                if persisted is not None:
+                    persisted.unpersist()
+        raise CommitConflict(f"merge gave up after {max_retries} retries")

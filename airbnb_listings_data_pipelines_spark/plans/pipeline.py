@@ -195,10 +195,9 @@ def append_month(
         read_positional_csv(spark, data_dir, glob=RAW_GLOBS["lga"], n_cols=RAW_WIDTHS["lga"]),
     )
     new_fact = warehouse.build_fact_listing(st_listing, st_location)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    new_fact.write.mode("overwrite").partitionBy("file_date").parquet(
-        f"{persist_dir.rstrip('/')}/fact_listing"
-    )
+    new_fact.write.mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).partitionBy("file_date").parquet(f"{persist_dir.rstrip('/')}/fact_listing")
     return spark.read.parquet(f"{persist_dir.rstrip('/')}/fact_listing")
 
 

@@ -218,21 +218,14 @@ def upsert_stream_txlog(
     def apply(batch: DataFrame, batch_id: int) -> None:
         if not batch.columns:
             return
-        from pyspark.storagelevel import StorageLevel
-
-        # persist: the deduped batch feeds the merge's touched-file
-        # discovery AND the merge join — one materialization instead of
-        # re-running the window per consumer (guide §5)
-        b = latest_per_key(batch, keys, order_col).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        try:
-            spark = batch.sparkSession
-            _ensure_table(b, table_path)
-            t = TxLogTable(spark, table_path)
-            merge_into_txlog(spark, t, b, keys, txn=(app_id, batch_id))
-        finally:
-            b.unpersist()
+        # the merge reads its source once (discovery, join and retries
+        # share one materialization), so the deduped batch needs no
+        # persist here
+        b = latest_per_key(batch, keys, order_col)
+        spark = batch.sparkSession
+        _ensure_table(b, table_path)
+        t = TxLogTable(spark, table_path)
+        merge_into_txlog(spark, t, b, keys, txn=(app_id, batch_id))
 
     writer = stream.writeStream.foreachBatch(apply).option(
         "checkpointLocation", checkpoint_dir
@@ -301,11 +294,11 @@ def cdf_apply_stream_txlog(
             F.desc("_commit_version"), F.desc("_change_type")
         )
         # PERSIST the netted batch: its lineage is the CDF slice read
-        # (Python data source) + a window, and downstream it feeds the
-        # merge's touched-file discovery AND the merge join — without
-        # the persist each one re-reads and re-nets the feed (guide §5:
-        # cache exactly what is reused). One count-by-change-type action
-        # both materializes it and decides the bootstrap/skip branches.
+        # (Python data source) + a window, and it feeds two actions —
+        # the count-by-change-type below, which both materializes it and
+        # decides the bootstrap/skip branches, and the merge, which reads
+        # a caller-cached source from that cache instead of materializing
+        # its own copy (guide §5: cache exactly what is reused).
         net = (
             batch.withColumn("__rn", F.row_number().over(w))
             .filter(F.col("__rn") == 1)

@@ -50,6 +50,28 @@ def test_merge_partition_scoped_rewrites_only_touched(spark, tmp_path):
     assert set(os.listdir(os.path.join(path, "p=y"))) == before
 
 
+def test_merge_partition_scoped_leaves_session_conf_unchanged(spark, tmp_path):
+    """Dynamic partition overwrite is a per-write option: the caller's
+    session keeps its overwrite mode, so a later full partitioned
+    overwrite in the same session still replaces every partition."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(key)
+    path = str(tmp_path / "tgt")
+    spark.createDataFrame(
+        [(1, "a", "x"), (3, "c", "y")], ["k", "v", "p"]
+    ).write.partitionBy("p").mode("overwrite").parquet(path)
+    src = spark.createDataFrame([(1, "A", "x")], ["k", "v", "p"])
+    merge_into_parquet(spark, path, src, keys=["k", "p"], partition_col="p")
+    assert spark.conf.get(key) == before
+    spark.createDataFrame([(7, "g", "x")], ["k", "v", "p"]).write.partitionBy(
+        "p"
+    ).mode("overwrite").parquet(path)
+    assert sorted(d for d in os.listdir(path) if d.startswith("p=")) == ["p=x"]
+    assert [tuple(r) for r in spark.read.parquet(path).collect()] == [
+        (7, "g", "x")
+    ]
+
+
 def test_merge_staged_swap_preserves_target_on_schema_error(spark, tmp_path):
     path = str(tmp_path / "tgt")
     _write_target(spark, path, [(1, "a", "x")])

@@ -255,8 +255,12 @@ def test_incremental_month_append(spark, tmp_path_factory):
 
     # the new month's file arrives
     shutil.copy(os.path.join(src, "07_2020_listings.csv"), two / "07_2020_listings.csv")
+    mode_key = "spark.sql.sources.partitionOverwriteMode"
+    mode_before = spark.conf.get(mode_key)
     fact = append_month(spark, str(two), wh, "07_2020*.csv")
     assert fact.select("file_date").distinct().count() == 3
+    # dynamic overwrite is per write: the caller's session is unchanged
+    assert spark.conf.get(mode_key) == mode_before
 
     # equals the from-scratch 3-month fact
     full = run_pipeline(spark, src, register_views=False).fact_listing

@@ -413,3 +413,33 @@ def test_dv_merge_duplicate_source_keys_exact_positions(spark, tmp_path):
     assert sum(d["cardinality"] for d in t2.dvs().values()) == 1
     rows = sorted((r.k, r.amt) for r in t2.read().collect())
     assert rows == [(0, 1.0), (0, 2.0), (0, 3.0), (1, 1.0), (2, 2.0)]
+
+
+@pytest.mark.parametrize("name", ["part one", "part%one"])
+def test_dv_merge_uri_unsafe_basename_keeps_doomed_positions(
+    spark, tmp_path, name
+):
+    """An adopted layout's basenames are whatever its writer chose. The
+    scan reports each file as a percent-encoded URI, so a unique basename
+    holding a space or ``%`` must not take the basename fast path: its
+    doomed positions would match no file and the old rows stay live."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    root = tmp_path / "adopted"
+    root.mkdir()
+    for stem, ks in ((name, range(0, 5)), ("plain", range(5, 10))):
+        pq.write_table(
+            pa.table({
+                "k": pa.array(list(ks), pa.int32()),
+                "v": [f"v{k}" for k in ks],
+            }),
+            str(root / f"{stem}.parquet"),
+        )
+    t = TxLogTable.convert(spark, str(root))
+    src = spark.createDataFrame([(1, "N"), (6, "N")], "k int, v string")
+    merge_into_txlog(spark, t, src, ["k"], mode="dv")
+    assert _rows(t) == sorted(
+        (k, "N" if k in (1, 6) else f"v{k}") for k in range(10)
+    )
+    assert sum(d["cardinality"] for d in t.dvs().values()) == 2
