@@ -19,7 +19,9 @@ ordered sequence of ``<version>.json`` files of newline-delimited JSON
   DataFrame, honoring ``remove`` actions, JSON commits after the last
   parquet checkpoint (``_last_checkpoint``), and ``VERSION AS OF`` time
   travel. This is the second, txlog-independent reader path: it never
-  looks at ``_txlog``.
+  looks at ``_txlog``. The log fold itself (snapshot replay, checkpoint
+  reading, protocol check, per-commit parse) lives in
+  :mod:`operators.logfold`, shared with the ``txlog`` DataSource.
 
 Feature envelope, stated plainly: tables here are flat-schema parquet,
 optionally HIVE-PARTITIONED (``metaData.partitionColumns`` +
@@ -53,34 +55,24 @@ import os
 import re
 import time
 import uuid
-from dataclasses import dataclass, field
 
 from ..localframe import local_df
+from .logfold import (
+    SIDECAR_DIR,
+    _DeltaState,
+    _field_ids,
+    _parse_delta_commit,
+    _physical_names,
+    _read_last_checkpoint,
+    _replay_delta_log,
+    _require_supported_mapping,
+    apply_commit,
+    hive_partition_values,
+)
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 DELTA_DIR = "_delta_log"
-_PROTOCOL = {"minReaderVersion": 1, "minWriterVersion": 2}
-
-
-@dataclass
-class _DeltaState:
-    """Replayed log state at a version. ``tombstones`` (unexpired
-    ``remove`` actions) and ``txns`` (latest ``txn`` per appId) are
-    carried so checkpoints preserve them as PROTOCOL.md requires —
-    external engines rely on tombstones for VACUUM safety and on txn
-    app versions for streaming idempotence."""
-
-    version: int
-    live: dict[str, dict]
-    metadata: dict | None
-    protocol: dict
-    tombstones: dict[str, dict] = field(default_factory=dict)
-    txns: dict[str, dict] = field(default_factory=dict)
-    # domainMetadata actions (PROTOCOL.md "Domain Metadata"): latest
-    # configuration per domain — row tracking keeps its rowIdHighWaterMark
-    # here, so checkpoints must preserve them like txn app versions
-    domains: dict[str, dict] = field(default_factory=dict)
 
 
 def _delta_commit_name(version: int) -> str:
@@ -211,13 +203,6 @@ def _annotated_schema(
     return StructType(fields).json()
 
 
-def _mapping_mode(metadata: dict | None) -> str:
-    """The table's column-mapping mode from metaData.configuration
-    (PROTOCOL.md: absent == 'none')."""
-    cfg = (metadata or {}).get("configuration") or {}
-    return cfg.get("delta.columnMapping.mode", "none")
-
-
 def _field_meta(schema_string: str) -> dict[str, dict]:
     """name -> field metadata with the EXPORT-managed
     ``delta.columnMapping.*`` annotations stripped (the exporter adds
@@ -238,41 +223,6 @@ def _field_meta(schema_string: str) -> dict[str, dict]:
         }
         for f in schema.fields
     }
-
-
-def _physical_names(metadata: dict) -> dict[str, str]:
-    """logical field name -> physical parquet column name, resolved from
-    the schemaString's ``delta.columnMapping.physicalName`` field
-    metadata (identity for unannotated fields — legal for mode=none
-    tables and for fields an upgrade left identity-mapped)."""
-    from pyspark.sql.types import StructType
-
-    schema = StructType.fromJson(json.loads(metadata["schemaString"]))
-    return {
-        f.name: (f.metadata or {}).get("delta.columnMapping.physicalName", f.name)
-        for f in schema.fields
-    }
-
-
-def _field_ids(metadata: dict) -> dict[str, int]:
-    """logical field name -> parquet field id, from the schemaString's
-    ``delta.columnMapping.id`` annotations (columnMapping mode=id tables
-    must carry them on every field)."""
-    from pyspark.sql.types import StructType
-
-    schema = StructType.fromJson(json.loads(metadata["schemaString"]))
-    ids = {
-        f.name: (f.metadata or {}).get("delta.columnMapping.id")
-        for f in schema.fields
-    }
-    missing = sorted(n for n, i in ids.items() if i is None)
-    if missing:
-        raise ValueError(
-            f"columnMapping mode=id but field(s) {missing} carry no "
-            "delta.columnMapping.id annotation — the mapping is "
-            "unresolvable"
-        )
-    return {n: int(i) for n, i in ids.items()}
 
 
 def _data_read_schema(spark, metadata: dict, data_fields: list):
@@ -382,7 +332,7 @@ def export_delta_log(spark: SparkSession, table) -> int:
         re.fullmatch(r"\d{20}\.json", f) for f in os.listdir(delta_dir)
     ) or os.path.exists(os.path.join(delta_dir, "_last_checkpoint"))
     if has_exported:
-        exported = _replay_delta_log(spark, delta_dir)
+        exported = _replay_delta_log(delta_dir)
         meta_id = exported.metadata["id"]
         meta_schema_str = exported.metadata["schemaString"]
         meta_fields = _schema_fields(meta_schema_str)
@@ -470,7 +420,7 @@ def export_delta_log(spark: SparkSession, table) -> int:
 
     cur: set[str] = set()
     # running deletion-vector state (file -> txlog descriptor), folded
-    # with exactly txlog.replay_log_full's rules; dv_prev is the state at
+    # by logfold.apply_commit like every txlog fold; dv_prev is the state at
     # the previously emitted version so each Delta commit carries the
     # true per-version DV delta. The first nonempty state latches
     # dv_feature: from that version on the export runs under the
@@ -518,19 +468,7 @@ def export_delta_log(spark: SparkSession, table) -> int:
         c = tx_state.get(v)
         if c is None:
             raise FileNotFoundError(f"txlog {table.log_dir} missing commit {v}")
-        if c.get("checkpoint"):
-            from .txlog import _checkpoint_state
-
-            cur, ck_dvs = _checkpoint_state(table.log_dir, c)
-            dv_state = dict(ck_dvs)
-        else:
-            cur = (cur - set(c["removes"])) | set(c["adds"])
-            for f in c["removes"]:
-                dv_state.pop(f, None)
-            if c.get("dvs_reset") is not None:
-                dv_state = dict(c["dvs_reset"])
-            for f, d in (c.get("dvs") or {}).items():
-                dv_state[f] = d
+        cur, dv_state = apply_commit(table.log_dir, c, cur, dv_state)
         if dv_state:
             dv_feature = True
         if c.get("row_base_state") is not None:
@@ -886,7 +824,7 @@ def export_delta_log(spark: SparkSession, table) -> int:
             # protocol's partition-value serialization (ISO dates, plain
             # ints, raw strings), with the writer's %XX escapes undone
             if pby:
-                parsed = table._partition_values(f)
+                parsed = hive_partition_values(f)
                 pvals = {c: parsed.get(c) for c in pby}
             else:
                 pvals = {}
@@ -1355,7 +1293,7 @@ def write_delta_checkpoint(
     rows read vectorized, instead of O(commits) JSON files."""
     path = path.rstrip("/")
     delta_dir = os.path.join(path, DELTA_DIR)
-    state = _replay_delta_log(spark, delta_dir, version)
+    state = _replay_delta_log(delta_dir, version)
     want = state.version
     if v2 is None:
         v2 = (state.metadata.get("configuration") or {}).get(
@@ -1461,9 +1399,6 @@ def write_delta_checkpoint(
         json.dump(lc, fh)
     os.replace(tmp, os.path.join(delta_dir, "_last_checkpoint"))
     return want
-
-
-SIDECAR_DIR = "_sidecars"
 
 
 def _write_v2_checkpoint(
@@ -1653,382 +1588,6 @@ def _classic_checkpoint_versions(delta_dir: str) -> set[int]:
     return out
 
 
-def _read_last_checkpoint(delta_dir: str) -> dict | None:
-    lc = os.path.join(delta_dir, "_last_checkpoint")
-    if not os.path.exists(lc):
-        return None
-    with open(lc) as fh:
-        return json.load(fh)
-
-
-def _checkpoint_versions(delta_dir: str) -> dict[int, int | None]:
-    """version -> parts (None for single-part classic and v2) of every
-    checkpoint present, from the DIRECTORY LISTING — the reader-side
-    complement of ``_last_checkpoint``: time travel below the newest
-    checkpoint must bootstrap from an OLDER one when retention kept it
-    (``cleanup_delta_log(keep_after=...)``), which ``_last_checkpoint``
-    alone can never find."""
-    out: dict[int, int | None] = {}
-    for f in os.listdir(delta_dir):
-        m = re.fullmatch(r"(\d{20})\.checkpoint\.parquet", f)
-        if m:
-            out.setdefault(int(m.group(1)), None)
-            continue
-        m = re.fullmatch(
-            r"(\d{20})\.checkpoint\.\d{10}\.(\d{10})\.parquet", f
-        )
-        if m:
-            out[int(m.group(1))] = int(m.group(2))
-            continue
-        m = re.fullmatch(r"(\d{20})\.checkpoint\.[^.]+\.(json|parquet)", f)
-        if m:
-            out.setdefault(int(m.group(1)), None)
-    return out
-
-
-def _usable_checkpoint_form(
-    delta_dir: str, version: int, parts: int | None
-) -> tuple[bool, int | None]:
-    """(usable, parts_to_replay_with) — completeness validation the
-    Delta spec requires of readers before trusting a checkpoint found by
-    directory listing: classic multi-part checkpoints publish each part
-    with its own rename (``_last_checkpoint`` written last), so a
-    crashed or still-running checkpoint write legally leaves e.g. part
-    1-of-3 only. Selecting that candidate would fail the ENTIRE snapshot
-    read even though an older checkpoint (or the JSON tail alone) can
-    serve it — so verify all N parts exist and are non-empty, fall
-    through to a complete single-part/v2 form at the same version, and
-    let the caller walk to the next-older candidate otherwise."""
-    if parts:
-        names = [
-            os.path.join(
-                delta_dir,
-                f"{version:020d}.checkpoint.{p:010d}.{int(parts):010d}.parquet",
-            )
-            for p in range(1, int(parts) + 1)
-        ]
-        if all(os.path.exists(n) and os.path.getsize(n) > 0 for n in names):
-            return True, int(parts)
-    classic = os.path.join(delta_dir, f"{version:020d}.checkpoint.parquet")
-    if os.path.exists(classic) and os.path.getsize(classic) > 0:
-        return True, None
-    spec = _resolve_v2_checkpoint(delta_dir, version)
-    if spec is not None and os.path.getsize(os.path.join(delta_dir, spec)) > 0:
-        return True, None
-    return False, None
-
-
-def _resolve_v2_checkpoint(delta_dir: str, version: int) -> str | None:
-    """The v2 (UUID-named) checkpoint spec file for ``version``, or None.
-    Naming per PROTOCOL.md: ``<v>.checkpoint.<uniqueStr>.{json,parquet}``
-    — exactly one dot field between 'checkpoint' and the extension, which
-    cannot collide with classic multi-part names (two numeric fields).
-    Multiple writers may each have left a complete v2 checkpoint for the
-    same version; any is valid, so pick deterministically."""
-    pat = re.compile(
-        rf"{version:020d}\.checkpoint\.[^.]+\.(json|parquet)"
-    )
-    hits = sorted(f for f in os.listdir(delta_dir) if pat.fullmatch(f))
-    return hits[-1] if hits else None
-
-
-def _fold_parquet_actions(
-    spark: SparkSession, state: _DeltaState, paths: list[str]
-) -> tuple[list[dict], dict | None]:
-    """Fold checkpoint-schema parquet rows (classic checkpoint parts, a
-    v2 spec file, or v2 sidecars) into ``state``; returns (``sidecar``
-    actions, ``checkpointMetadata`` payload) — both v2-spec-file-only,
-    collected in the SAME single pass as the action fold. Shared by all
-    three forms so the action semantics cannot drift."""
-    cp = spark.read.parquet(*paths)
-    cols = cp.columns
-    want = [
-        c
-        for c in (
-            "add", "remove", "metaData", "protocol", "txn",
-            "sidecar", "checkpointMetadata", "domainMetadata",
-        )
-        if c in cols
-    ]
-    sidecars: list[dict] = []
-    ckpt_meta: dict | None = None
-    for r in cp.select(*want).collect():
-        add = r["add"] if "add" in cols else None
-        if add is not None and add["path"] is not None:
-            d = add.asDict(recursive=True)
-            state.live[d["path"]] = {k: v for k, v in d.items() if v is not None}
-        rm = r["remove"] if "remove" in cols else None
-        if rm is not None and rm["path"] is not None:
-            d = rm.asDict(recursive=True)
-            state.tombstones[d["path"]] = {k: v for k, v in d.items() if v is not None}
-        md = r["metaData"] if "metaData" in cols else None
-        if md is not None and md["schemaString"] is not None:
-            state.metadata = md.asDict(recursive=True)
-        proto = r["protocol"] if "protocol" in cols else None
-        if proto is not None and proto["minReaderVersion"] is not None:
-            # pass the FULL action: a foreign v3 checkpoint's
-            # readerFeatures list decides acceptance, not the version
-            # number alone
-            pd = {
-                k: v
-                for k, v in proto.asDict(recursive=True).items()
-                if v is not None
-            }
-            _check_protocol(pd)
-            state.protocol = pd
-        txn = r["txn"] if "txn" in cols else None
-        if txn is not None and txn["appId"] is not None:
-            d = txn.asDict(recursive=True)
-            state.txns[d["appId"]] = {k: v for k, v in d.items() if v is not None}
-        dm = r["domainMetadata"] if "domainMetadata" in cols else None
-        if dm is not None and dm["domain"] is not None:
-            d = dm.asDict(recursive=True)
-            if d.get("removed"):
-                state.domains.pop(d["domain"], None)
-            else:
-                state.domains[d["domain"]] = d
-        sc = r["sidecar"] if "sidecar" in cols else None
-        if sc is not None and sc["path"] is not None:
-            sidecars.append(sc.asDict(recursive=True))
-        cm = r["checkpointMetadata"] if "checkpointMetadata" in cols else None
-        if cm is not None and cm["version"] is not None:
-            ckpt_meta = cm.asDict(recursive=True)
-    return sidecars, ckpt_meta
-
-
-def _fold_json_action(state: _DeltaState, a: dict) -> dict | None:
-    """Fold one JSON action dict into ``state``; returns the sidecar
-    payload when the action is a ``sidecar`` reference."""
-    if "add" in a:
-        state.live[a["add"]["path"]] = a["add"]
-    elif "remove" in a:
-        state.tombstones[a["remove"]["path"]] = a["remove"]
-    elif "metaData" in a:
-        state.metadata = a["metaData"]
-    elif "protocol" in a:
-        _check_protocol(a["protocol"])
-        state.protocol = a["protocol"]
-    elif "txn" in a:
-        app = a["txn"].get("appId")
-        if app is not None:
-            state.txns[app] = a["txn"]
-    elif "domainMetadata" in a:
-        dm = a["domainMetadata"]
-        if dm.get("removed"):
-            state.domains.pop(dm.get("domain"), None)
-        elif dm.get("domain") is not None:
-            state.domains[dm["domain"]] = dm
-    elif "sidecar" in a:
-        return a["sidecar"]
-    return None
-
-
-def _checkpoint_rows(
-    spark: SparkSession, delta_dir: str, version: int, parts: int | None
-) -> _DeltaState:
-    """Replay a checkpoint into the full state it carries: live ``add``
-    actions (path -> add dict, stats and sizes preserved), the
-    ``metaData`` action, the ``protocol``, plus the ``remove`` tombstones
-    and ``txn`` app versions PROTOCOL.md requires checkpoints to preserve
-    — exactly as the protocol's checkpoint schema stores them (top-level
-    struct columns). Handles all three protocol forms: classic single- or
-    multi-part parquet, and V2 (UUID-named json/parquet spec file +
-    parquet sidecars under ``_sidecars/``)."""
-    state = _DeltaState(version, {}, None, dict(_PROTOCOL))
-    if parts:
-        names = [
-            os.path.join(
-                delta_dir, f"{version:020d}.checkpoint.{p:010d}.{parts:010d}.parquet"
-            )
-            for p in range(1, parts + 1)
-        ]
-        _fold_parquet_actions(spark, state, names)
-        return state
-    classic = os.path.join(delta_dir, f"{version:020d}.checkpoint.parquet")
-    if os.path.exists(classic):
-        _fold_parquet_actions(spark, state, [classic])
-        return state
-    spec = _resolve_v2_checkpoint(delta_dir, version)
-    if spec is None:
-        # preserve the classic reader's error shape (missing file)
-        _fold_parquet_actions(spark, state, [classic])
-        return state
-    full = os.path.join(delta_dir, spec)
-    sidecars: list[dict] = []
-    ckpt_meta: dict | None = None
-    if spec.endswith(".json"):
-        with open(full) as fh:
-            for line in fh:
-                line = line.strip()
-                if not line:
-                    continue
-                a = json.loads(line)
-                if "checkpointMetadata" in a:
-                    ckpt_meta = a["checkpointMetadata"]
-                    continue
-                sc = _fold_json_action(state, a)
-                if sc is not None:
-                    sidecars.append(sc)
-    else:
-        sidecars, ckpt_meta = _fold_parquet_actions(spark, state, [full])
-    # PROTOCOL.md: readers MUST validate the embedded version — a
-    # misnamed/corrupt spec file must not silently replay as another
-    # version's state
-    if ckpt_meta is None or int(ckpt_meta.get("version", -1)) != version:
-        raise ValueError(
-            f"v2 checkpoint {spec} is invalid: checkpointMetadata.version="
-            f"{(ckpt_meta or {}).get('version')!r} does not match the "
-            f"file-name version {version}"
-        )
-    if sidecars:
-        paths = [
-            os.path.join(delta_dir, SIDECAR_DIR, s["path"]) for s in sidecars
-        ]
-        missing = [p for p in paths if not os.path.exists(p)]
-        if missing:
-            raise FileNotFoundError(
-                f"v2 checkpoint {spec} references missing sidecar file(s) "
-                f"{[os.path.basename(p) for p in missing]} under "
-                f"{os.path.join(delta_dir, SIDECAR_DIR)}"
-            )
-        _fold_parquet_actions(spark, state, paths)
-    return state
-
-
-def _replay_delta_log(
-    spark: SparkSession, delta_dir: str, version: int | None = None
-) -> _DeltaState:
-    """The ONE replay core shared by :func:`read_delta_snapshot` and
-    :func:`write_delta_checkpoint` (a single implementation so protocol
-    fixes cannot drift between reader and checkpointer): bootstrap from
-    the newest parquet checkpoint at/below the requested version, verify
-    JSON-commit contiguity, then apply the JSON tail's actions in order.
-    Returns the replayed :class:`_DeltaState` (live adds by path, metaData,
-    protocol, unexpired remove tombstones, latest txn per appId).
-
-    The unsupported-``protocol`` guard lives here (both consumers must
-    refuse what they cannot replay)."""
-    # Single-version commits are EXACT 20-digit names (the protocol's
-    # file-naming rule). Log compactions (`<start>.<end>.compacted.json`,
-    # Delta 3.x / delta-rs) carry the NET actions of a version range —
-    # the snapshot fold may substitute one for its covered commits (one
-    # file open instead of end-start+1), but time travel INSIDE a
-    # compacted range still needs the single commits (a compaction
-    # replayed as "version <start>" would apply future-state actions).
-    commits = sorted(
-        f for f in os.listdir(delta_dir) if re.fullmatch(r"\d{20}\.json", f)
-    )
-    versions = [int(f.split(".")[0]) for f in commits]
-    by_version = dict(zip(versions, commits))
-    compactions: dict[int, list[tuple[int, str]]] = {}
-    for f in os.listdir(delta_dir):
-        m = re.fullmatch(r"(\d{20})\.(\d{20})\.compacted\.json", f)
-        if m:
-            s, e = int(m.group(1)), int(m.group(2))
-            compactions.setdefault(s, []).append((e, f))
-    for lst in compactions.values():
-        # widest FITTING range wins at selection time — keeping only the
-        # global widest would discard a narrower compaction that legally
-        # covers a smaller time-travel range
-        lst.sort(reverse=True)
-    lc = _read_last_checkpoint(delta_dir)
-    # a fully-compacted log (checkpoint only, JSON head expired) is legal:
-    # the checkpoint version counts toward the latest resolvable version,
-    # and so does a compaction's END version (its singles may be gone)
-    latest = max(
-        versions[-1] if versions else -1,
-        lc["version"] if lc else -1,
-        max((e for lst in compactions.values() for e, _ in lst), default=-1),
-    )
-    if latest < 0:
-        raise FileNotFoundError(f"no Delta commits in {delta_dir}")
-    want = latest if version is None else version
-    if want > latest:
-        raise FileNotFoundError(f"version {want} not in Delta log (latest {latest})")
-    state = _DeltaState(want, {}, None, dict(_PROTOCOL))
-    start_after = -1
-    # bootstrap from the NEWEST AVAILABLE checkpoint at/below the wanted
-    # version (NOT only _last_checkpoint): after log-head cleanup the
-    # state below a checkpoint exists nowhere else, and time travel
-    # below the newest checkpoint must use an OLDER retained one
-    # (cleanup_delta_log keep_after) that _last_checkpoint never names
-    ckpts = _checkpoint_versions(delta_dir)
-    # walk candidates newest-first, validating COMPLETENESS before
-    # selection (spec rule): a crashed multi-part write leaves a partial
-    # part set the listing still surfaces — skip it and bootstrap from
-    # the next-older complete checkpoint (or the JSON tail alone)
-    for cv in sorted((v for v in ckpts if v <= want), reverse=True):
-        parts = ckpts[cv]
-        if lc and lc.get("version") == cv and lc.get("parts"):
-            parts = lc["parts"]
-        usable, replay_parts = _usable_checkpoint_form(delta_dir, cv, parts)
-        if not usable:
-            continue
-        state = _checkpoint_rows(spark, delta_dir, cv, replay_parts)
-        state.version = want
-        start_after = cv
-        break
-    # greedy contiguous cover of (start_after, want]: a compaction whose
-    # whole range fits replaces its commits; otherwise the single commit.
-    # Missing versions covered by NEITHER refuse — the spec's continuity
-    # rule, now with compactions as a second legal source of coverage.
-    v = start_after + 1
-    while v <= want:
-        comp = next(
-            ((e, f) for e, f in compactions.get(v, ()) if e <= want), None
-        )
-        if comp is not None:
-            _fold_commit_file(os.path.join(delta_dir, comp[1]), state)
-            v = comp[0] + 1
-        elif v in by_version:
-            _fold_commit_file(os.path.join(delta_dir, by_version[v]), state)
-            v += 1
-        else:
-            raise FileNotFoundError(
-                f"Delta log {delta_dir} is missing commit {v} (no single "
-                f"commit and no compaction starting there fits within "
-                f"version {want}; checkpoint covers through {start_after}) "
-                "— cannot return a partial snapshot"
-            )
-    if state.metadata is None or state.metadata.get("schemaString") is None:
-        raise FileNotFoundError(f"no metaData action at or below version {want}")
-    return state
-
-
-def _fold_commit_file(full: str, state: _DeltaState) -> None:
-    """Apply one JSON commit's (or compaction's) actions to ``state`` in
-    file order — the single action-fold both the per-commit tail and the
-    compaction substitution use, so their semantics cannot drift."""
-    with open(full) as fh:
-        for line in fh:
-            line = line.strip()
-            if not line:
-                continue
-            action = json.loads(line)
-            if "protocol" in action:
-                _check_protocol(action["protocol"])
-                state.protocol = action["protocol"]
-            elif "metaData" in action:
-                state.metadata = action["metaData"]
-            elif "add" in action:
-                state.live[action["add"]["path"]] = action["add"]
-                # re-adding a removed path supersedes its tombstone
-                state.tombstones.pop(action["add"]["path"], None)
-            elif "remove" in action:
-                state.live.pop(action["remove"]["path"], None)
-                state.tombstones[action["remove"]["path"]] = action["remove"]
-            elif "txn" in action:
-                app = action["txn"].get("appId")
-                if app is not None:
-                    state.txns[app] = action["txn"]
-            elif "domainMetadata" in action:
-                dm = action["domainMetadata"]
-                if dm.get("removed"):
-                    state.domains.pop(dm.get("domain"), None)
-                elif dm.get("domain") is not None:
-                    state.domains[dm["domain"]] = dm
-
-
 def write_delta_compaction(path: str, start: int, end: int) -> str:
     """Write a LOG COMPACTION ``<start>.<end>.compacted.json`` (Delta
     3.x / delta-kernel minor compaction): the NET actions of the single
@@ -2099,50 +1658,6 @@ def write_delta_compaction(path: str, start: int, end: int) -> str:
     return name
 
 
-# reader TABLE FEATURES this implementation honors (PROTOCOL.md 'Table
-# Features', reader version 3): columnMapping resolves physical columns
-# via schemaString metadata; timestampNtz is just a Spark type the scans
-# already read; deletionVectors anti-joins add.deletionVector bitmaps
-# out of the scan (operators/roaring.py decodes the RoaringBitmap
-# blobs); v2Checkpoint resolves UUID-named checkpoint spec files and
-# their _sidecars/ parquet file actions (_checkpoint_rows). Everything
-# else refuses — the spec REQUIRES readers to refuse features they
-# cannot honor.
-_SUPPORTED_READER_FEATURES = {
-    "columnMapping",
-    "timestampNtz",
-    "deletionVectors",
-    "v2Checkpoint",
-    # type widening: reads resolve files under the WIDENED schemaString;
-    # Spark 4's parquet reader upcasts the narrow physical types natively
-    "typeWidening",
-}
-
-
-def _check_protocol(protocol: dict) -> None:
-    mrv = protocol.get("minReaderVersion", 1)
-    if mrv <= 2:
-        return
-    feats = protocol.get("readerFeatures")
-    if mrv == 3 and feats is not None:
-        unsupported = sorted(set(feats) - _SUPPORTED_READER_FEATURES)
-        if not unsupported:
-            # Delta 3.x writes the table-features protocol form even for
-            # tables whose feature set this reader fully implements —
-            # refusing on the version number alone would reject tables
-            # we can read faithfully
-            return
-        raise NotImplementedError(
-            f"table requires reader features {unsupported} "
-            f"(supported: {sorted(_SUPPORTED_READER_FEATURES)})"
-        )
-    raise NotImplementedError(
-        "this reader implements Delta protocol minReaderVersion<=2 plus "
-        "reader-version-3 TABLE FEATURES limited to "
-        f"{sorted(_SUPPORTED_READER_FEATURES)}; table requires {protocol}"
-    )
-
-
 def read_delta_snapshot(
     spark: SparkSession,
     path: str,
@@ -2174,7 +1689,7 @@ def read_delta_snapshot(
         if version is not None:
             raise ValueError("pass either version or timestamp_ms, not both")
         version = _version_at_timestamp(delta_dir, timestamp_ms)
-    state = _replay_delta_log(spark, delta_dir, version)
+    state = _replay_delta_log(delta_dir, version)
     if not state.live:
         return _empty_snapshot(spark, state.metadata)
     return _read_live_files(spark, path, state.live, state.metadata)
@@ -2195,7 +1710,7 @@ def read_delta_row_ids(
 
     path = path.rstrip("/")
     delta_dir = os.path.join(path, DELTA_DIR)
-    state = _replay_delta_log(spark, delta_dir, version)
+    state = _replay_delta_log(delta_dir, version)
     md = state.metadata
     cfg = (md or {}).get("configuration") or {}
     if cfg.get("delta.enableRowTracking") != "true":
@@ -2282,7 +1797,7 @@ def delta_row_id_high_watermark(
     domainMetadata at ``version`` (None when the domain is absent) — the
     value an external writer must fence fresh base row ids beyond."""
     delta_dir = os.path.join(path.rstrip("/"), DELTA_DIR)
-    state = _replay_delta_log(spark, delta_dir, version)
+    state = _replay_delta_log(delta_dir, version)
     dm = state.domains.get("delta.rowTracking")
     if dm is None:
         return None
@@ -2363,21 +1878,6 @@ def _logical_schema(metadata: dict):
             for f in schema.fields
         ]
     )
-
-
-def _require_supported_mapping(metadata: dict) -> str:
-    """'none', 'name', or 'id' — all three protocol modes read; anything
-    else refuses loudly as the spec requires of readers that cannot
-    honor a mode. Under 'id' the data scans resolve columns by parquet
-    field id (:func:`_data_read_schema`); stats and partitionValues stay
-    keyed by physicalName in every mode (they describe the log, not the
-    parquet layout resolution)."""
-    mode = _mapping_mode(metadata)
-    if mode not in ("none", "name", "id"):
-        raise NotImplementedError(
-            f"delta.columnMapping.mode={mode!r} not supported (none|name|id)"
-        )
-    return mode
 
 
 def _empty_snapshot(spark: SparkSession, metadata: dict) -> DataFrame:
@@ -2648,7 +2148,7 @@ def read_delta_where(
 
     path = path.rstrip("/")
     delta_dir = os.path.join(path, DELTA_DIR)
-    state = _replay_delta_log(spark, delta_dir, version)
+    state = _replay_delta_log(delta_dir, version)
     live, metadata = state.live, state.metadata
     pcols = metadata.get("partitionColumns") or []
     # stats and partitionValues are keyed by PHYSICAL column name under
@@ -2697,39 +2197,6 @@ def read_delta_where(
 
 
 # ------------------------------------------------- foreign change feed
-
-
-def _parse_delta_commit(delta_dir: str, version: int):
-    """One Delta JSON commit's actions: (adds {path: action}, removed
-    paths, cdc actions, any-dataChange flag). Loud when the commit file
-    expired — the CDF horizon is the foreign log-retention horizon."""
-    fname = os.path.join(delta_dir, _delta_commit_name(version))
-    if not os.path.exists(fname):
-        raise FileNotFoundError(
-            f"change feed needs Delta commit {version}, missing from "
-            f"{delta_dir} — the foreign log was cleaned below it"
-        )
-    adds: dict[str, dict] = {}
-    removes: set[str] = set()
-    cdc: list[dict] = []
-    any_dc = False
-    with open(fname) as fh:
-        for line in fh:
-            line = line.strip()
-            if not line:
-                continue
-            a = json.loads(line)
-            if "add" in a:
-                adds[a["add"]["path"]] = a["add"]
-                any_dc = any_dc or a["add"].get("dataChange", True)
-            elif "remove" in a:
-                removes.add(a["remove"]["path"])
-                any_dc = any_dc or a["remove"].get("dataChange", True)
-            elif "cdc" in a:
-                cdc.append(a["cdc"])
-            elif "protocol" in a:
-                _check_protocol(a["protocol"])
-    return adds, removes, cdc, any_dc
 
 
 def _pv_column(fields: dict, phys: dict, pv: dict, c: str):
@@ -2905,13 +2372,13 @@ def read_delta_changes(
         raise ValueError(
             f"invalid change range [{from_version}, {to_version}]"
         )
-    st_hi = _replay_delta_log(spark, delta_dir, to_version)
+    st_hi = _replay_delta_log(delta_dir, to_version)
     metadata = st_hi.metadata
     schema = _logical_schema(metadata)
     prev = (
         {}
         if from_version == 0
-        else dict(_replay_delta_log(spark, delta_dir, from_version - 1).live)
+        else dict(_replay_delta_log(delta_dir, from_version - 1).live)
     )
     parts: list[DataFrame] = []
     for v in range(from_version, to_version + 1):

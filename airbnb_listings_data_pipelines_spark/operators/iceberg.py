@@ -2539,6 +2539,7 @@ def convert_from_iceberg(spark, path: str):
     txlog is authoritative: ``to_iceberg`` refuses (foreign snapshot
     ids are not txlog versions), while ``to_delta_log`` works — there
     is no pre-existing ``_delta_log`` to collide with."""
+    from .logfold import hive_partition_values
     from .txlog import TxLogTable, footer_stats_dict
 
     t = TxLogTable(spark, path)
@@ -2732,7 +2733,7 @@ def convert_from_iceberg(spark, path: str):
             # cross-check the manifest's partition record against the
             # hive path the txlog reader will trust from now on
             if pby:
-                hive = TxLogTable._partition_values(rel)
+                hive = hive_partition_values(rel)
                 miss = [c for c in pby if c not in hive]
                 if miss:
                     raise ValueError(

@@ -1,0 +1,1029 @@
+"""The commit-log fold: how a table's log — the engine's own ``_txlog``
+or a foreign Delta ``_delta_log`` (public delta.io PROTOCOL.md) — folds
+into a snapshot (live files, deletion vectors, schema, column mapping,
+partition spec) and into per-commit deltas (the input of change feeds
+and of the streaming source's offset planner).
+
+ONE implementation serves every reader: :mod:`operators.txlog`,
+:mod:`operators.deltalog` and the ``txlog`` Python DataSource
+(:mod:`sources.txlog_source`), so a fold rule cannot drift between them.
+
+SELF-CONTAINED BY CONTRACT: this module imports only the standard
+library, ``pyarrow`` and ``pyspark.sql.types`` — nothing from this
+package, and it never needs a SparkSession. Spark runs the DataSource
+in python processes that cannot import the package (the streaming
+source's planner runner ignores ``addPyFile`` paths), so
+``txlog_source.register()`` ships this module BY VALUE with cloudpickle;
+a package import here would fail in those processes, and no
+SparkSession exists there. Checkpoint parquet is therefore read with
+pyarrow, never with a Spark job. tests/test_logfold.py pins both rules.
+"""
+
+from __future__ import annotations
+
+import json
+import os
+import re
+from dataclasses import dataclass, field
+
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark.sql.types import StructType
+
+# ------------------------------------------------------------ txlog fold
+
+
+def _checkpoint_state(log_dir: str, c: dict) -> tuple[set, dict]:
+    """(live file set, dvs_state) carried by a CHECKPOINT commit: inline
+    ``adds``/``dvs_state`` for ordinary tables, or the parquet sidecar
+    named by ``adds_sidecar`` for huge file counts. The ONE reader every
+    fold must use — reading ``c["adds"]`` directly on a sidecar'd
+    checkpoint silently yields an empty table."""
+    sc = c.get("adds_sidecar")
+    if not sc:
+        return set(c["adds"]), dict(c.get("dvs_state") or {})
+    tbl = pq.read_table(os.path.join(log_dir, sc))
+    files = tbl.column("file").to_pylist()
+    dvs: dict[str, dict] = {}
+    if "dv_sidecar" in tbl.column_names:
+        # dv_pathkey is absent on pre-relative-path-keying checkpoints —
+        # its None default means "legacy basename-keyed sidecar"
+        pks = (
+            tbl.column("dv_pathkey").to_pylist()
+            if "dv_pathkey" in tbl.column_names
+            else [None] * len(files)
+        )
+        for f, s, card, pk in zip(
+            files,
+            tbl.column("dv_sidecar").to_pylist(),
+            tbl.column("dv_cardinality").to_pylist(),
+            pks,
+        ):
+            if s is not None:
+                dvs[f] = {"sidecar": s, "cardinality": int(card)}
+                if pk is not None:
+                    dvs[f]["pathkey"] = pk
+    return set(files), dvs
+
+
+def apply_commit(
+    log_dir: str, c: dict, live: set, dvs: dict
+) -> tuple[set, dict]:
+    """One commit's step of the (live files, deletion-vector state)
+    fold; returns NEW objects and never mutates its inputs, so callers
+    can keep the pre-commit state to diff against. A checkpoint commit
+    carries the full state. Otherwise: removed files leave the live set
+    and drop their DV (the data left the table or was compacted),
+    ``dvs_reset`` (restore) replaces the whole DV state, and ``dvs``
+    entries replace per-file descriptors (a new DV for a file supersedes
+    its old one — DML always writes the union)."""
+    if c.get("checkpoint"):
+        return _checkpoint_state(log_dir, c)
+    removed = set(c["removes"])
+    live = (live - removed) | set(c["adds"])
+    if c.get("dvs_reset") is not None:
+        dvs = dict(c["dvs_reset"])
+    else:
+        dvs = {f: d for f, d in dvs.items() if f not in removed}
+    dvs.update(c.get("dvs") or {})
+    return live, dvs
+
+
+def _commit_entries(log_dir: str) -> list[tuple[int, str]]:
+    """(version, file name) of every txlog commit, ascending."""
+    return sorted(
+        (int(f.split(".")[0]), f) for f in os.listdir(log_dir) if f.endswith(".json")
+    )
+
+
+def _load(log_dir: str, name: str) -> dict:
+    with open(os.path.join(log_dir, name)) as fh:
+        return json.load(fh)
+
+
+def replay_log(log_dir: str, as_of: int | None = None) -> tuple[int, list[str]]:
+    """(version, live file list) at the latest version or at ``as_of``.
+    Replays from the newest checkpoint commit (full file list) at or
+    before the requested version, not the whole log."""
+    v, files, _dvs = replay_log_full(log_dir, as_of)
+    return v, files
+
+
+def replay_log_full(
+    log_dir: str, as_of: int | None = None
+) -> tuple[int, list[str], dict[str, dict]]:
+    """(version, live files, deletion-vector state) — the full fold.
+
+    The DV state maps a live data file's relative path to its descriptor
+    ``{"sidecar": <rel path of the parquet sidecar holding its deleted
+    (file, row_index) rows>, "cardinality": <deleted-row count>,
+    "pathkey": <"rel" when the sidecar's file column holds relative
+    paths; absent on legacy basename-keyed sidecars>}`` — the
+    merge-on-read half of the table format (public design: Delta's
+    deletion vectors): a delete marks row POSITIONS in a tiny sidecar
+    instead of rewriting the data file, so a 1-row delete costs
+    O(deleted rows) bytes, not a file rewrite. Per-commit rules:
+    :func:`apply_commit`."""
+    entries = _commit_entries(log_dir)
+    if not entries:
+        raise FileNotFoundError(f"no commits in {log_dir}")
+    commits = [
+        (v, _load(log_dir, name))
+        for v, name in entries
+        if as_of is None or v <= as_of
+    ]
+    if not commits:
+        raise FileNotFoundError(
+            f"no commit at or before version {as_of} in {log_dir}"
+        )
+    # start from the last checkpoint commit (carries the full list)
+    start = 0
+    for i, (_v, c) in enumerate(commits):
+        if c.get("checkpoint"):
+            start = i
+    live: set[str] = set()
+    dvs: dict[str, dict] = {}
+    for _v, c in commits[start:]:
+        live, dvs = apply_commit(log_dir, c, live, dvs)
+    return commits[-1][0], sorted(live), dvs
+
+
+def schema_and_mapping_at(
+    log_dir: str, as_of: int | None = None
+) -> tuple[str | None, dict | None]:
+    """(recorded schema JSON, column mapping) effective at ``as_of`` in
+    ONE log pass — readers need both on every snapshot read, and the
+    two latest-wins folds walk the same commit files, so scanning twice
+    would double the per-read small-JSON I/O on long logs."""
+    schema = mapping = None
+    for v, name in _commit_entries(log_dir):
+        if as_of is not None and v > as_of:
+            break
+        c = _load(log_dir, name)
+        if c.get("schema") is not None:
+            schema = c["schema"]
+        if c.get("column_mapping") is not None:
+            mapping = c["column_mapping"]
+    return schema, mapping
+
+
+def schema_json_at(log_dir: str, as_of: int | None = None) -> str | None:
+    """The recorded table schema (StructType JSON) effective at ``as_of``
+    — newest commit at/below it carrying a ``schema`` payload; None for
+    legacy logs. A Delta log answers with its ``schemaString``, which IS
+    Spark StructType JSON (PROTOCOL.md)."""
+    if is_delta_log(log_dir):
+        return _replay_delta_log(log_dir, as_of).metadata["schemaString"]
+    return schema_and_mapping_at(log_dir, as_of)[0]
+
+
+def mapping_at(log_dir: str, as_of: int | None = None) -> dict | None:
+    """The column mapping (logical name -> PHYSICAL parquet column name)
+    effective at ``as_of`` — newest commit at/below it carrying a
+    ``column_mapping`` payload (each such commit records the FULL
+    mapping, so latest-wins is the whole fold). None = identity (table
+    never renamed/dropped a column — the overwhelmingly common case,
+    zero overhead). This is Delta's column-mapping design: RENAME
+    changes only the logical name (physical stays, so no file is
+    rewritten), DROP removes the logical binding, and a re-added name
+    gets a FRESH physical name so dropped data can never resurrect."""
+    return schema_and_mapping_at(log_dir, as_of)[1]
+
+
+def _commit_record(
+    v: int, op: str, cdc, prev: dict, new: dict, prev_dvs: dict, dvs: dict
+) -> dict:
+    """One per-commit delta record — the shape :func:`commit_deltas_full`
+    documents, shared by both log kinds. ``prev``/``new`` are the live
+    files on either side of the commit (any mapping keyed by path)."""
+    adds = sorted(set(new) - set(prev))
+    removes = sorted(set(prev) - set(new))
+    both = set(new) & set(prev)
+    return {
+        "v": v,
+        "adds": adds,
+        "removes": removes,
+        "op": op,
+        "dv_changed": {
+            f: (prev_dvs.get(f), dvs.get(f))
+            for f in sorted(both)
+            if prev_dvs.get(f) != dvs.get(f)
+        },
+        "dv_removed": {f: prev_dvs[f] for f in removes if f in prev_dvs},
+        "dv_added": {f: dvs[f] for f in adds if f in dvs},
+        "cdc": cdc,
+    }
+
+
+def commit_deltas_full(
+    log_dir: str, from_version: int, to_version: int
+) -> list[dict]:
+    """Per-commit deltas over ``[from_version, to_version]``, computed
+    checkpoint-aware in ONE pass (a checkpoint commit's recorded adds are
+    the full live list; its TRUE delta is live(v) - live(v-1)). Shared by
+    :meth:`TxLogTable.read_changes` and the ``txlog`` DataSource's
+    change-feed and streaming planners; a Delta log is served by
+    :func:`delta_deltas_full`.
+
+    Bootstraps from the newest CHECKPOINT commit (full-file-list) below
+    ``from_version`` — found by a short backward scan (checkpoints land
+    every ~20 commits) — instead of folding from commit 0: a long-lived
+    streaming tail polling this per trigger pays O(commits in range +
+    checkpoint interval), never O(total commits).
+
+    Horizon rule: after ``cleanup_log`` truncated the log head, a range
+    starting BELOW the oldest retained commit refuses loudly. A range
+    starting AT it is served, with that commit's record carrying the
+    horizon checkpoint's full file list as adds — exactly the snapshot
+    a fresh stream bootstraps from. A caller that needs the TRUE delta
+    of that commit (live(v-1) is gone) refuses it itself, as
+    :meth:`TxLogTable.read_changes` does.
+
+    Each record is a dict: ``v``, ``adds``/``removes`` (TRUE file
+    deltas), ``op`` (lets consumers tell data-unchanged rewrites —
+    OPTIMIZE, Delta's ``dataChange=false`` — from real DML), ``cdc``
+    (the commit's change-data sidecar, if any), plus the deletion-vector
+    deltas a row-exact change feed needs: ``dv_changed`` maps a file live
+    on BOTH sides of the commit whose DV descriptor changed to
+    ``(old_desc|None, new_desc|None)`` (grown DV = rows deleted;
+    shrunk/cleared — a restore — = rows resurrected); ``dv_removed`` maps
+    a removed file to the DV it carried BEFORE the commit (so its rows
+    are NOT re-reported as deletes); ``dv_added`` maps an added file to
+    the DV it carries AFTER (a restore re-adding a DV'd file)."""
+    if is_delta_log(log_dir):
+        return delta_deltas_full(log_dir, from_version, to_version)
+    entries = _commit_entries(log_dir)
+    if entries and entries[0][0] > from_version:
+        raise FileNotFoundError(
+            f"change feed from version {from_version} is below the "
+            f"retained log head (oldest commit: {entries[0][0]}) — the "
+            "commits were deleted by cleanup_log; the CDF horizon is "
+            "the log-retention horizon"
+        )
+    # backward scan for the bootstrap checkpoint strictly below the range
+    start_idx, live, dvs = 0, set(), {}
+    for i in range(len(entries) - 1, -1, -1):
+        if entries[i][0] >= from_version:
+            continue
+        c = _load(log_dir, entries[i][1])
+        if c.get("checkpoint"):
+            start_idx = i + 1
+            live, dvs = _checkpoint_state(log_dir, c)
+            break
+    out: list[dict] = []
+    for v, name in entries[start_idx:]:
+        if v > to_version:
+            break
+        c = _load(log_dir, name)
+        prev, prev_dvs = live, dvs
+        live, dvs = apply_commit(log_dir, c, live, dvs)
+        if v >= from_version:
+            out.append(
+                _commit_record(
+                    v, c.get("op") or "", c.get("cdc"), prev, live, prev_dvs, dvs
+                )
+            )
+    return out
+
+
+def hive_partition_values(rel_path: str) -> dict[str, str | None]:
+    """Parse hive-style ``col=value`` segments out of a relative data
+    file path, unescaping the %XX escapes Spark's writer applies to
+    special characters. ``__HIVE_DEFAULT_PARTITION__`` is the writer's
+    null sentinel → None."""
+    from urllib.parse import unquote
+
+    out: dict[str, str | None] = {}
+    for seg in rel_path.split("/")[:-1]:
+        if "=" not in seg:
+            continue
+        k, _, v = seg.partition("=")
+        v = unquote(v)
+        out[unquote(k)] = None if v == "__HIVE_DEFAULT_PARTITION__" else v
+    return out
+
+
+def partition_meta(log_dir: str) -> tuple[list[str], StructType | None]:
+    """(partition column names, their StructType) — ``([], None)`` for
+    unpartitioned tables. A txlog records its spec on commit 0; after
+    ``cleanup_log`` truncated the log head, the OLDEST retained commit
+    is a metadata-complete checkpoint carrying the same
+    ``partition_by``/``partition_schema`` payload, so the fallback reads
+    that instead. A Delta log answers from its latest ``metaData``."""
+    if is_delta_log(log_dir):
+        meta = _replay_delta_log(log_dir).metadata
+        pby = list(meta.get("partitionColumns") or [])
+        if not pby:
+            return [], None
+        by_name = {f.name: f for f in _schema(meta).fields}
+        return pby, StructType([by_name[c] for c in pby])
+    c0_path = os.path.join(log_dir, f"{0:012d}.json")
+    if os.path.exists(c0_path):
+        with open(c0_path) as fh:
+            c0 = json.load(fh)
+    else:
+        entries = _commit_entries(log_dir)
+        if not entries:
+            raise FileNotFoundError(f"no commits in {log_dir}")
+        c0 = _load(log_dir, entries[0][1])
+        if "partition_by" not in c0:
+            # a truncated head whose oldest survivor is NOT a
+            # metadata-complete checkpoint must fail loudly, not
+            # silently read a partitioned table as unpartitioned
+            raise FileNotFoundError(
+                f"{log_dir}: commit 0 is gone and the oldest retained "
+                f"commit {entries[0][1]} carries no partition spec — the "
+                "log head was truncated below a metadata-complete "
+                "checkpoint"
+            )
+    pby = c0.get("partition_by") or []
+    schema = (
+        StructType.fromJson(json.loads(c0["partition_schema"])) if pby else None
+    )
+    return pby, schema
+
+
+# ------------------------------------------------------------ Delta fold
+
+_PROTOCOL = {"minReaderVersion": 1, "minWriterVersion": 2}
+SIDECAR_DIR = "_sidecars"
+
+# reader TABLE FEATURES this implementation honors (PROTOCOL.md 'Table
+# Features', reader version 3): columnMapping resolves physical columns
+# via schemaString metadata; timestampNtz is just a Spark type the scans
+# already read; deletionVectors drop descriptor bitmaps' rows out of the
+# scan (operators/roaring.py decodes the RoaringBitmap blobs);
+# v2Checkpoint resolves UUID-named checkpoint spec files and their
+# _sidecars/ parquet file actions (_checkpoint_rows). Everything else
+# refuses — the spec REQUIRES readers to refuse features they cannot
+# honor.
+_SUPPORTED_READER_FEATURES = {
+    "columnMapping",
+    "timestampNtz",
+    "deletionVectors",
+    "v2Checkpoint",
+    # type widening: reads resolve files under the WIDENED schemaString;
+    # Spark 4's parquet reader upcasts the narrow physical types natively
+    "typeWidening",
+}
+
+
+@dataclass
+class _DeltaState:
+    """Replayed log state at a version. ``tombstones`` (unexpired
+    ``remove`` actions) and ``txns`` (latest ``txn`` per appId) are
+    carried so checkpoints preserve them as PROTOCOL.md requires —
+    external engines rely on tombstones for VACUUM safety and on txn
+    app versions for streaming idempotence."""
+
+    version: int
+    live: dict[str, dict]
+    metadata: dict | None
+    protocol: dict
+    tombstones: dict[str, dict] = field(default_factory=dict)
+    txns: dict[str, dict] = field(default_factory=dict)
+    # domainMetadata actions (PROTOCOL.md "Domain Metadata"): latest
+    # configuration per domain — row tracking keeps its rowIdHighWaterMark
+    # here, so checkpoints must preserve them like txn app versions
+    domains: dict[str, dict] = field(default_factory=dict)
+
+
+def is_delta_log(log_dir: str) -> bool:
+    return os.path.basename(log_dir.rstrip("/")) == "_delta_log"
+
+
+def _check_protocol(protocol: dict) -> None:
+    mrv = protocol.get("minReaderVersion", 1)
+    if mrv <= 2:
+        return
+    feats = protocol.get("readerFeatures")
+    if mrv == 3 and feats is not None:
+        unsupported = sorted(set(feats) - _SUPPORTED_READER_FEATURES)
+        if not unsupported:
+            # Delta 3.x writes the table-features protocol form even for
+            # tables whose feature set this reader fully implements —
+            # refusing on the version number alone would reject tables
+            # we can read faithfully
+            return
+        raise NotImplementedError(
+            f"table requires reader features {unsupported} "
+            f"(supported: {sorted(_SUPPORTED_READER_FEATURES)})"
+        )
+    raise NotImplementedError(
+        "this reader implements Delta protocol minReaderVersion<=2 plus "
+        "reader-version-3 TABLE FEATURES limited to "
+        f"{sorted(_SUPPORTED_READER_FEATURES)}; table requires {protocol}"
+    )
+
+
+def _read_last_checkpoint(delta_dir: str) -> dict | None:
+    """``_last_checkpoint`` is a HINT (PROTOCOL.md): a missing, torn or
+    unparseable file reads as absent — the checkpoint listing
+    (:func:`_checkpoint_versions`) still finds every checkpoint."""
+    try:
+        with open(os.path.join(delta_dir, "_last_checkpoint")) as fh:
+            lc = json.load(fh)
+    except (OSError, ValueError):
+        return None
+    return lc if isinstance(lc, dict) and "version" in lc else None
+
+
+def _checkpoint_versions(delta_dir: str) -> dict[int, int | None]:
+    """version -> parts (None for single-part classic and v2) of every
+    checkpoint present, from the DIRECTORY LISTING — the reader-side
+    complement of ``_last_checkpoint``: time travel below the newest
+    checkpoint must bootstrap from an OLDER one when retention kept it
+    (``cleanup_delta_log(keep_after=...)``), which ``_last_checkpoint``
+    alone can never find."""
+    out: dict[int, int | None] = {}
+    for f in os.listdir(delta_dir):
+        m = re.fullmatch(r"(\d{20})\.checkpoint\.parquet", f)
+        if m:
+            out.setdefault(int(m.group(1)), None)
+            continue
+        m = re.fullmatch(
+            r"(\d{20})\.checkpoint\.\d{10}\.(\d{10})\.parquet", f
+        )
+        if m:
+            out[int(m.group(1))] = int(m.group(2))
+            continue
+        m = re.fullmatch(r"(\d{20})\.checkpoint\.[^.]+\.(json|parquet)", f)
+        if m:
+            out.setdefault(int(m.group(1)), None)
+    return out
+
+
+def _usable_checkpoint_form(
+    delta_dir: str, version: int, parts: int | None
+) -> tuple[bool, int | None]:
+    """(usable, parts_to_replay_with) — completeness validation the
+    Delta spec requires of readers before trusting a checkpoint found by
+    directory listing: classic multi-part checkpoints publish each part
+    with its own rename (``_last_checkpoint`` written last), so a
+    crashed or still-running checkpoint write legally leaves e.g. part
+    1-of-3 only. Selecting that candidate would fail the ENTIRE snapshot
+    read even though an older checkpoint (or the JSON tail alone) can
+    serve it — so verify all N parts exist and are non-empty, fall
+    through to a complete single-part/v2 form at the same version, and
+    let the caller walk to the next-older candidate otherwise."""
+    if parts:
+        names = [
+            os.path.join(
+                delta_dir,
+                f"{version:020d}.checkpoint.{p:010d}.{int(parts):010d}.parquet",
+            )
+            for p in range(1, int(parts) + 1)
+        ]
+        if all(os.path.exists(n) and os.path.getsize(n) > 0 for n in names):
+            return True, int(parts)
+    classic = os.path.join(delta_dir, f"{version:020d}.checkpoint.parquet")
+    if os.path.exists(classic) and os.path.getsize(classic) > 0:
+        return True, None
+    spec = _resolve_v2_checkpoint(delta_dir, version)
+    if spec is not None and os.path.getsize(os.path.join(delta_dir, spec)) > 0:
+        return True, None
+    return False, None
+
+
+def _resolve_v2_checkpoint(delta_dir: str, version: int) -> str | None:
+    """The v2 (UUID-named) checkpoint spec file for ``version``, or None.
+    Naming per PROTOCOL.md: ``<v>.checkpoint.<uniqueStr>.{json,parquet}``
+    — exactly one dot field between 'checkpoint' and the extension, which
+    cannot collide with classic multi-part names (two numeric fields).
+    Multiple writers may each have left a complete v2 checkpoint for the
+    same version; any is valid, so pick deterministically."""
+    pat = re.compile(
+        rf"{version:020d}\.checkpoint\.[^.]+\.(json|parquet)"
+    )
+    hits = sorted(f for f in os.listdir(delta_dir) if pat.fullmatch(f))
+    return hits[-1] if hits else None
+
+
+def _newest_checkpoint(
+    delta_dir: str, at_most: int
+) -> tuple[int, int | None] | None:
+    """(version, parts to replay with) of the newest COMPLETE checkpoint
+    at/below ``at_most``, or None. Candidates come from the directory
+    listing, not only ``_last_checkpoint``: after log-head cleanup the
+    state below a checkpoint exists nowhere else, and time travel below
+    the newest checkpoint must use an OLDER retained one
+    (``cleanup_delta_log(keep_after=...)``) that ``_last_checkpoint``
+    never names. Candidates are walked newest-first with the spec's
+    COMPLETENESS validation: a crashed multi-part write leaves a partial
+    part set the listing still surfaces — skip it for the next-older."""
+    ckpts = _checkpoint_versions(delta_dir)
+    lc = _read_last_checkpoint(delta_dir)
+    for cv in sorted((v for v in ckpts if v <= at_most), reverse=True):
+        parts = ckpts[cv]
+        if lc and lc.get("version") == cv and lc.get("parts"):
+            parts = lc["parts"]
+        usable, replay_parts = _usable_checkpoint_form(delta_dir, cv, parts)
+        if usable:
+            return cv, replay_parts
+    return None
+
+
+def _arrow_py(v, t: pa.DataType):
+    """One pyarrow ``to_pylist`` value as the action JSON it encodes:
+    MAP values become dicts (pyarrow 16 yields ``(key, value)`` pairs and
+    has no ``maps_as_pydicts``), recursively through structs and lists,
+    and a struct whose every field is null reads as absent (a foreign
+    writer's all-null ``deletionVector`` struct means "no vector")."""
+    if v is None:
+        return None
+    if pa.types.is_map(t):
+        return {k: _arrow_py(x, t.item_type) for k, x in v}
+    if pa.types.is_struct(t):
+        out = {f.name: _arrow_py(v.get(f.name), f.type) for f in t}
+        return out if any(x is not None for x in out.values()) else None
+    if pa.types.is_list(t) or pa.types.is_large_list(t):
+        return [_arrow_py(x, t.value_type) for x in v]
+    return v
+
+
+def _non_null(d: dict) -> dict:
+    return {k: v for k, v in d.items() if v is not None}
+
+
+_CHECKPOINT_COLUMNS = (
+    "add", "remove", "metaData", "protocol", "txn",
+    "sidecar", "checkpointMetadata", "domainMetadata",
+)
+
+
+def _fold_parquet_actions(
+    state: _DeltaState, paths: list[str]
+) -> tuple[list[dict], dict | None]:
+    """Fold checkpoint-schema parquet rows (classic checkpoint parts, a
+    v2 spec file, or v2 sidecars) into ``state``, read with pyarrow;
+    returns (``sidecar`` actions, ``checkpointMetadata`` payload) — both
+    v2-spec-file-only, collected in the SAME pass as the action fold.
+    Shared by all three forms so the action semantics cannot drift."""
+    sidecars: list[dict] = []
+    ckpt_meta: dict | None = None
+    for path in paths:
+        have = set(pq.read_schema(path).names)
+        want = [c for c in _CHECKPOINT_COLUMNS if c in have]
+        tbl = pq.read_table(path, columns=want)
+        for col in want:
+            arr = tbl.column(col)
+            for a in arr.to_pylist():
+                a = _arrow_py(a, arr.type)
+                if a is None:
+                    continue
+                if col == "add" and a.get("path") is not None:
+                    state.live[a["path"]] = _non_null(a)
+                elif col == "remove" and a.get("path") is not None:
+                    state.tombstones[a["path"]] = _non_null(a)
+                elif col == "metaData" and a.get("schemaString") is not None:
+                    state.metadata = a
+                elif col == "protocol" and a.get("minReaderVersion") is not None:
+                    # the FULL action: a v3 checkpoint's readerFeatures
+                    # list decides acceptance, not the version alone
+                    proto = _non_null(a)
+                    _check_protocol(proto)
+                    state.protocol = proto
+                elif col == "txn" and a.get("appId") is not None:
+                    state.txns[a["appId"]] = _non_null(a)
+                elif col == "domainMetadata" and a.get("domain") is not None:
+                    if a.get("removed"):
+                        state.domains.pop(a["domain"], None)
+                    else:
+                        state.domains[a["domain"]] = a
+                elif col == "sidecar" and a.get("path") is not None:
+                    sidecars.append(a)
+                elif (
+                    col == "checkpointMetadata"
+                    and a.get("version") is not None
+                ):
+                    ckpt_meta = a
+    return sidecars, ckpt_meta
+
+
+def _fold_json_action(state: _DeltaState, a: dict) -> dict | None:
+    """Fold one JSON checkpoint action dict into ``state``; returns the
+    sidecar payload when the action is a ``sidecar`` reference."""
+    if "add" in a:
+        state.live[a["add"]["path"]] = a["add"]
+    elif "remove" in a:
+        state.tombstones[a["remove"]["path"]] = a["remove"]
+    elif "metaData" in a:
+        state.metadata = a["metaData"]
+    elif "protocol" in a:
+        _check_protocol(a["protocol"])
+        state.protocol = a["protocol"]
+    elif "txn" in a:
+        app = a["txn"].get("appId")
+        if app is not None:
+            state.txns[app] = a["txn"]
+    elif "domainMetadata" in a:
+        dm = a["domainMetadata"]
+        if dm.get("removed"):
+            state.domains.pop(dm.get("domain"), None)
+        elif dm.get("domain") is not None:
+            state.domains[dm["domain"]] = dm
+    elif "sidecar" in a:
+        return a["sidecar"]
+    return None
+
+
+def _read_actions(full: str) -> list[dict]:
+    """The actions of one newline-delimited JSON log file, in order."""
+    with open(full) as fh:
+        return [json.loads(line) for line in fh if line.strip()]
+
+
+def _checkpoint_rows(
+    delta_dir: str, version: int, parts: int | None
+) -> _DeltaState:
+    """Replay a checkpoint into the full state it carries: live ``add``
+    actions (path -> add dict, stats and sizes preserved), the
+    ``metaData`` action, the ``protocol``, plus the ``remove`` tombstones
+    and ``txn`` app versions PROTOCOL.md requires checkpoints to preserve
+    — exactly as the protocol's checkpoint schema stores them (top-level
+    struct columns). Handles all three protocol forms: classic single- or
+    multi-part parquet, and V2 (UUID-named json/parquet spec file +
+    parquet sidecars under ``_sidecars/``)."""
+    state = _DeltaState(version, {}, None, dict(_PROTOCOL))
+    if parts:
+        names = [
+            os.path.join(
+                delta_dir, f"{version:020d}.checkpoint.{p:010d}.{parts:010d}.parquet"
+            )
+            for p in range(1, parts + 1)
+        ]
+        _fold_parquet_actions(state, names)
+        return state
+    classic = os.path.join(delta_dir, f"{version:020d}.checkpoint.parquet")
+    spec = _resolve_v2_checkpoint(delta_dir, version)
+    if os.path.exists(classic) or spec is None:
+        # a missing classic file raises the reader's missing-file error
+        _fold_parquet_actions(state, [classic])
+        return state
+    full = os.path.join(delta_dir, spec)
+    sidecars: list[dict] = []
+    ckpt_meta: dict | None = None
+    if spec.endswith(".json"):
+        for a in _read_actions(full):
+            if "checkpointMetadata" in a:
+                ckpt_meta = a["checkpointMetadata"]
+                continue
+            sc = _fold_json_action(state, a)
+            if sc is not None:
+                sidecars.append(sc)
+    else:
+        sidecars, ckpt_meta = _fold_parquet_actions(state, [full])
+    # PROTOCOL.md: readers MUST validate the embedded version — a
+    # misnamed/corrupt spec file must not silently replay as another
+    # version's state
+    if ckpt_meta is None or int(ckpt_meta.get("version", -1)) != version:
+        raise ValueError(
+            f"v2 checkpoint {spec} is invalid: checkpointMetadata.version="
+            f"{(ckpt_meta or {}).get('version')!r} does not match the "
+            f"file-name version {version}"
+        )
+    if sidecars:
+        paths = [
+            os.path.join(delta_dir, SIDECAR_DIR, s["path"]) for s in sidecars
+        ]
+        missing = [p for p in paths if not os.path.exists(p)]
+        if missing:
+            raise FileNotFoundError(
+                f"v2 checkpoint {spec} references missing sidecar file(s) "
+                f"{[os.path.basename(p) for p in missing]} under "
+                f"{os.path.join(delta_dir, SIDECAR_DIR)}"
+            )
+        _fold_parquet_actions(state, paths)
+    return state
+
+
+def _single_commits(delta_dir: str) -> dict[int, str]:
+    """version -> file name of every single-version JSON commit — EXACT
+    20-digit names (the protocol's naming rule); log compactions and
+    .crc files never match."""
+    return {
+        int(f.split(".")[0]): f
+        for f in os.listdir(delta_dir)
+        if re.fullmatch(r"\d{20}\.json", f)
+    }
+
+
+def _replay_delta_log(
+    delta_dir: str, version: int | None = None
+) -> _DeltaState:
+    """The ONE Delta snapshot fold, shared by every reader and by the
+    checkpoint writer (so protocol fixes cannot drift between them):
+    bootstrap from the newest complete checkpoint at/below the requested
+    version, verify commit contiguity, then apply the log tail's actions
+    in order. Returns the replayed :class:`_DeltaState` (live adds by
+    path, metaData, protocol, unexpired remove tombstones, latest txn per
+    appId). The unsupported-``protocol`` guard runs inside the fold, so
+    every consumer refuses what it cannot replay."""
+    by_version = _single_commits(delta_dir)
+    # Log compactions (`<start>.<end>.compacted.json`, Delta 3.x /
+    # delta-rs) carry the NET actions of a version range — the snapshot
+    # fold may substitute one for its covered commits (one file open
+    # instead of end-start+1), but time travel INSIDE a compacted range
+    # still needs the single commits (a compaction replayed as "version
+    # <start>" would apply future-state actions).
+    compactions: dict[int, list[tuple[int, str]]] = {}
+    for f in os.listdir(delta_dir):
+        m = re.fullmatch(r"(\d{20})\.(\d{20})\.compacted\.json", f)
+        if m:
+            s, e = int(m.group(1)), int(m.group(2))
+            compactions.setdefault(s, []).append((e, f))
+    for lst in compactions.values():
+        # widest FITTING range wins at selection time — keeping only the
+        # global widest would discard a narrower compaction that legally
+        # covers a smaller time-travel range
+        lst.sort(reverse=True)
+    # a fully-compacted log (checkpoint only, JSON head expired) is legal:
+    # a checkpoint's version counts toward the latest resolvable version,
+    # and so does a compaction's END version (its singles may be gone)
+    latest = max(
+        max(by_version, default=-1),
+        max(_checkpoint_versions(delta_dir), default=-1),
+        max((e for lst in compactions.values() for e, _ in lst), default=-1),
+    )
+    if latest < 0:
+        raise FileNotFoundError(f"no Delta commits in {delta_dir}")
+    want = latest if version is None else int(version)
+    if want > latest:
+        raise FileNotFoundError(f"version {want} not in Delta log (latest {latest})")
+    state = _DeltaState(want, {}, None, dict(_PROTOCOL))
+    start_after = -1
+    found = _newest_checkpoint(delta_dir, want)
+    if found is not None:
+        start_after, parts = found
+        state = _checkpoint_rows(delta_dir, start_after, parts)
+        state.version = want
+    # greedy contiguous cover of (start_after, want]: a compaction whose
+    # whole range fits replaces its commits; otherwise the single commit.
+    # Missing versions covered by NEITHER refuse — the spec's continuity
+    # rule, with compactions as a second legal source of coverage.
+    v = start_after + 1
+    while v <= want:
+        comp = next(
+            ((e, f) for e, f in compactions.get(v, ()) if e <= want), None
+        )
+        if comp is not None:
+            _fold_commit_file(os.path.join(delta_dir, comp[1]), state)
+            v = comp[0] + 1
+        elif v in by_version:
+            _fold_commit_file(os.path.join(delta_dir, by_version[v]), state)
+            v += 1
+        else:
+            raise FileNotFoundError(
+                f"Delta log {delta_dir} is missing commit {v} (no single "
+                f"commit and no compaction starting there fits within "
+                f"version {want}; checkpoint covers through {start_after}) "
+                "— cannot return a partial snapshot"
+            )
+    if state.metadata is None or state.metadata.get("schemaString") is None:
+        raise FileNotFoundError(
+            f"no metaData action at or below version {want} in {delta_dir}"
+        )
+    return state
+
+
+def _fold_commit_file(full: str, state: _DeltaState) -> None:
+    """Apply one JSON commit's (or compaction's) actions to ``state`` —
+    the single action fold both the per-commit tail and the compaction
+    substitution use. Adds apply after every other action of the file: a
+    ``remove`` + ``add`` of one path in one commit is a deletion-vector
+    or metadata update, and the add wins whatever the line order (the
+    same rule :func:`delta_deltas_full` applies)."""
+    actions = _read_actions(full)
+    for action in actions:
+        if "protocol" in action:
+            _check_protocol(action["protocol"])
+            state.protocol = action["protocol"]
+        elif "metaData" in action:
+            state.metadata = action["metaData"]
+        elif "remove" in action:
+            state.live.pop(action["remove"]["path"], None)
+            state.tombstones[action["remove"]["path"]] = action["remove"]
+        elif "txn" in action:
+            app = action["txn"].get("appId")
+            if app is not None:
+                state.txns[app] = action["txn"]
+        elif "domainMetadata" in action:
+            dm = action["domainMetadata"]
+            if dm.get("removed"):
+                state.domains.pop(dm.get("domain"), None)
+            elif dm.get("domain") is not None:
+                state.domains[dm["domain"]] = dm
+    for action in actions:
+        if "add" in action:
+            state.live[action["add"]["path"]] = action["add"]
+            # re-adding a removed path supersedes its tombstone
+            state.tombstones.pop(action["add"]["path"], None)
+
+
+def _parse_delta_commit(delta_dir: str, version: int):
+    """One Delta JSON commit's file actions: (adds {path: action}, removed
+    paths, cdc actions, any-dataChange flag). Loud when the commit file
+    expired — the CDF horizon is the foreign log-retention horizon."""
+    fname = os.path.join(delta_dir, f"{version:020d}.json")
+    if not os.path.exists(fname):
+        raise FileNotFoundError(
+            f"change feed needs Delta commit {version}, missing from "
+            f"{delta_dir} — the foreign log was cleaned below it"
+        )
+    adds: dict[str, dict] = {}
+    removes: set[str] = set()
+    cdc: list[dict] = []
+    any_dc = False
+    for a in _read_actions(fname):
+        if "add" in a:
+            adds[a["add"]["path"]] = a["add"]
+            any_dc = any_dc or a["add"].get("dataChange", True)
+        elif "remove" in a:
+            removes.add(a["remove"]["path"])
+            any_dc = any_dc or a["remove"].get("dataChange", True)
+        elif "cdc" in a:
+            cdc.append(a["cdc"])
+        elif "protocol" in a:
+            _check_protocol(a["protocol"])
+    return adds, removes, cdc, any_dc
+
+
+def _delta_dvs(live: dict[str, dict]) -> dict[str, dict]:
+    """path -> deletionVector descriptor of the live adds carrying one."""
+    return {
+        f: a["deletionVector"] for f, a in live.items() if a.get("deletionVector")
+    }
+
+
+def _delta_record(
+    v: int, prev: dict, new: dict, cdc: list, data_change: bool
+) -> dict:
+    """One per-commit record of a Delta log in the txlog record shape
+    (:func:`commit_deltas_full`), plus ``pvals`` (Delta files carry
+    partitionValues in the LOG, not necessarily in hive paths). A commit
+    whose every file action is ``dataChange=false`` reads as an
+    ``optimize``."""
+    rec = _commit_record(
+        v, "write" if data_change else "optimize", list(cdc),
+        prev, new, _delta_dvs(prev), _delta_dvs(new),
+    )
+    rec["pvals"] = {
+        f: (new.get(f) or prev[f]).get("partitionValues") or {}
+        for f in set(new) | set(prev)
+    }
+    return rec
+
+
+def delta_deltas_full(delta_dir: str, lo: int, hi: int) -> list[dict]:
+    """Per-commit deltas of a Delta log over ``[lo, hi]`` — each commit's
+    JSON file actions ARE its delta; the DV descriptors before it come
+    from the snapshot fold. When the JSON head expired above ``lo``, the
+    checkpoint at/below the head bootstraps ONE synthetic full-snapshot
+    record (the same clamped bootstrap a txlog stream has after
+    ``cleanup_log``). Every version after the bootstrap needs its SINGLE
+    commit: log compactions net per-commit deltas away by construction."""
+    commits = _single_commits(delta_dir)
+    out: list[dict] = []
+    prev: dict[str, dict] = {}
+    start = lo
+    head = min(commits) if commits else None
+    if head is not None and head > lo:
+        # the bootstrap record must lie INSIDE the asked-for range: a
+        # checkpoint below lo leaves the gap to the head uncovered, and
+        # one above hi would emit a snapshot OUTSIDE the range
+        found = _newest_checkpoint(delta_dir, hi)
+        if found is None or found[0] < lo:
+            raise FileNotFoundError(
+                f"change range [{lo}, {hi}] starts below the retained "
+                f"Delta log head (oldest commit: {head}) and no complete "
+                f"checkpoint in [{lo}, {hi}] covers the gap — those "
+                "deltas are unreconstructible"
+            )
+        cv, parts = found
+        # a checkpoint at cv covers everything <= cv even when the JSON
+        # commit AT cv is still retained (cv >= head)
+        live = _checkpoint_rows(delta_dir, cv, parts).live
+        out.append(_delta_record(cv, {}, live, [], True))
+        prev = live
+        start = cv + 1
+    elif lo > 0:
+        prev = _replay_delta_log(delta_dir, lo - 1).live
+    have = sorted(v for v in commits if start <= v <= hi)
+    if have != list(range(start, hi + 1)):
+        raise FileNotFoundError(
+            f"Delta log {delta_dir}: missing single commit(s) in "
+            f"[{start}, {hi}] (have {have}) — change feeds need the "
+            "per-commit JSON; compactions cannot serve deltas"
+        )
+    for v in have:
+        adds, removes, cdc, any_dc = _parse_delta_commit(delta_dir, v)
+        new = {f: a for f, a in prev.items() if f not in removes}
+        new.update(adds)
+        out.append(_delta_record(v, prev, new, cdc, any_dc))
+        prev = new
+    return out
+
+
+def _schema(metadata: dict) -> StructType:
+    return StructType.fromJson(json.loads(metadata["schemaString"]))
+
+
+def _mapping_mode(metadata: dict | None) -> str:
+    """The table's column-mapping mode from metaData.configuration
+    (PROTOCOL.md: absent == 'none')."""
+    cfg = (metadata or {}).get("configuration") or {}
+    return cfg.get("delta.columnMapping.mode", "none")
+
+
+def _require_supported_mapping(metadata: dict) -> str:
+    """'none', 'name', or 'id' — all three protocol modes read; anything
+    else refuses loudly as the spec requires of readers that cannot
+    honor a mode. Under 'id' data columns resolve by parquet field id;
+    stats and partitionValues stay keyed by physicalName in every mode
+    (they describe the log, not the parquet layout resolution)."""
+    mode = _mapping_mode(metadata)
+    if mode not in ("none", "name", "id"):
+        raise NotImplementedError(
+            f"delta.columnMapping.mode={mode!r} not supported (none|name|id)"
+        )
+    return mode
+
+
+def _physical_names(metadata: dict) -> dict[str, str]:
+    """logical field name -> physical parquet column name, resolved from
+    the schemaString's ``delta.columnMapping.physicalName`` field
+    metadata (identity for unannotated fields — legal for mode=none
+    tables and for fields an upgrade left identity-mapped)."""
+    return {
+        f.name: (f.metadata or {}).get("delta.columnMapping.physicalName", f.name)
+        for f in _schema(metadata).fields
+    }
+
+
+def _field_ids(metadata: dict) -> dict[str, int]:
+    """logical field name -> parquet field id, from the schemaString's
+    ``delta.columnMapping.id`` annotations (columnMapping mode=id tables
+    must carry them on every field)."""
+    ids = {
+        f.name: (f.metadata or {}).get("delta.columnMapping.id")
+        for f in _schema(metadata).fields
+    }
+    missing = sorted(n for n, i in ids.items() if i is None)
+    if missing:
+        raise ValueError(
+            f"columnMapping mode=id but field(s) {missing} carry no "
+            "delta.columnMapping.id annotation — the mapping is "
+            "unresolvable"
+        )
+    return {n: int(i) for n, i in ids.items()}
+
+
+# ------------------------------------------- either log, for DataSources
+
+
+def latest_version(log_dir: str) -> int:
+    if is_delta_log(log_dir):
+        return _replay_delta_log(log_dir).version
+    return replay_log(log_dir)[0]
+
+
+def _delta_binding(metadata: dict) -> tuple[dict | None, dict | None]:
+    mode = _require_supported_mapping(metadata)
+    if mode == "none":
+        return None, None
+    return _physical_names(metadata), (
+        _field_ids(metadata) if mode == "id" else None
+    )
+
+
+def column_binding_at(
+    log_dir: str, as_of: int | None = None
+) -> tuple[dict | None, dict | None]:
+    """(logical -> PHYSICAL column names or None for identity, logical ->
+    parquet FIELD ID or None) at ``as_of``. Field ids are set only for a
+    Delta log under columnMapping mode=id, where data columns resolve by
+    id (the stored name may differ file to file); Delta's physical names
+    stay valid in both name and id modes, since partitionValues stay
+    keyed by them."""
+    if is_delta_log(log_dir):
+        return _delta_binding(_replay_delta_log(log_dir, as_of).metadata)
+    return mapping_at(log_dir, as_of), None
+
+
+def snapshot_at(log_dir: str, as_of: int | None = None):
+    """(live files, DV descriptors by file, raw partition values by file
+    or None, column mapping, field ids) at ``as_of``. Raw partition
+    values come from a Delta log's ``add.partitionValues`` (Delta permits
+    non-hive paths); None means "parse the hive path"."""
+    if is_delta_log(log_dir):
+        st = _replay_delta_log(log_dir, as_of)
+        mapping, ids = _delta_binding(st.metadata)
+        return (
+            sorted(st.live),
+            _delta_dvs(st.live),
+            {f: a.get("partitionValues") or {} for f, a in st.live.items()},
+            mapping,
+            ids,
+        )
+    _v, files, dvs = replay_log_full(log_dir, as_of)
+    return files, dvs, None, mapping_at(log_dir, as_of), None

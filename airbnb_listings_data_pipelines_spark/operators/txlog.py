@@ -49,6 +49,16 @@ import uuid
 from urllib.parse import quote
 
 from ..localframe import local_df
+from .logfold import (
+    commit_deltas_full,
+    hive_partition_values,
+    mapping_at,
+    partition_meta,
+    replay_log,
+    replay_log_full,
+    schema_and_mapping_at,
+    schema_json_at,
+)
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
@@ -526,41 +536,6 @@ def replay_stats(log_dir: str, as_of: int | None = None) -> dict[str, dict]:
 _CKPT_SIDECAR_MIN_FILES = 50_000
 
 
-def _checkpoint_state(log_dir: str, c: dict) -> tuple[set, dict]:
-    """(live file set, dvs_state) carried by a CHECKPOINT commit: inline
-    ``adds``/``dvs_state`` for ordinary tables, or the parquet sidecar
-    named by ``adds_sidecar`` for huge file counts. The ONE reader every
-    fold must use — reading ``c["adds"]`` directly on a sidecar'd
-    checkpoint silently yields an empty table."""
-    sc = c.get("adds_sidecar")
-    if not sc:
-        return set(c["adds"]), dict(c.get("dvs_state") or {})
-    import pyarrow.parquet as pq
-
-    tbl = pq.read_table(os.path.join(log_dir, sc))
-    files = tbl.column("file").to_pylist()
-    dvs: dict[str, dict] = {}
-    if "dv_sidecar" in tbl.column_names:
-        # dv_pathkey is absent on pre-relative-path-keying checkpoints —
-        # its None default means "legacy basename-keyed sidecar"
-        pks = (
-            tbl.column("dv_pathkey").to_pylist()
-            if "dv_pathkey" in tbl.column_names
-            else [None] * len(files)
-        )
-        for f, s, card, pk in zip(
-            files,
-            tbl.column("dv_sidecar").to_pylist(),
-            tbl.column("dv_cardinality").to_pylist(),
-            pks,
-        ):
-            if s is not None:
-                dvs[f] = {"sidecar": s, "cardinality": int(card)}
-                if pk is not None:
-                    dvs[f]["pathkey"] = pk
-    return set(files), dvs
-
-
 def _commit_name(version: int) -> str:
     return f"{version:012d}.json"
 
@@ -611,122 +586,6 @@ _MAPPING_DEFAULT = object()
 _ROW_ID_PHYS = "_rt_row_id"
 
 
-def replay_log(log_dir: str, as_of: int | None = None) -> tuple[int, list[str]]:
-    """(version, live file list) at the latest version or at ``as_of`` —
-    the commit-log fold, as a pure os/json function (no SparkSession) so
-    both :class:`TxLogTable` and the ``txlog`` Python DataSource (whose
-    reader objects are pickled to executors) share ONE replay
-    implementation. Replays from the newest checkpoint commit (full
-    file list) at or before the requested version, not the whole log."""
-    v, files, _dvs = replay_log_full(log_dir, as_of)
-    return v, files
-
-
-def replay_log_full(
-    log_dir: str, as_of: int | None = None
-) -> tuple[int, list[str], dict[str, dict]]:
-    """(version, live files, deletion-vector state) — the full fold.
-
-    The DV state maps a live data file's relative path to its descriptor
-    ``{"sidecar": <rel path of the parquet sidecar holding its deleted
-    (file, row_index) rows>, "cardinality": <deleted-row count>,
-    "pathkey": <"rel" when the sidecar's file column holds relative
-    paths; absent on legacy basename-keyed sidecars>}`` — the
-    merge-on-read half of the table format (public
-    design: Delta's deletion vectors): a delete marks row POSITIONS in a
-    tiny sidecar instead of rewriting the data file, so a 1-row delete
-    costs O(deleted rows) bytes, not a file rewrite. Fold rules per
-    commit: removed files drop their DV (the data left the table or was
-    compacted), ``dvs`` entries replace per-file descriptors (a new DV
-    for a file supersedes its old one — DML always writes the union),
-    ``dvs_reset`` (restore) replaces the whole state, and checkpoint
-    commits carry the full state as ``dvs_state``."""
-    entries = sorted(f for f in os.listdir(log_dir) if f.endswith(".json"))
-    if not entries:
-        raise FileNotFoundError(f"no commits in {log_dir}")
-    commits = []
-    for name in entries:
-        version = int(name.split(".")[0])
-        if as_of is not None and version > as_of:
-            continue
-        with open(os.path.join(log_dir, name)) as fh:
-            commits.append((version, json.load(fh)))
-    if not commits:
-        raise FileNotFoundError(
-            f"no commit at or before version {as_of} in {log_dir}"
-        )
-    commits.sort()
-    # start from the last checkpoint commit (carries the full list)
-    start = 0
-    for i, (_v, c) in enumerate(commits):
-        if c.get("checkpoint"):
-            start = i
-    live: set[str] = set()
-    dvs: dict[str, dict] = {}
-    for _v, c in commits[start:]:
-        if c.get("checkpoint"):
-            live, dvs = _checkpoint_state(log_dir, c)
-        else:
-            live -= set(c["removes"])
-            live |= set(c["adds"])
-            for f in c["removes"]:
-                dvs.pop(f, None)
-            if c.get("dvs_reset") is not None:
-                dvs = dict(c["dvs_reset"])
-            for f, desc in (c.get("dvs") or {}).items():
-                dvs[f] = desc
-    return commits[-1][0], sorted(live), dvs
-
-
-def schema_and_mapping_at(
-    log_dir: str, as_of: int | None = None
-) -> tuple[str | None, dict | None]:
-    """(recorded schema JSON, column mapping) effective at ``as_of`` in
-    ONE log pass — readers need both on every snapshot read, and the
-    two latest-wins folds walk the same commit files, so scanning twice
-    would double the per-read small-JSON I/O on long logs."""
-    best_s: tuple[int, str] | None = None
-    best_m: tuple[int, dict] | None = None
-    for name in os.listdir(log_dir):
-        if not name.endswith(".json"):
-            continue
-        v = int(name.split(".")[0])
-        if as_of is not None and v > as_of:
-            continue
-        with open(os.path.join(log_dir, name)) as fh:
-            c = json.load(fh)
-        s = c.get("schema")
-        if s is not None and (best_s is None or v > best_s[0]):
-            best_s = (v, s)
-        m = c.get("column_mapping")
-        if m is not None and (best_m is None or v > best_m[0]):
-            best_m = (v, m)
-    return (
-        best_s[1] if best_s else None,
-        best_m[1] if best_m else None,
-    )
-
-
-def schema_json_at(log_dir: str, as_of: int | None = None) -> str | None:
-    """The recorded table schema (StructType JSON) effective at ``as_of``
-    — newest commit at/below it carrying a ``schema`` payload; None for
-    legacy logs. Session-free twin of :meth:`TxLogTable._schema_at`."""
-    return schema_and_mapping_at(log_dir, as_of)[0]
-
-
-def mapping_at(log_dir: str, as_of: int | None = None) -> dict | None:
-    """The column mapping (logical name -> PHYSICAL parquet column name)
-    effective at ``as_of`` — newest commit at/below it carrying a
-    ``column_mapping`` payload (each such commit records the FULL
-    mapping, so latest-wins is the whole fold). None = identity (table
-    never renamed/dropped a column — the overwhelmingly common case,
-    zero overhead). This is Delta's column-mapping design: RENAME
-    changes only the logical name (physical stays, so no file is
-    rewritten), DROP removes the logical binding, and a re-added name
-    gets a FRESH physical name so dropped data can never resurrect."""
-    return schema_and_mapping_at(log_dir, as_of)[1]
-
-
 def _physical_struct(schema, mapping: dict | None):
     """``schema`` with every field renamed logical -> physical (identity
     when unmapped) — the schema the parquet FILES actually carry."""
@@ -742,117 +601,6 @@ def _physical_struct(schema, mapping: dict | None):
             for f in schema.fields
         ]
     )
-
-
-def commit_file_deltas(
-    log_dir: str, from_version: int, to_version: int
-) -> list[tuple[int, list[str], list[str], str]]:
-    """Back-compat tuple shape of :func:`commit_deltas_full` — consumers
-    that predate deletion vectors (file-granularity CDF planning)."""
-    return [
-        (c["v"], c["adds"], c["removes"], c["op"])
-        for c in commit_deltas_full(log_dir, from_version, to_version)
-    ]
-
-
-def commit_deltas_full(
-    log_dir: str, from_version: int, to_version: int
-) -> list[dict]:
-    """Per-commit (version, files added, files removed, op) over
-    ``[from_version, to_version]``, computed checkpoint-aware in ONE
-    pass (a checkpoint commit's recorded adds are the full live list;
-    its TRUE delta is live(v) - live(v-1)). The op lets consumers
-    distinguish data-unchanged rewrites (OPTIMIZE — Delta's
-    ``dataChange=false``) from real DML. Shared by
-    :meth:`TxLogTable.read_changes` and the ``txlog`` streaming
-    DataSource's offset-range planner.
-
-    Bootstraps from the newest CHECKPOINT commit (full-file-list) at or
-    below ``from_version - 1`` — found by a short backward scan (commits
-    are checkpointed every ``_CHECKPOINT_EVERY``, so <= that many opens)
-    — instead of folding from commit 0: a long-lived streaming tail
-    polling this per trigger pays O(commits in range + checkpoint
-    interval), never O(total commits).
-
-    Each record is a dict: ``v``, ``adds``/``removes`` (TRUE file
-    deltas), ``op``, plus the deletion-vector deltas a row-exact change
-    feed needs: ``dv_changed`` maps a file live on BOTH sides of the
-    commit whose DV descriptor changed to ``(old_desc|None,
-    new_desc|None)`` (grown DV = rows deleted; shrunk/cleared — a
-    restore — = rows resurrected); ``dv_removed`` maps a removed file to
-    the DV it carried BEFORE the commit (so its rows are NOT re-reported
-    as deletes); ``dv_added`` maps an added file to the DV it carries
-    AFTER (a restore re-adding a DV'd file)."""
-    entries = sorted(f for f in os.listdir(log_dir) if f.endswith(".json"))
-    versions = [int(n.split(".")[0]) for n in entries]
-    if versions and versions[0] > 0 and from_version <= versions[0]:
-        # the range needs pre-horizon state (cleanup_log truncated the
-        # log): computing version v's TRUE delta needs live(v-1), so any
-        # from_version at or below the oldest retained commit is
-        # unreconstructible — refuse loudly instead of silently
-        # reporting the horizon checkpoint's full file list as one
-        # giant insert. (The streaming source's clamped bootstrap WANTS
-        # exactly that snapshot-as-first-batch and keeps its own, laxer
-        # guard — see sources/txlog_source._deltas_full.)
-        raise FileNotFoundError(
-            f"change feed from version {from_version} needs state below "
-            f"the retained log head (oldest commit: {versions[0]}) — "
-            "those commits were deleted by cleanup_log; the CDF horizon "
-            "is the log-retention horizon"
-        )
-    # backward scan for the bootstrap checkpoint strictly below the range
-    start_idx, live, dvs = 0, set(), {}
-    for i in range(len(entries) - 1, -1, -1):
-        if versions[i] >= from_version:
-            continue
-        with open(os.path.join(log_dir, entries[i])) as fh:
-            c = json.load(fh)
-        if c.get("checkpoint"):
-            start_idx = i + 1
-            live, dvs = _checkpoint_state(log_dir, c)
-            break
-    per_commit: list[dict] = []
-    prev, prev_dvs = set(live), dict(dvs)
-    for i in range(start_idx, len(entries)):
-        v = versions[i]
-        if v > to_version:
-            break
-        with open(os.path.join(log_dir, entries[i])) as fh:
-            c = json.load(fh)
-        if c.get("checkpoint"):
-            live, dvs = _checkpoint_state(log_dir, c)
-        else:
-            live = (live - set(c["removes"])) | set(c["adds"])
-            for f in c["removes"]:
-                dvs.pop(f, None)
-            if c.get("dvs_reset") is not None:
-                dvs = dict(c["dvs_reset"])
-            for f, desc in (c.get("dvs") or {}).items():
-                dvs[f] = desc
-        if v >= from_version:
-            adds = sorted(live - prev)
-            removes = sorted(prev - live)
-            both = live & prev
-            per_commit.append(
-                {
-                    "v": v,
-                    "adds": adds,
-                    "removes": removes,
-                    "op": c.get("op") or "",
-                    "dv_changed": {
-                        f: (prev_dvs.get(f), dvs.get(f))
-                        for f in sorted(both)
-                        if prev_dvs.get(f) != dvs.get(f)
-                    },
-                    "dv_removed": {
-                        f: prev_dvs[f] for f in removes if f in prev_dvs
-                    },
-                    "dv_added": {f: dvs[f] for f in adds if f in dvs},
-                    "cdc": c.get("cdc"),
-                }
-            )
-        prev, prev_dvs = set(live), dict(dvs)
-    return per_commit
 
 
 class TxLogTable:
@@ -1117,8 +865,8 @@ class TxLogTable:
         adopted losslessly). After conversion the txlog is
         authoritative — :meth:`to_delta_log` refuses (its version
         numbering would misalign with the pre-existing foreign log)."""
-        from .deltalog import (
-            _logical_schema,
+        from .deltalog import _logical_schema
+        from .logfold import (
             _physical_names,
             _replay_delta_log,
             _require_supported_mapping,
@@ -1127,7 +875,7 @@ class TxLogTable:
         t = cls(spark, path)
         if os.path.exists(t.log_dir):
             raise FileExistsError(f"{t.log_dir} already exists")
-        st = _replay_delta_log(spark, os.path.join(path, "_delta_log"))
+        st = _replay_delta_log(os.path.join(path, "_delta_log"))
         meta = st.metadata or {}
         cfg = meta.get("configuration") or {}
         mode = _require_supported_mapping(meta)
@@ -1202,7 +950,7 @@ class TxLogTable:
             bad = [
                 f
                 for f in files
-                if any(c not in cls._partition_values(f) for c in pby)
+                if any(c not in hive_partition_values(f) for c in pby)
             ]
             if bad:
                 raise ValueError(
@@ -1303,43 +1051,10 @@ class TxLogTable:
     # -------------------------------------------------------- partitioning
 
     def partition_meta(self) -> tuple[list[str], "object"]:
-        """(partition column names, their StructType) from commit 0 —
-        ``([], None)`` for unpartitioned tables. After
-        :meth:`cleanup_log` truncated the log head, the OLDEST retained
-        commit is a metadata-complete checkpoint carrying the same
-        ``partition_by``/``partition_schema`` payload, so the fallback
-        reads that instead."""
+        """(partition column names, their StructType) — ``([], None)`` for
+        unpartitioned tables; see :func:`logfold.partition_meta`."""
         if self._pmeta is None:
-            from pyspark.sql.types import StructType
-
-            c0_path = os.path.join(self.log_dir, _commit_name(0))
-            if os.path.exists(c0_path):
-                with open(c0_path) as fh:
-                    c0 = json.load(fh)
-            else:
-                oldest = sorted(
-                    f
-                    for f in os.listdir(self.log_dir)
-                    if f.endswith(".json")
-                )
-                if not oldest:
-                    raise FileNotFoundError(f"no commits in {self.log_dir}")
-                with open(os.path.join(self.log_dir, oldest[0])) as fh:
-                    c0 = json.load(fh)
-                if "partition_by" not in c0:
-                    raise FileNotFoundError(
-                        f"{self.log_dir}: commit 0 is gone and the oldest "
-                        f"retained commit {oldest[0]} carries no partition "
-                        "spec — the log head was truncated below a "
-                        "metadata-complete checkpoint"
-                    )
-            pby = c0.get("partition_by") or []
-            schema = (
-                StructType.fromJson(json.loads(c0["partition_schema"]))
-                if pby
-                else None
-            )
-            self._pmeta = (pby, schema)
+            self._pmeta = partition_meta(self.log_dir)
         return self._pmeta
 
     def _schema_at(self, as_of: int | None = None) -> str | None:
@@ -1461,23 +1176,6 @@ class TxLogTable:
             for fld in pschema.fields:
                 df = df.withColumn(fld.name, F.col(fld.name).cast(fld.dataType))
         return df.limit(0)
-
-    @staticmethod
-    def _partition_values(rel_path: str) -> dict[str, str | None]:
-        """Parse hive-style ``col=value`` segments out of a relative data
-        file path, unescaping the %XX escapes Spark's writer applies to
-        special characters. ``__HIVE_DEFAULT_PARTITION__`` is the writer's
-        null sentinel → None."""
-        from urllib.parse import unquote
-
-        out: dict[str, str | None] = {}
-        for seg in rel_path.split("/")[:-1]:
-            if "=" not in seg:
-                continue
-            k, _, v = seg.partition("=")
-            v = unquote(v)
-            out[unquote(k)] = None if v == "__HIVE_DEFAULT_PARTITION__" else v
-        return out
 
     # -------------------------------------------------------------- state
 
@@ -1968,7 +1666,7 @@ class TxLogTable:
                     )
             kept = []
             for f in files:
-                raw = self._partition_values(f).get(column)
+                raw = hive_partition_values(f).get(column)
                 if raw is None:
                     continue
                 v = _parse_partition_value(raw, fld)
@@ -2981,6 +2679,19 @@ class TxLogTable:
                     )
                 parts.append(dl)
                 from_version = oldest + 1
+            else:
+                # the TRUE delta of version v needs live(v - 1): after
+                # cleanup_log a range starting AT the horizon is as
+                # unreconstructible as one below it — refuse instead of
+                # reporting the horizon checkpoint's full file list as
+                # one giant insert (the fold serves that snapshot-as-
+                # first-record only to the streaming bootstrap)
+                raise FileNotFoundError(
+                    f"change feed from version {from_version} needs state "
+                    f"below the retained log head (oldest commit: {oldest})"
+                    " — those commits were deleted by cleanup_log; the CDF "
+                    "horizon is the log-retention horizon"
+                )
         if from_version > to_version:
             per_commit = []
         else:

@@ -5639,8 +5639,8 @@ def x92_dv_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     "STRIPPING the txlog, then INDEPENDENTLY MUTATING the bare "
     "_delta_log with a hand-authored append commit the engine never "
     "saw — is tailed by readStream.format('txlog') readChangeFeed=true "
-    "straight off its _delta_log (sources/txlog_source._dlog_* fold "
-    "twins, public PROTOCOL.md) into a silver merge whose aggregate "
+    "straight off its _delta_log (operators/logfold's Delta fold, "
+    "public PROTOCOL.md) into a silver merge whose aggregate "
     "hash-matches the oracle rebuild. The slices are the same shapes "
     "the native tail plans: RoaringBitmap DV deltas decode row-exact "
     "deletes, AddCDCFile slices stream O(changed rows) with Delta's "
@@ -6127,7 +6127,7 @@ def x96_write_serializable_rebase(spark: SparkSession, sf_dir: str) -> DataFrame
     "that bounds snapshot resolution to O(live files) parquet rows; "
     "v2's sidecars drop the rigid part naming so they can be written "
     "in parallel and reused across checkpoints. operators/deltalog."
-    "_write_v2_checkpoint/_checkpoint_rows, tests/"
+    "_write_v2_checkpoint, operators/logfold._checkpoint_rows, tests/"
     "test_delta_v2_checkpoint.py.",
 )
 def x97_delta_v2_checkpoint_roundtrip(
@@ -6347,7 +6347,7 @@ def x98_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     "maintenance: O(actions in range) JSON with no Spark job, so a "
     "tailing reader catching up through a busy day folds hundreds of "
     "commits in tens of file opens. operators/deltalog."
-    "write_delta_compaction/_fold_commit_file, tests/"
+    "write_delta_compaction, operators/logfold._fold_commit_file, tests/"
     "test_delta_compaction.py.",
 )
 def x99_log_compaction_substitution(
@@ -6894,7 +6894,8 @@ def x105_clustered_table_optimize(
 ) -> DataFrame:
     import json as _json
 
-    from ..operators.deltalog import _replay_delta_log, export_delta_log
+    from ..operators.deltalog import export_delta_log
+    from ..operators.logfold import _replay_delta_log
     from ..operators.txlog import TxLogTable
 
     orders = load_table(spark, sf_dir, "orders").select(
@@ -6922,9 +6923,7 @@ def x105_clustered_table_optimize(
             f"pruned read diverged: {n_pruned} != {n_scan}"
         )
     export_delta_log(spark, t)
-    st = _replay_delta_log(
-        spark, __import__("os").path.join(t.path, "_delta_log")
-    )
+    st = _replay_delta_log(__import__("os").path.join(t.path, "_delta_log"))
     dom = st.domains.get("delta.clustering")
     if dom is None or _json.loads(dom["configuration"])[
         "clusteringColumns"

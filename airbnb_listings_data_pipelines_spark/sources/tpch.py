@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import ensure_workers_can_import
+
 TPCH_TABLES = (
     "region",
     "nation",
@@ -24,67 +26,6 @@ TPCH_TABLES = (
     "documents",
     "embeddings",
 )
-
-
-def _ensure_workers_can_import(spark: SparkSession) -> None:
-    """Ship the package to Python workers once per SparkContext.
-
-    mapInPandas/pandas_udf closures that reference package-module helpers
-    (heavyhitters._mg_update, the multimodal codecs) are cloudpickled BY
-    REFERENCE, so the executor-side Python must be able to import
-    ``airbnb_listings_data_pipelines_spark``. When the driver process runs
-    with cwd=/root/repo that works by accident (workers inherit the cwd);
-    a driver started anywhere else fails with a worker-side
-    ModuleNotFoundError — found by driving the contract from /tmp per the
-    verify recipe. ``addPyFile`` of a package zip is the standard,
-    cwd-independent fix (same mechanism spark-submit --py-files uses);
-    one ~100 KB zip per context, guarded to run once.
-
-    The temp zip is removed at interpreter exit (``addPyFile`` copies it
-    into the SparkContext's own staging dir immediately, so the original
-    is safe to delete, but not before this process ends — a second
-    SparkContext in the same process would re-enter here anyway). If the
-    package is not importable as a plain directory of .py files (zip/egg
-    install), os.walk finds nothing — raise instead of shipping an empty
-    archive that would silently reintroduce the worker-side
-    ModuleNotFoundError.
-    """
-    sc = spark.sparkContext
-    if getattr(sc, "_alp_pyfile_added", False):
-        return
-    import atexit
-    import contextlib
-    import os
-    import tempfile
-    import zipfile
-
-    pkg_dir = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    root = os.path.dirname(pkg_dir)
-    fd, zpath = tempfile.mkstemp(suffix=".zip", prefix="alp_pkg_")
-    os.close(fd)
-    n_added = 0
-    with zipfile.ZipFile(zpath, "w", zipfile.ZIP_DEFLATED) as zf:
-        for dirpath, _dirnames, filenames in os.walk(pkg_dir):
-            for fn in filenames:
-                if fn.endswith(".py"):
-                    full = os.path.join(dirpath, fn)
-                    zf.write(full, os.path.relpath(full, root))
-                    n_added += 1
-    if n_added == 0:
-        with contextlib.suppress(OSError):
-            os.remove(zpath)
-        raise RuntimeError(
-            f"cannot ship package to Python workers: no .py files under {pkg_dir!r} "
-            "(zip/egg install?) — pass the package via spark-submit --py-files instead"
-        )
-
-    def _cleanup(path: str = zpath) -> None:
-        with contextlib.suppress(OSError):
-            os.remove(path)
-
-    atexit.register(_cleanup)
-    sc.addPyFile(zpath)
-    sc._alp_pyfile_added = True
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -106,7 +47,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # runtime-settable; required even when the caller's session builder
         # didn't set it (e.g. the driver's own SparkSession)
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    _ensure_workers_can_import(spark)
+    ensure_workers_can_import(spark)
     df = spark.read.parquet(f"{sf_dir.rstrip('/')}/{name}.parquet")
     if name == "events":
         ts_type = dict(df.dtypes).get("ts")

@@ -35,18 +35,24 @@ pairs included, like Delta CDF without CDC files); the net per-commit
 feed is ``TxLogTable.read_changes``. Removed files must still exist —
 the CDF horizon is the vacuum horizon, same as time travel.
 
-SELF-CONTAINMENT IS LOAD-BEARING: Spark runs this code in THREE kinds
-of python process — the user's driver, task workers (batch read), and
-the streaming source's long-lived planner runner. Only the driver is
-guaranteed to have this package importable; cloudpickle ships classes
-BY REFERENCE unless their module is registered for by-value pickling,
-and the streaming runner does not apply ``addPyFile`` paths. So this
-module (a) imports nothing package-internal — the commit-log fold
-helpers are INLINED pure twins of operators/txlog.py's (equivalence is
-pinned by tests/test_txlog_datasource.py), and (b) ``register()``
-registers the module for by-value pickling with Spark's bundled
-cloudpickle, making every process self-sufficient. pyspark/pyarrow
-imports stay by-reference (present in every Spark python process).
+The same source reads a FOREIGN Delta table (a directory whose log is
+``_delta_log`` and no ``_txlog``) without adoption: the log fold plans
+the same slice shapes from Delta's commits per the public PROTOCOL.md.
+
+SELF-CONTAINMENT RULE: Spark runs this code in THREE kinds of python
+process — the user's driver, task workers (batch and streaming reads),
+and the streaming source's long-lived planner runner. Only the driver
+is guaranteed to have this package importable; cloudpickle ships
+classes BY REFERENCE unless their module is registered for by-value
+pickling, and the streaming runner does not apply ``addPyFile`` paths.
+So this module imports only modules that ``register()`` ships by value
+— ``operators/logfold`` (the one commit-log fold, itself importing
+nothing package-internal) and ``operators/roaring`` (Delta
+deletion-vector decoding) — plus pyspark/pyarrow, which every Spark
+python process has. ``register()`` registers those modules and this one
+with Spark's bundled cloudpickle, making every process self-sufficient;
+tests/test_logfold.py drives a vanilla session from outside the repo to
+prove it.
 
 Scale shape: offset planning is driver-side small-JSON (O(commits in
 range)); data movement is O(files added in range) per micro-batch —
@@ -58,6 +64,7 @@ from __future__ import annotations
 
 import json
 import os
+import sys
 from typing import TYPE_CHECKING, Iterator
 
 from pyspark.sql.datasource import (
@@ -67,267 +74,36 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 
+from ..operators import logfold, roaring
+from ..operators.logfold import (
+    column_binding_at,
+    commit_deltas_full,
+    hive_partition_values,
+    is_delta_log,
+    latest_version,
+    partition_meta,
+    schema_json_at,
+    snapshot_at,
+)
+
 if TYPE_CHECKING:  # pragma: no cover
     import pyarrow as pa
 
-# set by register(): operators/roaring.decode_descriptor, carried into
-# package-less processes via the by-value module pickle
-_DELTA_DV_DECODE = None
-
 
 def register(spark) -> None:
-    """Register the ``txlog`` format on ``spark``. Ships this module BY
-    VALUE (cloudpickle) so streaming planner runners and task workers
-    need no package install, and additionally ``addPyFile``s a package
-    zip for batch workers — either mechanism alone covers batch; the
-    by-value registration is what makes STREAMING work on a vanilla
-    session (the streaming runner ignores pyFiles)."""
-    import sys
-    import tempfile
-    import zipfile
-
+    """Register the ``txlog`` format on ``spark``. Ships this module and
+    the two it imports from the package (``logfold``, ``roaring``) BY
+    VALUE (cloudpickle), so streaming planner runners and task workers
+    need no package install, and ships the package zip to batch workers
+    through the session's one worker-package shipper."""
     from pyspark import cloudpickle
 
-    # foreign-Delta deletion vectors decode with operators/roaring;
-    # stash the function as a module global HERE (driver-side, package
-    # importable) and register its module by value, so the by-value
-    # pickle of THIS module carries the decoder into planner runners and
-    # workers that cannot import the package (same self-containment
-    # contract as the inlined fold twins)
-    global _DELTA_DV_DECODE
-    from ..operators import roaring as _roaring
+    from ..session import ensure_workers_can_import
 
-    cloudpickle.register_pickle_by_value(_roaring)
-    _DELTA_DV_DECODE = _roaring.decode_descriptor
-    cloudpickle.register_pickle_by_value(sys.modules[__name__])
-    sc = spark.sparkContext
-    if not getattr(sc, "_txlog_pkg_shipped", False):
-        pkg_dir = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        root = os.path.dirname(pkg_dir)
-        zpath = os.path.join(
-            tempfile.mkdtemp(prefix="txlog_pkg_"),
-            os.path.basename(pkg_dir) + ".zip",
-        )
-        with zipfile.ZipFile(zpath, "w") as z:
-            for r, _dirs, fs in os.walk(pkg_dir):
-                for f in fs:
-                    if f.endswith(".py"):
-                        full = os.path.join(r, f)
-                        z.write(full, os.path.relpath(full, root))
-        sc.addPyFile(zpath)
-        sc._txlog_pkg_shipped = True
+    for mod in (logfold, roaring, sys.modules[__name__]):
+        cloudpickle.register_pickle_by_value(mod)
+    ensure_workers_can_import(spark)
     spark.dataSource.register(TxLogDataSource)
-
-
-# ---- inlined pure commit-log helpers (twins of operators/txlog.py's
-# replay_log / schema_json_at / commit_file_deltas / partition parsing;
-# tests/test_txlog_datasource.py pins them equivalent) ----
-
-
-def _replay(log_dir: str, as_of: int | None = None) -> tuple[int, list[str]]:
-    v, files, _dvs = _replay_full(log_dir, as_of)
-    return v, files
-
-
-def _ckpt_state(log_dir: str, c: dict) -> tuple[set, dict]:
-    """(live file set, dvs_state) of a CHECKPOINT commit — inlined twin
-    of operators/txlog._checkpoint_state: inline adds/dvs_state, or the
-    parquet sidecar named by ``adds_sidecar`` for huge file counts."""
-    sc = c.get("adds_sidecar")
-    if not sc:
-        return set(c["adds"]), dict(c.get("dvs_state") or {})
-    import pyarrow.parquet as pq
-
-    tbl = pq.read_table(os.path.join(log_dir, sc))
-    files = tbl.column("file").to_pylist()
-    dvs: dict = {}
-    if "dv_sidecar" in tbl.column_names:
-        pks = (
-            tbl.column("dv_pathkey").to_pylist()
-            if "dv_pathkey" in tbl.column_names
-            else [None] * len(files)
-        )
-        for f, sdc, card, pk in zip(
-            files,
-            tbl.column("dv_sidecar").to_pylist(),
-            tbl.column("dv_cardinality").to_pylist(),
-            pks,
-        ):
-            if sdc is not None:
-                dvs[f] = {"sidecar": sdc, "cardinality": int(card)}
-                if pk is not None:
-                    dvs[f]["pathkey"] = pk
-    return set(files), dvs
-
-
-def _replay_full(
-    log_dir: str, as_of: int | None = None
-) -> tuple[int, list[str], dict]:
-    """(version, live files, deletion-vector state) — inlined twin of
-    operators/txlog.replay_log_full (see there for the fold rules).
-    Foreign Delta logs fold via the _dlog twins (descriptors are Delta
-    DV descriptors there, distinguished by their storageType key)."""
-    if _is_delta(log_dir):
-        st = _dlog_replay(log_dir, as_of)
-        live = st["live"]
-        return (
-            st["v"],
-            sorted(live),
-            {
-                f: a["deletionVector"]
-                for f, a in live.items()
-                if a.get("deletionVector")
-            },
-        )
-    entries = sorted(f for f in os.listdir(log_dir) if f.endswith(".json"))
-    if not entries:
-        raise FileNotFoundError(f"no commits in {log_dir}")
-    commits = []
-    for name in entries:
-        v = int(name.split(".")[0])
-        if as_of is not None and v > as_of:
-            continue
-        with open(os.path.join(log_dir, name)) as fh:
-            commits.append((v, json.load(fh)))
-    if not commits:
-        raise FileNotFoundError(
-            f"no commit at or before version {as_of} in {log_dir}"
-        )
-    commits.sort()
-    start = 0
-    for i, (_v, c) in enumerate(commits):
-        if c.get("checkpoint"):
-            start = i
-    live: set[str] = set()
-    dvs: dict = {}
-    for _v, c in commits[start:]:
-        if c.get("checkpoint"):
-            live, dvs = _ckpt_state(log_dir, c)
-        else:
-            live = (live - set(c["removes"])) | set(c["adds"])
-            for f in c["removes"]:
-                dvs.pop(f, None)
-            if c.get("dvs_reset") is not None:
-                dvs = dict(c["dvs_reset"])
-            for f, desc in (c.get("dvs") or {}).items():
-                dvs[f] = desc
-    return commits[-1][0], sorted(live), dvs
-
-
-def _schema_json_at(log_dir: str, as_of: int | None = None) -> str | None:
-    if _is_delta(log_dir):
-        # Delta's schemaString IS Spark StructType JSON (PROTOCOL.md)
-        return _dlog_replay(log_dir, as_of)["meta"]["schemaString"]
-    best: tuple[int, str] | None = None
-    for name in os.listdir(log_dir):
-        if not name.endswith(".json"):
-            continue
-        v = int(name.split(".")[0])
-        if as_of is not None and v > as_of:
-            continue
-        with open(os.path.join(log_dir, name)) as fh:
-            c = json.load(fh)
-        s = c.get("schema")
-        if s is not None and (best is None or v > best[0]):
-            best = (v, s)
-    return best[1] if best else None
-
-
-def _deltas(
-    log_dir: str, from_version: int, to_version: int
-) -> list[tuple[int, list[str], list[str], str]]:
-    return [
-        (c["v"], c["adds"], c["removes"], c["op"])
-        for c in _deltas_full(log_dir, from_version, to_version)
-    ]
-
-
-def _deltas_full(log_dir: str, from_version: int, to_version: int) -> list[dict]:
-    """Per-commit file + deletion-vector deltas — inlined twin of
-    operators/txlog.commit_deltas_full (see there for the record shape).
-    Bootstraps from the newest checkpoint below the range (short
-    backward scan; checkpoints land every ~20 commits) so a streaming
-    tail's per-trigger poll is O(commits in range + checkpoint
-    interval), never O(total commits)."""
-    if _is_delta(log_dir):
-        return _dlog_deltas_full(log_dir, from_version, to_version)
-    entries = sorted(f for f in os.listdir(log_dir) if f.endswith(".json"))
-    versions = [int(n.split(".")[0]) for n in entries]
-    if versions and versions[0] > from_version:
-        # range starts below the retained log head (cleanup_log): the
-        # deltas are unreconstructible — same loud refusal as the
-        # operators/txlog twin
-        raise FileNotFoundError(
-            f"change feed from version {from_version} is below the "
-            f"retained log head (oldest commit: {versions[0]}) — the "
-            "commits were deleted by cleanup_log; the CDF horizon is "
-            "the log-retention horizon"
-        )
-    start_idx, live, dvs = 0, set(), {}
-    for i in range(len(entries) - 1, -1, -1):
-        if versions[i] >= from_version:
-            continue
-        with open(os.path.join(log_dir, entries[i])) as fh:
-            c = json.load(fh)
-        if c.get("checkpoint"):
-            start_idx = i + 1
-            live, dvs = _ckpt_state(log_dir, c)
-            break
-    out: list[dict] = []
-    prev, prev_dvs = set(live), dict(dvs)
-    for i in range(start_idx, len(entries)):
-        v = versions[i]
-        if v > to_version:
-            break
-        with open(os.path.join(log_dir, entries[i])) as fh:
-            c = json.load(fh)
-        if c.get("checkpoint"):
-            live, dvs = _ckpt_state(log_dir, c)
-        else:
-            live = (live - set(c["removes"])) | set(c["adds"])
-            for f in c["removes"]:
-                dvs.pop(f, None)
-            if c.get("dvs_reset") is not None:
-                dvs = dict(c["dvs_reset"])
-            for f, desc in (c.get("dvs") or {}).items():
-                dvs[f] = desc
-        if v >= from_version:
-            adds = sorted(live - prev)
-            removes = sorted(prev - live)
-            both = live & prev
-            out.append(
-                {
-                    "v": v,
-                    "adds": adds,
-                    "removes": removes,
-                    "op": c.get("op") or "",
-                    "dv_changed": {
-                        f: (prev_dvs.get(f), dvs.get(f))
-                        for f in sorted(both)
-                        if prev_dvs.get(f) != dvs.get(f)
-                    },
-                    "dv_removed": {
-                        f: prev_dvs[f] for f in removes if f in prev_dvs
-                    },
-                    "dv_added": {f: dvs[f] for f in adds if f in dvs},
-                    "cdc": c.get("cdc"),
-                }
-            )
-        prev, prev_dvs = set(live), dict(dvs)
-    return out
-
-
-def _raw_pvals(rel_path: str) -> dict:
-    from urllib.parse import unquote
-
-    out: dict = {}
-    for seg in rel_path.split("/")[:-1]:
-        if "=" not in seg:
-            continue
-        k, _, v = seg.partition("=")
-        v = unquote(v)
-        out[unquote(k)] = None if v == "__HIVE_DEFAULT_PARTITION__" else v
-    return out
 
 
 def _typed_pval(raw: str | None, dtype):
@@ -371,649 +147,6 @@ def _typed_pval(raw: str | None, dtype):
         f"txlog source: partition type {name!r} has no supported "
         "directory-name parse — refusing to emit a wrong NULL"
     )
-
-
-def _mapping_json_at(log_dir: str, as_of: int | None = None) -> dict | None:
-    """Column mapping (logical -> PHYSICAL parquet name) at ``as_of`` —
-    inlined twin of operators/txlog.mapping_at. None = identity."""
-    if _is_delta(log_dir):
-        return _dlog_mapping(_dlog_replay(log_dir, as_of)["meta"])
-    best: tuple[int, dict] | None = None
-    for name in os.listdir(log_dir):
-        if not name.endswith(".json"):
-            continue
-        v = int(name.split(".")[0])
-        if as_of is not None and v > as_of:
-            continue
-        with open(os.path.join(log_dir, name)) as fh:
-            c = json.load(fh)
-        m = c.get("column_mapping")
-        if m is not None and (best is None or v > best[0]):
-            best = (v, m)
-    return best[1] if best else None
-
-
-def _field_ids_json_at(log_dir: str, as_of: int | None = None) -> dict | None:
-    """logical -> parquet field id for a FOREIGN Delta log under
-    columnMapping mode=id; None for native txlogs (whose mapping is
-    name-keyed by construction) and for name/none Delta tables."""
-    if not _is_delta(log_dir):
-        return None
-    return _dlog_field_ids(_dlog_replay(log_dir, as_of)["meta"])
-
-
-def _partition_meta(log_dir: str):
-    """(partition column names, partition StructType|None) from commit 0 —
-    falling back to the oldest retained commit after cleanup_log
-    truncated the head (it is then a metadata-complete checkpoint
-    carrying the same partition payload; inlined twin of
-    operators/txlog.TxLogTable.partition_meta)."""
-    from pyspark.sql.types import StructType
-
-    if _is_delta(log_dir):
-        return _dlog_partition_meta(log_dir)
-    c0_path = os.path.join(log_dir, f"{0:012d}.json")
-    if os.path.exists(c0_path):
-        with open(c0_path) as fh:
-            c0 = json.load(fh)
-    else:
-        oldest = sorted(
-            f for f in os.listdir(log_dir) if f.endswith(".json")
-        )
-        if not oldest:
-            raise FileNotFoundError(f"no commits in {log_dir}")
-        with open(os.path.join(log_dir, oldest[0])) as fh:
-            c0 = json.load(fh)
-        if "partition_by" not in c0:
-            # mirrors TxLogTable.partition_meta: a truncated head whose
-            # oldest survivor is NOT a metadata-complete checkpoint must
-            # fail loudly, not silently read a partitioned table as
-            # unpartitioned (all partition columns null)
-            raise FileNotFoundError(
-                f"{log_dir}: commit 0 is gone and the oldest retained "
-                f"commit {oldest[0]} carries no partition spec — the log "
-                "head was truncated below a metadata-complete checkpoint"
-            )
-    pby = c0.get("partition_by") or []
-    pschema = (
-        StructType.fromJson(json.loads(c0["partition_schema"])) if pby else None
-    )
-    return pby, pschema
-
-
-# ---- inlined foreign-Delta fold twins (public delta.io PROTOCOL.md;
-# round-10: stream a _delta_log the engine doesn't own, no adoption).
-# Same self-containment contract as the txlog twins above: raw json +
-# pyarrow only, no SparkSession (the planner runner has none), no
-# package imports (register() stashes the roaring DV decoder). ----
-
-
-def _dlog_commits(log_dir: str) -> list[tuple[int, str]]:
-    """(version, filename) of every single-version Delta JSON commit —
-    20-digit names only; log compactions (`<s>.<e>.compacted.json`) and
-    .crc files never match (they are read optimizations, not commits)."""
-    import re
-
-    out = []
-    for f in os.listdir(log_dir):
-        if re.fullmatch(r"\d{20}\.json", f):
-            out.append((int(f.split(".")[0]), f))
-    return sorted(out)
-
-
-def _dlog_last_checkpoint(log_dir: str) -> dict | None:
-    p = os.path.join(log_dir, "_last_checkpoint")
-    if not os.path.exists(p):
-        return None
-    try:
-        with open(p) as fh:
-            return json.load(fh)
-    except (OSError, ValueError):
-        return None
-
-
-def _dlog_check_protocol(proto: dict) -> None:
-    """Refuse what the fold cannot replay — the same loud-refusal rule
-    as operators/deltalog._check_protocol, inlined. Classic parquet
-    checkpoints + v2 (UUID-named spec file + _sidecars/) checkpoints +
-    deletionVectors + columnMapping(name) are supported."""
-    ok = {
-        "deletionVectors", "columnMapping", "timestampNtz",
-        "appendOnly", "invariants", "checkConstraints",
-        "changeDataFeed", "generatedColumns", "v2Checkpoint",
-        "typeWidening",
-    }
-    rf = set(proto.get("readerFeatures") or [])
-    bad = rf - ok
-    if proto.get("minReaderVersion", 1) > 3 or bad:
-        raise NotImplementedError(
-            f"unsupported Delta reader requirement: minReaderVersion="
-            f"{proto.get('minReaderVersion')}, readerFeatures={sorted(bad)}"
-        )
-
-
-def _dlog_norm_add(add: dict) -> dict:
-    """Normalize one add action (json or pyarrow-checkpoint row): map
-    types arrive as lists of (k, v) pairs from pyarrow; an all-null
-    deletionVector struct means none."""
-    pv = add.get("partitionValues")
-    if isinstance(pv, list):
-        pv = dict(pv)
-    dv = add.get("deletionVector") or None
-    if dv is not None and not dv.get("storageType"):
-        dv = None
-    return {
-        "path": add["path"],
-        "partitionValues": pv or {},
-        "deletionVector": dv,
-    }
-
-
-def _dlog_norm_meta(md: dict) -> dict:
-    cfg = md.get("configuration")
-    if isinstance(cfg, list):
-        md = {**md, "configuration": dict(cfg)}
-    return md
-
-
-def _dlog_ckpt_state(
-    log_dir: str, version: int, parts
-) -> tuple[dict, dict | None]:
-    """(live {path: normalized add}, metadata|None) from a checkpoint,
-    read with pyarrow — classic single-/multi-part parquet, or the V2
-    form (UUID-named json/parquet spec file with file actions in
-    ``_sidecars/`` parquet) when no classic file exists at ``version``."""
-    if parts:
-        names = [
-            f"{version:020d}.checkpoint.{i:010d}.{int(parts):010d}.parquet"
-            for i in range(1, int(parts) + 1)
-        ]
-    elif os.path.exists(
-        os.path.join(log_dir, f"{version:020d}.checkpoint.parquet")
-    ):
-        names = [f"{version:020d}.checkpoint.parquet"]
-    else:
-        v2 = _dlog_resolve_v2(log_dir, version)
-        if v2 is not None:
-            return _dlog_v2_ckpt_state(log_dir, version, v2)
-        names = [f"{version:020d}.checkpoint.parquet"]  # loud ENOENT
-    live: dict[str, dict] = {}
-    metadata = None
-    for name in names:
-        m = _dlog_fold_ckpt_parquet(os.path.join(log_dir, name), live)
-        if m is not None:
-            metadata = m
-    return live, metadata
-
-
-def _dlog_ckpt_versions(log_dir: str) -> dict[int, int | None]:
-    """version -> parts of every checkpoint in the log (classic single/
-    multi-part and v2 uuid-named), from the directory listing — time
-    travel below the newest checkpoint bootstraps from an OLDER retained
-    one that _last_checkpoint never names."""
-    import re
-
-    out: dict[int, int | None] = {}
-    for f in os.listdir(log_dir):
-        m = re.fullmatch(r"(\d{20})\.checkpoint\.parquet", f)
-        if m:
-            out.setdefault(int(m.group(1)), None)
-            continue
-        m = re.fullmatch(r"(\d{20})\.checkpoint\.\d{10}\.(\d{10})\.parquet", f)
-        if m:
-            out[int(m.group(1))] = int(m.group(2))
-            continue
-        m = re.fullmatch(r"(\d{20})\.checkpoint\.[^.]+\.(json|parquet)", f)
-        if m:
-            out.setdefault(int(m.group(1)), None)
-    return out
-
-
-def _dlog_usable_ckpt(
-    log_dir: str, version: int, parts
-) -> tuple[bool, int | None]:
-    """(usable, parts_to_replay_with) — the completeness validation the
-    Delta spec requires before trusting a listed checkpoint (mirror of
-    operators/deltalog._usable_checkpoint_form): a crashed multi-part
-    checkpoint write leaves a partial part set; skip it (falling through
-    to a complete single-part/v2 form at the same version) rather than
-    failing the whole snapshot read."""
-    if parts:
-        names = [
-            os.path.join(
-                log_dir,
-                f"{version:020d}.checkpoint.{i:010d}.{int(parts):010d}.parquet",
-            )
-            for i in range(1, int(parts) + 1)
-        ]
-        if all(os.path.exists(n) and os.path.getsize(n) > 0 for n in names):
-            return True, int(parts)
-    classic = os.path.join(log_dir, f"{version:020d}.checkpoint.parquet")
-    if os.path.exists(classic) and os.path.getsize(classic) > 0:
-        return True, None
-    spec = _dlog_resolve_v2(log_dir, version)
-    if spec is not None and os.path.getsize(os.path.join(log_dir, spec)) > 0:
-        return True, None
-    return False, None
-
-
-def _dlog_resolve_v2(log_dir: str, version: int) -> str | None:
-    """UUID-named v2 checkpoint spec file for ``version`` (PROTOCOL.md
-    naming: one dot field between 'checkpoint' and the extension — the
-    classic multi-part names have two numeric fields, so no collision);
-    deterministic pick when several complete ones coexist."""
-    import re
-
-    pat = re.compile(rf"{version:020d}\.checkpoint\.[^.]+\.(json|parquet)")
-    hits = sorted(f for f in os.listdir(log_dir) if pat.fullmatch(f))
-    return hits[-1] if hits else None
-
-
-def _dlog_v2_ckpt_state(
-    log_dir: str, version: int, spec: str
-) -> tuple[dict, dict | None]:
-    """Replay a V2 checkpoint: fold the spec file's own actions (json
-    lines or checkpoint-schema parquet), validate checkpointMetadata
-    against the file-name version as the spec requires, then fold the
-    referenced ``_sidecars/`` parquet file actions."""
-    live: dict[str, dict] = {}
-    metadata = None
-    sidecars: list[str] = []
-    ckpt_ver = None
-    full = os.path.join(log_dir, spec)
-    if spec.endswith(".json"):
-        with open(full) as fh:
-            for line in fh:
-                line = line.strip()
-                if not line:
-                    continue
-                a = json.loads(line)
-                if "checkpointMetadata" in a:
-                    ckpt_ver = a["checkpointMetadata"].get("version")
-                elif "metaData" in a:
-                    metadata = _dlog_norm_meta(a["metaData"])
-                elif "protocol" in a:
-                    _dlog_check_protocol(a["protocol"])
-                elif "add" in a:
-                    live[a["add"]["path"]] = _dlog_norm_add(a["add"])
-                elif "sidecar" in a:
-                    sidecars.append(a["sidecar"]["path"])
-    else:
-        metadata, ckpt_ver, sidecars = _dlog_fold_v2_parquet(full, live)
-    if ckpt_ver is None or int(ckpt_ver) != version:
-        raise ValueError(
-            f"v2 checkpoint {spec} is invalid: checkpointMetadata.version="
-            f"{ckpt_ver!r} does not match the file-name version {version}"
-        )
-    for name in sidecars:
-        sc = os.path.join(log_dir, "_sidecars", name)
-        if not os.path.exists(sc):
-            raise FileNotFoundError(
-                f"v2 checkpoint {spec} references missing sidecar {name!r}"
-            )
-        m = _dlog_fold_ckpt_parquet(sc, live)
-        if m is not None:
-            metadata = m
-    return live, metadata
-
-
-def _dlog_fold_v2_parquet(full: str, live: dict):
-    """(metadata|None, checkpointMetadata.version|None, sidecar paths)
-    from a PARQUET v2 spec file; inline add actions fold into ``live``."""
-    import pyarrow.parquet as pq
-
-    metadata = _dlog_fold_ckpt_parquet(full, live)
-    have = set(pq.read_schema(full).names)
-    ckpt_ver = None
-    sidecars: list[str] = []
-    want = [c for c in ("checkpointMetadata", "sidecar") if c in have]
-    if want:
-        tbl = pq.read_table(full, columns=want)
-        if "checkpointMetadata" in want:
-            for cm in tbl.column("checkpointMetadata").to_pylist():
-                if cm and cm.get("version") is not None:
-                    ckpt_ver = cm["version"]
-        if "sidecar" in want:
-            for sc in tbl.column("sidecar").to_pylist():
-                if sc and sc.get("path"):
-                    sidecars.append(sc["path"])
-    return metadata, ckpt_ver, sidecars
-
-
-def _dlog_fold_ckpt_parquet(full: str, live: dict) -> dict | None:
-    """Fold one checkpoint-schema parquet file's add/metaData/protocol
-    actions into ``live``; returns the metaData payload if present —
-    shared by classic parts, v2 spec files, and v2 sidecars."""
-    import pyarrow.parquet as pq
-
-    metadata = None
-    have = set(pq.read_schema(full).names)
-    want = [c for c in ("add", "metaData", "protocol") if c in have]
-    tbl = pq.read_table(full, columns=want)
-    # COLUMNAR struct-field extraction, not per-row dicts: a 100 TB
-    # table's checkpoint holds millions of add rows — to_pylist()
-    # of whole rows would materialize every nested field of every
-    # action kind; field() slices only what the fold needs
-    if "add" in want:
-        add = tbl.column("add").combine_chunks()
-        fields = [f.name for f in add.type]
-        if "path" in fields:  # else degenerate: no adds recorded
-            paths = add.field("path").to_pylist()
-            # a minimal foreign writer may omit optional struct fields —
-            # tolerate exactly like the row-wise .get() form did
-            pvs = (
-                add.field("partitionValues").to_pylist()
-                if "partitionValues" in fields
-                else [None] * len(paths)
-            )
-            dvs = (
-                add.field("deletionVector").to_pylist()
-                if "deletionVector" in fields
-                else [None] * len(paths)
-            )
-            for p, pv, dv in zip(paths, pvs, dvs):
-                if p is not None:
-                    live[p] = _dlog_norm_add(
-                        {
-                            "path": p,
-                            "partitionValues": pv,
-                            "deletionVector": dv,
-                        }
-                    )
-    if "metaData" in want:
-        for md in tbl.column("metaData").to_pylist():
-            if md and md.get("schemaString"):
-                metadata = _dlog_norm_meta(md)
-    if "protocol" in want:
-        for proto in tbl.column("protocol").to_pylist():
-            if proto and proto.get("minReaderVersion") is not None:
-                _dlog_check_protocol(proto)
-    return metadata
-
-
-def _dlog_apply(
-    log_dir: str, fname: str
-) -> tuple[dict | None, dict, set, list[str], bool]:
-    """Parse one Delta JSON commit: (metadata|None, adds {path: add},
-    removed paths, cdc rel paths, any-dataChange flag). A remove+add of
-    one path in the same commit is a DV/metadata update — the add wins
-    (callers pop removes first, then apply adds)."""
-    meta = None
-    adds: dict[str, dict] = {}
-    removes: set[str] = set()
-    cdc: list[str] = []
-    any_dc = False
-    with open(os.path.join(log_dir, fname)) as fh:
-        for line in fh:
-            line = line.strip()
-            if not line:
-                continue
-            a = json.loads(line)
-            if "metaData" in a:
-                meta = _dlog_norm_meta(a["metaData"])
-            elif "protocol" in a:
-                _dlog_check_protocol(a["protocol"])
-            elif "add" in a:
-                adds[a["add"]["path"]] = _dlog_norm_add(a["add"])
-                if a["add"].get("dataChange", True):
-                    any_dc = True
-            elif "remove" in a:
-                removes.add(a["remove"]["path"])
-                if a["remove"].get("dataChange", True):
-                    any_dc = True
-            elif "cdc" in a:
-                pv = a["cdc"].get("partitionValues")
-                if isinstance(pv, list):
-                    pv = dict(pv)
-                cdc.append(
-                    {"path": a["cdc"]["path"], "partitionValues": pv or {}}
-                )
-    return meta, adds, removes, cdc, any_dc
-
-
-def _dlog_compactions(log_dir: str) -> dict[int, tuple[int, str]]:
-    """start -> (end, filename) of log compactions
-    (``<start>.<end>.compacted.json``), widest range per start. The
-    SNAPSHOT fold may substitute one for its covered single commits;
-    change feeds never consume them (per-commit deltas are netted away
-    by construction)."""
-    import re
-
-    out: dict[int, list[tuple[int, str]]] = {}
-    for f in os.listdir(log_dir):
-        m = re.fullmatch(r"(\d{20})\.(\d{20})\.compacted\.json", f)
-        if m:
-            s, e = int(m.group(1)), int(m.group(2))
-            out.setdefault(s, []).append((e, f))
-    for lst in out.values():
-        lst.sort(reverse=True)  # widest FITTING wins at selection time
-    return out
-
-
-def _dlog_replay(log_dir: str, as_of: int | None = None) -> dict:
-    """Snapshot fold: {"v", "live" {path: normalized add}, "meta"} at
-    ``as_of`` (default latest) — checkpoint bootstrap + a contiguous
-    cover of the tail by single commits and/or log compactions (greedy:
-    a compaction that fits the remaining range replaces its commits),
-    loud refusal when a version is covered by neither."""
-    commits = _dlog_commits(log_dir)
-    by_version = dict(commits)
-    compactions = _dlog_compactions(log_dir)
-    lc = _dlog_last_checkpoint(log_dir)
-    latest = max(
-        commits[-1][0] if commits else -1,
-        lc["version"] if lc else -1,
-        max((e for lst in compactions.values() for e, _ in lst), default=-1),
-    )
-    if latest < 0:
-        raise FileNotFoundError(f"no Delta commits in {log_dir}")
-    want = latest if as_of is None else int(as_of)
-    if want > latest:
-        raise FileNotFoundError(
-            f"version {want} not in Delta log (latest {latest})"
-        )
-    live: dict[str, dict] = {}
-    meta = None
-    start_after = -1
-    # newest AVAILABLE checkpoint at/below want (listing, not only
-    # _last_checkpoint — same rule as deltalog._replay_delta_log)
-    ckpts = _dlog_ckpt_versions(log_dir)
-    # newest-first with COMPLETENESS validation (spec rule): a partial
-    # multi-part checkpoint from a crashed/concurrent writer must not be
-    # selected; fall back to the next-older complete candidate
-    for cv in sorted((v for v in ckpts if v <= want), reverse=True):
-        parts = ckpts[cv]
-        if lc and lc.get("version") == cv and lc.get("parts"):
-            parts = lc["parts"]
-        usable, replay_parts = _dlog_usable_ckpt(log_dir, cv, parts)
-        if not usable:
-            continue
-        live, meta = _dlog_ckpt_state(log_dir, cv, replay_parts)
-        start_after = cv
-        break
-    v = start_after + 1
-    while v <= want:
-        comp = next(
-            ((e, f) for e, f in compactions.get(v, ()) if e <= want), None
-        )
-        if comp is not None:
-            fname = comp[1]
-            v = comp[0] + 1
-        elif v in by_version:
-            fname = by_version[v]
-            v += 1
-        else:
-            raise FileNotFoundError(
-                f"Delta log {log_dir}: missing commit {v} above checkpoint "
-                f"{start_after} (no single commit, no fitting compaction; "
-                f"need through {want})"
-            )
-        m2, adds, removes, _cdc, _dc = _dlog_apply(log_dir, fname)
-        if m2 is not None:
-            meta = m2
-        for p in removes:
-            live.pop(p, None)
-        live.update(adds)
-    if meta is None or meta.get("schemaString") is None:
-        raise FileNotFoundError(
-            f"no metaData action at or below version {want} in {log_dir}"
-        )
-    return {"v": want, "live": live, "meta": meta}
-
-
-def _dlog_rec(v: int, prev: dict, new: dict, cdc: list, nodata: bool) -> dict:
-    """One per-commit record in the SAME shape _deltas_full emits for
-    txlog commits, plus ``pvals`` (delta files carry partitionValues in
-    the LOG, not necessarily in hive paths)."""
-    padds, nadds = set(prev), set(new)
-    adds = sorted(nadds - padds)
-    removes = sorted(padds - nadds)
-    both = padds & nadds
-
-    def dv(side, f):
-        return side[f].get("deletionVector")
-
-    return {
-        "v": v,
-        "adds": adds,
-        "removes": removes,
-        "op": "optimize" if nodata else "write",
-        "dv_changed": {
-            f: (dv(prev, f), dv(new, f))
-            for f in sorted(both)
-            if dv(prev, f) != dv(new, f)
-        },
-        "dv_removed": {f: dv(prev, f) for f in removes if dv(prev, f)},
-        "dv_added": {f: dv(new, f) for f in adds if dv(new, f)},
-        "cdc": list(cdc),
-        "pvals": {
-            f: (new.get(f) or prev.get(f))["partitionValues"]
-            for f in set(adds) | set(removes) | both
-        },
-    }
-
-
-def _dlog_deltas_full(log_dir: str, lo: int, hi: int) -> list[dict]:
-    """Per-commit deltas for ``[lo, hi]`` — JSON actions ARE the delta;
-    prior DV descriptors come from the fold state. When the JSON head
-    expired above ``lo``, the checkpoint at/below the head bootstraps
-    ONE synthetic full-snapshot record (the same clamped-bootstrap
-    behavior the txlog stream has after cleanup_log)."""
-    commits = dict(_dlog_commits(log_dir))
-    lc = _dlog_last_checkpoint(log_dir)
-    out: list[dict] = []
-    prev: dict[str, dict] = {}
-    start = lo
-    head = min(commits) if commits else None
-    if head is not None and head > lo:
-        cv = lc.get("version", -1) if lc else -1
-        if cv < lo:
-            raise FileNotFoundError(
-                f"change feed from version {lo} is below the retained "
-                f"Delta log head (oldest commit: {head}) and no "
-                "checkpoint covers the gap"
-            )
-        if cv > hi:
-            # the whole requested range predates the checkpoint and its
-            # JSON commits were cleaned — refusing loudly beats emitting
-            # a full-snapshot record OUTSIDE the asked-for range
-            raise FileNotFoundError(
-                f"change range [{lo}, {hi}] lies below the Delta "
-                f"checkpoint at {cv} with its JSON commits cleaned — "
-                "those deltas are unreconstructible"
-            )
-        # a checkpoint at cv covers everything <= cv even when the JSON
-        # commit AT cv is still retained (cv >= head) — bootstrap one
-        # synthetic full-snapshot record and walk the tail
-        live, _meta = _dlog_ckpt_state(log_dir, cv, lc.get("parts"))
-        out.append(_dlog_rec(cv, {}, live, [], False))
-        prev = live
-        start = cv + 1
-    elif lo > 0:
-        prev = _dlog_replay(log_dir, lo - 1)["live"]
-    have = sorted(v for v in commits if start <= v <= hi)
-    if have != list(range(start, hi + 1)):
-        # every version in [start, hi] needs its SINGLE commit: log
-        # compactions net per-commit deltas away by construction, so a
-        # change feed can never substitute one — refuse rather than emit
-        # empty or partial deltas
-        raise FileNotFoundError(
-            f"Delta log {log_dir}: missing single commit(s) in "
-            f"[{start}, {hi}] (have {have}) — change feeds need the "
-            "per-commit JSON; compactions cannot serve deltas"
-        )
-    for v in have:
-        _m, adds, removes, cdc, any_dc = _dlog_apply(log_dir, commits[v])
-        new = dict(prev)
-        for p in removes:
-            new.pop(p, None)
-        new.update(adds)
-        out.append(_dlog_rec(v, prev, new, cdc, not any_dc))
-        prev = new
-    return out
-
-
-def _dlog_mapping(meta: dict) -> dict | None:
-    """logical -> PHYSICAL column names under columnMapping (from the
-    schemaString field annotations); None for mode none. Valid for BOTH
-    name and id modes — the spec requires physicalName annotations in
-    either, and partitionValues/stats stay keyed by physicalName even
-    when data columns resolve by field id (:func:`_dlog_field_ids`)."""
-    mode = (meta.get("configuration") or {}).get(
-        "delta.columnMapping.mode", "none"
-    )
-    if mode == "none":
-        return None
-    if mode not in ("name", "id"):
-        raise NotImplementedError(f"columnMapping mode {mode!r}")
-    from pyspark.sql.types import StructType
-
-    schema = StructType.fromJson(json.loads(meta["schemaString"]))
-    return {
-        f.name: (f.metadata or {}).get(
-            "delta.columnMapping.physicalName", f.name
-        )
-        for f in schema.fields
-    }
-
-
-def _dlog_field_ids(meta: dict | None) -> dict | None:
-    """logical -> parquet FIELD ID when columnMapping mode=id (the mode
-    where data columns resolve by id, not name — the stored column name
-    may differ file to file); None otherwise. Loud when an id-mode field
-    lacks its delta.columnMapping.id annotation."""
-    if not meta:
-        return None
-    if (meta.get("configuration") or {}).get(
-        "delta.columnMapping.mode", "none"
-    ) != "id":
-        return None
-    from pyspark.sql.types import StructType
-
-    schema = StructType.fromJson(json.loads(meta["schemaString"]))
-    ids = {
-        f.name: (f.metadata or {}).get("delta.columnMapping.id")
-        for f in schema.fields
-    }
-    missing = sorted(n for n, i in ids.items() if i is None)
-    if missing:
-        raise ValueError(
-            f"columnMapping mode=id but field(s) {missing} carry no "
-            "delta.columnMapping.id annotation"
-        )
-    return {n: int(i) for n, i in ids.items()}
-
-
-def _dlog_partition_meta(log_dir: str):
-    from pyspark.sql.types import StructType
-
-    meta = _dlog_replay(log_dir)["meta"]
-    pby = list(meta.get("partitionColumns") or [])
-    if not pby:
-        return [], None
-    schema = StructType.fromJson(json.loads(meta["schemaString"]))
-    by_name = {f.name: f for f in schema.fields}
-    return pby, StructType([by_name[c] for c in pby])
 
 
 # --------------------------------------------------------------- readers
@@ -1063,9 +196,7 @@ def _opt(options: dict, name: str, default=None):
 def _log_dir(options: dict) -> str:
     """The table's log directory: ``_txlog`` when present, else a FOREIGN
     ``_delta_log`` (round-10: medallion pipelines can stream straight
-    from tables the engine doesn't own — no CONVERT/adoption needed; the
-    Delta fold twins below plan the same slice shapes from Delta's JSON
-    commits per the public PROTOCOL.md)."""
+    from tables the engine doesn't own — no CONVERT/adoption needed)."""
     path = _opt(options, "path")
     if not path:
         raise ValueError("txlog source requires a path: .load('<table dir>')")
@@ -1074,10 +205,6 @@ def _log_dir(options: dict) -> str:
     if not os.path.isdir(tx) and os.path.isdir(dl):
         return dl
     return tx
-
-
-def _is_delta(log_dir: str) -> bool:
-    return os.path.basename(log_dir.rstrip("/")) == "_delta_log"
 
 
 def _typed_pvals(raw: dict, pby: list[str], pschema, mapping: dict | None):
@@ -1108,7 +235,7 @@ def _plan_files(
     non-hive file paths."""
     slices = []
     for f in files:
-        raw = raw_pvals[f] if raw_pvals is not None else _raw_pvals(f)
+        raw = raw_pvals[f] if raw_pvals is not None else hive_partition_values(f)
         pvals = _typed_pvals(raw, pby, pschema, mapping)
         desc = (dvs or {}).get(f)
         slices.append(
@@ -1127,7 +254,7 @@ def _dv_ref(table_path: str, f: str, desc: dict | None) -> tuple | None:
     sidecars, its basename for legacy ones (pre-change DML guaranteed
     those globally unique). A foreign DELTA descriptor (it carries
     ``storageType``) becomes a tagged 3-tuple the executor decodes with
-    the roaring module register() stashed."""
+    operators/roaring."""
     if not desc:
         return None
     if "storageType" in desc:
@@ -1157,12 +284,12 @@ def _plan_changes(
     deletes, shrunk (restore) = re-inserts."""
 
     slices: list[_FileSlice] = []
-    for rec in _deltas_full(log_dir, lo, hi):
+    for rec in commit_deltas_full(log_dir, lo, hi):
         v, op = rec["v"], rec["op"]
         rec_pvals = rec.get("pvals")  # Delta recs: partitionValues from the log
 
         def _pv(f: str) -> dict:
-            raw = rec_pvals[f] if rec_pvals is not None else _raw_pvals(f)
+            raw = rec_pvals[f] if rec_pvals is not None else hive_partition_values(f)
             return _typed_pvals(raw, pby, pschema, mapping)
 
         if op == "optimize":
@@ -1239,16 +366,14 @@ def _dv_indices(ref: tuple):
     file key)`` ref — a predicate-pushed read of the tiny
     (file, row_index) parquet, keyed exactly as the planner resolved
     the descriptor (relative path or legacy basename). A ``__delta__``
-    ref decodes the RoaringBitmap descriptor instead (operators/roaring
-    via the register()-stashed function, so package-less workers work)."""
+    ref decodes the RoaringBitmap descriptor instead (operators/roaring,
+    shipped by value like this module)."""
     if ref[0] == "__delta__":
         import numpy as np
 
-        decode = _DELTA_DV_DECODE
-        if decode is None:  # direct module use without register()
-            from ..operators.roaring import decode_descriptor as decode
         return np.asarray(
-            decode(json.loads(ref[2]), ref[1]), dtype=np.int64
+            roaring.decode_descriptor(json.loads(ref[2]), ref[1]),
+            dtype=np.int64,
         )
     import pyarrow.parquet as pq
 
@@ -1381,12 +506,12 @@ class TxLogBatchReader(DataSourceReader):
         self.path = _opt(options, "path")
         log_dir = _log_dir(options)
         as_of = _opt(options, "versionAsOf")
-        pby, pschema = _partition_meta(log_dir)
+        pby, pschema = partition_meta(log_dir)
         if _cdf_on(options):
             # batch CDF (Delta: spark.read.option("readChangeFeed",
             # "true").option("startingVersion", N)): per-commit change
             # slices over [startingVersion, endingVersion]
-            latest = _replay(log_dir)[0]
+            latest = latest_version(log_dir)
             lo = int(_opt(options, "startingVersion", 0))
             hi = int(_opt(options, "endingVersion", latest))
             if not 0 <= lo <= hi <= latest:
@@ -1394,32 +519,15 @@ class TxLogBatchReader(DataSourceReader):
                     f"invalid change range [{lo}, {hi}] for table at "
                     f"version {latest}"
                 )
-            self.mapping = _mapping_json_at(log_dir, hi)
-            self.ids = _field_ids_json_at(log_dir, hi)
+            self.mapping, self.ids = column_binding_at(log_dir, hi)
             self.slices = _plan_changes(
                 self.path, log_dir, lo, hi, pby, pschema,
                 mapping=self.mapping,
             )
         else:
-            v = int(as_of) if as_of is not None else None
-            if _is_delta(log_dir):
-                st = _dlog_replay(log_dir, v)
-                files = sorted(st["live"])
-                dvs = {
-                    f: a["deletionVector"]
-                    for f, a in st["live"].items()
-                    if a.get("deletionVector")
-                }
-                raw_pvals = {
-                    f: a["partitionValues"] for f, a in st["live"].items()
-                }
-                self.mapping = _dlog_mapping(st["meta"])
-                self.ids = _dlog_field_ids(st["meta"])
-            else:
-                _v, files, dvs = _replay_full(log_dir, v)
-                raw_pvals = None
-                self.mapping = _mapping_json_at(log_dir, v)
-                self.ids = None
+            files, dvs, raw_pvals, self.mapping, self.ids = snapshot_at(
+                log_dir, int(as_of) if as_of is not None else None
+            )
             self.slices = _plan_files(
                 self.path, files, pby, pschema, dvs=dvs,
                 raw_pvals=raw_pvals, mapping=self.mapping,
@@ -1457,22 +565,21 @@ class TxLogStreamReader(DataSourceStreamReader):
         # resolved once at query start, like the schema: a stream's
         # declared columns are fixed, so the logical->physical binding
         # is too (physical names never change after a file is written)
-        self.mapping = _mapping_json_at(self.log_dir)
-        self.ids = _field_ids_json_at(self.log_dir)
+        self.mapping, self.ids = column_binding_at(self.log_dir)
 
     # offsets are commit versions: {"version": last PROCESSED version}
     def initialOffset(self) -> dict:
         start = self.starting
-        if start == 0 and not _is_delta(self.log_dir):
+        if start == 0 and not is_delta_log(self.log_dir):
             # "process the existing table then tail": after cleanup_log
             # truncated the head, version 0 is gone — clamp to the oldest
             # retained commit, which cleanup's invariant guarantees is a
             # FULL-LIST checkpoint, so the first batch is exactly the
             # snapshot at that version (Delta's startingVersion clamps
             # the same way). An EXPLICIT startingVersion below the head
-            # still fails loudly in the delta fold — the caller asked for
+            # still fails loudly in the log fold — the caller asked for
             # versions that no longer exist. (Foreign Delta logs need no
-            # clamp: _dlog_deltas_full bootstraps a synthetic
+            # clamp: logfold.delta_deltas_full bootstraps a synthetic
             # full-snapshot record from the parquet checkpoint when the
             # JSON head expired above the requested floor.)
             entries = sorted(
@@ -1519,7 +626,7 @@ class TxLogStreamReader(DataSourceStreamReader):
         whose batches were all committed plans its FIRST batch uncapped
         (and ``trigger(availableNow=True)`` snapshots one latestOffset per
         run, so a drain-restart loop caps only each run's first batch)."""
-        latest = _replay(self.log_dir)[0]
+        latest = latest_version(self.log_dir)
         if (
             (self.max_files is None and self.max_bytes is None)
             or self._cursor is None
@@ -1531,7 +638,7 @@ class TxLogStreamReader(DataSourceStreamReader):
         files = 0
         nbytes = 0
         end = self._cursor
-        for rec in _deltas_full(self.log_dir, self._cursor + 1, latest):
+        for rec in commit_deltas_full(self.log_dir, self._cursor + 1, latest):
             v = rec["v"]
             batch_files = self._counts_toward_cap(rec)
             n = len(batch_files)
@@ -1564,7 +671,7 @@ class TxLogStreamReader(DataSourceStreamReader):
         self._cursor = max(self._cursor if self._cursor is not None else -1, hi)
         if hi <= lo:
             return []
-        pby, pschema = _partition_meta(self.log_dir)
+        pby, pschema = partition_meta(self.log_dir)
         if self.cdf:
             # streaming CDF: every commit in the range streams its file
             # delta as tagged change rows — DML/OPTIMIZE commits are
@@ -1576,7 +683,7 @@ class TxLogStreamReader(DataSourceStreamReader):
         files: list[str] = []
         dvs: dict = {}
         raw_pvals: dict = {}
-        for rec in _deltas_full(self.log_dir, lo + 1, hi):
+        for rec in commit_deltas_full(self.log_dir, lo + 1, hi):
             v, adds, removes, op = rec["v"], rec["adds"], rec["removes"], rec["op"]
             if removes or rec["dv_changed"]:
                 if op == "optimize":
@@ -1638,7 +745,7 @@ class TxLogDataSource(DataSource):
             as_of = _opt(self.options, "endingVersion")
         else:
             as_of = _opt(self.options, "versionAsOf")
-        sj = _schema_json_at(
+        sj = schema_json_at(
             _log_dir(self.options),
             int(as_of) if as_of is not None else None,
         )

@@ -122,8 +122,10 @@ def test_checkpoint_cleanup_no_resurrection(spark, tmp_path, monkeypatch):
 
 
 def test_export_domain_and_protocol(spark, tmp_path):
-    from airbnb_listings_data_pipelines_spark.operators.deltalog import (
+    from airbnb_listings_data_pipelines_spark.operators.logfold import (
         _replay_delta_log,
+    )
+    from airbnb_listings_data_pipelines_spark.operators.deltalog import (
         export_delta_log,
         write_delta_checkpoint,
     )
@@ -133,7 +135,7 @@ def test_export_domain_and_protocol(spark, tmp_path):
     t.optimize(target_files=2)
     export_delta_log(spark, t)
     dd = os.path.join(t.path, "_delta_log")
-    st = _replay_delta_log(spark, dd)
+    st = _replay_delta_log(dd)
     assert json.loads(
         st.domains["delta.clustering"]["configuration"]
     )["clusteringColumns"] == [["a"], ["b"]]
@@ -148,7 +150,7 @@ def test_export_domain_and_protocol(spark, tmp_path):
     for f in sorted(os.listdir(dd)):
         if re.fullmatch(r"\d{20}\.json", f) and int(f.split(".")[0]) < v:
             os.remove(os.path.join(dd, f))
-    st2 = _replay_delta_log(spark, dd)
+    st2 = _replay_delta_log(dd)
     assert "delta.clustering" in st2.domains
 
 
@@ -173,8 +175,10 @@ def test_export_domain_physical_names_under_mapping(spark, tmp_path):
     """Review finding (round 11): under column mapping the spec stores
     PHYSICAL names in clusteringColumns — external engines resolve the
     domain against the files, not the logical schema."""
-    from airbnb_listings_data_pipelines_spark.operators.deltalog import (
+    from airbnb_listings_data_pipelines_spark.operators.logfold import (
         _replay_delta_log,
+    )
+    from airbnb_listings_data_pipelines_spark.operators.deltalog import (
         export_delta_log,
     )
 
@@ -183,7 +187,7 @@ def test_export_domain_physical_names_under_mapping(spark, tmp_path):
     t.cluster_by(["a", "amount"])
     t.optimize(target_files=1)
     export_delta_log(spark, t)
-    st = _replay_delta_log(spark, os.path.join(t.path, "_delta_log"))
+    st = _replay_delta_log(os.path.join(t.path, "_delta_log"))
     cols = json.loads(
         st.domains["delta.clustering"]["configuration"]
     )["clusteringColumns"]

@@ -61,13 +61,13 @@ def test_compaction_fold_equivalence_both_readers(spark, tmp_path):
     assert re.fullmatch(r"\d{20}\.\d{20}\.compacted\.json", name)
     # the compacted fold must agree with the per-commit fold
     assert _vals(read_delta_snapshot(spark, path)) == want
-    from airbnb_listings_data_pipelines_spark.sources.txlog_source import (
-        _dlog_replay,
+    from airbnb_listings_data_pipelines_spark.operators.logfold import (
+        _replay_delta_log,
     )
 
     dd = os.path.join(path, "_delta_log")
-    r = _dlog_replay(dd)
-    assert r["v"] == 3 and len(r["live"]) > 0
+    r = _replay_delta_log(dd)
+    assert r.version == 3 and len(r.live) > 0
 
 
 def test_compaction_substitutes_for_missing_singles(spark, tmp_path):
@@ -80,15 +80,15 @@ def test_compaction_substitutes_for_missing_singles(spark, tmp_path):
     for v in (1, 2, 3):
         os.remove(os.path.join(dd, f"{v:020d}.json"))
     assert _vals(read_delta_snapshot(spark, path)) == want
-    from airbnb_listings_data_pipelines_spark.sources.txlog_source import (
-        _dlog_replay,
+    from airbnb_listings_data_pipelines_spark.operators.logfold import (
+        _replay_delta_log,
     )
 
-    assert _dlog_replay(dd)["v"] == 3
+    assert _replay_delta_log(dd).version == 3
     with pytest.raises(FileNotFoundError, match="missing commit"):
         read_delta_snapshot(spark, path, version=2)
     with pytest.raises(FileNotFoundError, match="missing commit"):
-        _dlog_replay(dd, as_of=2)
+        _replay_delta_log(dd, 2)
 
 
 def test_compaction_nets_actions(spark, tmp_path):
@@ -148,12 +148,12 @@ def test_change_feed_never_uses_compactions(spark, tmp_path):
     dd = os.path.join(path, "_delta_log")
     for v in (1, 2, 3):
         os.remove(os.path.join(dd, f"{v:020d}.json"))
-    from airbnb_listings_data_pipelines_spark.sources.txlog_source import (
-        _dlog_deltas_full,
+    from airbnb_listings_data_pipelines_spark.operators.logfold import (
+        delta_deltas_full,
     )
 
     with pytest.raises(FileNotFoundError):
-        _dlog_deltas_full(dd, 1, 3)
+        delta_deltas_full(dd, 1, 3)
 
 
 def test_checkpoint_interval_auto_checkpoints(spark, tmp_path):
@@ -246,11 +246,11 @@ def test_cleanup_delta_log_with_sidecar_gc(spark, tmp_path):
     assert got == want
     with pytest.raises(FileNotFoundError):
         read_delta_snapshot(spark, path, version=1)
-    from airbnb_listings_data_pipelines_spark.sources.txlog_source import (
-        _dlog_replay,
+    from airbnb_listings_data_pipelines_spark.operators.logfold import (
+        _replay_delta_log,
     )
 
-    assert _dlog_replay(dd)["v"] == 4
+    assert _replay_delta_log(dd).version == 4
 
 
 def test_cleanup_requires_checkpoint_and_validates(spark, tmp_path):
@@ -275,8 +275,8 @@ def test_keep_after_horizon_is_readable(spark, tmp_path):
     from airbnb_listings_data_pipelines_spark.operators.deltalog import (
         cleanup_delta_log,
     )
-    from airbnb_listings_data_pipelines_spark.sources.txlog_source import (
-        _dlog_replay,
+    from airbnb_listings_data_pipelines_spark.operators.logfold import (
+        _replay_delta_log,
     )
 
     path = str(tmp_path / "t")
@@ -303,7 +303,7 @@ def test_keep_after_horizon_is_readable(spark, tmp_path):
         r["k"] for r in read_delta_snapshot(spark, path, version=3).collect()
     )
     assert got == v_at_3
-    assert _dlog_replay(dd, as_of=3)["v"] == 3
+    assert _replay_delta_log(dd, 3).version == 3
     with pytest.raises(FileNotFoundError):
         read_delta_snapshot(spark, path, version=1)
 
@@ -329,8 +329,8 @@ def test_narrower_compaction_serves_smaller_range(spark, tmp_path):
         for r in read_delta_snapshot(spark, path, version=3).collect()
     )
     assert got == v3
-    from airbnb_listings_data_pipelines_spark.sources.txlog_source import (
-        _dlog_replay,
+    from airbnb_listings_data_pipelines_spark.operators.logfold import (
+        _replay_delta_log,
     )
 
-    assert _dlog_replay(dd, as_of=2)["v"] == 2
+    assert _replay_delta_log(dd, 2).version == 2

@@ -117,15 +117,15 @@ def test_v2_roundtrip_after_log_cleanup(spark, tmp_path):
     _expire_json_head(dd, v)
     after = read_delta_snapshot(spark, path)
     assert sorted((r["k"], r["v"]) for r in after.collect()) == want
-    # twin: the pyarrow stream planner's fold sees the same live set
-    from airbnb_listings_data_pipelines_spark.sources.txlog_source import (
-        _dlog_replay,
+    # the DataSource planner's pyarrow fold sees the same live set
+    from airbnb_listings_data_pipelines_spark.operators.logfold import (
+        _replay_delta_log,
     )
 
-    r = _dlog_replay(dd)
-    assert r["v"] == v
-    assert len(r["live"]) > 0
-    assert sum(1 for a in r["live"].values() if a.get("deletionVector")) > 0
+    r = _replay_delta_log(dd)
+    assert r.version == v
+    assert len(r.live) > 0
+    assert sum(1 for a in r.live.values() if a.get("deletionVector")) > 0
 
 
 def test_v2_checkpoint_version_mismatch_is_loud(spark, tmp_path):
@@ -203,12 +203,12 @@ def test_foreign_parquet_manifest_fixture(spark, tmp_path):
     _expire_json_head(dd, v)
     snap = read_delta_snapshot(spark, path)
     assert snap.count() == 90
-    from airbnb_listings_data_pipelines_spark.sources.txlog_source import (
-        _dlog_replay,
+    from airbnb_listings_data_pipelines_spark.operators.logfold import (
+        _replay_delta_log,
     )
 
-    r = _dlog_replay(dd)
-    assert r["v"] == v and len(r["live"]) > 0
+    r = _replay_delta_log(dd)
+    assert r.version == v and len(r.live) > 0
 
 
 def test_incremental_export_upgrades_protocol(spark, tmp_path):
@@ -240,12 +240,12 @@ def test_stream_tail_bootstraps_from_v2_checkpoint(spark, tmp_path):
     export_delta_log(spark, t)
     dd = os.path.join(path, "_delta_log")
     _expire_json_head(dd, ckv)
-    from airbnb_listings_data_pipelines_spark.sources.txlog_source import (
-        _dlog_deltas_full,
-        _dlog_replay,
+    from airbnb_listings_data_pipelines_spark.operators.logfold import (
+        _replay_delta_log,
+        delta_deltas_full,
     )
 
-    recs = _dlog_deltas_full(dd, ckv + 1, ckv + 1)
+    recs = delta_deltas_full(dd, ckv + 1, ckv + 1)
     assert [r["v"] for r in recs] == [ckv + 1]
-    live = _dlog_replay(dd)["live"]
+    live = _replay_delta_log(dd).live
     assert len(live) > 0

@@ -674,8 +674,8 @@ def test_partial_multipart_checkpoint_falls_back(spark, tmp_path):
     from airbnb_listings_data_pipelines_spark.operators.deltalog import (
         write_delta_checkpoint,
     )
-    from airbnb_listings_data_pipelines_spark.sources.txlog_source import (
-        _dlog_replay,
+    from airbnb_listings_data_pipelines_spark.operators.logfold import (
+        _replay_delta_log,
     )
 
     path = str(tmp_path / "t")
@@ -704,8 +704,8 @@ def test_partial_multipart_checkpoint_falls_back(spark, tmp_path):
     # both independent readers fall back: older checkpoint at v1 + JSON
     # tail commit 2 -> full correct snapshot
     assert _rows(read_delta_snapshot(spark, path)) == want
-    r = _dlog_replay(dd)
-    assert r["v"] == 2 and len(r["live"]) > 0
+    r = _replay_delta_log(dd)
+    assert r.version == 2 and len(r.live) > 0
     # and with the JSON head expired below v1, the v1 bootstrap is the
     # ONLY source of that state — still served
     for f in sorted(os.listdir(dd)):
@@ -713,4 +713,4 @@ def test_partial_multipart_checkpoint_falls_back(spark, tmp_path):
         if m and int(m.group(1)) <= 1:
             os.remove(os.path.join(dd, f))
     assert _rows(read_delta_snapshot(spark, path)) == want
-    assert _dlog_replay(dd)["v"] == 2
+    assert _replay_delta_log(dd).version == 2

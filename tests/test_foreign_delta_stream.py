@@ -347,10 +347,12 @@ def test_foreign_skip_change_commits_append_tail(registered, spark, tmp_path):
     assert ks == sorted(list(range(40)) + [100])
 
 
-def test_fold_twins_match_deltalog_reader(registered, spark, tmp_path):
-    """The inlined _dlog fold twins must agree with the independent
-    operators/deltalog replay on the same foreign log (the same
-    twin-equivalence pin the txlog fold twins have)."""
+def test_datasource_snapshot_matches_deltalog_reader(
+    registered, spark, tmp_path
+):
+    """The DataSource's pyarrow planner and operators/deltalog's Spark
+    scan read the same foreign log through the one Delta fold
+    (operators/logfold) and must return the same rows."""
     from airbnb_listings_data_pipelines_spark.operators.deltalog import (
         read_delta_snapshot,
     )
@@ -580,10 +582,10 @@ def test_foreign_cdf_range_below_cleaned_checkpoint_refused(
 
 def test_cdf_twins_datasource_vs_operator(registered, spark, tmp_path):
     """Twin-equivalence pin for the two foreign-Delta CDF readers: the
-    DataSource batch CDF (txlog_source._dlog_* twins, raw file
-    granularity) and deltalog.read_delta_changes(net=False) must emit
-    the IDENTICAL multiset over the same foreign log — the same
-    equivalence contract the txlog fold twins carry."""
+    DataSource batch CDF (logfold.delta_deltas_full records planned as
+    pyarrow slices, raw file granularity) and
+    deltalog.read_delta_changes(net=False) (Spark scans) must emit the
+    IDENTICAL multiset over the same foreign log."""
     from collections import Counter
 
     from airbnb_listings_data_pipelines_spark.operators.deltalog import (
@@ -607,3 +609,76 @@ def test_cdf_twins_datasource_vs_operator(registered, spark, tmp_path):
         )
     )
     assert a == b
+
+
+# ------------------------------- one fold: protocol and _last_checkpoint
+
+
+def _mk_small_foreign(spark, tmp_path):
+    native = str(tmp_path / "native")
+    t = TxLogTable.create(
+        spark, native, spark.createDataFrame([(1, "a"), (2, "b")], "k int, v string")
+    )
+    t.append(spark.createDataFrame([(3, "c")], "k int, v string"))
+    t.to_delta_log()
+    return _foreignize(native, str(tmp_path / "foreign"))
+
+
+@pytest.mark.parametrize(
+    "protocol",
+    [
+        {"minReaderVersion": 3, "minWriterVersion": 7},
+        {
+            "minReaderVersion": 3,
+            "minWriterVersion": 7,
+            "readerFeatures": ["changeDataFeed"],
+            "writerFeatures": ["changeDataFeed"],
+        },
+    ],
+    ids=["v3-no-features", "v3-changeDataFeed"],
+)
+def test_unsupported_protocol_refused_by_both_readers(
+    registered, spark, tmp_path, protocol
+):
+    """Reader version 3 with no readerFeatures list, or with a feature
+    no reader here implements (changeDataFeed is a WRITER feature), must
+    be refused by the DataSource exactly as by read_delta_snapshot —
+    both run the one protocol check of the shared fold."""
+    from airbnb_listings_data_pipelines_spark.operators.deltalog import (
+        read_delta_snapshot,
+    )
+
+    foreign = _mk_small_foreign(spark, tmp_path)
+    c0 = os.path.join(foreign, "_delta_log", f"{0:020d}.json")
+    with open(c0) as fh:
+        actions = [json.loads(ln) for ln in fh if ln.strip()]
+    actions = [
+        {"protocol": protocol} if "protocol" in a else a for a in actions
+    ]
+    with open(c0, "w") as fh:
+        fh.write("\n".join(json.dumps(a) for a in actions) + "\n")
+    with pytest.raises(NotImplementedError):
+        read_delta_snapshot(spark, foreign)
+    with pytest.raises(Exception, match="NotImplementedError"):
+        spark.read.format("txlog").load(foreign).collect()
+
+
+def test_truncated_last_checkpoint_is_only_a_hint(registered, spark, tmp_path):
+    """``_last_checkpoint`` is a hint: a torn one must not fail the read.
+    read_delta_snapshot returns the DataSource's rows, and both still
+    bootstrap from the checkpoint the directory listing finds (the JSON
+    commits below it are gone)."""
+    from airbnb_listings_data_pipelines_spark.operators.deltalog import (
+        read_delta_snapshot,
+        write_delta_checkpoint,
+    )
+
+    foreign = _mk_small_foreign(spark, tmp_path)
+    dd = os.path.join(foreign, "_delta_log")
+    assert write_delta_checkpoint(spark, foreign) == 1
+    os.remove(os.path.join(dd, f"{0:020d}.json"))
+    with open(os.path.join(dd, "_last_checkpoint"), "w") as fh:
+        fh.write('{"version": 1, "si')
+    want = sorted(map(tuple, spark.read.format("txlog").load(foreign).collect()))
+    assert want == [(1, "a"), (2, "b"), (3, "c")]
+    assert sorted(map(tuple, read_delta_snapshot(spark, foreign).collect())) == want

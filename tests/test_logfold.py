@@ -1,0 +1,135 @@
+"""operators/logfold.py is the one commit-log fold, and the ``txlog``
+DataSource ships it BY VALUE to Spark processes that cannot import the
+package. These tests pin the two rules that make that work: the module
+imports nothing from the package and never touches a SparkSession
+(checked statically), and a vanilla session driven from outside the
+repository can stream a txlog table and a foreign Delta table through
+the source (checked end to end in a subprocess — in-repo suites cannot
+catch a broken by-value registration, because their workers import the
+package through the working directory)."""
+
+from __future__ import annotations
+
+import ast
+import json
+import os
+import subprocess
+import sys
+import textwrap
+
+import airbnb_listings_data_pipelines_spark.operators.logfold as logfold
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+PACKAGE = "airbnb_listings_data_pipelines_spark"
+
+
+def test_logfold_imports_no_package_module_and_no_session():
+    with open(logfold.__file__) as fh:
+        tree = ast.parse(fh.read())
+    for node in ast.walk(tree):
+        if isinstance(node, ast.ImportFrom):
+            assert node.level == 0, f"relative import at line {node.lineno}"
+            mods = [node.module or ""]
+        elif isinstance(node, ast.Import):
+            mods = [a.name for a in node.names]
+        else:
+            if isinstance(node, ast.Name):
+                assert node.id != "SparkSession", f"line {node.lineno}"
+            if isinstance(node, ast.Attribute):
+                assert node.attr != "SparkSession", f"line {node.lineno}"
+            continue
+        for m in mods:
+            assert not m.startswith(PACKAGE), f"package import {m!r}"
+            top = m.split(".")[0]
+            assert top in sys.stdlib_module_names or m in (
+                "pyarrow",
+                "pyarrow.parquet",
+                "pyspark.sql.types",
+            ), f"import {m!r} is neither stdlib, pyarrow nor pyspark.sql.types"
+        if isinstance(node, ast.ImportFrom):
+            assert "SparkSession" not in [a.name for a in node.names]
+
+
+_DRIVER = textwrap.dedent(
+    """
+    import json, os, shutil, sys
+    sys.path.insert(0, {repo!r})
+    from pyspark.sql import SparkSession
+
+    spark = (
+        SparkSession.builder.master("local[2]")
+        .config("spark.ui.enabled", "false")
+        .config("spark.driver.memory", "1g")
+        .config("spark.sql.shuffle.partitions", "2")
+        .getOrCreate()
+    )
+    spark.sparkContext.setLogLevel("ERROR")
+    from {pkg}.operators.deltalog import read_delta_snapshot, write_delta_checkpoint
+    from {pkg}.operators.txlog import TxLogTable
+    from {pkg}.sources import txlog_source
+
+    txlog_source.register(spark)
+    work = {work!r}
+    native = os.path.join(work, "native")
+    t = TxLogTable.create(
+        spark, native, spark.createDataFrame([(1, "a"), (2, "b")], "k int, v string")
+    )
+    t.append(spark.createDataFrame([(3, "c")], "k int, v string"))
+    t.to_delta_log()
+    write_delta_checkpoint(spark, native)
+    t.append(spark.createDataFrame([(4, "d")], "k int, v string"))
+    t.to_delta_log()
+    foreign = os.path.join(work, "foreign")
+    shutil.copytree(native, foreign)
+    shutil.rmtree(os.path.join(foreign, "_txlog"))
+
+    def drain(path, name):
+        q = (
+            spark.readStream.format("txlog").load(path)
+            .writeStream.format("memory").queryName(name)
+            .option("checkpointLocation", os.path.join(work, "ck_" + name))
+            .trigger(availableNow=True).start()
+        )
+        q.awaitTermination(300)
+        if q.exception() is not None:
+            raise RuntimeError(str(q.exception()))
+        return sorted(map(tuple, spark.table(name).collect()))
+
+    out = {{
+        "txlog": [drain(native, "tx_out"), sorted(map(tuple, t.read().collect()))],
+        "delta": [
+            drain(foreign, "dl_out"),
+            sorted(map(tuple, read_delta_snapshot(spark, foreign).collect())),
+        ],
+    }}
+    print("RESULT " + json.dumps(out))
+    spark.stop()
+    """
+)
+
+
+def test_vanilla_session_outside_repo_streams_txlog_and_delta(tmp_path):
+    """A driver whose cwd is outside the repository, with the repo on
+    ``sys.path`` in code only (the JVM's python processes inherit the
+    environment, so PYTHONPATH would hide a broken registration), on a
+    vanilla SparkSession: ``register()`` then an ``availableNow`` drain
+    of a txlog table and of a foreign Delta table (checkpointed, so the
+    planner runner reads checkpoint parquet) equals each snapshot."""
+    work = tmp_path / "work"
+    work.mkdir()
+    script = _DRIVER.format(repo=REPO, pkg=PACKAGE, work=str(work))
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    proc = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=str(tmp_path),
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    lines = [ln for ln in proc.stdout.splitlines() if ln.startswith("RESULT ")]
+    assert proc.returncode == 0 and lines, proc.stderr[-4000:]
+    out = json.loads(lines[-1][len("RESULT "):])
+    for kind, (streamed, snapshot) in out.items():
+        assert len(snapshot) == 4, kind
+        assert streamed == snapshot, kind

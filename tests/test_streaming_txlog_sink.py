@@ -186,7 +186,7 @@ def test_racing_duplicate_appends_commit_once(spark, tmp_path):
 def test_delta_export_mirrors_txn_action(spark, tmp_path):
     """The exported _delta_log must carry the txn action so an external
     Delta engine resumes the sink idempotently from (appId, version)."""
-    from airbnb_listings_data_pipelines_spark.operators.deltalog import (
+    from airbnb_listings_data_pipelines_spark.operators.logfold import (
         _replay_delta_log,
     )
 
@@ -204,7 +204,7 @@ def test_delta_export_mirrors_txn_action(spark, tmp_path):
         txn=("ingest-1", 1),
     )
     t.to_delta_log()
-    state = _replay_delta_log(spark, os.path.join(t.path, "_delta_log"))
+    state = _replay_delta_log(os.path.join(t.path, "_delta_log"))
     assert state.txns["ingest-1"]["version"] == 1
 
 

@@ -3,21 +3,24 @@ snapshot + time travel, typed partition reattachment, schema-evolution
 null-fill, and the streaming source's append-only tail with
 exactly-once recovery — all through ``spark.read.format("txlog")`` /
 ``readStream``, the way an external Spark job would consume the table.
-Also pins the module's INLINED pure log-fold helpers equivalent to the
-canonical ones in operators/txlog.py (the module is deliberately
-self-contained so cloudpickle can ship it by value to Spark's worker
-and streaming-runner processes — see its docstring)."""
+The source and TxLogTable share one commit-log fold
+(operators/logfold.py); the batch reads here pin that both readers see
+the same rows at every version."""
 
 from __future__ import annotations
 
+import json
 import os
 
 import pytest
 from pyspark.sql import functions as F
 
 from airbnb_listings_data_pipelines_spark.operators import txlog as txmod
+from airbnb_listings_data_pipelines_spark.operators.logfold import partition_meta
 from airbnb_listings_data_pipelines_spark.operators.txlog import TxLogTable
 from airbnb_listings_data_pipelines_spark.sources import txlog_source
+
+from .conftest import SF_SMALL
 
 
 @pytest.fixture(scope="module")
@@ -129,26 +132,31 @@ def test_stream_change_commits_raise_or_skip(registered, tmp_path):
     assert sorted(r.k for r in spark.read.parquet(out).collect()) == [1, 2, 5]
 
 
-def test_inlined_helpers_match_canonical(registered, tmp_path, monkeypatch):
-    """The source module's self-contained log-fold twins must agree with
-    operators/txlog.py's canonical functions — across a checkpoint
-    commit (whose recorded adds are the full live list)."""
+def test_batch_read_matches_read_version_across_checkpoint(
+    registered, tmp_path, monkeypatch
+):
+    """The DataSource batch read and TxLogTable.read_version return the
+    same rows at EVERY version — across a checkpoint commit (whose
+    recorded adds are the full live list) and a delete."""
     spark = registered
     monkeypatch.setattr(txmod, "_CHECKPOINT_EVERY", 3)
     t = _mk(spark, str(tmp_path / "h"))
     for i in range(3, 8):
         t.append(spark.createDataFrame([(i, float(i))], "k int, price double"))
     t.delete_where("k = 4")
-    log = t.log_dir
-    assert txlog_source._replay(log) == txmod.replay_log(log)
+    ckpts = []
+    for f in sorted(os.listdir(t.log_dir)):
+        if f.endswith(".json"):
+            with open(os.path.join(t.log_dir, f)) as fh:
+                ckpts += [f] if json.load(fh).get("checkpoint") else []
+    assert ckpts, "the fixture must cross a checkpoint commit"
     for v in range(t.version() + 1):
-        assert txlog_source._replay(log, v) == txmod.replay_log(log, v)
-        assert txlog_source._schema_json_at(log, v) == txmod.schema_json_at(
-            log, v
+        via_source = (
+            spark.read.format("txlog").option("versionAsOf", v).load(t.path)
         )
-    assert txlog_source._deltas(log, 0, t.version()) == txmod.commit_file_deltas(
-        log, 0, t.version()
-    )
+        assert sorted(map(tuple, via_source.collect())) == sorted(
+            map(tuple, t.read_version(v).collect())
+        ), f"version {v}"
 
 
 def test_batch_cdf_reads_per_commit_changes(registered, tmp_path):
@@ -230,10 +238,10 @@ def test_stream_cdf_tails_dml_as_changes(registered, tmp_path):
 def test_partition_meta_raises_on_headless_unspecced_log(registered, tmp_path):
     """Review finding: when commit 0 is gone and the oldest retained
     commit carries no partition spec (head truncated outside
-    cleanup_log's checkpoint invariant), _partition_meta used to fall
-    back to pby=[] — silently reading a PARTITIONED table as
-    unpartitioned (partition columns all null). It must raise like the
-    operator twin TxLogTable.partition_meta does."""
+    cleanup_log's checkpoint invariant), the source's partition spec
+    used to fall back to pby=[] — silently reading a PARTITIONED table
+    as unpartitioned (partition columns all null). The one fold that
+    TxLogTable and the source share must raise."""
     path = str(tmp_path / "t")
     t = TxLogTable.create(
         registered,
@@ -251,13 +259,13 @@ def test_partition_meta_raises_on_headless_unspecced_log(registered, tmp_path):
     # metadata-complete checkpoint
     os.remove(os.path.join(t.log_dir, f"{0:012d}.json"))
     with pytest.raises(FileNotFoundError, match="partition spec"):
-        txlog_source._partition_meta(t.log_dir)
+        partition_meta(t.log_dir)
 
 
 def test_datasource_dv_pathkey_survives_checkpoint_sidecar(
     registered, tmp_path
 ):
-    """The inlined _ckpt_state twin must carry dv_pathkey through a
+    """The checkpoint fold must carry dv_pathkey through a
     parquet checkpoint sidecar: a PARTITIONED table's rel-keyed vector
     (basename != relative path) read via the DataSource after a
     cleanup_log bootstrap would silently mis-key otherwise."""
@@ -284,3 +292,17 @@ def test_datasource_dv_pathkey_survives_checkpoint_sidecar(
         .collect()
     )
     assert got == list(range(4, 20)) + [100, 101, 102]
+
+
+def test_register_and_tpch_load_ship_one_package_zip(registered):
+    """The source's register() and tpch.load_table share the session's
+    one worker-package shipper: a session that does both carries ONE
+    package zip on its python path, not two."""
+    from airbnb_listings_data_pipelines_spark.sources import tpch
+
+    txlog_source.register(registered)
+    tpch.load_table(registered, SF_SMALL, "region")
+    zips = [
+        p for p in registered.sparkContext._python_includes if p.endswith(".zip")
+    ]
+    assert len(zips) == 1, zips

@@ -169,7 +169,7 @@ def test_delta_export_mirrors_constraints(spark, tmp_path):
     delta.constraints.* configuration, upgrading minWriterVersion to 3 in
     the same commit the first constraint lands (Delta requires writer v3
     to enforce constraints); a drop refreshes metaData without them."""
-    from airbnb_listings_data_pipelines_spark.operators.deltalog import (
+    from airbnb_listings_data_pipelines_spark.operators.logfold import (
         _replay_delta_log,
     )
 
@@ -177,19 +177,19 @@ def test_delta_export_mirrors_constraints(spark, tmp_path):
     t.add_check("price_pos", "price >= 0")
     t.to_delta_log()
     dd = os.path.join(t.path, "_delta_log")
-    st = _replay_delta_log(spark, dd)
+    st = _replay_delta_log(dd)
     assert st.metadata["configuration"] == {
         "delta.constraints.price_pos": "price >= 0"
     }
     assert st.protocol["minWriterVersion"] == 3
     # version 0 predates the constraint: its metaData has no constraints
-    st0 = _replay_delta_log(spark, dd, version=0)
+    st0 = _replay_delta_log(dd, version=0)
     assert st0.metadata["configuration"] == {}
     assert st0.protocol["minWriterVersion"] == 2
     # drop + incremental re-export refreshes configuration
     t.drop_check("price_pos")
     t.to_delta_log()
-    st2 = _replay_delta_log(spark, dd)
+    st2 = _replay_delta_log(dd)
     assert st2.metadata["configuration"] == {}
 
 
@@ -201,7 +201,7 @@ def test_add_column_metadata_only_evolution(spark, tmp_path):
     null-fill at read; time travel before the commit shows no column;
     appends in the OLD shape keep working (null-fill); the Delta export
     refreshes metaData exactly at the evolution commit."""
-    from airbnb_listings_data_pipelines_spark.operators.deltalog import (
+    from airbnb_listings_data_pipelines_spark.operators.logfold import (
         _replay_delta_log,
     )
 
@@ -226,8 +226,8 @@ def test_add_column_metadata_only_evolution(spark, tmp_path):
     # Delta export: metaData refresh lands ON the evolution commit
     t.to_delta_log()
     dd = os.path.join(t.path, "_delta_log")
-    st_before = _replay_delta_log(spark, dd, version=v - 1)
-    st_at = _replay_delta_log(spark, dd, version=v)
+    st_before = _replay_delta_log(dd, version=v - 1)
+    st_at = _replay_delta_log(dd, version=v)
     assert "discount" not in st_before.metadata["schemaString"]
     assert "discount" in st_at.metadata["schemaString"]
 
@@ -355,7 +355,7 @@ def test_restore_restores_check_set(spark, tmp_path):
 
 
 def test_restore_checks_reset_mirrors_to_delta_export(spark, tmp_path):
-    from airbnb_listings_data_pipelines_spark.operators.deltalog import (
+    from airbnb_listings_data_pipelines_spark.operators.logfold import (
         _replay_delta_log,
     )
 
@@ -364,10 +364,10 @@ def test_restore_checks_reset_mirrors_to_delta_export(spark, tmp_path):
     t.restore(0)  # v2: constraint set reverts to {}
     t.to_delta_log()
     dd = os.path.join(t.path, "_delta_log")
-    assert _replay_delta_log(spark, dd, version=1).metadata[
+    assert _replay_delta_log(dd, version=1).metadata[
         "configuration"
     ] == {"delta.constraints.price_pos": "price >= 0"}
-    assert _replay_delta_log(spark, dd).metadata["configuration"] == {}
+    assert _replay_delta_log(dd).metadata["configuration"] == {}
 
 
 def test_add_check_revalidates_after_losing_race(spark, tmp_path):
