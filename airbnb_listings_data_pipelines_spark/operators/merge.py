@@ -32,12 +32,13 @@ no optimistic-concurrency conflict detection). The upgrade is an open
 table format: ``operators/txlog`` implements exactly that — a Delta-style
 ordered commit log (public VLDB 2020 design) with snapshot-isolated
 atomic commits, optimistic-concurrency conflict detection with safe
-retry, and orphan vacuuming — behind the shared :func:`merge_frames`
-core, so both backends are logically identical (tests/test_txlog.py
-asserts it). Delta Lake / Apache Iceberg's native ``MERGE INTO`` would
-slot in the same way where those runtimes are deployable; this repo keeps
-parquet staged-swap as the zero-dependency default and txlog as the
-concurrent-writer-safe option.
+retry, and orphan vacuuming — behind the same clause plan
+(:func:`prepare_clause_plan`, which every MERGE route reaches through one
+clause list), so both backends are logically identical
+(tests/test_txlog.py asserts it). Delta Lake / Apache Iceberg's native
+``MERGE INTO`` would slot in the same way where those runtimes are
+deployable; this repo keeps parquet staged-swap as the zero-dependency
+default and txlog as the concurrent-writer-safe option.
 """
 
 from __future__ import annotations
@@ -97,10 +98,15 @@ def merge_frames(
     matched_set: dict | None = None,
     insert_values: dict | None = None,
 ) -> DataFrame:
-    """The pure merge computation shared by both physical backends
-    (staged-swap here, commit-log in operators/txlog): one full-outer
-    join on the keys, matched/not-matched actions applied as filters and
-    column picks. No writes — callers own the physical commit.
+    """The simple MERGE form over two frames, shared by both physical
+    backends (staged-swap here, commit-log in operators/txlog): the
+    parameters become a clause list (:func:`simple_form_clauses`, which
+    also enforces the whole-row contract) and run through
+    :func:`merge_clauses`. No writes — callers own the physical commit.
+
+    ``when_matched``: 'update' (source row wins) or 'delete';
+    ``when_not_matched``: 'insert' or 'ignore'. Whole-row values are
+    cast to the target column's type, as every clause expression is.
 
     ``evolve_schema=True`` is Delta's ``mergeSchema``/autoMerge semantics
     (public Delta Lake docs): columns NEW in the source are appended to
@@ -124,111 +130,63 @@ def merge_frames(
 
     Either dict restricts the source only to containing the merge keys
     (plus whatever its expressions reference); the output schema is the
-    TARGET schema with every per-column expression cast to the target
-    column's type (Delta casts on write the same way) — or, with
-    ``evolve_schema=True``, the target schema WIDENED by the source's
-    new columns first (Delta's autoMerge + per-column composition), so
-    a SET/VALUES list may also assign the new columns."""
-    assert when_matched in ("update", "delete")
-    assert when_not_matched in ("insert", "ignore")
-    if matched_set or insert_values:
-        if matched_set and when_matched != "update":
-            raise ValueError("matched_set requires when_matched='update'")
-        if insert_values and when_not_matched != "insert":
-            raise ValueError(
-                "insert_values requires when_not_matched='insert'"
-            )
-        if not evolve_schema:
-            bad = sorted(
-                (set(matched_set or {}) | set(insert_values or {}))
-                - set(target.columns)
-            )
-            if bad:
-                raise ValueError(
-                    f"per-column MERGE names column(s) {bad} absent from "
-                    "the target schema (pass evolve_schema=True to add "
-                    "source columns)"
-                )
-        missing_keys = [c for c in keys if c not in source.columns]
-        if missing_keys:
-            raise ValueError(
-                f"merge keys {missing_keys} absent from the source"
-            )
-        return _merge_frames_percol(
-            target, source, keys, when_matched, when_not_matched,
-            matched_set or {}, insert_values or {},
-            evolve_schema=evolve_schema,
-        )
-    src_orig, tgt_orig = set(source.columns), set(target.columns)
-    if evolve_schema:
-        assert set(keys) <= src_orig & tgt_orig, "merge keys must exist on both sides"
-        cols = target.columns + [c for c in source.columns if c not in tgt_orig]
-        src_types = dict(zip(source.columns, [f.dataType for f in source.schema.fields]))
-        tgt_types = dict(zip(target.columns, [f.dataType for f in target.schema.fields]))
-        for c in cols:
-            if c not in tgt_orig:
-                target = target.withColumn(c, F.lit(None).cast(src_types[c]))
-            if c not in src_orig:
-                source = source.withColumn(c, F.lit(None).cast(tgt_types[c]))
-    else:
-        cols = target.columns
-        assert src_orig == set(cols), "source/target schemas must match"
-
-    t = target.withColumn("__t", F.lit(1)).alias("t")
-    s = source.withColumn("__s", F.lit(1)).alias("s")
-    j = t.join(s, keys, "full_outer")
-    matched = F.col("t.__t").isNotNull() & F.col("s.__s").isNotNull()
-    source_only = F.col("t.__t").isNull()
-
-    keep = F.lit(True)
-    if when_matched == "delete":
-        keep = keep & ~matched
-    if when_not_matched == "ignore":
-        keep = keep & ~source_only
-
-    def pick(c: str) -> F.Column:
-        if c in keys:
-            # join-key columns are coalesced by the USING join already
-            return F.col(c)
-        if c not in src_orig:
-            # target-only column: updates never touch it; inserts get the
-            # natural NULL from the outer join's target side
-            return F.col(f"t.{c}").alias(c)
-        take_source = source_only | (matched & F.lit(when_matched == "update"))
-        return F.when(take_source, F.col(f"s.{c}")).otherwise(F.col(f"t.{c}")).alias(c)
-
-    return j.filter(keep).select(*[pick(c) for c in cols])
-
-
-def _merge_frames_percol(
-    target: DataFrame,
-    source: DataFrame,
-    keys: list[str],
-    when_matched: str,
-    when_not_matched: str,
-    matched_set: dict,
-    insert_values: dict,
-    evolve_schema: bool = False,
-) -> DataFrame:
-    """Per-column MERGE (see :func:`merge_frames`), expressed as the
-    single-unconditional-clause case of the general :func:`merge_clauses`
-    core: ``SET c = expr`` lists map to one matched update clause
-    (empty dict = ``SET *``), ``INSERT (cols) VALUES`` to one
-    not-matched insert clause (empty dict = ``INSERT *``)."""
-    matched = (
-        [{"action": "delete"}]
-        if when_matched == "delete"
-        else [{"action": "update", "set": matched_set or None}]
-    )
-    not_matched = (
-        [{"values": insert_values or None}]
-        if when_not_matched == "insert"
-        else []
+    TARGET schema — or, with ``evolve_schema=True``, the target schema
+    WIDENED by the source's new columns first (Delta's autoMerge +
+    per-column composition), so a SET/VALUES list may also assign the
+    new columns."""
+    clauses = simple_form_clauses(
+        target.columns, source.columns, when_matched, when_not_matched,
+        matched_set, insert_values, evolve_schema,
     )
     return merge_clauses(
-        target, source, keys, matched=matched, not_matched=not_matched,
-        evolve_schema=evolve_schema,
+        target, source, keys, evolve_schema=evolve_schema, **clauses
     )
+
+
+def simple_form_clauses(
+    target_columns: list[str],
+    source_columns: list[str],
+    when_matched: str = "update",
+    when_not_matched: str = "insert",
+    matched_set: dict | None = None,
+    insert_values: dict | None = None,
+    evolve_schema: bool = False,
+    omittable: set[str] | frozenset[str] = frozenset(),
+) -> dict:
+    """The simple MERGE form as the clause lists of :func:`merge_clauses`
+    — the ONE conversion every route takes: ``SET c = expr`` lists map
+    to one matched update clause (no list = ``UPDATE SET *``),
+    ``INSERT (cols) VALUES`` to one not-matched insert clause (no list =
+    ``INSERT *``), 'delete'/'ignore' to a delete clause / no clause.
+
+    The whole-row form (neither list, no ``evolve_schema``) keeps its
+    contract: the source's columns are the target's logical columns,
+    less the engine-owned ``omittable`` ones a source may leave out
+    (identity and generated columns of a txlog table). A source that
+    breaks it raises ``AssertionError`` — ``UPDATE SET *`` alone would
+    silently keep a missing column's target value."""
+    assert when_matched in ("update", "delete")
+    assert when_not_matched in ("insert", "ignore")
+    if matched_set and when_matched != "update":
+        raise ValueError("matched_set requires when_matched='update'")
+    if insert_values and when_not_matched != "insert":
+        raise ValueError("insert_values requires when_not_matched='insert'")
+    if not (matched_set or insert_values or evolve_schema):
+        src, tgt = set(source_columns), set(target_columns)
+        if not tgt - set(omittable) <= src <= tgt:
+            raise AssertionError("source/target schemas must match")
+    return {
+        "matched": (
+            [{"action": "delete"}]
+            if when_matched == "delete"
+            else [{"action": "update", "set": matched_set or None}]
+        ),
+        "not_matched": (
+            [{"values": insert_values or None}]
+            if when_not_matched == "insert"
+            else []
+        ),
+    }
 
 
 def merge_clauses(
@@ -299,6 +257,7 @@ def prepare_clause_plan(
     not_matched_by_source = list(not_matched_by_source or [])
     if not (matched or not_matched or not_matched_by_source):
         raise ValueError("MERGE needs at least one WHEN clause")
+    tgt_cols = set(target.columns)
     if evolve_schema:
         # Delta's autoMerge: source columns NEW to the target widen the
         # output schema up front (pre-merge target rows carry NULL) —
@@ -306,12 +265,14 @@ def prepare_clause_plan(
         # SET */INSERT * pick the new columns up as ordinary source
         # columns, explicit lists may assign them, untouched rows keep
         # the NULL fill
-        tgt_cols = set(target.columns)
-        for f in source.schema.fields:
-            if f.name not in tgt_cols:
-                target = target.withColumn(
-                    f.name, F.lit(None).cast(f.dataType)
-                )
+        new_cols = {
+            f.name: F.lit(None).cast(f.dataType)
+            for f in source.schema.fields
+            if f.name not in tgt_cols
+        }
+        if new_cols:
+            target = target.withColumns(new_cols)
+            tgt_cols |= set(new_cols)
 
     def _validate(clauses: list[dict], kind: str) -> None:
         for i, cl in enumerate(clauses):
@@ -322,7 +283,7 @@ def prepare_clause_plan(
                 )
             act = cl.get("action", "update" if kind == "matched" else None)
             if kind == "not_matched":
-                bad = set(cl.get("values") or {}) - set(target.columns)
+                bad = set(cl.get("values") or {}) - tgt_cols
             else:
                 if act not in ("update", "delete"):
                     raise ValueError(
@@ -338,7 +299,7 @@ def prepare_clause_plan(
                         "NOT MATCHED BY SOURCE UPDATE requires an "
                         "explicit SET list (no source row to SET * from)"
                     )
-                bad = set(cl.get("set") or {}) - set(target.columns)
+                bad = set(cl.get("set") or {}) - tgt_cols
             if bad:
                 raise ValueError(
                     f"{kind} clause names column(s) {sorted(bad)} absent "
@@ -357,6 +318,20 @@ def prepare_clause_plan(
     )
 
 
+def _unconditional(clauses: list[dict]) -> bool:
+    """True for a clause list holding one clause without a condition: it
+    takes its whole row class."""
+    return len(clauses) == 1 and clauses[0].get("cond") is None
+
+
+def _any_of(preds: list[F.Column]) -> F.Column | None:
+    """OR of the predicates (None for none)."""
+    out = None
+    for p in preds:
+        out = p if out is None else out | p
+    return out
+
+
 def _build_clause_plan(
     target: DataFrame,
     source: DataFrame,
@@ -365,128 +340,133 @@ def _build_clause_plan(
     not_matched: list[dict],
     not_matched_by_source: list[dict],
 ) -> dict:
-    """The shared physical plan behind :func:`merge_clauses` and
-    :func:`merge_clauses_with_cdc`: ONE full-outer join + integer clause
-    selectors, with the per-column pick / keep machinery exposed so the
-    cdc builder derives the EXACT change set from the identical
-    semantics (never a reimplementation that could drift)."""
+    """The shared physical plan behind :func:`merge_clauses`,
+    :func:`merge_clauses_with_cdc` and the deletion-vector MERGE: ONE
+    full-outer join, with the per-column pick / keep machinery and the
+    deleted / updated / inserted row predicates exposed so the cdc and DV
+    paths derive their change sets from the identical semantics
+    (never a reimplementation that could drift).
+
+    Every upsert pays this build on the driver, so it stays as cheap as a
+    bare join + projection: a clause list whose only clause has no
+    condition needs no selector — its predicate is the row class itself;
+    a list with any condition gets ONE integer selector column (the first
+    clause whose condition holds, -1 for none), so each condition runs
+    once per row and never inside a column's pick. Each clause's
+    predicate is built once, source values already of the target's type
+    are not cast, and ``INSERT *`` leaves the keys to the USING join,
+    which coalesced them already."""
     tgt_types = {f.name: f.dataType for f in target.schema.fields}
-    src_cols = set(source.columns)
+    src_types = {f.name: f.dataType for f in source.schema.fields}
     t = target.withColumn("__t", F.lit(1)).alias("t")
     s = source.withColumn("__s", F.lit(1)).alias("s")
     j = t.join(s, keys, "full_outer")
-    is_m = F.col("t.__t").isNotNull() & F.col("s.__s").isNotNull()
     is_src = F.col("t.__t").isNull()
-    is_tgt = F.col("s.__s").isNull()
-
-    def as_cond(e) -> F.Column:
-        return F.expr(e) if isinstance(e, str) else e
-
-    def selector(clauses: list[dict], branch: F.Column) -> F.Column:
-        """Index of the FIRST clause whose condition holds (-1: none) —
-        one integer CASE expression per row class."""
-        sel = F.lit(-1)
-        for i in range(len(clauses) - 1, -1, -1):
-            cond = clauses[i].get("cond")
-            c = F.lit(True) if cond is None else as_cond(cond)
-            sel = F.when(c, F.lit(i)).otherwise(sel)
-        return F.when(branch, sel).otherwise(F.lit(-1))
-
-    j = (
-        j.withColumn("__msel", selector(matched, is_m))
-        .withColumn("__isel", selector(not_matched, is_src))
-        .withColumn("__nsel", selector(not_matched_by_source, is_tgt))
-    )
-    m_del = [i for i, cl in enumerate(matched) if cl.get("action") == "delete"]
-    n_del = [
-        i
-        for i, cl in enumerate(not_matched_by_source)
-        if cl.get("action") == "delete"
-    ]
-    keep = (
-        (is_m & ~F.col("__msel").isin(m_del or [-2]))
-        | (is_src & (F.col("__isel") >= 0))
-        | (is_tgt & ~F.col("__nsel").isin(n_del or [-2]))
-    )
+    has_src = F.col("s.__s").isNotNull()
+    is_m = has_src & ~is_src
+    is_tgt = ~has_src
+    selectors: dict[str, F.Column] = {}
 
     def as_col(e) -> F.Column:
         return F.expr(e) if isinstance(e, str) else e
 
+    def predicates(
+        clauses: list[dict], branch: F.Column, name: str
+    ) -> list[F.Column]:
+        """Per clause, the rows it takes."""
+        if _unconditional(clauses):
+            return [branch]
+        sel = F.lit(-1)
+        for i in range(len(clauses) - 1, -1, -1):
+            cond = clauses[i].get("cond")
+            # only the last clause may lack a condition
+            sel = (
+                F.lit(i)
+                if cond is None
+                else F.when(as_col(cond), F.lit(i)).otherwise(sel)
+            )
+        if clauses:
+            selectors[name] = F.when(branch, sel).otherwise(F.lit(-1))
+        return [F.col(name) == i for i in range(len(clauses))]
+
+    m_pred = predicates(matched, is_m, "__msel")
+    i_pred = predicates(not_matched, is_src, "__isel")
+    n_pred = predicates(not_matched_by_source, is_tgt, "__nsel")
+    if selectors:
+        j = j.withColumns(selectors)
+    acts = [
+        (p, cl.get("action", "update")) for cl, p in zip(matched, m_pred)
+    ] + [(p, cl.get("action")) for cl, p in zip(not_matched_by_source, n_pred)]
+    deleted = _any_of([p for p, a in acts if a == "delete"])
+    updated = _any_of([p for p, a in acts if a == "update"])
+    inserted = _any_of(i_pred)
+    # rows leaving the output: deleted ones and source rows no clause inserts
+    drop = [] if deleted is None else [deleted]
+    if not _unconditional(not_matched):
+        drop.append(is_src if inserted is None else is_src & ~inserted)
+    dropped = _any_of(drop)
+    keep = F.lit(True) if dropped is None else ~dropped
+
+    # the rows taking the WHOLE source row (UPDATE SET * / INSERT *):
+    # every non-key source column shares this one predicate and value
+    star_m = [
+        p
+        for cl, p in zip(matched, m_pred)
+        if cl.get("action", "update") == "update" and cl.get("set") is None
+    ]
+    star_i = [p for cl, p in zip(not_matched, i_pred) if cl.get("values") is None]
+    star = _any_of(star_m + star_i)
+
+    def cast(e, c: str) -> F.Column:
+        return as_col(e).cast(tgt_types[c])
+
+    picks: dict[str, F.Column] = {}
+
     def pick(c: str) -> F.Column:
+        if c in picks:
+            return picks[c]
         # baseline: the target's value (keys come back coalesced from
-        # the USING join — exact for kept target rows)
-        base = F.col(c) if c in keys else F.col(f"t.{c}")
-        out = base
-        for i, cl in enumerate(matched):
-            if cl.get("action", "update") != "update":
-                continue
-            st = cl.get("set")
-            if st is None:  # UPDATE SET *
-                if c in src_cols and c not in keys:
-                    v = F.col(f"s.{c}").cast(tgt_types[c])
-                else:
-                    continue
-            elif c in st:
-                v = as_col(st[c]).cast(tgt_types[c])
-            else:
-                continue
-            out = F.when(is_m & (F.col("__msel") == i), v).otherwise(out)
-        for i, cl in enumerate(not_matched_by_source):
-            if cl.get("action") != "update":
-                continue
+        # the USING join — exact for kept target rows, and for inserted
+        # ones under INSERT *)
+        out = F.col(c) if c in keys else F.col(f"t.{c}")
+        if star is not None and c in src_types and c not in keys:
+            v = F.col(f"s.{c}")
+            if src_types[c] != tgt_types[c]:
+                v = v.cast(tgt_types[c])
+            out = F.when(star, v).otherwise(out)
+        for cl, p in [*zip(matched, m_pred), *zip(not_matched_by_source, n_pred)]:
             st = cl.get("set") or {}
-            if c in st:
-                out = F.when(
-                    is_tgt & (F.col("__nsel") == i),
-                    as_col(st[c]).cast(tgt_types[c]),
-                ).otherwise(out)
-        for i, cl in enumerate(not_matched):
+            if cl.get("action", "update") == "update" and c in st:
+                out = F.when(p, cast(st[c], c)).otherwise(out)
+        for cl, p in zip(not_matched, i_pred):
             vals = cl.get("values")
-            if vals is None:  # INSERT *
-                ins = (
-                    F.col(c)
-                    if c in keys
-                    else (
-                        F.col(f"s.{c}").cast(tgt_types[c])
-                        if c in src_cols
-                        else F.lit(None).cast(tgt_types[c])
-                    )
-                )
-            elif c in vals:
-                ins = as_col(vals[c]).cast(tgt_types[c])
-            else:
-                ins = F.lit(None).cast(tgt_types[c])
-            out = F.when(is_src & (F.col("__isel") == i), ins).otherwise(out)
-        return out.alias(c)
+            if vals is None and (c in src_types or c in keys):
+                continue  # the star branch or the USING join has it
+            ins = (
+                cast(vals[c], c)
+                if vals and c in vals
+                else F.lit(None).cast(tgt_types[c])
+            )
+            out = F.when(p, ins).otherwise(out)
+        picks[c] = out.alias(c)
+        return picks[c]
 
     def tval(c: str) -> F.Column:
         """The pre-merge TARGET value of a column (keys come back
         coalesced from the USING join — exact for target-side rows)."""
         return (F.col(c) if c in keys else F.col(f"t.{c}")).alias(c)
 
-    m_upd = [
-        i for i, cl in enumerate(matched)
-        if cl.get("action", "update") == "update"
-    ]
-    n_upd = [
-        i
-        for i, cl in enumerate(not_matched_by_source)
-        if cl.get("action") == "update"
-    ]
+    no = F.lit(False)
     return {
         "j": j,
-        "is_m": is_m,
-        "is_src": is_src,
-        "is_tgt": is_tgt,
         "keep": keep,
         "pick": pick,
         "tval": tval,
         "columns": list(target.columns),
-        "m_del": m_del,
-        "n_del": n_del,
-        "m_upd": m_upd,
-        "n_upd": n_upd,
-        "out": lambda: j.filter(keep).select(
+        "deleted": no if deleted is None else deleted,
+        "updated": no if updated is None else updated,
+        "inserted": no if inserted is None else inserted,
+        "out": lambda: (j if dropped is None else j.filter(keep)).select(
             *[pick(c) for c in target.columns]
         ),
     }
@@ -533,22 +513,14 @@ def merge_clauses_with_cdc(
         target, source, keys, matched, not_matched, not_matched_by_source,
         evolve_schema,
     )
-    j, pick, tval = plan["j"], plan["pick"], plan["tval"]
-    cols = plan["columns"]
-    del_rows = (
-        plan["is_m"] & F.col("__msel").isin(plan["m_del"] or [-2])
-    ) | (plan["is_tgt"] & F.col("__nsel").isin(plan["n_del"] or [-2]))
-    upd_rows = (
-        plan["is_m"] & F.col("__msel").isin(plan["m_upd"] or [-2])
-    ) | (plan["is_tgt"] & F.col("__nsel").isin(plan["n_upd"] or [-2]))
-    ins_rows = plan["is_src"] & (F.col("__isel") >= 0)
-    flat = j.select(
+    pick, tval, cols = plan["pick"], plan["tval"], plan["columns"]
+    flat = plan["j"].select(
         *[pick(c) for c in cols],
         F.struct(*[tval(c) for c in cols]).alias("__pre"),
         plan["keep"].alias("__keep"),
-        del_rows.alias("__cdc_del"),
-        upd_rows.alias("__cdc_upd"),
-        ins_rows.alias("__cdc_ins"),
+        plan["deleted"].alias("__cdc_del"),
+        plan["updated"].alias("__cdc_upd"),
+        plan["inserted"].alias("__cdc_ins"),
     )
     if post_transform is not None:
         flat = post_transform(flat)

@@ -5324,28 +5324,85 @@ def _dml_evolved_schema(stored_json: str | None, out_json: str) -> str:
     return json.dumps(sd)
 
 
-def _simple_form_clauses(
-    when_matched: str,
-    when_not_matched: str,
-    matched_set: dict | None,
-    insert_values: dict | None,
-) -> dict:
-    """The simple-form MERGE parameters as their equivalent clause lists
-    — ONE conversion shared by the cdc sidecar and the mode='dv' path,
-    so neither can drift from :func:`merge.merge_frames` semantics."""
-    return {
-        "matched": (
-            [{"action": "delete"}]
-            if when_matched == "delete"
-            else [{"action": "update", "set": matched_set or None}]
-        ),
-        "not_matched": (
-            [{"values": insert_values or None}]
-            if when_not_matched == "insert"
-            else []
-        ),
-        "not_matched_by_source": [],
-    }
+def _merge_commit_schema(
+    table: TxLogTable,
+    stored_json: str | None,
+    out_json: str,
+    ident: dict[str, dict],
+    adds: list[str],
+) -> str:
+    """The schema a MERGE commit records (:func:`_dml_evolved_schema`)
+    plus any identity high-watermark advance, read from the new files'
+    footer stats and clamped monotone: a no-insert merge's files hold
+    only preserved ids at/below the current watermark."""
+    schema = _dml_evolved_schema(stored_json, out_json)
+    if not (ident and adds):
+        return schema
+    hws = table._identity_new_hw(adds, ident)
+    for c, m in ident.items():
+        if m["hw"] is not None:
+            hws[c] = (max if m["step"] > 0 else min)(m["hw"], hws[c])
+    return _identity_hw_update(schema, hws)
+
+
+def _merge_post_image(
+    df: DataFrame,
+    schema_json: str | None,
+    gen_recompute: dict[str, str],
+    ident: dict[str, dict],
+) -> DataFrame:
+    """The engine-owned columns of a MERGE's written rows: generated
+    columns no clause assigns recompute (cast to their stored type),
+    then NULL identity values — accepted inserts — are assigned beyond
+    each column's high watermark (``ident`` is re-read per attempt, so a
+    racing commit's watermark is respected); preserved ids pass."""
+    if gen_recompute:
+        from pyspark.sql.types import StructType
+
+        types = {
+            f.name: f.dataType
+            for f in StructType.fromJson(json.loads(schema_json)).fields
+        }
+        for g, e in gen_recompute.items():
+            df = df.withColumn(g, F.expr(e).cast(types[g]))
+    for c, m in ident.items():
+        base = m["start"] if m["hw"] is None else m["hw"] + m["step"]
+        df = df.withColumn(
+            c,
+            F.when(
+                F.col(c).isNull(),
+                (
+                    F.lit(base)
+                    + F.lit(m["step"]) * F.monotonically_increasing_id()
+                ).cast("long"),
+            ).otherwise(F.col(c)),
+        )
+    return df
+
+
+def _logical_columns(table: TxLogTable) -> list[str]:
+    """The table's logical columns: the recorded schema's fields (a
+    legacy log without one answers with its snapshot's columns)."""
+    schema_json = table._schema_at()
+    if schema_json is None:
+        return table.read().columns
+    return [f["name"] for f in json.loads(schema_json)["fields"]]
+
+
+def _extend_mapping(mapping: dict | None, columns: list[str]) -> dict | None:
+    """A column-mapped table's mapping extended by a FRESH physical name
+    for every written column it lacks (schema evolution) — otherwise a
+    previously DROPPED column's identity-mapped name would resurrect the
+    old files' values (or collide with a renamed column's physical
+    name). Same rule as add_column. None when nothing is new or the
+    table is unmapped; the physical-only row-id column is never mapped
+    (it lives under its fixed name in every file)."""
+    if not mapping:
+        return None
+    absent = [c for c in columns if c not in mapping and c != _ROW_ID_PHYS]
+    if not absent:
+        return None
+    return {**mapping, **{c: f"col_{uuid.uuid4().hex[:12]}" for c in absent}}
 
 
 @contextlib.contextmanager
@@ -5378,7 +5435,7 @@ def _merge_into_dv(
     evolve_schema: bool,
     max_retries: int,
     txn: tuple[str, int] | None,
-    gen_recompute: dict[str, str] | None = None,
+    gen_recompute: dict[str, str],
 ) -> DataFrame:
     """Merge-on-read MERGE (Delta's deletion-vector MERGE physical
     design), the :func:`merge_into_txlog` ``mode='dv'`` body. ``source``
@@ -5391,8 +5448,8 @@ def _merge_into_dv(
     2. ONE positional scan of the touched files
        (:meth:`TxLogTable._scan_with_filepath`: rows + ``__file``/
        ``__ridx``, prior vectors anti-joined out) feeds the SHARED
-       clause plan (:func:`merge.prepare_clause_plan` — identical
-       selectors/picks to the COW merge, so semantics cannot drift);
+       clause plan (:func:`merge.prepare_clause_plan` — the one plan
+       every MERGE route builds, so semantics cannot drift);
     3. positions leaving the table = delete-selected rows plus CHANGED
        update-selected rows (post-image != pre-image; no-op updates
        touch nothing) — per-file counts collect O(touched files)
@@ -5408,15 +5465,13 @@ def _merge_into_dv(
     touched file (SCALING.md probe). The change feed needs no sidecar:
     ``read_changes`` derives row-exact deletes from the DV delta and
     inserts from the new files."""
+    import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
     from .merge import prepare_clause_plan
 
     from pyspark.sql.types import LongType, StructField
 
-    matched = list(clauses.get("matched") or [])
-    not_matched = list(clauses.get("not_matched") or [])
-    nmbs = list(clauses.get("not_matched_by_source") or [])
     rt_on = table.row_tracking_enabled()
     for _attempt in range(max_retries + 1):
         base_version, base_files, dvs = table._replay_full()
@@ -5427,7 +5482,7 @@ def _merge_into_dv(
         schema_json = table._schema_at()
         touched_files = (
             list(base_files)
-            if nmbs
+            if clauses["not_matched_by_source"]
             else table._touched_by_keys(base_files, source, keys, dvs=dvs)
         )
         if touched_files:
@@ -5462,27 +5517,19 @@ def _merge_into_dv(
                     _ROW_ID_PHYS, F.lit(None).cast("long")
                 )
         plan = prepare_clause_plan(
-            target, source, keys, matched, not_matched, nmbs,
-            evolve_schema=evolve_schema,
+            target, source, keys, evolve_schema=evolve_schema, **clauses
         )
-        j, pick, tval = plan["j"], plan["pick"], plan["tval"]
+        pick, tval = plan["pick"], plan["tval"]
         data_cols = [
             c for c in plan["columns"] if c not in ("__file", "__ridx")
         ]
-        is_m, is_src, is_tgt = plan["is_m"], plan["is_src"], plan["is_tgt"]
-        del_sel = (
-            is_m & F.col("__msel").isin(plan["m_del"] or [-2])
-        ) | (is_tgt & F.col("__nsel").isin(plan["n_del"] or [-2]))
-        upd_sel = (
-            is_m & F.col("__msel").isin(plan["m_upd"] or [-2])
-        ) | (is_tgt & F.col("__nsel").isin(plan["n_upd"] or [-2]))
         changed = ~F.struct(*[tval(c) for c in data_cols]).eqNullSafe(
             F.struct(*[pick(c) for c in data_cols])
         )
         # ONE evaluation of the merge join feeds EVERYTHING downstream
         # (round 14, guide §5 cache-exactly-what-is-reused + §1.4):
         # the flat frame materializes the post-image picks and the three
-        # row-class selectors once; the doomed positions, the per-file
+        # row-class predicates once; the doomed positions, the per-file
         # counts, the new files, and the sidecar all read it — before
         # this, new_rows re-executed the full-outer join a second time,
         # and a nondeterministic clause condition could desynchronize
@@ -5491,13 +5538,13 @@ def _merge_into_dv(
         # data files too). Rows in no class are filtered out, so the
         # persist is O(changed rows + inserts), the DV budget.
         flat = (
-            j.select(
+            plan["j"].select(
                 *[pick(c) for c in data_cols],
                 F.col("__file"),
                 F.col("__ridx"),
-                del_sel.alias("__mrg_del"),
-                (upd_sel & changed).alias("__mrg_updchg"),
-                (is_src & (F.col("__isel") >= 0)).alias("__mrg_ins"),
+                plan["deleted"].alias("__mrg_del"),
+                (plan["updated"] & changed).alias("__mrg_updchg"),
+                plan["inserted"].alias("__mrg_ins"),
             )
             .filter("__mrg_del OR __mrg_updchg OR __mrg_ins")
             .persist(StorageLevel.MEMORY_AND_DISK)
@@ -5523,66 +5570,41 @@ def _merge_into_dv(
         # or a basename is not URI-safe: the scan reports percent-encoded
         # URIs, so a raw basename holding a space or '%' would match no
         # doomed position and silently keep the old rows live.
-        _bn_rel: dict[str, str] | None = {}
+        rel_of: dict[str, str] | None = {}
         for _f in touched_files:
             _b = _f.rsplit("/", 1)[-1]
-            if _b in _bn_rel or not _uri_safe(_b):
-                _bn_rel = None  # foreign layout: slow path
+            if _b in rel_of or not _uri_safe(_b):
+                rel_of = None  # foreign layout: slow path
                 break
-            _bn_rel[_b] = _f
-        counts: dict[str, int] = {}
-        if _bn_rel is None:
+            rel_of[_b] = _f
+        counts: dict[str, int] | None = None  # slow path's per-file counts
+        if rel_of is not None:
+            pos_key = F.element_at(F.split(F.col("__file"), "/"), -1)
+            prior_files = touched_files
+        else:
             uri_rows = (
                 doomed_pos.select(F.col("__file").alias("u"))
                 .groupBy("u")
                 .agg(F.count("*").alias("n"))
                 .collect()
             )
-            rel_by_uri = {r["u"]: table._rel_path(r["u"]) for r in uri_rows}
-            counts = {rel_by_uri[r["u"]]: r["n"] for r in uri_rows}
+            rel_of = {r["u"]: table._rel_path(r["u"]) for r in uri_rows}
+            counts = {rel_of[r["u"]]: r["n"] for r in uri_rows}
+            pos_key, prior_files = F.col("__file"), sorted(counts)
         # 4: new files — CHECK gate runs here, BEFORE any sidecar exists,
-        # so a CheckViolation leaves no orphan metadata
-        new_rows = flat.filter("__mrg_updchg OR __mrg_ins").select(
-            *data_cols
-        )
+        # so a CheckViolation leaves no orphan metadata. Update
+        # post-images carry their preserved ids; the post-image step
+        # recomputes generated columns over the new rows only (untouched
+        # rows stay in their files, DV-masked, with values the
+        # enforcement invariant already keeps consistent)
         cur_ident = table.identity_meta()
-        if cur_ident:
-            # update post-images carry their preserved (non-null) ids;
-            # accepted inserts surface NULL and are assigned beyond the
-            # watermark — re-read per attempt for racing-commit re-base
-            for c, m in cur_ident.items():
-                base = m["start"] if m["hw"] is None else m["hw"] + m["step"]
-                new_rows = new_rows.withColumn(
-                    c,
-                    F.when(
-                        F.col(c).isNull(),
-                        (
-                            F.lit(base)
-                            + F.lit(m["step"])
-                            * F.monotonically_increasing_id()
-                        ).cast("long"),
-                    ).otherwise(F.col(c)),
-                )
-        if gen_recompute:
-            # post-image recompute over the new rows only — untouched
-            # rows stay in their files (DV-masked) with values the
-            # enforcement invariant already guarantees consistent
-            from pyspark.sql.types import StructType as _ST
-
-            _gt = {
-                f.name: f.dataType
-                for f in _ST.fromJson(json.loads(schema_json)).fields
-            }
-            for g, e in gen_recompute.items():
-                new_rows = new_rows.withColumn(g, F.expr(e).cast(_gt[g]))
-        mapping = table._mapping_at()
-        new_mapping = None
-        if mapping:
-            absent = [c for c in data_cols if c not in mapping]
-            if absent:
-                new_mapping = dict(mapping)
-                for c in absent:
-                    new_mapping[c] = f"col_{uuid.uuid4().hex[:12]}"
+        new_rows = _merge_post_image(
+            flat.filter("__mrg_updchg OR __mrg_ins").select(*data_cols),
+            schema_json,
+            gen_recompute,
+            cur_ident,
+        )
+        new_mapping = _extend_mapping(table._mapping_at(), data_cols)
         try:
             adds = table._write_data(
                 new_rows,
@@ -5593,120 +5615,80 @@ def _merge_into_dv(
         except Exception:
             flat.unpersist()
             raise
-        # 5: one sidecar = new positions + touched files' prior vectors
+        # 5: one sidecar = new positions (rel-keyed through ``rel_of``)
+        # + the prior vectors of the files they land in. ``card`` maps
+        # each file GAINING positions to its exact post-commit vector
+        # cardinality (new positions are disjoint from the prior vector:
+        # the positional scan was DV-applied)
         sidecar: str | None = None
+        card: dict[str, int] = {}
+
+        def prior(rel: str) -> int:
+            return int((dvs.get(rel) or {}).get("cardinality") or 0)
+
+        if prior_files:
+            new_pos = (
+                doomed_pos.select(
+                    pos_key.alias("__k"), F.col("__ridx").alias("row_index")
+                )
+                .join(
+                    F.broadcast(
+                        local_df(
+                            spark,
+                            list(rel_of.items()),
+                            "__k string, file string",
+                        )
+                    ),
+                    "__k",
+                )
+                .select("file", "row_index")
+            )
+            old_pos = table._dv_frame(dvs, prior_files)
+            sidecar = table._write_sidecar(
+                new_pos if old_pos is None else new_pos.unionByName(old_pos)
+            )
+            sc_full = os.path.join(table.path, sidecar)
+            if counts is not None:
+                card = {rel: n + prior(rel) for rel, n in counts.items()}
+            elif os.path.exists(sc_full):
+                # FAST PATH: per-file TOTALS from one driver-side read of
+                # the sidecar just written (priors of every touched file
+                # included — bounded by the touched set). A file holding
+                # only its priors keeps its old descriptor.
+                vc = pc.value_counts(
+                    pq.read_table(sc_full, columns=["file"]).column("file")
+                )
+                card = {
+                    rel: n
+                    for rel, n in zip(
+                        vc.field("values").to_pylist(),
+                        vc.field("counts").to_pylist(),
+                    )
+                    if n > prior(rel)
+                }
         removes: list[str] = []
         dv_updates: dict[str, dict] = {}
-        if _bn_rel is not None and touched_files:
-            # FAST PATH: sidecar first (new positions rel-keyed via the
-            # driver-built basename map + priors of every touched file —
-            # bounded by the touched set, the same O(touched priors)
-            # class as before), then per-file TOTALS from one driver-side
-            # pyarrow read of the sidecar just written. A touched file
-            # with priors but no new positions keeps its old descriptor
-            # (new_n == 0 below) — its copied prior rows are inert.
-            bmap = F.broadcast(
-                local_df(
-                    spark,
-                    list(_bn_rel.items()),
-                    "__b string, file string",
-                )
-            )
-            new_pos = (
-                doomed_pos.select(
-                    F.element_at(
-                        F.split(F.col("__file"), "/"), -1
-                    ).alias("__b"),
-                    F.col("__ridx").alias("row_index"),
-                )
-                .join(bmap, "__b")
-                .select("file", "row_index")
-            )
-            old_pos = table._dv_frame(dvs, touched_files)
-            dv_union = (
-                new_pos if old_pos is None else new_pos.unionByName(old_pos)
-            )
-            sidecar = table._write_sidecar(dv_union)
-            sc_full = os.path.join(table.path, sidecar)
-            totals: dict[str, int] = {}
-            if os.path.exists(sc_full):
-                import pyarrow.parquet as _pq2
-
-                _tbl = _pq2.read_table(sc_full, columns=["file"])
-                for _rel in _tbl.column("file").to_pylist():
-                    totals[_rel] = totals.get(_rel, 0) + 1
-            for rel in sorted(totals):
-                old_card = int((dvs.get(rel) or {}).get("cardinality") or 0)
-                if totals[rel] - old_card <= 0:
-                    continue  # priors only: descriptor unchanged
-                # new positions are disjoint from the prior vector (the
-                # positional scan was DV-applied) — the sidecar total IS
-                # the exact post-commit cardinality
-                card = totals[rel]
-                nrows = pq.ParquetFile(
-                    os.path.join(table.path, rel)
-                ).metadata.num_rows
-                if card >= nrows:
-                    removes.append(rel)
-                else:
-                    dv_updates[rel] = {
-                        "sidecar": sidecar,
-                        "cardinality": card,
-                        "pathkey": "rel",
-                    }
-            if not dv_updates:
-                if os.path.exists(sc_full):
-                    os.remove(sc_full)
-                sidecar = None
-        elif counts:
-            doomed_rel = sorted(counts)
-            uri_map = local_df(spark,
-                list(rel_by_uri.items()), "__file string, file string"
-            )
-            new_pos = (
-                doomed_pos.select(
-                    "__file", F.col("__ridx").alias("row_index")
-                )
-                .join(F.broadcast(uri_map), "__file")
-                .select("file", "row_index")
-            )
-            old_pos = table._dv_frame(dvs, doomed_rel)
-            dv_union = (
-                new_pos if old_pos is None else new_pos.unionByName(old_pos)
-            )
-            sidecar = table._write_sidecar(dv_union)
-            for rel in doomed_rel:
-                # new positions are disjoint from the prior vector (the
-                # positional scan was DV-applied) — cardinality is exact
-                card = counts[rel] + int(
-                    (dvs.get(rel) or {}).get("cardinality") or 0
-                )
-                nrows = pq.ParquetFile(
-                    os.path.join(table.path, rel)
-                ).metadata.num_rows
-                if card >= nrows:
-                    removes.append(rel)
-                else:
-                    dv_updates[rel] = {
-                        "sidecar": sidecar,
-                        "cardinality": card,
-                        "pathkey": "rel",
-                    }
-            if not dv_updates:
+        for rel in sorted(card):
+            nrows = pq.ParquetFile(
+                os.path.join(table.path, rel)
+            ).metadata.num_rows
+            if card[rel] >= nrows:
+                removes.append(rel)  # every row masked: retire the file
+            else:
+                dv_updates[rel] = {
+                    "sidecar": sidecar,
+                    "cardinality": card[rel],
+                    "pathkey": "rel",
+                }
+        if sidecar is not None and not dv_updates:
+            if os.path.exists(os.path.join(table.path, sidecar)):
                 os.remove(os.path.join(table.path, sidecar))
-                sidecar = None
+            sidecar = None
         # stored schema (metadata intact) + evolution + watermark advance
-        # — same rule as the COW twin (see merge_into_txlog)
-        commit_schema = _dml_evolved_schema(schema_json, new_rows.schema.json())
-        if cur_ident and adds:
-            hws = table._identity_new_hw(adds, cur_ident)
-            ident_hws = {}
-            for c, m in cur_ident.items():
-                far = max if m["step"] > 0 else min
-                ident_hws[c] = (
-                    hws[c] if m["hw"] is None else far(m["hw"], hws[c])
-                )
-            commit_schema = _identity_hw_update(commit_schema, ident_hws)
+        # — same rule as copy-on-write (see merge_into_txlog)
+        commit_schema = _merge_commit_schema(
+            table, schema_json, new_rows.schema.json(), cur_ident, adds
+        )
         try:
             table._commit_dml(
                 adds=adds, removes=removes, base_version=base_version,
@@ -5812,194 +5794,121 @@ def merge_into_txlog(
     ``rewrite='full'`` are rejected with it — a DV commit's feed is
     already row-exact (``read_changes`` derives the pre-images from the
     DV delta) and merge-on-read never rewrites touched files."""
-    from .merge import merge_clauses, merge_clauses_with_cdc, merge_frames
+    from .merge import merge_clauses, merge_clauses_with_cdc, simple_form_clauses
 
-    with _read_once(source) as source:
-        assert rewrite in ("touched", "full")
-        if table.row_tracking_enabled():
-            # the physical id column is ENGINE-OWNED (same contract as
-            # identity columns): no clause may SET/INSERT it — the target
-            # frame carries it as an ordinary column for the rewrite, so
-            # clause validation alone would accept the assignment and
-            # silently corrupt stable ids — and the source may not carry it
-            # (SET */INSERT * under evolve_schema would pick it up).
-            # Review finding, round 12. Guards BOTH physical modes.
-            if _ROW_ID_PHYS in source.columns:
-                raise ValueError(
-                    f"source carries reserved column {_ROW_ID_PHYS!r} — it "
-                    "is engine-assigned row-tracking state; rename or drop "
-                    "it from the source"
-                )
-            _cl_rt = clauses if clauses is not None else _simple_form_clauses(
-                when_matched, when_not_matched, matched_set, insert_values
-            )
-            for _kind, _key in (
-                ("matched", "set"),
-                ("not_matched", "values"),
-                ("not_matched_by_source", "set"),
-            ):
-                for _c in _cl_rt.get(_kind) or []:
-                    if _ROW_ID_PHYS in (_c.get(_key) or {}):
-                        raise ValueError(
-                            f"{_kind} clause assigns {_ROW_ID_PHYS!r} — row-"
-                            "tracking ids are engine-assigned and cannot be "
-                            "set by MERGE"
-                        )
-        ident_meta = table.identity_meta()
-        if ident_meta:
-            # identity columns are GENERATED ALWAYS: no clause may assign
-            # them and the source may not carry them. Matched rows keep
-            # their stored ids (the clause plan's baseline is the target
-            # value), NOT MATCHED inserts surface with NULL ids and are
-            # assigned beyond the current high watermark inside the merge
-            # projection below — Delta's identity MERGE contract.
-            _cl_i = clauses if clauses is not None else _simple_form_clauses(
-                when_matched, when_not_matched, matched_set, insert_values
-            )
-            _ident_assigned: set[str] = set()
-            for _c in (_cl_i.get("matched") or []) + (
-                _cl_i.get("not_matched_by_source") or []
-            ):
-                _ident_assigned |= set(_c.get("set") or {})
-            for _c in _cl_i.get("not_matched") or []:
-                _ident_assigned |= set(_c.get("values") or {})
-            _bad = sorted(
-                (_ident_assigned | set(source.columns)) & set(ident_meta)
-            )
-            if _bad:
-                raise ValueError(
-                    f"identity column(s) {_bad} are GENERATED ALWAYS "
-                    "(allowExplicitInsert=false): a MERGE clause may not "
-                    "assign them and the source may not carry them — matched "
-                    "rows keep their ids, inserted rows are assigned beyond "
-                    "the watermark by the engine"
-                )
-            if clauses is None:
-                # the simple whole-row form requires source/target schema
-                # equality, which an identity table's source can never meet
-                # (the engine owns the column). Route through the clause
-                # machinery instead: UPDATE SET * / INSERT * ignore columns
-                # ABSENT from the source — exactly identity's contract
-                # (matched rows keep their ids, inserts NULL-fill).
-                clauses = _cl_i
-                when_matched, when_not_matched = "update", "insert"
-                matched_set = insert_values = None
-        # Delta's generated-column MERGE rule: generated columns no clause
-        # assigns (explicitly via SET/VALUES, or implicitly by appearing in
-        # a whole-row source) RECOMPUTE over the merge output — deterministic
-        # expressions reproduce the stored value for untouched rows, so one
-        # whole-frame projection is exact. Explicitly assigned generated
-        # columns stay writer-supplied and the _write_data chokepoint
-        # validates them.
-        gen_recompute: dict[str, str] = {}
-        _gen_all = table.generated_exprs()
-        if _gen_all:
-            _cl = clauses if clauses is not None else _simple_form_clauses(
-                when_matched, when_not_matched, matched_set, insert_values
-            )
-            _assigned: set[str] = set()
-            _whole_row = False
-            for _c in _cl.get("matched") or []:
-                if _c.get("action", "update") == "update":
-                    if _c.get("set"):
-                        _assigned |= set(_c["set"])
-                    else:
-                        _whole_row = True
-            for _c in _cl.get("not_matched") or []:
-                if _c.get("values"):
-                    _assigned |= set(_c["values"])
-                else:
-                    _whole_row = True
-            for _c in _cl.get("not_matched_by_source") or []:
-                if _c.get("action") == "update" and _c.get("set"):
-                    _assigned |= set(_c["set"])
-            if _whole_row:
-                _assigned |= set(source.columns)
-            # recompute only where values can actually change: inserted rows
-            # always need their generated columns computed; updated rows only
-            # when the expression references an assigned column (a delete-only
-            # merge recomputes NOTHING — and keeps cdc=True usable)
-            _has_insert = bool(_cl.get("not_matched"))
-            gen_recompute = {
-                g: e
-                for g, e in _gen_all.items()
-                if g not in _assigned
-                and (
-                    _has_insert
-                    or any(
-                        re.search(rf"\b{re.escape(c)}\b", e) for c in _assigned
-                    )
-                )
-            }
-            if gen_recompute and clauses is None and not matched_set and not insert_values:
-                # whole-row form requires source/target schema equality;
-                # sources naturally omit generated columns, so widen with
-                # typed NULLs — the post-merge recompute overwrites them
-                from pyspark.sql.types import StructType as _ST0
-
-                _gt0 = {
-                    f.name: f.dataType
-                    for f in _ST0.fromJson(
-                        json.loads(table._schema_at())
-                    ).fields
-                }
-                for g in gen_recompute:
-                    if g not in source.columns and g in _gt0:
-                        source = source.withColumn(
-                            g, F.lit(None).cast(_gt0[g])
-                        )
-        if clauses is not None and (
-            matched_set or insert_values
-            or when_matched != "update" or when_not_matched != "insert"
-        ):
+    assert rewrite in ("touched", "full")
+    if mode not in ("cow", "dv"):
+        raise ValueError(f"unknown MERGE mode {mode!r} (cow|dv)")
+    if clauses is not None and (
+        matched_set or insert_values
+        or when_matched != "update" or when_not_matched != "insert"
+    ):
+        raise ValueError(
+            "clauses= is the full MERGE surface — it cannot combine "
+            "with when_matched/when_not_matched/matched_set/"
+            "insert_values (evolve_schema composes with it)"
+        )
+    rt_on = table.row_tracking_enabled()
+    if rt_on and _ROW_ID_PHYS in source.columns:
+        # the physical id column is ENGINE-OWNED (same contract as
+        # identity columns): the source may not carry it (SET */INSERT *
+        # under evolve_schema would pick it up). Review finding, round 12.
+        raise ValueError(
+            f"source carries reserved column {_ROW_ID_PHYS!r} — it "
+            "is engine-assigned row-tracking state; rename or drop "
+            "it from the source"
+        )
+    ident_meta = table.identity_meta()
+    gen_all = table.generated_exprs()
+    if clauses is None:
+        # the simple form becomes its clause list ONCE, here: every route
+        # below (COW, cdc, insert-only, DV) sees only clauses. Its
+        # whole-row contract lets a source omit the engine-owned columns
+        # — identity (matched rows keep their ids, inserts are assigned)
+        # and generated (recomputed below)
+        clauses = simple_form_clauses(
+            _logical_columns(table), source.columns, when_matched,
+            when_not_matched, matched_set, insert_values, evolve_schema,
+            omittable=set(ident_meta) | set(gen_all),
+        )
+    clauses = {
+        k: list(clauses.get(k) or [])
+        for k in ("matched", "not_matched", "not_matched_by_source")
+    }
+    named: set[str] = set()  # columns some clause assigns by name
+    for cl in sum(clauses.values(), []):
+        named |= set(cl.get("set") or cl.get("values") or {})
+    # some clause takes the source row (UPDATE SET * / INSERT *)
+    whole_row = any(
+        cl.get("action", "update") == "update" and not cl.get("set")
+        for cl in clauses["matched"]
+    ) or any(not cl.get("values") for cl in clauses["not_matched"])
+    if rt_on and _ROW_ID_PHYS in named:
+        # the target frame carries the id column as an ordinary column
+        # for the rewrite, so clause validation alone would accept the
+        # assignment and silently corrupt stable ids. Guards BOTH modes.
+        raise ValueError(
+            f"a MERGE clause assigns {_ROW_ID_PHYS!r} — row-tracking ids "
+            "are engine-assigned and cannot be set by MERGE"
+        )
+    bad = sorted((named | set(source.columns)) & set(ident_meta))
+    if bad:
+        # identity columns are GENERATED ALWAYS — Delta's identity MERGE
+        # contract: matched rows keep their stored ids (the clause plan's
+        # baseline is the target value), NOT MATCHED inserts surface with
+        # NULL ids and are assigned beyond the current high watermark
+        raise ValueError(
+            f"identity column(s) {bad} are GENERATED ALWAYS "
+            "(allowExplicitInsert=false): a MERGE clause may not "
+            "assign them and the source may not carry them — matched "
+            "rows keep their ids, inserted rows are assigned beyond "
+            "the watermark by the engine"
+        )
+    # Delta's generated-column MERGE rule: generated columns no clause
+    # assigns (by name, or by a whole-row clause over a source carrying
+    # them) RECOMPUTE over the merge output — deterministic expressions
+    # reproduce the stored value for untouched rows, so one whole-frame
+    # projection is exact. Assigned generated columns stay writer-supplied
+    # and the _write_data chokepoint validates them. Recompute only where
+    # values can change: inserted rows always; updated rows only when the
+    # expression references an assigned column (a delete-only merge
+    # recomputes NOTHING — and keeps cdc=True usable)
+    assigned = named | (set(source.columns) if whole_row else set())
+    gen_recompute = {
+        g: e
+        for g, e in gen_all.items()
+        if g not in assigned
+        and (
+            bool(clauses["not_matched"])
+            or any(re.search(rf"\b{re.escape(c)}\b", e) for c in assigned)
+        )
+    }
+    if mode == "dv":
+        if cdc:
             raise ValueError(
-                "clauses= is the full MERGE surface — it cannot combine "
-                "with when_matched/when_not_matched/matched_set/"
-                "insert_values (evolve_schema composes with it)"
+                "cdc=True is redundant with mode='dv': deletion-"
+                "vector commits already feed row-exact deltas — "
+                "read_changes() derives the changed rows from the "
+                "DV delta directly; drop cdc=True"
             )
+        if rewrite != "touched":
+            raise ValueError(
+                "rewrite= applies to copy-on-write only — mode='dv' "
+                "never rewrites touched files"
+            )
+    with _read_once(source) as source:
         if mode == "dv":
-            if cdc:
-                raise ValueError(
-                    "cdc=True is redundant with mode='dv': deletion-"
-                    "vector commits already feed row-exact deltas — "
-                    "read_changes() derives the changed rows from the "
-                    "DV delta directly; drop cdc=True"
-                )
-            if rewrite != "touched":
-                raise ValueError(
-                    "rewrite= applies to copy-on-write only — mode='dv' "
-                    "never rewrites touched files"
-                )
-            cl = clauses if clauses is not None else _simple_form_clauses(
-                when_matched, when_not_matched, matched_set, insert_values
-            )
             return _merge_into_dv(
-                spark, table, source, keys, cl, evolve_schema, max_retries, txn,
-                gen_recompute=gen_recompute,
+                spark, table, source, keys, clauses, evolve_schema,
+                max_retries, txn, gen_recompute,
             )
-        if mode != "cow":
-            raise ValueError(f"unknown MERGE mode {mode!r} (cow|dv)")
-        rt_on = table.row_tracking_enabled()
-        if rt_on and clauses is None:
-            # row tracking rides the CLAUSE plan: the target frame carries
-            # the physical-only id column as an ordinary extra column, which
-            # the whole-row merge_frames contract would reject — convert the
-            # simple form (the documented-equivalent conversion the cdc and
-            # dv paths already share), preserving its loud whole-row schema
-            # contract against the LOGICAL columns first
-            if not (matched_set or insert_values) and not evolve_schema:
-                _sj = table._schema_at()
-                _tcols = (
-                    {f["name"] for f in json.loads(_sj)["fields"]}
-                    if _sj is not None
-                    else set(table.read().columns) - {_ROW_ID_PHYS}
-                )
-                if set(source.columns) != _tcols:
-                    raise AssertionError("source/target schemas must match")
-            clauses = _simple_form_clauses(
-                when_matched, when_not_matched, matched_set, insert_values
-            )
-            matched_set = insert_values = None
+        nmbs = clauses["not_matched_by_source"]
+        # Delta's insert-only MERGE optimization: matched rows keep their
+        # target values by construction, so nothing is rewritten — one
+        # key-pruned anti-join filters the source to genuinely-new keys,
+        # and the commit only ADDS files (rewrite='full' forces the
+        # whole-table path instead)
+        insert_only = rewrite != "full" and not (clauses["matched"] or nmbs)
         for _attempt in range(max_retries + 1):
             # base_version FIRST, txn check SECOND (same reasoning as
             # TxLogTable.append): a same-batch racer committing after our
@@ -6009,15 +5918,9 @@ def merge_into_txlog(
                 last = table.last_txn_version(txn[0])
                 if last is not None and txn[1] <= last:
                     return table.read()
-            # rewrite='full' forces the whole-table path, so the insert-only
-            # source pruning (src_eff) never runs there — gate on the mode or
-            # the merge call below would read an unbound src_eff
-            insert_only = rewrite != "full" and clauses is not None and not (
-                clauses.get("matched") or clauses.get("not_matched_by_source")
-            )
-            if rewrite == "full" or (
-                clauses is not None and clauses.get("not_matched_by_source")
-            ):
+            schema_json = table._schema_at()
+            src = source
+            if rewrite == "full" or nmbs:
                 # a NOT MATCHED BY SOURCE clause can hit any target row:
                 # every live file is a rewrite candidate (Delta's rule)
                 removes = base_files
@@ -6028,7 +5931,7 @@ def merge_into_txlog(
                     # baseline is the target value; inserts surface NULL and
                     # derive fresh ids from their file's base at read)
                     target = (
-                        table._rt_cow_read(base_files, table._schema_at(), dvs)
+                        table._rt_cow_read(base_files, schema_json, dvs)
                         if base_files
                         else table._empty().withColumn(
                             _ROW_ID_PHYS, F.lit(None).cast("long")
@@ -6037,17 +5940,12 @@ def merge_into_txlog(
                 else:
                     target = table.read()
             elif insert_only:
-                # Delta's insert-only MERGE optimization: matched rows keep
-                # their target values by construction, so nothing is
-                # rewritten — one key-pruned anti-join filters the source
-                # to genuinely-new keys, and the commit only ADDS files
                 removes = []
                 target = table._empty()
-                src_eff = source
                 if base_files:
-                    src_eff = source.join(
+                    src = source.join(
                         table._read_files(
-                            base_files, table._schema_at(), dvs=dvs
+                            base_files, schema_json, dvs=dvs
                         ).select(*keys),
                         keys,
                         "left_anti",
@@ -6056,11 +5954,9 @@ def merge_into_txlog(
                 removes = table._touched_by_keys(base_files, source, keys, dvs=dvs)
                 if removes:
                     target = (
-                        table._rt_cow_read(removes, table._schema_at(), dvs)
+                        table._rt_cow_read(removes, schema_json, dvs)
                         if rt_on
-                        else table._read_files(
-                            removes, table._schema_at(), dvs=dvs
-                        )
+                        else table._read_files(removes, schema_json, dvs=dvs)
                     )
                 else:
                     target = table._empty()
@@ -6068,46 +5964,15 @@ def merge_into_txlog(
                         target = target.withColumn(
                             _ROW_ID_PHYS, F.lit(None).cast("long")
                         )
-            # post-image transform shared by every construction path below:
-            # generated-column recompute then identity assignment, operating
-            # on plain post-image columns — so it applies identically to the
-            # merged frame (non-cdc paths) and to the single-pass flat frame
-            # (cdc path), and the values are single-sourced either way
-            cur_ident: dict[str, dict] = (
-                # re-read per attempt: a racing commit may have advanced a
-                # high watermark — assignment must start beyond the CURRENT
-                # one (a lost conflict drops our files and re-runs this)
-                table.identity_meta()
-                if ident_meta
-                else {}
-            )
+            # re-read per attempt: a racing commit may have advanced a
+            # high watermark — assignment must start beyond the CURRENT
+            # one (a lost conflict drops our files and re-runs this)
+            cur_ident = table.identity_meta() if ident_meta else {}
 
             def _post(df: DataFrame) -> DataFrame:
-                if gen_recompute:
-                    from pyspark.sql.types import StructType as _ST
-
-                    _gt = {
-                        f.name: f.dataType
-                        for f in _ST.fromJson(
-                            json.loads(table._schema_at())
-                        ).fields
-                    }
-                    for g, e in gen_recompute.items():
-                        df = df.withColumn(g, F.expr(e).cast(_gt[g]))
-                for c, m in cur_ident.items():
-                    base = m["start"] if m["hw"] is None else m["hw"] + m["step"]
-                    df = df.withColumn(
-                        c,
-                        F.when(
-                            F.col(c).isNull(),
-                            (
-                                F.lit(base)
-                                + F.lit(m["step"])
-                                * F.monotonically_increasing_id()
-                            ).cast("long"),
-                        ).otherwise(F.col(c)),
-                    )
-                return df
+                return _merge_post_image(
+                    df, schema_json, gen_recompute, cur_ident
+                )
 
             persisted = None
             cdc_df: DataFrame | None = None
@@ -6117,81 +5982,28 @@ def merge_into_txlog(
                 # sidecar — nondeterministic conditions/SET expressions,
                 # generated-column recomputes, and identity assignment can
                 # no longer desynchronize the feed (they are materialized
-                # once). merge_clauses_with_cdc shares prepare_clause_plan,
-                # so the semantics cannot drift from the non-cdc paths.
-                if clauses is None and not (matched_set or insert_values):
-                    # preserve the simple whole-row form's loud contract
-                    # (merge_frames asserts it; the clause plan would
-                    # silently keep target values for absent columns)
-                    if not evolve_schema and set(source.columns) != set(
-                        target.columns
-                    ):
-                        raise AssertionError(
-                            "source/target schemas must match"
-                        )
-                cl = clauses if clauses is not None else _simple_form_clauses(
-                    when_matched, when_not_matched, matched_set, insert_values
-                )
+                # once)
                 merged, cdc_df, persisted = merge_clauses_with_cdc(
-                    target,
-                    source,
-                    keys,
-                    matched=cl.get("matched"),
-                    not_matched=cl.get("not_matched"),
-                    not_matched_by_source=cl.get("not_matched_by_source"),
-                    evolve_schema=evolve_schema,
-                    post_transform=_post,
-                )
-            elif clauses is not None:
-                merged = _post(
-                    merge_clauses(
-                        target,
-                        src_eff if insert_only else source,
-                        keys,
-                        matched=clauses.get("matched"),
-                        not_matched=clauses.get("not_matched"),
-                        not_matched_by_source=clauses.get(
-                            "not_matched_by_source"
-                        ),
-                        evolve_schema=evolve_schema,
-                    )
+                    target, source, keys, evolve_schema=evolve_schema,
+                    post_transform=_post, **clauses,
                 )
             else:
                 merged = _post(
-                    merge_frames(
-                        target, source, keys, when_matched, when_not_matched,
-                        evolve_schema, matched_set=matched_set,
-                        insert_values=insert_values,
+                    merge_clauses(
+                        target, src, keys, evolve_schema=evolve_schema,
+                        **clauses,
                     )
                 )
-            if cdc and insert_only:
-                # insert-only: the merge output IS the change set — persist
-                # it so the data write and the sidecar write read the SAME
-                # materialized rows (identity assignment is not stable
-                # across executions)
-                persisted = merged.persist(StorageLevel.MEMORY_AND_DISK)
-                merged = persisted
-                cdc_df = persisted.withColumn("_change_type", F.lit("insert"))
-            # column-mapped table + schema evolution: any column NEW to the
-            # mapping writes under a FRESH physical name and the merge
-            # commit records the extended mapping — otherwise a previously
-            # DROPPED column's identity-mapped name would resurrect the old
-            # files' values (or collide with a renamed column's physical
-            # name). Same rule as add_column.
-            mapping = table._mapping_at()
-            new_mapping = None
-            if mapping:
-                # the physical-only row-id column is never column-mapped —
-                # it lives under its fixed physical name in every file
-                absent = [
-                    c
-                    for c in merged.columns
-                    if c not in mapping and c != _ROW_ID_PHYS
-                ]
-                if absent:
-                    new_mapping = dict(mapping)
-                    for c in absent:
-                        new_mapping[c] = f"col_{uuid.uuid4().hex[:12]}"
+                if cdc:
+                    # insert-only: the merge output IS the change set —
+                    # persist it so the data write and the sidecar write
+                    # read the SAME materialized rows (identity assignment
+                    # is not stable across executions)
+                    persisted = merged = merged.persist(
+                        StorageLevel.MEMORY_AND_DISK
+                    )
+                    cdc_df = merged.withColumn("_change_type", F.lit("insert"))
+            new_mapping = _extend_mapping(table._mapping_at(), merged.columns)
             try:
                 adds = table._write_data(
                     merged,
@@ -6210,23 +6022,9 @@ def merge_into_txlog(
                 if persisted is not None:
                     persisted.unpersist()
                 raise
-            # record the STORED schema (field metadata intact — a projection
-            # strips identity/generation annotations) widened by evolution,
-            # plus any identity watermark advance read from the new files'
-            # footer stats (clamped monotone: a no-insert merge's files hold
-            # only preserved ids at/below the current watermark)
-            commit_schema = _dml_evolved_schema(
-                table._schema_at(), merged.schema.json()
+            commit_schema = _merge_commit_schema(
+                table, schema_json, merged.schema.json(), cur_ident, adds
             )
-            if cur_ident and adds:
-                hws = table._identity_new_hw(adds, cur_ident)
-                ident_hws = {}
-                for c, m in cur_ident.items():
-                    far = max if m["step"] > 0 else min
-                    ident_hws[c] = (
-                        hws[c] if m["hw"] is None else far(m["hw"], hws[c])
-                    )
-                commit_schema = _identity_hw_update(commit_schema, ident_hws)
             try:
                 table._commit_dml(
                     adds=adds, removes=removes, base_version=base_version,

@@ -4973,7 +4973,7 @@ def x86_delta_dv_export_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame
     "whole-row would take the source), inserted rows NULL-fill "
     "unlisted columns, expressions cast on write to target types. "
     "Physically one full-outer join + one codegen'd projection "
-    "(operators/merge._merge_frames_percol) on the touched-file "
+    "(operators/merge.prepare_clause_plan) on the touched-file "
     "copy-on-write path — untouched files carry over by reference. "
     "The oracle rebuilds the same final state from raw orders with a "
     "LEFT JOIN + anti-join UNION.",

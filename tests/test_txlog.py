@@ -1,7 +1,8 @@
 """Commit-log table format (operators/txlog): atomic MERGE, snapshot
 isolation, optimistic concurrency, crash-orphan hygiene — the guarantees
 the staged-swap backend documents as out of scope. Both MERGE backends
-must produce identical logical results (shared merge_frames core)."""
+must produce identical logical results (one clause plan,
+merge.prepare_clause_plan, behind every MERGE route)."""
 
 from __future__ import annotations
 
@@ -45,18 +46,67 @@ def test_convert_adopts_existing_parquet_in_place(spark, tmp_path):
     assert all(n in os.listdir(path) for n in names_before)
 
 
-def test_merge_backends_agree(spark, tmp_path, table):
+# the three physical routes of a txlog MERGE: copy-on-write, copy-on-write
+# with a change-data sidecar, and deletion vectors (merge-on-read)
+MERGE_ROUTES = pytest.mark.parametrize(
+    "route", [{}, {"cdc": True}, {"mode": "dv"}], ids=["cow", "cdc", "dv"]
+)
+
+
+@MERGE_ROUTES
+def test_merge_backends_agree(spark, tmp_path, table, route):
     source = _df(spark, [(2, "B", 2), (4, "d", 2)])
     # staged-swap backend on a parquet copy of the same data
     plain = str(tmp_path / "plain")
     table.read().write.parquet(plain)
     swap_result = merge_mod.merge_into_parquet(spark, plain, source, keys=["k"])
-    tx_result = merge_into_txlog(spark, table, source, keys=["k"])
+    tx_result = merge_into_txlog(spark, table, source, keys=["k"], **route)
     assert sorted(map(tuple, swap_result.collect())) == sorted(map(tuple, tx_result.collect()))
     assert {(r.k, r.v) for r in tx_result.collect()} == {
         (1, "a"), (2, "B"), (3, "c"), (4, "d"),
     }
     assert table.version() == 1
+
+
+@MERGE_ROUTES
+def test_whole_row_merge_casts_to_stored_type(spark, tmp_path, route):
+    """A whole-row source of a wider type lands under the STORED type on
+    every route: files written as INT64 under a recorded ``int`` column
+    would fail every later read."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    t = TxLogTable.create(
+        spark,
+        str(tmp_path / "t"),
+        spark.createDataFrame([(1, 10), (2, 20)], "k bigint, v int"),
+    )
+    source = spark.createDataFrame([(2, 200), (3, 300)], "k bigint, v bigint")
+    merge_into_txlog(spark, t, source, keys=["k"], **route)
+    out = t.read()
+    assert dict(out.dtypes)["v"] == "int"
+    assert sorted(map(tuple, out.collect())) == [(1, 10), (2, 200), (3, 300)]
+    for f in t._replay()[1]:
+        assert pq.read_schema(os.path.join(t.path, f)).field("v").type == pa.int32()
+
+
+@MERGE_ROUTES
+@pytest.mark.parametrize("identity", [False, True], ids=["plain", "identity"])
+def test_whole_row_merge_contract_on_every_route(spark, tmp_path, route, identity):
+    """One whole-row contract on every route and table kind: a source
+    lacking a regular column is refused, never merged with the target's
+    value kept on update and NULL on insert. Only engine-owned columns
+    (identity, generated) may be omitted."""
+    t = TxLogTable.create(
+        spark,
+        str(tmp_path / "t"),
+        spark.createDataFrame([(1, "a", 1.0)], "k bigint, v string, w double"),
+        identity={"rid": (1, 1)} if identity else None,
+    )
+    source = spark.createDataFrame([(1, "b"), (2, "c")], "k bigint, v string")
+    with pytest.raises(AssertionError, match="source/target schemas must match"):
+        merge_into_txlog(spark, t, source, keys=["k"], **route)
+    assert t.version() == 0
 
 
 def test_merge_delete_and_ignore(spark, table):
