@@ -48,6 +48,7 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, DataType, MapType, StructType
 
 
 def merge_into_parquet(
@@ -472,6 +473,98 @@ def _build_clause_plan(
     }
 
 
+def _orderable(t: DataType) -> bool:
+    """Spark can compare values of ``t`` with ``<=>`` (no map inside)."""
+    if isinstance(t, MapType):
+        return False
+    if isinstance(t, ArrayType):
+        return _orderable(t.elementType)
+    if isinstance(t, StructType):
+        return all(_orderable(f.dataType) for f in t.fields)
+    return True
+
+
+def changed(pre: F.Column, post: F.Column, schema: StructType) -> F.Column:
+    """A row whose post-image differs from its pre-image, null-safe:
+    ``pre`` and ``post`` are structs of the columns in ``schema``. An
+    update that assigns a row its own values is no change — it leaves
+    no position behind a deletion vector and no pair in a change feed.
+    Every row-level write (COW and DV DML, COW and DV MERGE) asks this
+    one predicate.
+
+    Spark cannot compare maps, so a map column compares as its sorted
+    entries; a map nested deeper counts as changed (the row is
+    rewritten, never wrongly kept)."""
+    if _orderable(schema):
+        return ~pre.eqNullSafe(post)
+    out = F.lit(False)
+    for f in schema.fields:
+        a, b, t = pre.getField(f.name), post.getField(f.name), f.dataType
+        if _orderable(t):
+            out = out | ~a.eqNullSafe(b)
+        elif (
+            isinstance(t, MapType)
+            and _orderable(t.keyType)
+            and _orderable(t.valueType)
+        ):
+            out = out | ~F.array_sort(F.map_entries(a)).eqNullSafe(
+                F.array_sort(F.map_entries(b))
+            )
+        else:
+            return F.lit(True)
+    return out
+
+
+def change_feed(
+    flat: DataFrame,
+    cols: list[str],
+    deleted: F.Column | None = None,
+    updated: F.Column | None = None,
+    inserted: F.Column | None = None,
+) -> DataFrame:
+    """The exact change set of one row-level write, from its flat frame:
+    the post-image columns ``cols`` plus the pre-image struct ``__pre``
+    (same fields), with ``deleted``/``updated``/``inserted`` the row
+    classes (None: the write has no such rows). Deletes carry their
+    pre-image; a CHANGED update carries Delta CDF's
+    ``update_preimage``/``update_postimage`` pair (no-op updates are
+    left out); inserts carry their post-image. The one feed builder
+    behind ``merge_into_txlog(cdc=True)`` and
+    ``delete_where``/``update_where(cdc=True)``."""
+    parts = []
+    if deleted is not None:
+        parts.append(
+            flat.filter(deleted)
+            .select("__pre.*")
+            .withColumn("_change_type", F.lit("delete"))
+        )
+    if updated is not None:
+        ch = flat.filter(
+            updated
+            & changed(
+                F.col("__pre"), F.struct(*cols), flat.select(*cols).schema
+            )
+        )
+        parts += [
+            ch.select("__pre.*").withColumn(
+                "_change_type", F.lit("update_preimage")
+            ),
+            ch.select(*cols).withColumn(
+                "_change_type", F.lit("update_postimage")
+            ),
+        ]
+    if inserted is not None:
+        parts.append(
+            flat.filter(inserted)
+            .select(*cols)
+            .withColumn("_change_type", F.lit("insert"))
+        )
+    out = parts[0]
+    for p in parts[1:]:
+        out = out.unionByName(p)
+    return out
+
+
 def merge_clauses_with_cdc(
     target: DataFrame,
     source: DataFrame,
@@ -482,33 +575,33 @@ def merge_clauses_with_cdc(
     evolve_schema: bool = False,
     post_transform=None,
 ):
-    """SINGLE-PASS merge output + exact change set (round 11, replacing
-    the removed two-pass merge_clauses + merge_clauses_cdc combination
-    for cdc commits): the shared clause plan is evaluated
-    ONCE into a flat frame carrying the post-image columns, the
-    pre-image struct, and the row-class flags, and that frame is
-    PERSISTED — both the committed rows and the change sidecar then read
-    the same materialized values, so nondeterministic clause conditions
-    or SET expressions (``rand()``, a view over shifting data) and
-    engine-assigned values (identity columns, generated-column
-    recomputes) can never desynchronize the feed from the table.
+    """SINGLE-PASS merge output + exact change set: the shared clause
+    plan is evaluated into ONE flat frame carrying the post-image
+    columns, the pre-image struct, and the row-class flags; both the
+    committed rows and the change set (:func:`change_feed`) derive from
+    it. Persisted by the caller, the frame makes nondeterministic clause
+    conditions or SET expressions (``rand()``, a view over shifting
+    data) and engine-assigned values (identity columns, generated-column
+    recomputes) single-sourced, so the feed can never desynchronize
+    from the table.
 
     ``post_transform(df)`` is applied to the flat post-image columns
-    BEFORE materialization — the hook where
+    before the two consumers derive — the hook where
     :func:`txlog.merge_into_txlog` injects generated-column recompute
     and identity assignment, which is exactly what makes their values
     single-sourced.
 
-    Returns ``(merged, cdc, persisted)`` — the caller must
-    ``persisted.unpersist()`` after both consumers have executed.
+    Returns ``(merged, cdc, flat)``. ``flat`` is NOT persisted: the
+    caller persists it before either consumer runs and releases it
+    after both have (a frame persisted here would outlive a caller's
+    scope that reuses an existing cache). ``merged`` and ``cdc`` are
+    lazy derivations, so they read that cache.
 
     Caveat (shared with Delta's own source materialization): Spark may
     recompute a persisted partition lost to executor failure, re-running
     nondeterministic expressions for those rows. ``MEMORY_AND_DISK``
     bounds that to node loss; a stronger guarantee would require a
     checkpoint write, which costs a full extra materialization."""
-    from pyspark.storagelevel import StorageLevel
-
     plan = prepare_clause_plan(
         target, source, keys, matched, not_matched, not_matched_by_source,
         evolve_schema,
@@ -518,34 +611,13 @@ def merge_clauses_with_cdc(
         *[pick(c) for c in cols],
         F.struct(*[tval(c) for c in cols]).alias("__pre"),
         plan["keep"].alias("__keep"),
-        plan["deleted"].alias("__cdc_del"),
-        plan["updated"].alias("__cdc_upd"),
-        plan["inserted"].alias("__cdc_ins"),
+        plan["deleted"].alias("__del"),
+        plan["updated"].alias("__upd"),
+        plan["inserted"].alias("__ins"),
     )
     if post_transform is not None:
         flat = post_transform(flat)
-    flat = flat.persist(StorageLevel.MEMORY_AND_DISK)
-    merged = flat.filter("__keep").select(*cols)
-    post = F.struct(*[F.col(c) for c in cols])
-    deletes = (
-        flat.filter("__cdc_del")
-        .select("__pre.*")
-        .withColumn("_change_type", F.lit("delete"))
+    cdc = change_feed(
+        flat, cols, F.col("__del"), F.col("__upd"), F.col("__ins")
     )
-    ch = flat.filter("__cdc_upd").filter(~F.col("__pre").eqNullSafe(post))
-    parts = [
-        deletes,
-        ch.select("__pre.*").withColumn(
-            "_change_type", F.lit("update_preimage")
-        ),
-        ch.select(*cols).withColumn(
-            "_change_type", F.lit("update_postimage")
-        ),
-        flat.filter("__cdc_ins")
-        .select(*cols)
-        .withColumn("_change_type", F.lit("insert")),
-    ]
-    cdc = parts[0]
-    for p in parts[1:]:
-        cdc = cdc.unionByName(p)
-    return merged, cdc, flat
+    return flat.filter("__keep").select(*cols), cdc, flat

@@ -59,6 +59,14 @@ from .logfold import (
     schema_and_mapping_at,
     schema_json_at,
 )
+from .merge import (
+    change_feed,
+    changed,
+    merge_clauses,
+    merge_clauses_with_cdc,
+    prepare_clause_plan,
+    simple_form_clauses,
+)
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
@@ -1905,12 +1913,11 @@ class TxLogTable:
         mode: str = "cow",
         cdc: bool = False,
     ) -> int:
-        """``DELETE FROM t WHERE condition`` as an atomic copy-on-write
-        commit: only files that CONTAIN matching rows are rewritten
-        (without those rows); every other file is carried over untouched
-        in the log — at 100 TB a delete hitting 0.1% of rows rewrites
-        0.1%-ish of files, not the table. Rows where the condition is
-        NULL are kept (SQL DELETE semantics: only TRUE deletes).
+        """``DELETE FROM t WHERE condition`` as one atomic commit — an
+        UPDATE with no SET clause: the storage mode's one DML body
+        (:meth:`_dml_cow` / :meth:`_dml_dv`, shared with
+        :meth:`update_where`) runs it. Rows where the condition is NULL
+        are kept (SQL DELETE semantics: only TRUE deletes).
 
         ``condition`` is a Column or SQL string. ``prune`` is an optional
         ``(column, lo, hi)`` hint bounding BOTH the touched-file discovery
@@ -1922,6 +1929,12 @@ class TxLogTable:
         CommitConflict the delete recomputes against the winner's
         snapshot and retries (deterministic function of snapshot +
         condition).
+
+        ``mode='cow'`` (default) is copy-on-write: only files that
+        CONTAIN matching rows are rewritten (without those rows); every
+        other file is carried over untouched in the log — at 100 TB a
+        delete hitting 0.1% of rows rewrites 0.1%-ish of files, not the
+        table.
 
         ``mode='dv'`` is MERGE-ON-READ (Delta's deletion vectors): no
         data file is rewritten — the matching rows' positions are
@@ -1937,82 +1950,11 @@ class TxLogTable:
         consumers then stream O(deleted rows) for this commit instead of
         the touched files' full delete+insert rewrite noise. Refused
         with mode='dv' — a DV commit's feed is already row-exact."""
+        _check_dml_mode(mode, cdc, "DML")
         cond = F.expr(condition) if isinstance(condition, str) else condition
         if mode == "dv":
-            if cdc:
-                raise ValueError(
-                    "cdc=True is redundant with mode='dv': deletion-"
-                    "vector commits already feed row-exact deltas — "
-                    "read_changes() derives the changed rows from the "
-                    "DV delta directly; drop cdc=True"
-                )
-            return self._dml_dv(cond, None, prune, max_retries, op="delete")
-        if mode != "cow":
-            raise ValueError(f"unknown DML mode {mode!r} (cow|dv)")
-        rt_on = self.row_tracking_enabled()
-        for _attempt in range(max_retries + 1):
-            base_version, base_files, dvs = self._replay_full()
-            cands = (
-                self._prune_files(base_files, *prune) if prune else base_files
-            )
-            touched = self._touched_files(cands, cond, dvs=dvs)
-            schema_json = self._schema_at()
-            adds: list[str] = []
-            cdc_rel: str | None = None
-            persisted = None
-            if touched:
-                # row tracking: the kept rows of the rewritten files
-                # carry their stable ids BY VALUE into the new files
-                # (_rt_cow_read materializes them) — the id survives the
-                # copy-on-write rewrite exactly as it does an OPTIMIZE
-                base_df = (
-                    self._rt_cow_read(touched, schema_json, dvs)
-                    if rt_on
-                    else self._read_files(touched, schema_json, dvs=dvs)
-                )
-                hit = F.coalesce(cond, F.lit(False))
-                if cdc:
-                    # SINGLE-PASS (round 11): evaluate the condition ONCE
-                    # into a persisted flag so the kept rows and the
-                    # sidecar partition the file's rows EXACTLY — a
-                    # nondeterministic condition evaluated twice could
-                    # both keep and record-as-deleted the same row
-                    persisted = base_df.withColumn("__hit", hit).persist(
-                        StorageLevel.MEMORY_AND_DISK
-                    )
-                    keep = persisted.filter(~F.col("__hit")).drop("__hit")
-                else:
-                    keep = base_df.filter(~hit)
-                # kept rows are unchanged — already satisfy every CHECK
-                try:
-                    adds = self._write_data(keep, _validate=False)
-                    if cdc:
-                        # the change feed is LOGICAL rows — the
-                        # physical-only row-id column never leaks into it
-                        cdc_rel = self._write_cdc(
-                            persisted.filter("__hit")
-                            .drop("__hit", _ROW_ID_PHYS)
-                            .withColumn("_change_type", F.lit("delete"))
-                        )
-                except Exception:
-                    # pre-commit failure: don't leak the cached frame
-                    if persisted is not None:
-                        persisted.unpersist()
-                    raise
-            try:
-                return self._commit_dml(
-                    adds=adds, removes=touched, base_version=base_version,
-                    op="delete", schema=schema_json, cdc=cdc_rel,
-                )
-            except CommitConflict:
-                for f in adds:
-                    os.remove(os.path.join(self.path, f))
-                if cdc_rel is not None:
-                    os.remove(os.path.join(self.path, cdc_rel))
-            finally:
-                if persisted is not None:
-                    persisted.unpersist()
-        raise CommitConflict(f"delete gave up after {max_retries} retries")
+            return self._dml_dv(cond, None, {}, prune, max_retries, "delete")
+        return self._dml_cow(cond, None, {}, prune, max_retries, "delete", cdc)
 
     def update_where(
         self,
@@ -2023,31 +1965,33 @@ class TxLogTable:
         mode: str = "cow",
         cdc: bool = False,
     ) -> int:
-        """``UPDATE t SET ... WHERE condition`` as an atomic copy-on-write
-        commit — same touched-file discovery, rewrite, and retry contract
+        """``UPDATE t SET ... WHERE condition`` as one atomic commit — the
+        same storage-mode bodies, discovery, rewrite and retry contract
         as :meth:`delete_where`. ``assignments`` maps column name ->
         Column/SQL-string; right-hand sides see the PRE-update row (SQL
         UPDATE semantics — all assignments evaluate against old values,
-        so ``{"a": "b", "b": "a"}`` swaps). Assigned values are cast to
-        the column's existing type, so the table schema never drifts.
-        Updating a partition column is allowed: the rewrite's
-        partitionBy write moves rows to their new directories and the
-        commit retires the old files — exactly how a copy-on-write
-        lakehouse handles partition-key updates.
+        so ``{"a": "b", "b": "a"}`` swaps). A row takes all of its
+        assignments or none: the condition is evaluated once per row.
+        Assigned values are cast to the column's existing type, so the
+        table schema never drifts. Updating a partition column is
+        allowed: the rewrite's partitionBy write moves rows to their new
+        directories and the commit retires the old files — exactly how a
+        copy-on-write lakehouse handles partition-key updates.
 
-        ``mode='dv'`` is MERGE-ON-READ: matched rows' positions go into a
-        deletion-vector sidecar and ONLY the updated rows are written as
-        new files — bytes written scale with matched rows, not touched
-        files. The new rows run the normal CHECK gate.
+        ``mode='dv'`` is MERGE-ON-READ: the positions of matched rows
+        whose assignments CHANGE them go into a deletion-vector sidecar
+        and ONLY those rows are written as new files — bytes written
+        scale with changed rows, not touched files; a no-op assignment
+        touches nothing. The new rows run the normal CHECK gate.
 
-        ``cdc=True`` writes the exact pre/post images into a change-data
-        sidecar — SINGLE-PASS since round 11: the match flag and the
+        ``cdc=True`` writes the exact pre/post images of the changed rows
+        into a change-data sidecar. The match flag and the
         post-assignment values are evaluated once into a persisted frame
         that feeds both the rewrite and the sidecar, so nondeterministic
         conditions/assignments (``rand()``, a view over shifting data)
         and generated-column recomputes can never desynchronize the feed
-        from the committed rows. Same shape as
-        ``merge_into_txlog(cdc=True)``."""
+        from the committed rows. Same feed builder as
+        ``merge_into_txlog(cdc=True)`` (:func:`merge.change_feed`)."""
         cond = F.expr(condition) if isinstance(condition, str) else condition
         from pyspark.sql.types import StructType
 
@@ -2076,19 +2020,46 @@ class TxLogTable:
         # recomputes the generated columns that derive from it (unless
         # the statement assigns them explicitly, in which case the
         # _write_data chokepoint validates the supplied values)
-        recompute = self._gen_recompute(assignments)
-        hit = F.coalesce(cond, F.lit(False))
+        recompute = {
+            g: F.expr(e).cast(fields[g])
+            for g, e in self._gen_recompute(assignments).items()
+        }
+        _check_dml_mode(mode, cdc, "DML")
         if mode == "dv":
-            if cdc:
-                raise ValueError(
-                    "cdc=True is redundant with mode='dv': deletion-"
-                    "vector commits already feed row-exact deltas — "
-                    "read_changes() derives the changed rows from the "
-                    "DV delta directly; drop cdc=True"
-                )
-            return self._dml_dv(cond, sets, prune, max_retries, op="update")
-        if mode != "cow":
-            raise ValueError(f"unknown DML mode {mode!r} (cow|dv)")
+            return self._dml_dv(
+                cond, sets, recompute, prune, max_retries, "update"
+            )
+        return self._dml_cow(
+            cond, sets, recompute, prune, max_retries, "update", cdc
+        )
+
+    def _dml_cow(
+        self,
+        cond,
+        sets: dict | None,
+        recompute: dict,
+        prune: tuple[str, object, object] | None,
+        max_retries: int,
+        op: str,
+        cdc: bool,
+    ) -> int:
+        """The copy-on-write body of :meth:`delete_where` (``sets=None``)
+        and :meth:`update_where`. Per attempt: ONE touched-file discovery
+        scan over the (pruned) candidates (:meth:`_touched_files`), then
+        one rewrite of only those files — a DELETE writes the rows it
+        does not match, an UPDATE writes every row with its assignments
+        applied where it matched (:func:`_dml_flat`: the condition is
+        evaluated once, and every assignment reads that one flag). A
+        DELETE without ``cdc`` needs no flag: its one filter is the one
+        evaluation. With ``cdc`` the flagged frame is held for the
+        attempt, so the rewrite and the change sidecar
+        (:func:`merge.change_feed`) read the same rows.
+
+        Row tracking: every rewritten row keeps its stable id BY VALUE —
+        :meth:`_rt_cow_read` attaches the concrete id as an ordinary
+        column, no assignment ever touches it, and the rewrite writes it
+        back (the change feed carries only the logical columns)."""
+        hit = F.coalesce(cond, F.lit(False))
         rt_on = self.row_tracking_enabled()
         for _attempt in range(max_retries + 1):
             base_version, base_files, dvs = self._replay_full()
@@ -2099,124 +2070,61 @@ class TxLogTable:
             schema_json = self._schema_at()
             adds: list[str] = []
             cdc_rel: str | None = None
-            persisted = None
             if touched:
-                # row tracking: every rewritten row (updated or carried)
-                # keeps its stable id BY VALUE — _rt_cow_read attaches
-                # the concrete id as an ordinary column, no assignment
-                # ever touches it, and the rewrite writes it back
                 df = (
                     self._rt_cow_read(touched, schema_json, dvs)
                     if rt_on
                     else self._read_files(touched, schema_json, dvs=dvs)
                 )
-                logical_cols = [c for c in df.columns if c != _ROW_ID_PHYS]
-                need_flags = recompute or cdc
-                if need_flags:
-                    # the condition is evaluated at EXACTLY ONE site (the
-                    # withColumn) and only the resulting column is
-                    # referenced afterwards: the same nondeterministic
-                    # Column object used at two sites of one projection
-                    # gets independently-seeded evaluations (verified —
-                    # rand() at a when() site and a flag site disagree
-                    # per row), which would desync the flag from the
-                    # assignments
-                    flagged = df.withColumn("__hit", hit)
-                    flat = flagged.select(
-                        *[
-                            F.when(F.col("__hit"), sets[c])
-                            .otherwise(F.col(c))
-                            .alias(c)
-                            if c in sets
-                            else F.col(c)
-                            for c in df.columns
-                        ],
-                        F.col("__hit"),
-                        *(
-                            [
-                                F.struct(
-                                    *[F.col(c) for c in logical_cols]
-                                ).alias("__pre")
-                            ]
-                            if cdc
-                            else []
-                        ),
-                    )
+                if sets is None and not cdc:
+                    # kept rows are unchanged — already satisfy every CHECK
+                    adds = self._write_data(df.filter(~hit), _validate=False)
                 else:
-                    flat = df.select(
-                        *[
-                            F.when(hit, sets[c]).otherwise(F.col(c)).alias(c)
-                            if c in sets
-                            else F.col(c)
-                            for c in df.columns
-                        ]
-                    )
-                if recompute:
-                    # second phase over the POST-assignment frame, so the
-                    # generation expressions see the updated sources; the
-                    # match flag was captured against PRE values (the
-                    # condition may reference an updated column)
-                    for g, e in recompute.items():
-                        flat = flat.withColumn(
-                            g,
-                            F.when(
-                                F.col("__hit"), F.expr(e).cast(fields[g])
-                            ).otherwise(F.col(g)),
+                    flat = _dml_flat(df, hit, sets or {}, recompute)
+                    hits, delete = F.col("__hit"), sets is None
+                    with _materialized(flat if cdc else None):
+                        adds = self._write_data(
+                            (flat.filter(~hits) if delete else flat).select(
+                                *df.columns
+                            ),
+                            _validate=not delete,
                         )
-                if cdc:
-                    # SINGLE-PASS (round 11): the persisted frame feeds
-                    # BOTH the rewrite and the sidecar — nondeterministic
-                    # conditions/assignments and generated-column
-                    # recomputes are materialized once, so the feed can
-                    # never diverge from the committed rows (the
-                    # recomputed post-images land in the sidecar)
-                    persisted = flat.persist(StorageLevel.MEMORY_AND_DISK)
-                    flat = persisted
-                try:
-                    adds = self._write_data(flat.select(*df.columns))
-                except Exception:
-                    if persisted is not None:
-                        persisted.unpersist()
-                    raise
-                if cdc:
-                    # rows whose assignments are NO-OPS are not changes:
-                    # the netted file-delta feed cancels their identical
-                    # delete+insert pair, so the sidecar must omit them
-                    # too — both feed forms stay row-identical
-                    changed = flat.filter("__hit").filter(
-                        ~F.col("__pre").eqNullSafe(
-                            F.struct(*[F.col(c) for c in logical_cols])
-                        )
-                    )
-                    # sidecar carries Delta CDF's update_pre/postimage
-                    # tags (external _change_data consumers distinguish
-                    # updates); the internal feed maps them back to
-                    # delete/insert in _read_cdc
-                    pre = changed.select("__pre.*").withColumn(
-                        "_change_type", F.lit("update_preimage")
-                    )
-                    post = changed.select(*logical_cols).withColumn(
-                        "_change_type", F.lit("update_postimage")
-                    )
-                    try:
-                        cdc_rel = self._write_cdc(pre.unionByName(post))
-                    except Exception:
-                        persisted.unpersist()
-                        raise
-            try:
-                return self._commit_dml(
-                    adds=adds, removes=touched, base_version=base_version,
-                    op="update", schema=schema_json, cdc=cdc_rel,
-                )
-            except CommitConflict:
-                for f in adds:
-                    os.remove(os.path.join(self.path, f))
-                if cdc_rel is not None:
-                    os.remove(os.path.join(self.path, cdc_rel))
-            finally:
-                if persisted is not None:
-                    persisted.unpersist()
-        raise CommitConflict(f"update gave up after {max_retries} retries")
+                        if cdc:
+                            cols = [c for c in df.columns if c != _ROW_ID_PHYS]
+                            cdc_rel = self._write_cdc(
+                                change_feed(
+                                    flat,
+                                    cols,
+                                    deleted=hits if delete else None,
+                                    updated=None if delete else hits,
+                                )
+                            )
+            v = self._commit_attempt(
+                adds=adds, removes=touched, base_version=base_version,
+                op=op, schema=schema_json, cdc=cdc_rel,
+            )
+            if v is not None:
+                return v
+        raise CommitConflict(f"{op} gave up after {max_retries} retries")
+
+    def _write_one(self, df: DataFrame, subdir: str, prefix: str) -> str:
+        """Write ``df`` as ONE parquet file
+        ``<subdir>/<prefix>-<uuid>.parquet`` under the table dir and
+        return its table-relative path — the shared writer of the
+        deletion-vector and change-data sidecars (staged, renamed into
+        place, stage removed)."""
+        import shutil
+
+        os.makedirs(os.path.join(self.path, subdir), exist_ok=True)
+        tmp = os.path.join(self.path, f"_staging_{uuid.uuid4().hex}")
+        df.coalesce(1).write.parquet(tmp)
+        rel = f"{subdir}/{prefix}-{uuid.uuid4().hex}.parquet"
+        for f in sorted(os.listdir(tmp)):
+            if f.endswith(".parquet") and not f.startswith(("_", ".")):
+                os.rename(os.path.join(tmp, f), os.path.join(self.path, rel))
+                break
+        shutil.rmtree(tmp)
+        return rel
 
     def _write_sidecar(self, df: DataFrame) -> str:
         """Write one deletion-vector sidecar (columns ``file`` = data-file
@@ -2227,20 +2135,13 @@ class TxLogTable:
         return its table-relative path. One file: a DV is O(deleted rows)
         — by the time it is big enough for one file to matter, COW/OPTIMIZE
         is the right tool (the documented compaction story)."""
-        import shutil
-
-        os.makedirs(os.path.join(self.path, "_dv"), exist_ok=True)
-        tmp = os.path.join(self.path, f"_staging_{uuid.uuid4().hex}")
-        df.select(
-            F.col("file").cast("string"), F.col("row_index").cast("long")
-        ).coalesce(1).write.parquet(tmp)
-        rel = f"_dv/dv-{uuid.uuid4().hex}.parquet"
-        for f in sorted(os.listdir(tmp)):
-            if f.endswith(".parquet") and not f.startswith(("_", ".")):
-                os.rename(os.path.join(tmp, f), os.path.join(self.path, rel))
-                break
-        shutil.rmtree(tmp)
-        return rel
+        return self._write_one(
+            df.select(
+                F.col("file").cast("string"), F.col("row_index").cast("long")
+            ),
+            "_dv",
+            "dv",
+        )
 
     def _write_cdc(self, df: DataFrame) -> str:
         """Write one change-data sidecar (this commit's EXACT row-level
@@ -2254,8 +2155,6 @@ class TxLogTable:
         file per commit: cdc bytes are O(changed rows), and a change set
         big enough for one file to matter means the commit itself
         rewrote that much data — same cost class, 2x the write."""
-        import shutil
-
         mapping = self._mapping_at()
         if mapping:
             df = df.select(
@@ -2266,16 +2165,7 @@ class TxLogTable:
                 ],
                 "_change_type",
             )
-        os.makedirs(os.path.join(self.path, "_cdc"), exist_ok=True)
-        tmp = os.path.join(self.path, f"_staging_{uuid.uuid4().hex}")
-        df.coalesce(1).write.parquet(tmp)
-        rel = f"_cdc/cdc-{uuid.uuid4().hex}.parquet"
-        for f in sorted(os.listdir(tmp)):
-            if f.endswith(".parquet") and not f.startswith(("_", ".")):
-                os.rename(os.path.join(tmp, f), os.path.join(self.path, rel))
-                break
-        shutil.rmtree(tmp)
-        return rel
+        return self._write_one(df, "_cdc", "cdc")
 
     def _read_cdc(
         self, rel: str, schema_json: str | None, mapping: dict | None, v: int
@@ -2331,29 +2221,31 @@ class TxLogTable:
         self,
         cond,
         sets: dict | None,
+        recompute: dict,
         prune: tuple[str, object, object] | None,
         max_retries: int,
         op: str,
     ) -> int:
-        """Merge-on-read DELETE (``sets=None``) / UPDATE: record matched
-        row POSITIONS in a deletion-vector sidecar instead of rewriting
-        the touched files — the public Delta deletion-vector design.
-        Per attempt: (1) one discovery scan over the (pruned, DV-applied)
-        candidates collects per-file matched counts — bounded at
-        O(touched files), the same class as COW's touched-file list;
-        (2) UPDATE writes ONLY the matched rows, post-assignment, as new
-        files (normal CHECK gate); (3) one sidecar gets the matched
-        positions plus the touched files' PRIOR vectors (a file's DV is
-        always the full union, so a reader needs exactly one sidecar per
-        file); (4) files whose vector would cover every row are retired
-        outright (remove, no DV). Bytes written scale with matched rows
-        — the sliver-DML cost model COW cannot give (SCALING.md)."""
-        import pyarrow.parquet as pq
-
+        """The merge-on-read body of :meth:`delete_where` (``sets=None``)
+        and :meth:`update_where`: record row POSITIONS in a
+        deletion-vector sidecar instead of rewriting the touched files —
+        the public Delta deletion-vector design. Per attempt: ONE
+        positional scan of the (pruned, DV-applied) candidates, the
+        condition evaluated once per row (:func:`_dml_flat`). Rows leave
+        the table when a DELETE matches them, or an UPDATE matches AND
+        changes them (:func:`merge.changed` — a no-op assignment touches
+        nothing, the DV MERGE's rule). Those rows are held for the
+        attempt: an UPDATE writes their post-images as new files (normal
+        CHECK gate), then :meth:`_vector_commit` — the one vector step
+        the DV MERGE shares — records their positions. A statement that
+        moves no row commits a faithful no-op (no file, no sidecar).
+        Bytes written scale with changed rows — the sliver-DML cost model
+        COW cannot give (SCALING.md)."""
         from pyspark.sql.types import LongType, StructField
 
         hit = F.coalesce(cond, F.lit(False))
         rt_on = sets is not None and self.row_tracking_enabled()
+        rt = [_ROW_ID_PHYS] if rt_on else []
         for _attempt in range(max_retries + 1):
             base_version, base_files, dvs = self._replay_full()
             cands = (
@@ -2364,155 +2256,173 @@ class TxLogTable:
                 cands,
                 schema_json,
                 dvs=dvs,
-                # row tracking: the UPDATE's post-image rows must carry
-                # their OLD ids — read any materialized values alongside
                 extra_fields=(
                     [StructField(_ROW_ID_PHYS, LongType(), True)]
                     if rt_on
                     else None
                 ),
             )
-            # PERSISTED (round 11): the matched frame feeds THREE actions
-            # — the per-file counts, the update post-images, and the
-            # sidecar positions. Re-evaluating a nondeterministic
-            # condition across them could record a DV cardinality that
-            # disagrees with the masked positions and wrongly retire a
-            # file with live rows; one materialization (O(matched rows),
-            # the DV cost model's own budget) single-sources all three.
-            matched = scan.filter(hit).persist(StorageLevel.MEMORY_AND_DISK)
-            # per-file match counts keyed by the scan's file-path URI,
-            # decoded to relative paths driver-side (_rel_path handles
-            # the URI percent-encoding exactly once) — O(touched files)
-            uri_rows = (
-                matched.select(F.col("__file").alias("u"))
-                .groupBy("u")
-                .agg(F.count("*").alias("n"))
-                .collect()
-            )
-            rel_by_uri = {r["u"]: self._rel_path(r["u"]) for r in uri_rows}
-            counts = {rel_by_uri[r["u"]]: r["n"] for r in uri_rows}
-            if not counts:
-                matched.unpersist()
-                try:
-                    # faithful history: a no-op DML still commits (same
-                    # contract as the COW path — and it rebases like any
-                    # other DML commit, review finding round 10)
-                    return self._commit_dml(
-                        adds=[], removes=[], base_version=base_version,
-                        op=op, schema=schema_json,
-                    )
-                except CommitConflict:
-                    continue
-            touched = sorted(counts)
-            adds: list[str] = []
-            if sets is not None:
-                data_cols = [
-                    c
-                    for c in matched.columns
-                    if c not in ("__file", "__ridx", _ROW_ID_PHYS)
-                ]
-                src = matched
-                rt_sel: list = []
-                if rt_on:
-                    # stable ids ride into the post-image files: old id =
-                    # materialized value if present, else base + row
-                    # index — the (uri -> base) map is driver-built from
-                    # the counts collect above, O(touched files)
-                    rt_bases, _rhw = self.row_tracking_meta()
-                    miss = [
-                        r for r in rel_by_uri.values() if r not in rt_bases
-                    ]
-                    if miss:
-                        raise ValueError(
-                            f"row tracking state missing for {miss[:3]}"
-                        )
-                    bmap = F.broadcast(
-                        local_df(self.spark, 
-                            [
-                                (u, int(rt_bases[r]))
-                                for u, r in rel_by_uri.items()
-                            ],
-                            "__file string, __rtbase long",
-                        )
-                    )
-                    src = matched.join(bmap, "__file", "left")
-                    rt_sel = [
-                        F.coalesce(
-                            F.col(_ROW_ID_PHYS),
-                            F.col("__rtbase") + F.col("__ridx"),
-                        ).alias(_ROW_ID_PHYS)
-                    ]
-                updated = src.select(
-                    *[
-                        sets[c].alias(c) if c in sets else F.col(c)
-                        for c in data_cols
-                    ],
-                    *rt_sel,
+            if rt_on:
+                # row tracking: the UPDATE's post-images carry their OLD
+                # ids (materialized value, else the file's base + index)
+                scan = self._rt_attach(
+                    scan, cands, self.row_tracking_meta()[0], _ROW_ID_PHYS
                 )
-                # every row here matched, so generated-column recompute
-                # is a plain second projection over the post frame
-                for g, e in self._gen_recompute(set(sets)).items():
-                    updated = updated.withColumn(
-                        g, F.expr(e).cast(updated.schema[g].dataType)
-                    )
-                try:
-                    adds = self._write_data(updated)
-                except Exception:
-                    matched.unpersist()
-                    raise
-            # sidecar rows key by RELATIVE path: a tiny broadcast-joined
-            # (URI -> relative path) mapping built from the counts
-            # collect above (no extra job, O(touched files) rows)
-            uri_map = local_df(self.spark, 
-                list(rel_by_uri.items()), "__file string, file string"
-            )
-            new_rows = (
-                matched.select("__file", F.col("__ridx").alias("row_index"))
-                .join(F.broadcast(uri_map), "__file")
-                .select("file", "row_index")
-            )
-            old_df = self._dv_frame(dvs, touched)
-            dv_union = (
-                new_rows if old_df is None else new_rows.unionByName(old_df)
-            )
-            sidecar: str | None = self._write_sidecar(dv_union)
-            removes, dv_updates = [], {}
-            for rel in touched:
-                # matched rows are disjoint from the prior vector (the
-                # discovery scan was DV-applied), so the new cardinality
-                # is exact without a recount
-                card = counts[rel] + int(
-                    (dvs.get(rel) or {}).get("cardinality") or 0
+            cols = [
+                c for c in scan.columns if c not in ("__file", "__ridx", *rt)
+            ]
+            flat = _dml_flat(scan, hit, sets or {}, recompute)
+            leaving = (
+                F.col("__hit")
+                if sets is None
+                else F.col("__hit")
+                & changed(
+                    F.col("__pre"), F.struct(*cols), scan.select(*cols).schema
                 )
-                nrows = pq.ParquetFile(
-                    os.path.join(self.path, rel)
-                ).metadata.num_rows
-                if card >= nrows:
-                    removes.append(rel)
-                else:
-                    dv_updates[rel] = {
-                        "sidecar": sidecar,
-                        "cardinality": card,
-                        "pathkey": "rel",
-                    }
-            if not dv_updates:
-                # every touched file fully covered — the sidecar is
-                # referenced by nothing
-                os.remove(os.path.join(self.path, sidecar))
-                sidecar = None
-            try:
-                return self._commit_dml(
-                    adds=adds, removes=removes, base_version=base_version,
-                    op=op, schema=schema_json, dvs=dv_updates or None,
+            )
+            kept = ["__file", "__ridx"] + ([] if sets is None else cols + rt)
+            # HELD: the new files, the per-file counts and the sidecar
+            # positions all read one evaluation, so a nondeterministic
+            # condition cannot record a cardinality that disagrees with
+            # the masked positions (and wrongly retire a live file)
+            with _materialized(flat.filter(leaving).select(*kept)) as moved:
+                adds = (
+                    []
+                    if sets is None
+                    else self._write_data(moved.select(*cols, *rt))
                 )
-            except CommitConflict:
-                if sidecar is not None:
-                    os.remove(os.path.join(self.path, sidecar))
-                for f in adds:
-                    os.remove(os.path.join(self.path, f))
-            finally:
-                matched.unpersist()
+                removes, dv_updates = self._vector_commit(
+                    moved.select("__file", "__ridx"), dvs
+                )
+            v = self._commit_attempt(
+                adds=adds, removes=removes, base_version=base_version,
+                op=op, schema=schema_json, dvs=dv_updates or None,
+            )
+            if v is not None:
+                return v
         raise CommitConflict(f"{op} (dv) gave up after {max_retries} retries")
+
+    def _vector_commit(
+        self,
+        positions: DataFrame,
+        dvs: dict[str, dict],
+        files: list[str] | None = None,
+    ) -> tuple[list[str], dict[str, dict]]:
+        """The deletion-vector half of one DV commit, shared by
+        :meth:`_dml_dv` and the DV MERGE: ``positions`` (the scan's
+        ``__file`` URI and ``__ridx``, distinct) leave the table.
+        Returns ``(removes, dv_updates)`` for :meth:`_commit_dml`.
+
+        1. Resolve each position's file to its RELATIVE path. Fast path
+           (no Spark job): the caller passes the driver-known touched
+           ``files`` and their basenames are unique and URI-safe — the
+           scan's percent-encoded URI then ends in the raw basename
+           (Spark-written layouts; a raw basename holding a space or '%'
+           would match no position and silently keep its rows live).
+           Otherwise one groupBy/collect of
+           per-file counts, O(touched files) rows, decoded driver-side
+           (:meth:`_rel_path`).
+        2. Write ONE sidecar: the new positions plus the touched files'
+           PRIOR vectors (a file's DV is always the full union, so a
+           reader needs exactly one sidecar per file).
+        3. Per file, the post-commit cardinality (new positions are
+           disjoint from the prior vector: the scan was DV-applied) —
+           the collected counts, or on the fast path one driver-side
+           pyarrow read of the sidecar just written; a file holding only
+           its priors keeps its old descriptor.
+        4. A file whose vector covers every row is retired outright (no
+           all-rows-deleted DV); a sidecar nothing references is
+           removed. No position leaving: no sidecar at all."""
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        rel_of: dict[str, str] | None = None
+        if files is not None:
+            rel_of = {}
+            for f in files:
+                b = f.rsplit("/", 1)[-1]
+                if b in rel_of or not _uri_safe(b):
+                    rel_of = None  # foreign layout: collect the counts
+                    break
+                rel_of[b] = f
+        counts: dict[str, int] | None = None
+        if rel_of is not None:
+            key = F.element_at(F.split(F.col("__file"), "/"), -1)
+            prior_files = files
+        else:
+            rows = positions.groupBy("__file").count().collect()
+            rel_of = {r["__file"]: self._rel_path(r["__file"]) for r in rows}
+            counts = {rel_of[r["__file"]]: r["count"] for r in rows}
+            key, prior_files = F.col("__file"), sorted(counts)
+        if not prior_files:
+            return [], {}
+
+        def prior(rel: str) -> int:
+            return int((dvs.get(rel) or {}).get("cardinality") or 0)
+
+        rel_df = local_df(
+            self.spark, list(rel_of.items()), "__k string, file string"
+        )
+        new_pos = (
+            positions.select(
+                key.alias("__k"), F.col("__ridx").alias("row_index")
+            )
+            .join(F.broadcast(rel_df), "__k")
+            .select("file", "row_index")
+        )
+        old_pos = self._dv_frame(dvs, prior_files)
+        sidecar = self._write_sidecar(
+            new_pos if old_pos is None else new_pos.unionByName(old_pos)
+        )
+        full = os.path.join(self.path, sidecar)
+        card: dict[str, int] = {}
+        if counts is not None:
+            card = {rel: n + prior(rel) for rel, n in counts.items()}
+        elif os.path.exists(full):
+            vc = pc.value_counts(
+                pq.read_table(full, columns=["file"]).column("file")
+            )
+            card = {
+                rel: n
+                for rel, n in zip(
+                    vc.field("values").to_pylist(),
+                    vc.field("counts").to_pylist(),
+                )
+                if n > prior(rel)
+            }
+        removes: list[str] = []
+        dv_updates: dict[str, dict] = {}
+        for rel in sorted(card):
+            nrows = pq.ParquetFile(
+                os.path.join(self.path, rel)
+            ).metadata.num_rows
+            if card[rel] >= nrows:
+                removes.append(rel)
+            else:
+                dv_updates[rel] = {
+                    "sidecar": sidecar,
+                    "cardinality": card[rel],
+                    "pathkey": "rel",
+                }
+        if not dv_updates and os.path.exists(full):
+            os.remove(full)
+        return removes, dv_updates
+
+    def _commit_attempt(self, **kw) -> int | None:
+        """Commit one DML attempt through :meth:`_commit_dml` (every
+        row-level route: COW and DV DELETE/UPDATE, COW and DV MERGE).
+        A lost race removes what the attempt wrote — the files its commit
+        would have added: data files, the DV sidecar its descriptors
+        reference, the cdc file — and answers None, so the caller's loop
+        recomputes on the winner's snapshot."""
+        try:
+            return self._commit_dml(**kw)
+        except CommitConflict:
+            sidecars = {d["sidecar"] for d in (kw.get("dvs") or {}).values()}
+            for rel in [*kw["adds"], *sidecars, kw.get("cdc")]:
+                if rel is not None:
+                    os.remove(os.path.join(self.path, rel))
+            return None
 
     def _touched_by_keys(
         self,
@@ -5406,24 +5316,81 @@ def _extend_mapping(mapping: dict | None, columns: list[str]) -> dict | None:
 
 
 @contextlib.contextmanager
-def _read_once(source: DataFrame):
-    """Yield ``source`` materialized for the length of one MERGE call.
-    Touched-file discovery, the merge join and every commit retry are
-    separate Spark jobs; without this each one re-runs the source's
-    whole lineage (a Python-built or streaming batch pays its Python
-    stage per consumer), and a nondeterministic source shows each
-    consumer different rows — discovery misses a file the join then
-    treats as an insert, duplicating the key. Lazy: a txn replay that
-    returns before any job builds nothing. A source the caller already
-    cached is read from that cache and left cached."""
-    if source.storageLevel != StorageLevel.NONE:
-        yield source
+def _materialized(df: DataFrame | None):
+    """Yield ``df`` persisted (``MEMORY_AND_DISK``) for one scope, and
+    release it on every exit — the one place a txlog write holds a frame.
+
+    Two users. A MERGE holds its SOURCE for the whole call: touched-file
+    discovery, the merge join and every commit retry are separate Spark
+    jobs; without this each one re-runs the source's whole lineage (a
+    Python-built or streaming batch pays its Python stage per consumer),
+    and a nondeterministic source shows each consumer different rows —
+    discovery misses a file the join then treats as an insert,
+    duplicating the key. Every DML route holds the frame one ATTEMPT
+    reads more than once (rewrite + change sidecar; new files + vector
+    counts + sidecar), so all of them see one evaluation.
+
+    Lazy: a scope that runs no job builds nothing. A frame the caller
+    already cached is read from that cache and left cached. ``None``
+    holds nothing (a route whose attempt reads its frame once)."""
+    if df is None or df.storageLevel != StorageLevel.NONE:
+        yield df
         return
-    held = source.persist(StorageLevel.MEMORY_AND_DISK)
+    held = df.persist(StorageLevel.MEMORY_AND_DISK)
     try:
         yield held
     finally:
         held.unpersist()
+
+
+def _check_dml_mode(mode: str, cdc: bool, kind: str) -> None:
+    """The storage modes of a row-level write (``cow`` | ``dv``), and the
+    one combination refused: a DV commit's feed is already row-exact."""
+    if mode not in ("cow", "dv"):
+        raise ValueError(f"unknown {kind} mode {mode!r} (cow|dv)")
+    if mode == "dv" and cdc:
+        raise ValueError(
+            "cdc=True is redundant with mode='dv': deletion-"
+            "vector commits already feed row-exact deltas — "
+            "read_changes() derives the changed rows from the "
+            "DV delta directly; drop cdc=True"
+        )
+
+
+def _dml_flat(
+    df: DataFrame, hit: F.Column, sets: dict, recompute: dict
+) -> DataFrame:
+    """``df`` with the DML condition evaluated ONCE per row into
+    ``__hit``, the assignments ``sets`` and the generated-column
+    recomputes ``recompute`` (name -> Column) applied where it holds,
+    and the pre-image struct ``__pre`` of the logical columns (every
+    column but the positional ``__file``/``__ridx`` and the row-id
+    column) — the one post-image step of both DML bodies. The flag is
+    computed at exactly one site and only the resulting column is read
+    afterwards: the same nondeterministic Column used at two sites of
+    one projection gets independently seeded evaluations (``rand()`` at
+    a ``when()`` site and a flag site disagree per row), which would
+    apply some of a row's assignments and not others. Recomputes run
+    over the post-assignment values, so generation expressions see the
+    updated sources."""
+    cols = [
+        c for c in df.columns if c not in ("__file", "__ridx", _ROW_ID_PHYS)
+    ]
+    flat = df.withColumn("__hit", hit).select(
+        *[
+            F.when(F.col("__hit"), sets[c]).otherwise(F.col(c)).alias(c)
+            if c in sets
+            else F.col(c)
+            for c in df.columns
+        ],
+        F.col("__hit"),
+        F.struct(*cols).alias("__pre"),
+    )
+    for g, e in recompute.items():
+        flat = flat.withColumn(
+            g, F.when(F.col("__hit"), e).otherwise(F.col(g))
+        )
+    return flat
 
 
 def _merge_into_dv(
@@ -5451,25 +5418,23 @@ def _merge_into_dv(
        clause plan (:func:`merge.prepare_clause_plan` — the one plan
        every MERGE route builds, so semantics cannot drift);
     3. positions leaving the table = delete-selected rows plus CHANGED
-       update-selected rows (post-image != pre-image; no-op updates
-       touch nothing) — per-file counts collect O(touched files)
-       driver rows, the Delta MERGE metadata plane;
+       update-selected rows (:func:`merge.changed`; no-op updates touch
+       nothing — the rule :meth:`TxLogTable._dml_dv` shares);
     4. new files = update post-images + accepted inserts (CHECK-gated
        through the normal :meth:`_write_data` chokepoint);
-    5. one DV sidecar carries the new positions unioned with the
-       touched files' PRIOR vectors (full-union-per-file invariant);
-       a file whose vector would cover every row is retired outright.
+    5. :meth:`TxLogTable._vector_commit` — the one vector step the DV
+       DML shares — writes one sidecar of the new positions unioned
+       with the touched files' PRIOR vectors and retires a file whose
+       vector would cover every row; the driver-known touched files let
+       it skip its per-file counts job on a Spark-written layout;
+    6. :meth:`TxLogTable._commit_attempt` commits, or drops the
+       attempt's files on a lost race and the loop retries.
 
     Bytes written scale with CHANGED rows, not touched files — the
     1-row-per-file daily upsert writes slivers where COW rewrites every
     touched file (SCALING.md probe). The change feed needs no sidecar:
     ``read_changes`` derives row-exact deletes from the DV delta and
     inserts from the new files."""
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
-    from .merge import prepare_clause_plan
-
     from pyspark.sql.types import LongType, StructField
 
     rt_on = table.row_tracking_enabled()
@@ -5523,186 +5488,77 @@ def _merge_into_dv(
         data_cols = [
             c for c in plan["columns"] if c not in ("__file", "__ridx")
         ]
-        changed = ~F.struct(*[tval(c) for c in data_cols]).eqNullSafe(
-            F.struct(*[pick(c) for c in data_cols])
-        )
-        # ONE evaluation of the merge join feeds EVERYTHING downstream
-        # (round 14, guide §5 cache-exactly-what-is-reused + §1.4):
+        # ONE evaluation of the merge join feeds EVERYTHING downstream:
         # the flat frame materializes the post-image picks and the three
         # row-class predicates once; the doomed positions, the per-file
-        # counts, the new files, and the sidecar all read it — before
-        # this, new_rows re-executed the full-outer join a second time,
-        # and a nondeterministic clause condition could desynchronize
-        # the written files from the vectors (the round-11 persisted-
-        # doomed_pos fix covered only counts-vs-sidecar; this covers the
-        # data files too). Rows in no class are filtered out, so the
-        # persist is O(changed rows + inserts), the DV budget.
-        flat = (
-            plan["j"].select(
-                *[pick(c) for c in data_cols],
-                F.col("__file"),
-                F.col("__ridx"),
-                plan["deleted"].alias("__mrg_del"),
-                (plan["updated"] & changed).alias("__mrg_updchg"),
-                plan["inserted"].alias("__mrg_ins"),
-            )
-            .filter("__mrg_del OR __mrg_updchg OR __mrg_ins")
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        # 3: per-file counts of DISTINCT positions leaving the table.
-        # Distinct is load-bearing: duplicate source keys produce one
-        # doomed JOIN ROW per duplicate at the SAME (file, row index) —
-        # counting rows would inflate the vector cardinality and could
-        # wrongly retire a file whose unmatched rows are still live
-        # (review finding, round 10). The COW twin merely duplicates
-        # output rows; here the position set must be exact.
-        doomed_pos = flat.filter("__mrg_del OR __mrg_updchg").select(
-            "__file", "__ridx"
-        ).distinct()
-        # rel-path resolution WITHOUT a dedicated counts job (round 14,
-        # guide §1.4): touched basenames are driver-known, and a Spark-
-        # written layout has unique basenames (the _dv_keyed precedent —
-        # only the URI-safe basename is extracted JVM-side, never the
-        # encoded directory components), so the per-file counts derive
-        # from a driver-side pyarrow read of the one sidecar AFTER it is
-        # written instead of a groupBy/collect job BEFORE it. Foreign-
-        # adopted layouts keep the collect path when basenames collide
-        # or a basename is not URI-safe: the scan reports percent-encoded
-        # URIs, so a raw basename holding a space or '%' would match no
-        # doomed position and silently keep the old rows live.
-        rel_of: dict[str, str] | None = {}
-        for _f in touched_files:
-            _b = _f.rsplit("/", 1)[-1]
-            if _b in rel_of or not _uri_safe(_b):
-                rel_of = None  # foreign layout: slow path
-                break
-            rel_of[_b] = _f
-        counts: dict[str, int] | None = None  # slow path's per-file counts
-        if rel_of is not None:
-            pos_key = F.element_at(F.split(F.col("__file"), "/"), -1)
-            prior_files = touched_files
-        else:
-            uri_rows = (
-                doomed_pos.select(F.col("__file").alias("u"))
-                .groupBy("u")
-                .agg(F.count("*").alias("n"))
-                .collect()
-            )
-            rel_of = {r["u"]: table._rel_path(r["u"]) for r in uri_rows}
-            counts = {rel_of[r["u"]]: r["n"] for r in uri_rows}
-            pos_key, prior_files = F.col("__file"), sorted(counts)
-        # 4: new files — CHECK gate runs here, BEFORE any sidecar exists,
-        # so a CheckViolation leaves no orphan metadata. Update
-        # post-images carry their preserved ids; the post-image step
-        # recomputes generated columns over the new rows only (untouched
-        # rows stay in their files, DV-masked, with values the
-        # enforcement invariant already keeps consistent)
+        # counts, the new files, and the sidecar all read it, so a
+        # nondeterministic clause condition cannot desynchronize the
+        # written files from the vectors. Rows in no class are filtered
+        # out, so the hold is O(changed rows + inserts), the DV budget.
+        # No-op updates (post-image == pre-image) are in no class.
+        flat = plan["j"].select(
+            *[pick(c) for c in data_cols],
+            F.col("__file"),
+            F.col("__ridx"),
+            plan["deleted"].alias("__del"),
+            (
+                plan["updated"]
+                & changed(
+                    F.struct(*[tval(c) for c in data_cols]),
+                    F.struct(*[pick(c) for c in data_cols]),
+                    plan["j"].select(*[pick(c) for c in data_cols]).schema,
+                )
+            ).alias("__upd"),
+            plan["inserted"].alias("__ins"),
+        ).filter("__del OR __upd OR __ins")
         cur_ident = table.identity_meta()
-        new_rows = _merge_post_image(
-            flat.filter("__mrg_updchg OR __mrg_ins").select(*data_cols),
-            schema_json,
-            gen_recompute,
-            cur_ident,
-        )
         new_mapping = _extend_mapping(table._mapping_at(), data_cols)
-        try:
+        with _materialized(flat) as flat:
+            # 4: new files — CHECK gate runs here, BEFORE any sidecar
+            # exists, so a CheckViolation leaves no orphan metadata.
+            # Update post-images carry their preserved ids; the
+            # post-image step recomputes generated columns over the new
+            # rows only (untouched rows stay in their files, DV-masked,
+            # with values the enforcement invariant keeps consistent)
+            new_rows = _merge_post_image(
+                flat.filter("__upd OR __ins").select(*data_cols),
+                schema_json,
+                gen_recompute,
+                cur_ident,
+            )
             adds = table._write_data(
                 new_rows,
                 _mapping=new_mapping
                 if new_mapping is not None
                 else _MAPPING_DEFAULT,
             )
-        except Exception:
-            flat.unpersist()
-            raise
-        # 5: one sidecar = new positions (rel-keyed through ``rel_of``)
-        # + the prior vectors of the files they land in. ``card`` maps
-        # each file GAINING positions to its exact post-commit vector
-        # cardinality (new positions are disjoint from the prior vector:
-        # the positional scan was DV-applied)
-        sidecar: str | None = None
-        card: dict[str, int] = {}
-
-        def prior(rel: str) -> int:
-            return int((dvs.get(rel) or {}).get("cardinality") or 0)
-
-        if prior_files:
-            new_pos = (
-                doomed_pos.select(
-                    pos_key.alias("__k"), F.col("__ridx").alias("row_index")
-                )
-                .join(
-                    F.broadcast(
-                        local_df(
-                            spark,
-                            list(rel_of.items()),
-                            "__k string, file string",
-                        )
-                    ),
-                    "__k",
-                )
-                .select("file", "row_index")
+            # 3+5: the positions leaving the table, DISTINCT — duplicate
+            # source keys produce one doomed JOIN ROW per duplicate at
+            # the SAME (file, row index); counting rows would inflate the
+            # vector cardinality and could wrongly retire a file whose
+            # unmatched rows are still live. The touched files are
+            # driver-known, so the vector step can skip its counts job
+            removes, dv_updates = table._vector_commit(
+                flat.filter("__del OR __upd")
+                .select("__file", "__ridx")
+                .distinct(),
+                dvs,
+                touched_files,
             )
-            old_pos = table._dv_frame(dvs, prior_files)
-            sidecar = table._write_sidecar(
-                new_pos if old_pos is None else new_pos.unionByName(old_pos)
-            )
-            sc_full = os.path.join(table.path, sidecar)
-            if counts is not None:
-                card = {rel: n + prior(rel) for rel, n in counts.items()}
-            elif os.path.exists(sc_full):
-                # FAST PATH: per-file TOTALS from one driver-side read of
-                # the sidecar just written (priors of every touched file
-                # included — bounded by the touched set). A file holding
-                # only its priors keeps its old descriptor.
-                vc = pc.value_counts(
-                    pq.read_table(sc_full, columns=["file"]).column("file")
-                )
-                card = {
-                    rel: n
-                    for rel, n in zip(
-                        vc.field("values").to_pylist(),
-                        vc.field("counts").to_pylist(),
-                    )
-                    if n > prior(rel)
-                }
-        removes: list[str] = []
-        dv_updates: dict[str, dict] = {}
-        for rel in sorted(card):
-            nrows = pq.ParquetFile(
-                os.path.join(table.path, rel)
-            ).metadata.num_rows
-            if card[rel] >= nrows:
-                removes.append(rel)  # every row masked: retire the file
-            else:
-                dv_updates[rel] = {
-                    "sidecar": sidecar,
-                    "cardinality": card[rel],
-                    "pathkey": "rel",
-                }
-        if sidecar is not None and not dv_updates:
-            if os.path.exists(os.path.join(table.path, sidecar)):
-                os.remove(os.path.join(table.path, sidecar))
-            sidecar = None
         # stored schema (metadata intact) + evolution + watermark advance
         # — same rule as copy-on-write (see merge_into_txlog)
         commit_schema = _merge_commit_schema(
             table, schema_json, new_rows.schema.json(), cur_ident, adds
         )
-        try:
-            table._commit_dml(
+        if (
+            table._commit_attempt(
                 adds=adds, removes=removes, base_version=base_version,
                 op="merge", schema=commit_schema, txn=txn,
                 column_mapping=new_mapping, dvs=dv_updates or None,
             )
+            is not None
+        ):
             return table.read()
-        except CommitConflict:
-            for f in adds:
-                os.remove(os.path.join(table.path, f))
-            if sidecar is not None:
-                os.remove(os.path.join(table.path, sidecar))
-        finally:
-            flat.unpersist()
     raise CommitConflict(f"merge (dv) gave up after {max_retries} retries")
 
 
@@ -5771,16 +5627,17 @@ def merge_into_txlog(
     one-semi-join touched-by-keys scan.
 
     ``cdc=True`` records the merge's EXACT row-level changes in a
-    change-data sidecar, SINGLE-PASS since round 11
-    (:func:`merge.merge_clauses_with_cdc` — ONE persisted clause-plan
-    evaluation feeds both the committed rows and the sidecar, so
-    nondeterministic clause conditions / SET expressions (``rand()``,
-    a view over shifting data), generated-column recomputes, and
-    identity-column assignment can never desynchronize the feed from
-    the table): feed readers then stream O(changed rows) for this
-    commit instead of netting the touched files' rewrite noise. Costs
-    the materialization of the merge join's post-images (persisted
-    MEMORY_AND_DISK for the commit's duration).
+    change-data sidecar, SINGLE-PASS
+    (:func:`merge.merge_clauses_with_cdc` — ONE held clause-plan
+    evaluation feeds both the committed rows and the sidecar, built by
+    the feed builder the DML routes share, :func:`merge.change_feed`,
+    so nondeterministic clause conditions / SET expressions
+    (``rand()``, a view over shifting data), generated-column
+    recomputes, and identity-column assignment can never desynchronize
+    the feed from the table): feed readers then stream O(changed rows)
+    for this commit instead of netting the touched files' rewrite
+    noise. Costs the materialization of the merge join's post-images
+    (persisted MEMORY_AND_DISK while the attempt writes).
 
     ``mode='dv'`` is MERGE-ON-READ (Delta's deletion-vector MERGE):
     matched deletes and CHANGED matched updates record their target
@@ -5794,11 +5651,8 @@ def merge_into_txlog(
     ``rewrite='full'`` are rejected with it — a DV commit's feed is
     already row-exact (``read_changes`` derives the pre-images from the
     DV delta) and merge-on-read never rewrites touched files."""
-    from .merge import merge_clauses, merge_clauses_with_cdc, simple_form_clauses
-
     assert rewrite in ("touched", "full")
-    if mode not in ("cow", "dv"):
-        raise ValueError(f"unknown MERGE mode {mode!r} (cow|dv)")
+    _check_dml_mode(mode, cdc, "MERGE")
     if clauses is not None and (
         matched_set or insert_values
         or when_matched != "update" or when_not_matched != "insert"
@@ -5883,20 +5737,12 @@ def merge_into_txlog(
             or any(re.search(rf"\b{re.escape(c)}\b", e) for c in assigned)
         )
     }
-    if mode == "dv":
-        if cdc:
-            raise ValueError(
-                "cdc=True is redundant with mode='dv': deletion-"
-                "vector commits already feed row-exact deltas — "
-                "read_changes() derives the changed rows from the "
-                "DV delta directly; drop cdc=True"
-            )
-        if rewrite != "touched":
-            raise ValueError(
-                "rewrite= applies to copy-on-write only — mode='dv' "
-                "never rewrites touched files"
-            )
-    with _read_once(source) as source:
+    if mode == "dv" and rewrite != "touched":
+        raise ValueError(
+            "rewrite= applies to copy-on-write only — mode='dv' "
+            "never rewrites touched files"
+        )
+    with _materialized(source) as source:
         if mode == "dv":
             return _merge_into_dv(
                 spark, table, source, keys, clauses, evolve_schema,
@@ -5974,16 +5820,16 @@ def merge_into_txlog(
                     df, schema_json, gen_recompute, cur_ident
                 )
 
-            persisted = None
+            held: DataFrame | None = None
             cdc_df: DataFrame | None = None
             if cdc and not insert_only:
-                # SINGLE-PASS cdc (round 11): one persisted clause-plan
-                # evaluation feeds BOTH the committed rows and the change
-                # sidecar — nondeterministic conditions/SET expressions,
-                # generated-column recomputes, and identity assignment can
-                # no longer desynchronize the feed (they are materialized
+                # SINGLE-PASS cdc: one held clause-plan evaluation feeds
+                # BOTH the committed rows and the change sidecar —
+                # nondeterministic conditions/SET expressions,
+                # generated-column recomputes, and identity assignment
+                # cannot desynchronize the feed (they are materialized
                 # once)
-                merged, cdc_df, persisted = merge_clauses_with_cdc(
+                merged, cdc_df, held = merge_clauses_with_cdc(
                     target, source, keys, evolve_schema=evolve_schema,
                     post_transform=_post, **clauses,
                 )
@@ -5996,50 +5842,34 @@ def merge_into_txlog(
                 )
                 if cdc:
                     # insert-only: the merge output IS the change set —
-                    # persist it so the data write and the sidecar write
-                    # read the SAME materialized rows (identity assignment
-                    # is not stable across executions)
-                    persisted = merged = merged.persist(
-                        StorageLevel.MEMORY_AND_DISK
-                    )
+                    # hold it so the data write and the sidecar write
+                    # read the SAME rows (identity assignment is not
+                    # stable across executions)
+                    held = merged
                     cdc_df = merged.withColumn("_change_type", F.lit("insert"))
             new_mapping = _extend_mapping(table._mapping_at(), merged.columns)
-            try:
+            cdc_rel: str | None = None
+            with _materialized(held):
                 adds = table._write_data(
                     merged,
                     _mapping=new_mapping
                     if new_mapping is not None
                     else _MAPPING_DEFAULT,
                 )
-                cdc_rel: str | None = None
                 if cdc_df is not None:
                     # the change feed is LOGICAL rows — drop the physical-
                     # only row-id column (lenient no-op when absent)
                     cdc_rel = table._write_cdc(cdc_df.drop(_ROW_ID_PHYS))
-            except Exception:
-                # pre-commit failure (CheckViolation, IO): don't leak the
-                # cached single-pass frame
-                if persisted is not None:
-                    persisted.unpersist()
-                raise
             commit_schema = _merge_commit_schema(
                 table, schema_json, merged.schema.json(), cur_ident, adds
             )
-            try:
-                table._commit_dml(
+            if (
+                table._commit_attempt(
                     adds=adds, removes=removes, base_version=base_version,
                     op="merge", schema=commit_schema, txn=txn,
                     column_mapping=new_mapping, cdc=cdc_rel,
                 )
+                is not None
+            ):
                 return table.read()
-            except CommitConflict:
-                # loser's data files are orphans; drop them and retry on the
-                # winner's snapshot
-                for f in adds:
-                    os.remove(os.path.join(table.path, f))
-                if cdc_rel is not None:
-                    os.remove(os.path.join(table.path, cdc_rel))
-            finally:
-                if persisted is not None:
-                    persisted.unpersist()
         raise CommitConflict(f"merge gave up after {max_retries} retries")

