@@ -1099,6 +1099,34 @@ def _file_added_versions(log_dir: str) -> dict[str, int]:
     return added
 
 
+def _dv_dml_since(log_dir: str, prev_version: int) -> bool:
+    """Whether any commit above ``prev_version`` set a per-commit ``dvs``
+    delta (a DV UPDATE/DELETE) — one pass over the commits since the
+    prior export. When that range was truncated (cleanup_log), answer
+    conservatively True."""
+    try:
+        names0 = sorted(
+            f for f in os.listdir(log_dir) if f.endswith(".json")
+        )
+        if names0 and int(names0[0].split(".")[0]) > prev_version + 1:
+            # oldest retained commit == prev_version + 1 means the
+            # (prev, current] commit range is FULLY present — only a gap
+            # above prev_version + 1 is real truncation (on the exact
+            # boundary the no_removals fast path has already forced
+            # 'overwrite', since replay at prev_version needs a commit
+            # at or below it)
+            return True
+        for name in names0:
+            if int(name.split(".")[0]) <= prev_version:
+                continue
+            with open(os.path.join(log_dir, name)) as fh:
+                if json.load(fh).get("dvs"):
+                    return True
+    except OSError:
+        return True
+    return False
+
+
 def _partition_value(raw: str, ice_type: str):
     """Hive directory value -> typed Iceberg partition value."""
     from urllib.parse import unquote
@@ -1146,36 +1174,29 @@ def export_iceberg_metadata(table, format_version: int | None = None) -> int:
     columns simply carry no bound metrics (partial metric maps are
     legal). Refused loudly: colliding data-file basenames with live
     DVs (UniForm's own rule)."""
-    from .txlog import replay_stats
-
+    snap = table._snapshot()
     # the adopted-from metadata's snapshot ids belong to the FOREIGN
     # table (or, on a roundtrip, to the pre-adoption txlog whose
     # version space this table restarted from 0) — appending snapshots
     # keyed by THIS table's versions would break the spec's monotonic
     # sequence-number rule. Mirror of to_delta_log refusing after
-    # convert_from_delta. The marker lives in commit 0 AND (so
-    # cleanup_log truncation cannot bypass this gate — round-13
-    # advice) in every metadata-complete checkpoint commit; the scan
-    # below checks EVERY retained commit, the same O(retained commits)
-    # walk _file_added_versions already pays per export.
-    for name in sorted(
-        f for f in os.listdir(table.log_dir) if f.endswith(".json")
-    ):
-        with open(os.path.join(table.log_dir, name)) as fh:
-            if json.load(fh).get("converted_from_iceberg") is not None:
-                raise ValueError(
-                    "to_iceberg refused: this table was adopted via "
-                    "convert_from_iceberg — its txlog versions cannot "
-                    "extend the pre-existing snapshot/sequence space; "
-                    "CLONE to a fresh table and export the clone"
-                )
-    version, files, dvs = table._replay_full()
-    dvs = {f: d for f, d in dvs.items() if f in set(files)}
-    schema_json = table._schema_at()
+    # convert_from_delta. The marker lives in commit 0 and every
+    # metadata-complete checkpoint re-stamps it, so the oldest retained
+    # commit carries it whatever cleanup_log truncated.
+    if snap.origin.get("converted_from_iceberg") is not None:
+        raise ValueError(
+            "to_iceberg refused: this table was adopted via "
+            "convert_from_iceberg — its txlog versions cannot "
+            "extend the pre-existing snapshot/sequence space; "
+            "CLONE to a fresh table and export the clone"
+        )
+    version, files = snap.version, snap.files
+    dvs = {f: d for f, d in snap.dvs.items() if f in snap.live}
+    schema_json = snap.schema
     if schema_json is None:
         raise ValueError("iceberg export requires a recorded schema")
-    mapping = table._mapping_at()
-    pby, pschema = table.partition_meta()
+    mapping = snap.mapping
+    pby, pschema = snap.partition()
     if dvs:
         seen_b: set[str] = set()
         for f in files:
@@ -1280,7 +1301,7 @@ def export_iceberg_metadata(table, format_version: int | None = None) -> int:
         schemas = prev_schemas + [ice_schema]
     field_ids = {f["name"]: f["id"] for f in ice_schema["fields"]}
 
-    stats = replay_stats(table.log_dir)
+    stats = snap.stats
     added_at = _file_added_versions(table.log_dir)
 
     # MANIFEST REUSE (spec 'Manifest Lists': "Manifests ... may be
@@ -1332,11 +1353,9 @@ def export_iceberg_metadata(table, format_version: int | None = None) -> int:
         # txlog fold at that version — one O(commits-since-checkpoint)
         # replay, no manifest decode), every prior data manifest
         # carries unread and the refresh does ZERO O(live files) work.
-        from .txlog import replay_log
-
         live_set = set(files)
         try:
-            _pv, prev_live = replay_log(table.log_dir, prev_version)
+            prev_live = table._snapshot(prev_version).files
             no_removals = set(prev_live) <= live_set
         except Exception:  # noqa: BLE001
             # e.g. cleanup_log truncated the commits below the prior
@@ -1545,31 +1564,9 @@ def export_iceberg_metadata(table, format_version: int | None = None) -> int:
     # round 12). Exact signal: any commit above the prior export's
     # version carrying a per-commit ``dvs`` delta; if that history was
     # truncated (cleanup_log), fall back conservatively to "DVs live".
-    dv_dml_since_prev = False
-    if prev is not None and dvs:
-        try:
-            names0 = sorted(
-                f for f in os.listdir(table.log_dir) if f.endswith(".json")
-            )
-            if names0 and int(names0[0].split(".")[0]) > prev_version + 1:
-                # oldest retained commit == prev_version + 1 means the
-                # (prev, current] commit range is FULLY present — only
-                # a gap above prev_version + 1 is real truncation
-                # (round-13 advice; belt-and-braces: on the exact
-                # boundary the no_removals fast path above has already
-                # forced 'overwrite', since replay at prev_version
-                # needs a commit at or below it)
-                dv_dml_since_prev = True  # history truncated: assume
-            else:
-                for name in names0:
-                    if int(name.split(".")[0]) <= prev_version:
-                        continue
-                    with open(os.path.join(table.log_dir, name)) as fh:
-                        if json.load(fh).get("dvs"):
-                            dv_dml_since_prev = True
-                            break
-        except OSError:
-            dv_dml_since_prev = True
+    dv_dml_since_prev = prev is not None and bool(dvs) and _dv_dml_since(
+        table.log_dir, prev_version
+    )
     n_del = 0
     n_del_files = 0
     if dvs and fv >= 3:
@@ -2883,7 +2880,6 @@ def convert_from_iceberg(spark, path: str):
 
     pschema = StructType([schema[c] for c in pby]) if pby else None
     os.makedirs(t.log_dir, exist_ok=False)
-    t._pmeta = (pby, pschema)
     reserved = {
         "schema.name-mapping.default",
         "converted-from",

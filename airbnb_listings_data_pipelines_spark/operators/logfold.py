@@ -8,6 +8,24 @@ ONE implementation serves every reader: :mod:`operators.txlog`,
 :mod:`operators.deltalog` and the ``txlog`` Python DataSource
 (:mod:`sources.txlog_source`), so a fold rule cannot drift between them.
 
+THE SNAPSHOT CONTRACT (txlog). :class:`Snapshot` is a table's whole
+state at one version — files, deletion vectors, stats, schema, column
+mapping, CHECK set, properties, streaming-txn high-waters, row-tracking
+bases and watermark, clustering, and the oldest retained commit's
+partition spec and adoption markers. :func:`snapshot` builds it from one
+listing of the log: the Delta paper's design (VLDB 2020, §3), the newest
+checkpoint at or below the version plus the commits after it, every
+commit applied by the one step :meth:`Snapshot.apply`. Table state is a
+view over a snapshot; nothing else walks the log for it (the per-commit
+passes that need every commit — history, commit times, cleanup and
+vacuum scans, exports — are named in tests/test_logfold.py). The txlog
+checkpoint writer serializes the snapshot after its commit
+(:meth:`Snapshot.checkpoint_fields`), so fold and checkpoint cannot
+drift. Legacy rule: a checkpoint written before the writer stamped some
+field does not resolve that field — the build scans further back for
+that field only, down to the oldest retained commit, where unresolved
+fields take their empty defaults.
+
 SELF-CONTAINED BY CONTRACT: this module imports only the standard
 library, ``pyarrow`` and ``pyspark.sql.types`` — nothing from this
 package, and it never needs a SparkSession. Spark runs the DataSource
@@ -24,7 +42,7 @@ from __future__ import annotations
 import json
 import os
 import re
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -33,24 +51,34 @@ from pyspark.sql.types import StructType
 # ------------------------------------------------------------ txlog fold
 
 
-def _checkpoint_state(log_dir: str, c: dict) -> tuple[set, dict]:
-    """(live file set, dvs_state) carried by a CHECKPOINT commit: inline
-    ``adds``/``dvs_state`` for ordinary tables, or the parquet sidecar
-    named by ``adds_sidecar`` for huge file counts. The ONE reader every
-    fold must use — reading ``c["adds"]`` directly on a sidecar'd
-    checkpoint silently yields an empty table."""
+def _checkpoint_state(
+    log_dir: str, c: dict, with_stats: bool = False
+) -> tuple[set, dict, dict]:
+    """(live file set, dvs_state, stats_state) carried by a CHECKPOINT
+    commit: inline ``adds``/``dvs_state``/``stats_state`` for ordinary
+    tables, or the parquet sidecar named by ``adds_sidecar`` for huge
+    file counts. The ONE reader every fold must use — reading
+    ``c["adds"]`` directly on a sidecar'd checkpoint silently yields an
+    empty table. Sidecar stats are read only ``with_stats`` (a
+    pre-stats sidecar lacks the column: "no stats", footers cover it)."""
     sc = c.get("adds_sidecar")
     if not sc:
-        return set(c["adds"]), dict(c.get("dvs_state") or {})
-    tbl = pq.read_table(os.path.join(log_dir, sc))
+        return (
+            set(c["adds"]),
+            dict(c.get("dvs_state") or {}),
+            dict(c.get("stats_state") or {}) if with_stats else {},
+        )
+    full = os.path.join(log_dir, sc)
+    names = pq.read_schema(full).names
+    tbl = pq.read_table(full)
     files = tbl.column("file").to_pylist()
     dvs: dict[str, dict] = {}
-    if "dv_sidecar" in tbl.column_names:
+    if "dv_sidecar" in names:
         # dv_pathkey is absent on pre-relative-path-keying checkpoints —
         # its None default means "legacy basename-keyed sidecar"
         pks = (
             tbl.column("dv_pathkey").to_pylist()
-            if "dv_pathkey" in tbl.column_names
+            if "dv_pathkey" in names
             else [None] * len(files)
         )
         for f, s, card, pk in zip(
@@ -63,7 +91,12 @@ def _checkpoint_state(log_dir: str, c: dict) -> tuple[set, dict]:
                 dvs[f] = {"sidecar": s, "cardinality": int(card)}
                 if pk is not None:
                     dvs[f]["pathkey"] = pk
-    return set(files), dvs
+    stats: dict[str, dict] = {}
+    if with_stats and "stats_json" in names:
+        for f, sj in zip(files, tbl.column("stats_json").to_pylist()):
+            if sj is not None:
+                stats[f] = json.loads(sj)
+    return set(files), dvs, stats
 
 
 def apply_commit(
@@ -78,7 +111,7 @@ def apply_commit(
     entries replace per-file descriptors (a new DV for a file supersedes
     its old one — DML always writes the union)."""
     if c.get("checkpoint"):
-        return _checkpoint_state(log_dir, c)
+        return _checkpoint_state(log_dir, c)[:2]
     removed = set(c["removes"])
     live = (live - removed) | set(c["adds"])
     if c.get("dvs_reset") is not None:
@@ -101,18 +134,319 @@ def _load(log_dir: str, name: str) -> dict:
         return json.load(fh)
 
 
-def replay_log(log_dir: str, as_of: int | None = None) -> tuple[int, list[str]]:
-    """(version, live file list) at the latest version or at ``as_of``.
-    Replays from the newest checkpoint commit (full file list) at or
-    before the requested version, not the whole log."""
-    v, files, _dvs = replay_log_full(log_dir, as_of)
-    return v, files
+# keys a METADATA-COMPLETE checkpoint carries (the txlog writer stamps
+# them on every periodic checkpoint): every fold can bootstrap there, and
+# it is the only kind of commit ``cleanup_log`` may truncate up to
+_COMPLETE_KEYS = ("schema", "checks_reset", "partition_by", "txns_state", "dvs_state")
+
+
+def metadata_complete(c: dict) -> bool:
+    return bool(c.get("checkpoint")) and all(k in c for k in _COMPLETE_KEYS)
+
+
+def _resolves(c: dict) -> set[str]:
+    """The snapshot fields whose whole value ``c`` carries, so no older
+    commit can matter to them. A metadata-complete checkpoint omits the
+    mapping, the row-tracking state and the clustering only when they
+    are empty; an older checkpoint lacking a field does not resolve it."""
+    full = metadata_complete(c)
+    out = set()
+    for field, key in (
+        ("schema", "schema"),
+        ("mapping", "column_mapping"),
+        ("checks", "checks_reset"),
+        ("properties", "properties_reset"),
+        ("txns", "txns_state"),
+        ("rows", "row_base_state"),
+        ("clustering", "clustering"),
+    ):
+        if c.get(key) is not None or (
+            full and field in ("mapping", "rows", "clustering")
+        ):
+            out.add(field)
+    return out
+
+
+_FIELDS = frozenset(
+    ("schema", "mapping", "checks", "properties", "txns", "rows", "clustering")
+)
+
+
+@dataclass(frozen=True)
+class Snapshot:
+    """A txlog table's whole state at one version — the ONE place the
+    log becomes table state. Every accessor of ``TxLogTable`` is a view
+    over it, the checkpoint writer serializes it, and the ``txlog``
+    DataSource reads it. Treat its containers as read-only: a snapshot
+    is shared by every view taken at its version.
+
+    - ``live``/``dvs``/``stats``: live data files, their deletion-vector
+      descriptors and their recorded statistics;
+    - ``schema`` (StructType JSON, None on legacy logs) and ``mapping``
+      (logical -> physical column names, None = identity);
+    - ``checks``, ``properties``, ``txns`` (streaming-txn high-waters per
+      app id), ``row_bases``/``row_hw`` (row tracking), ``clustering``;
+    - ``oldest`` and ``origin``: the oldest RETAINED commit's version and
+      its adoption payload (``op``, ``converted_from_delta``,
+      ``converted_from_iceberg``, ``partition_by``/``partition_schema``).
+      Commit 0 records the partition spec and adoption markers, and
+      after ``cleanup_log`` the oldest survivor is a metadata-complete
+      checkpoint that re-stamps them, so the oldest commit answers both.
+    """
+
+    version: int
+    oldest: int
+    origin: dict
+    live: frozenset = frozenset()
+    dvs: dict = field(default_factory=dict)
+    stats: dict = field(default_factory=dict)
+    schema: str | None = None
+    mapping: dict | None = None
+    checks: dict = field(default_factory=dict)
+    properties: dict = field(default_factory=dict)
+    txns: dict = field(default_factory=dict)
+    row_bases: dict = field(default_factory=dict)
+    row_hw: int = -1
+    clustering: tuple = ()
+
+    @property
+    def files(self) -> list[str]:
+        return sorted(self.live)
+
+    def partition(self) -> tuple[list[str], StructType | None]:
+        return _partition_spec(self.oldest, self.origin)
+
+    def apply(self, log_dir: str, v: int, c: dict) -> "Snapshot":
+        """The snapshot after commit ``c`` at version ``v`` — the ONE
+        per-commit step of every table-state field. A checkpoint commit
+        replaces live files, vectors and stats wholesale; ``*_reset`` /
+        ``*_state`` payloads replace their field (restore, checkpoints);
+        otherwise each field takes the commit's delta. Never mutates."""
+        full = metadata_complete(c)
+        if c.get("checkpoint"):
+            live, dvs, stats = _checkpoint_state(log_dir, c, with_stats=True)
+        else:
+            live, dvs = apply_commit(log_dir, c, set(self.live), self.dvs)
+            removed = set(c["removes"])
+            stats = {f: s for f, s in self.stats.items() if f not in removed}
+        if c.get("stats_reset") is not None:
+            stats = dict(c["stats_reset"])
+        stats.update(c.get("stats") or {})
+        if c.get("column_mapping") is not None:
+            mapping = c["column_mapping"]
+        else:
+            mapping = None if full else self.mapping
+        checks = self.checks
+        if c.get("checks_reset") is not None:
+            checks = dict(c["checks_reset"])
+        elif c.get("check"):
+            checks = dict(checks)
+            ck = c["check"]
+            if c.get("op") == "add_check":
+                checks[ck["name"]] = ck["expr"]
+            elif c.get("op") == "drop_check":
+                checks.pop(ck["name"], None)
+        props = self.properties
+        if c.get("properties_reset") is not None:
+            props = dict(c["properties_reset"])
+        if c.get("properties"):
+            # a checkpoint re-applies its own delta on top (idempotent)
+            props = dict(props)
+            for k, val in c["properties"].items():
+                if val is None:
+                    props.pop(k, None)
+                else:
+                    props[k] = str(val)
+        txns = self.txns
+        marks = dict(c.get("txns_state") or {})
+        t = c.get("txn")
+        if t and t.get("appId") is not None:
+            marks[str(t["appId"])] = max(
+                int(t["version"]), int(marks.get(str(t["appId"]), -1))
+            )
+        if marks:
+            txns = dict(txns)
+            for app, tv in marks.items():
+                txns[app] = max(txns.get(app, int(tv)), int(tv))
+        if c.get("row_base_state") is not None:
+            bases = {str(k): int(x) for k, x in c["row_base_state"].items()}
+            hw = int(c.get("row_hw", -1))
+        else:
+            bases, hw = ({}, -1) if full else (self.row_bases, self.row_hw)
+            if c.get("row_base_reset") is not None:
+                bases = {str(k): int(x) for k, x in c["row_base_reset"].items()}
+            if c.get("row_base"):
+                bases = {**bases, **{str(k): int(x) for k, x in c["row_base"].items()}}
+            if c.get("row_hw") is not None:
+                hw = max(hw, int(c["row_hw"]))
+        if c.get("clustering") is not None:
+            clustering = tuple(c["clustering"])
+        else:
+            clustering = () if full else self.clustering
+        return replace(
+            self,
+            version=v,
+            live=frozenset(live),
+            dvs=dvs,
+            stats=stats,
+            schema=c["schema"] if c.get("schema") is not None else self.schema,
+            mapping=mapping,
+            checks=checks,
+            properties=props,
+            txns=txns,
+            row_bases=bases,
+            row_hw=hw,
+            clustering=clustering,
+        )
+
+    def checkpoint_fields(self) -> dict:
+        """This snapshot serialized as a METADATA-COMPLETE checkpoint's
+        state keys — the writer stamps exactly what :meth:`apply` reads
+        back, so the fold and the checkpoint cannot drift."""
+        pby, pschema = self.partition()
+        out = {
+            "adds": self.files,
+            "removes": [],
+            "dvs_state": dict(self.dvs),
+            "stats_state": dict(self.stats),
+            "checks_reset": dict(self.checks),
+            "properties_reset": dict(self.properties),
+            "partition_by": pby,
+            "partition_schema": pschema.json() if pby else None,
+            "txns_state": dict(self.txns),
+            # even the EMPTY list: an un-cluster commit truncated by
+            # cleanup must not let an older checkpoint's columns return
+            "clustering": list(self.clustering),
+        }
+        if self.schema is not None:
+            out["schema"] = self.schema
+        if self.mapping is not None:
+            out["column_mapping"] = self.mapping
+        if self.origin.get("converted_from_iceberg") is not None:
+            # the adoption marker must survive cleanup_log (to_iceberg
+            # refuses adopted tables): cleanup's horizon is always such
+            # a checkpoint, so the oldest retained commit keeps it
+            out["converted_from_iceberg"] = self.origin["converted_from_iceberg"]
+        if self.row_hw >= 0 or self.row_bases:
+            # once row-tracking state exists it persists on every
+            # checkpoint, whatever the property says: a re-enable after
+            # cleanup must continue the watermark, never restart it
+            out["row_base_state"] = {
+                f: b for f, b in self.row_bases.items() if f in self.live
+            }
+            out["row_hw"] = self.row_hw
+        return out
+
+
+def _partition_spec(oldest: int, origin: dict) -> tuple[list[str], StructType | None]:
+    """(partition column names, their StructType) recorded on the oldest
+    retained commit; ``([], None)`` for unpartitioned tables. Loud when
+    that commit is not commit 0 and carries no spec: a truncated head
+    must not silently read a partitioned table as unpartitioned."""
+    if "partition_by" not in origin and oldest != 0:
+        raise FileNotFoundError(
+            f"commit 0 is gone and the oldest retained commit {oldest} "
+            "carries no partition spec — the log head was truncated below "
+            "a metadata-complete checkpoint"
+        )
+    pby = list(origin.get("partition_by") or [])
+    if not pby:
+        return [], None
+    return pby, StructType.fromJson(json.loads(origin["partition_schema"]))
+
+
+_ORIGIN_KEYS = (
+    "op",
+    "converted_from_delta",
+    "converted_from_iceberg",
+    "partition_by",
+    "partition_schema",
+)
+
+
+def empty_snapshot(partition_by=(), partition_schema=None) -> Snapshot:
+    """The state before commit 0 — what a table's creating commit is
+    written against (its files still pass the CHECK gate and land under
+    the partition spec it is about to record)."""
+    origin = {"partition_by": list(partition_by)}
+    if partition_by:
+        origin["partition_schema"] = partition_schema.json()
+    return Snapshot(version=-1, oldest=0, origin=origin)
+
+
+def oldest_commit(
+    log_dir: str, entries: list[tuple[int, str]] | None = None
+) -> tuple[int, dict]:
+    """(version, adoption payload) of the oldest RETAINED commit — the
+    one reader of it (partition spec, CONVERT markers, the cleanup
+    horizon a stream clamps to)."""
+    entries = _commit_entries(log_dir) if entries is None else entries
+    if not entries:
+        raise FileNotFoundError(f"no commits in {log_dir}")
+    v, name = entries[0]
+    c = _load(log_dir, name)
+    return v, {k: c[k] for k in _ORIGIN_KEYS if k in c}
+
+
+def snapshot(
+    log_dir: str,
+    as_of: int | None = None,
+    base: Snapshot | None = None,
+    entries: list[tuple[int, str]] | None = None,
+) -> Snapshot:
+    """The txlog :class:`Snapshot` at ``as_of`` (default: latest), from
+    ONE listing of the log (``entries``, when the caller already has it).
+
+    With a ``base`` snapshot at or below ``as_of`` whose later commits are
+    all present, only those commits are applied. Otherwise the build
+    scans back from ``as_of`` to the newest checkpoint, loading nothing
+    older, and applies the commits after it — O(checkpoint interval)
+    loads at any log length. Where a legacy checkpoint lacks a field
+    (written before the writer stamped it), the scan continues below it
+    until every field is resolved or the oldest retained commit is
+    reached; fields still unresolved there take their empty defaults."""
+    entries = _commit_entries(log_dir) if entries is None else entries
+    if not entries:
+        raise FileNotFoundError(f"no commits in {log_dir}")
+    upto = entries if as_of is None else [e for e in entries if e[0] <= as_of]
+    if not upto:
+        raise FileNotFoundError(
+            f"no commit at or before version {as_of} in {log_dir}"
+        )
+    oldest, want = entries[0][0], upto[-1][0]
+    if base is not None and base.oldest != oldest:
+        base = replace(base, oldest=oldest, origin=oldest_commit(log_dir, entries)[1])
+    if base is not None and base.version <= want:
+        newer = [e for e in upto if e[0] > base.version]
+        if [v for v, _ in newer] == list(range(base.version + 1, want + 1)):
+            for v, name in newer:
+                base = base.apply(log_dir, v, _load(log_dir, name))
+            return base
+    loaded: list[tuple[int, dict]] = []
+    need = set(_FIELDS)
+    bootstrapped = False
+    for v, name in reversed(upto):
+        c = _load(log_dir, name)
+        loaded.append((v, c))
+        need -= _resolves(c)
+        bootstrapped = bootstrapped or bool(c.get("checkpoint"))
+        if bootstrapped and not need:
+            break
+    if loaded[-1][0] == oldest:
+        origin = {k: loaded[-1][1][k] for k in _ORIGIN_KEYS if k in loaded[-1][1]}
+    else:
+        origin = oldest_commit(log_dir, entries)[1]
+    snap = Snapshot(version=-1, oldest=oldest, origin=origin)
+    for v, c in reversed(loaded):
+        snap = snap.apply(log_dir, v, c)
+    return snap
 
 
 def replay_log_full(
     log_dir: str, as_of: int | None = None
 ) -> tuple[int, list[str], dict[str, dict]]:
-    """(version, live files, deletion-vector state) — the full fold.
+    """(version, live files, deletion-vector state) — a view over
+    :func:`snapshot`.
 
     The DV state maps a live data file's relative path to its descriptor
     ``{"sidecar": <rel path of the parquet sidecar holding its deleted
@@ -122,72 +456,18 @@ def replay_log_full(
     merge-on-read half of the table format (public design: Delta's
     deletion vectors): a delete marks row POSITIONS in a tiny sidecar
     instead of rewriting the data file, so a 1-row delete costs
-    O(deleted rows) bytes, not a file rewrite. Per-commit rules:
-    :func:`apply_commit`."""
-    entries = _commit_entries(log_dir)
-    if not entries:
-        raise FileNotFoundError(f"no commits in {log_dir}")
-    commits = [
-        (v, _load(log_dir, name))
-        for v, name in entries
-        if as_of is None or v <= as_of
-    ]
-    if not commits:
-        raise FileNotFoundError(
-            f"no commit at or before version {as_of} in {log_dir}"
-        )
-    # start from the last checkpoint commit (carries the full list)
-    start = 0
-    for i, (_v, c) in enumerate(commits):
-        if c.get("checkpoint"):
-            start = i
-    live: set[str] = set()
-    dvs: dict[str, dict] = {}
-    for _v, c in commits[start:]:
-        live, dvs = apply_commit(log_dir, c, live, dvs)
-    return commits[-1][0], sorted(live), dvs
-
-
-def schema_and_mapping_at(
-    log_dir: str, as_of: int | None = None
-) -> tuple[str | None, dict | None]:
-    """(recorded schema JSON, column mapping) effective at ``as_of`` in
-    ONE log pass — readers need both on every snapshot read, and the
-    two latest-wins folds walk the same commit files, so scanning twice
-    would double the per-read small-JSON I/O on long logs."""
-    schema = mapping = None
-    for v, name in _commit_entries(log_dir):
-        if as_of is not None and v > as_of:
-            break
-        c = _load(log_dir, name)
-        if c.get("schema") is not None:
-            schema = c["schema"]
-        if c.get("column_mapping") is not None:
-            mapping = c["column_mapping"]
-    return schema, mapping
+    O(deleted rows) bytes, not a file rewrite."""
+    s = snapshot(log_dir, as_of)
+    return s.version, s.files, s.dvs
 
 
 def schema_json_at(log_dir: str, as_of: int | None = None) -> str | None:
     """The recorded table schema (StructType JSON) effective at ``as_of``
-    — newest commit at/below it carrying a ``schema`` payload; None for
-    legacy logs. A Delta log answers with its ``schemaString``, which IS
-    Spark StructType JSON (PROTOCOL.md)."""
+    — None for legacy logs. A Delta log answers with its
+    ``schemaString``, which IS Spark StructType JSON (PROTOCOL.md)."""
     if is_delta_log(log_dir):
         return _replay_delta_log(log_dir, as_of).metadata["schemaString"]
-    return schema_and_mapping_at(log_dir, as_of)[0]
-
-
-def mapping_at(log_dir: str, as_of: int | None = None) -> dict | None:
-    """The column mapping (logical name -> PHYSICAL parquet column name)
-    effective at ``as_of`` — newest commit at/below it carrying a
-    ``column_mapping`` payload (each such commit records the FULL
-    mapping, so latest-wins is the whole fold). None = identity (table
-    never renamed/dropped a column — the overwhelmingly common case,
-    zero overhead). This is Delta's column-mapping design: RENAME
-    changes only the logical name (physical stays, so no file is
-    rewritten), DROP removes the logical binding, and a re-added name
-    gets a FRESH physical name so dropped data can never resurrect."""
-    return schema_and_mapping_at(log_dir, as_of)[1]
+    return snapshot(log_dir, as_of).schema
 
 
 def _commit_record(
@@ -268,7 +548,7 @@ def commit_deltas_full(
         c = _load(log_dir, entries[i][1])
         if c.get("checkpoint"):
             start_idx = i + 1
-            live, dvs = _checkpoint_state(log_dir, c)
+            live, dvs, _stats = _checkpoint_state(log_dir, c)
             break
     out: list[dict] = []
     for v, name in entries[start_idx:]:
@@ -305,11 +585,8 @@ def hive_partition_values(rel_path: str) -> dict[str, str | None]:
 
 def partition_meta(log_dir: str) -> tuple[list[str], StructType | None]:
     """(partition column names, their StructType) — ``([], None)`` for
-    unpartitioned tables. A txlog records its spec on commit 0; after
-    ``cleanup_log`` truncated the log head, the OLDEST retained commit
-    is a metadata-complete checkpoint carrying the same
-    ``partition_by``/``partition_schema`` payload, so the fallback reads
-    that instead. A Delta log answers from its latest ``metaData``."""
+    unpartitioned tables. A txlog answers from its oldest retained commit
+    (:func:`oldest_commit`); a Delta log from its latest ``metaData``."""
     if is_delta_log(log_dir):
         meta = _replay_delta_log(log_dir).metadata
         pby = list(meta.get("partitionColumns") or [])
@@ -317,30 +594,7 @@ def partition_meta(log_dir: str) -> tuple[list[str], StructType | None]:
             return [], None
         by_name = {f.name: f for f in _schema(meta).fields}
         return pby, StructType([by_name[c] for c in pby])
-    c0_path = os.path.join(log_dir, f"{0:012d}.json")
-    if os.path.exists(c0_path):
-        with open(c0_path) as fh:
-            c0 = json.load(fh)
-    else:
-        entries = _commit_entries(log_dir)
-        if not entries:
-            raise FileNotFoundError(f"no commits in {log_dir}")
-        c0 = _load(log_dir, entries[0][1])
-        if "partition_by" not in c0:
-            # a truncated head whose oldest survivor is NOT a
-            # metadata-complete checkpoint must fail loudly, not
-            # silently read a partitioned table as unpartitioned
-            raise FileNotFoundError(
-                f"{log_dir}: commit 0 is gone and the oldest retained "
-                f"commit {entries[0][1]} carries no partition spec — the "
-                "log head was truncated below a metadata-complete "
-                "checkpoint"
-            )
-    pby = c0.get("partition_by") or []
-    schema = (
-        StructType.fromJson(json.loads(c0["partition_schema"])) if pby else None
-    )
-    return pby, schema
+    return _partition_spec(*oldest_commit(log_dir))
 
 
 # ------------------------------------------------------------ Delta fold
@@ -982,9 +1236,15 @@ def _field_ids(metadata: dict) -> dict[str, int]:
 
 
 def latest_version(log_dir: str) -> int:
+    """The newest committed version: one listing of a txlog (the max
+    commit number; no commit is opened), the snapshot fold of a Delta
+    log."""
     if is_delta_log(log_dir):
         return _replay_delta_log(log_dir).version
-    return replay_log(log_dir)[0]
+    entries = _commit_entries(log_dir)
+    if not entries:
+        raise FileNotFoundError(f"no commits in {log_dir}")
+    return entries[-1][0]
 
 
 def _delta_binding(metadata: dict) -> tuple[dict | None, dict | None]:
@@ -1007,7 +1267,7 @@ def column_binding_at(
     keyed by them."""
     if is_delta_log(log_dir):
         return _delta_binding(_replay_delta_log(log_dir, as_of).metadata)
-    return mapping_at(log_dir, as_of), None
+    return snapshot(log_dir, as_of).mapping, None
 
 
 def snapshot_at(log_dir: str, as_of: int | None = None):
@@ -1025,5 +1285,5 @@ def snapshot_at(log_dir: str, as_of: int | None = None):
             mapping,
             ids,
         )
-    _v, files, dvs = replay_log_full(log_dir, as_of)
-    return files, dvs, None, mapping_at(log_dir, as_of), None
+    s = snapshot(log_dir, as_of)
+    return s.files, s.dvs, None, s.mapping, None

@@ -33,9 +33,9 @@ What this gives over the staged-swap backend (and what it does not):
 
 At 100 TB: the log holds file NAMES, not data — a commit is O(files
 touched) JSON bytes; snapshot resolution is a driver-side read of the log
-directory (thousands of small JSON files at worst — checkpointing them
-into a single parquet summary every N commits is the standard extension
-and is implemented in :meth:`_replay` via `_checkpoint`).
+directory; every ``_CHECKPOINT_EVERY`` commits a checkpoint commit
+carries the whole table state, and :meth:`TxLogTable._snapshot` folds
+only from the newest one (:class:`logfold.Snapshot`).
 """
 
 from __future__ import annotations
@@ -50,14 +50,19 @@ from urllib.parse import quote
 
 from ..localframe import local_df
 from .logfold import (
+    Snapshot,
+    _commit_entries,
+    _commit_record,
+    _load,
+    apply_commit,
     commit_deltas_full,
+    empty_snapshot,
     hive_partition_values,
-    mapping_at,
-    partition_meta,
-    replay_log,
-    replay_log_full,
-    schema_and_mapping_at,
-    schema_json_at,
+    latest_version,
+    metadata_complete,
+    oldest_commit,
+    replay_log_full,  # re-exported: perfbench traces txlog.replay_log_full
+    snapshot,
 )
 from .merge import (
     change_feed,
@@ -88,6 +93,62 @@ def _scan_basename(uri, files: list[str]):
     if all(_uri_safe(f.rsplit("/", 1)[-1]) for f in files):
         return b
     return F.url_decode(F.regexp_replace(b, r"\+", "%2B"))
+
+
+def _generated_of(schema_json: str | None) -> dict[str, str]:
+    """Generated columns (name -> generation SQL expr) of a recorded
+    schema: its ``delta.generationExpression`` field metadata."""
+    if schema_json is None:
+        return {}
+    from pyspark.sql.types import StructType
+
+    return {
+        f.name: (f.metadata or {})["delta.generationExpression"]
+        for f in StructType.fromJson(json.loads(schema_json)).fields
+        if "delta.generationExpression" in (f.metadata or {})
+    }
+
+
+def _identity_of(schema_json: str | None) -> dict[str, dict]:
+    """Identity columns (name -> {start, step, hw}) of a recorded schema:
+    its ``delta.identity.*`` field metadata (``hw`` None before the first
+    assignment)."""
+    if schema_json is None:
+        return {}
+    from pyspark.sql.types import StructType
+
+    out: dict[str, dict] = {}
+    for f in StructType.fromJson(json.loads(schema_json)).fields:
+        md = f.metadata or {}
+        if "delta.identity.start" in md:
+            out[f.name] = {
+                "start": int(md["delta.identity.start"]),
+                "step": int(md["delta.identity.step"]),
+                "hw": (
+                    int(md["delta.identity.highWaterMark"])
+                    if "delta.identity.highWaterMark" in md
+                    else None
+                ),
+            }
+    return out
+
+
+def _gen_recompute(gen: dict[str, str], assignments) -> dict[str, str]:
+    """Generated columns an UPDATE must RECOMPUTE: those not assigned
+    explicitly whose generation expression references an assigned
+    column (word-boundary match — the same reference test the
+    rename/drop guards use)."""
+    assigned = set(assignments)
+    return {
+        g: e
+        for g, e in gen.items()
+        if g not in assigned
+        and any(re.search(rf"\b{re.escape(c)}\b", e) for c in assigned)
+    }
+
+
+def _row_tracking_on(snap: Snapshot) -> bool:
+    return snap.properties.get("delta.enableRowTracking") == "true"
 
 
 def _generated_checks(gen: dict[str, str]) -> dict[str, str]:
@@ -478,61 +539,9 @@ def _coerce_stat(v, dtype):
     return None
 
 
-def replay_stats(log_dir: str, as_of: int | None = None) -> dict[str, dict]:
-    """Per-file statistics state at ``as_of`` (default: latest) — the
-    stats fold, mirroring :func:`replay_log_full`'s DV fold rule:
-    checkpoint commits carry the full ``stats_state`` (inline, or
-    a ``stats_json`` column in the parquet live-list sidecar), removes
-    drop entries, ``stats_reset`` (restore) replaces the state wholesale,
-    and each commit's own ``stats`` map merges last. Data files are
-    immutable, so a file's entry is identical in every fold that holds
-    it — consumers may fold at latest and apply to any replay-consistent
-    file list. Commits predating stats recording simply contribute
-    nothing: every consumer treats a missing file entry as "no stats"
-    and falls back to parquet footers (an optimization degraded, never
-    an answer changed)."""
-    entries = sorted(f for f in os.listdir(log_dir) if f.endswith(".json"))
-    commits = []
-    for name in entries:
-        version = int(name.split(".")[0])
-        if as_of is not None and version > as_of:
-            continue
-        with open(os.path.join(log_dir, name)) as fh:
-            commits.append((version, json.load(fh)))
-    commits.sort()
-    start = 0
-    for i, (_v, c) in enumerate(commits):
-        if c.get("checkpoint"):
-            start = i
-    stats: dict[str, dict] = {}
-    for _v, c in commits[start:]:
-        if c.get("checkpoint"):
-            sc = c.get("adds_sidecar")
-            if sc:
-                import pyarrow.parquet as pq
-
-                stats = {}
-                full = os.path.join(log_dir, sc)
-                # pre-stats sidecars lack the column — state resets to
-                # "no stats" there and footers cover the older files
-                if "stats_json" in pq.read_schema(full).names:
-                    tbl = pq.read_table(full, columns=["file", "stats_json"])
-                    for f, sj in zip(
-                        tbl.column("file").to_pylist(),
-                        tbl.column("stats_json").to_pylist(),
-                    ):
-                        if sj is not None:
-                            stats[f] = json.loads(sj)
-            else:
-                stats = dict(c.get("stats_state") or {})
-        else:
-            for f in c["removes"]:
-                stats.pop(f, None)
-        if c.get("stats_reset") is not None:
-            stats = dict(c["stats_reset"])
-        for f, d in (c.get("stats") or {}).items():
-            stats[f] = d
-    return stats
+# commits that create a table: checkpoint-flagged, and they carry their
+# whole state themselves (nothing precedes them)
+_COMMIT0_OPS = ("create", "convert", "convert_delta")
 
 # checkpoint commits inline their full live-file list as JSON below this
 # many files; at/above it the list (and DV state) goes to a PARQUET
@@ -584,9 +593,6 @@ def version_from_commit_times(
     return best
 
 
-# sentinel: "caller didn't specify a mapping — resolve the latest one"
-_MAPPING_DEFAULT = object()
-
 # Row tracking (Delta's rowTracking writer feature): the PHYSICAL column
 # rewrite paths materialize stable row ids into. Never part of the
 # logical schema — explicit-schema reads ignore it; the row-id read path
@@ -623,7 +629,9 @@ class TxLogTable:
         self.spark = spark
         self.path = path.rstrip("/")
         self.log_dir = os.path.join(self.path, _LOG_DIR)
-        self._pmeta: tuple[list[str], "object"] | None = None
+        # the newest snapshot this handle folded, with the (inode, mtime)
+        # of its commit file — see _snapshot
+        self._snap: tuple[Snapshot, tuple] | None = None
         # the put-if-absent backend every commit/tag publish goes through
         # (per-HANDLE: pass the same arbiter to every writer of a table;
         # mixing backends on one table forfeits the atomicity guarantee,
@@ -735,8 +743,11 @@ class TxLogTable:
         if missing:
             raise ValueError(f"partition_by columns absent from df: {missing}")
         os.makedirs(t.log_dir, exist_ok=False)
-        t._pmeta = (pby, df.select(*pby).schema if pby else None)
-        files = t._write_data(df, _pby=pby, _checks=gen_checks or None)
+        files = t._write_data(
+            df,
+            empty_snapshot(pby, df.select(*pby).schema if pby else None),
+            _checks=gen_checks or None,
+        )
         schema_json = df.schema.json()
         if gen:
             schema_json = _annotate_generated(schema_json, gen)
@@ -808,7 +819,6 @@ class TxLogTable:
                     rel = f if rel_dir == "." else os.path.join(rel_dir, f)
                     files.append(rel.replace(os.sep, "/"))
         files.sort()
-        t._pmeta = (pby, pschema if pby else None)
         if pby:
             schema_json = probe.schema.json()
         elif files:
@@ -977,7 +987,6 @@ class TxLogTable:
             StructType([schema[c] for c in pby]) if pby else None
         )
         os.makedirs(t.log_dir, exist_ok=False)
-        t._pmeta = (pby, pschema)
         # foreign per-file statistics adopt as-is (Delta's add.stats is
         # the same envelope this log records); files the foreign writer
         # left statless get footer-derived entries stamped by the commit
@@ -1058,38 +1067,56 @@ class TxLogTable:
 
     # -------------------------------------------------------- partitioning
 
+    def _snapshot(self, as_of: int | None = None) -> Snapshot:
+        """The table's :class:`logfold.Snapshot` at ``as_of`` (default:
+        latest) — every accessor below is a view over it, and each public
+        operation takes one per attempt and passes it down. One listing
+        of the log per call. The newest snapshot folded is cached per
+        handle, keyed by its commit file's identity (a table re-created
+        at the same path misses): when the head has moved only the newer
+        commits are loaded, and a read at the cached version loads none.
+        Other versions fold from their newest checkpoint."""
+        entries = _commit_entries(self.log_dir)
+        base = None
+        if self._snap is not None:
+            cached, stamp = self._snap
+            if self._stamp(cached.version) == stamp:
+                base = cached
+        if base is not None and as_of is not None and int(as_of) < base.version:
+            base = None
+        snap = snapshot(self.log_dir, as_of, base=base, entries=entries)
+        if entries and snap.version == entries[-1][0]:
+            self._snap = (snap, self._stamp(snap.version))
+        return snap
+
+    def _stamp(self, version: int) -> tuple | None:
+        try:
+            st = os.stat(os.path.join(self.log_dir, _commit_name(version)))
+        except OSError:
+            return None
+        return st.st_ino, st.st_mtime_ns
+
+    def _base_snapshot(self) -> Snapshot:
+        """The latest snapshot, or the empty pre-commit-0 state while the
+        table's creating commit is being written."""
+        try:
+            return self._snapshot()
+        except FileNotFoundError:
+            return empty_snapshot()
+
     def partition_meta(self) -> tuple[list[str], "object"]:
         """(partition column names, their StructType) — ``([], None)`` for
-        unpartitioned tables; see :func:`logfold.partition_meta`."""
-        if self._pmeta is None:
-            self._pmeta = partition_meta(self.log_dir)
-        return self._pmeta
-
-    def _schema_at(self, as_of: int | None = None) -> str | None:
-        """The table's EXACT Spark schema (StructType JSON) effective at
-        ``as_of`` (default: latest) — the newest commit at/below it that
-        recorded a ``schema`` payload. Every commit this writer produces
-        records one, so reads never guess types from footers: the schema
-        is authoritative per VERSION, which is what makes time travel
-        across a schema evolution exact. None only for legacy logs
-        written before schemas were recorded. O(commits) small-JSON reads,
-        same cost class as :meth:`_replay`."""
-        return schema_json_at(self.log_dir, as_of)
-
-    def _mapping_at(self, as_of: int | None = None) -> dict | None:
-        """Column mapping (logical -> physical) at ``as_of`` — see
-        :func:`mapping_at`. None = identity (never renamed/dropped)."""
-        return mapping_at(self.log_dir, as_of)
+        unpartitioned tables; recorded on the oldest retained commit."""
+        return self._snapshot().partition()
 
     def _read_files(
         self,
         files: list[str],
-        schema_json: str | None = None,
-        mapping=_MAPPING_DEFAULT,
+        snap: Snapshot | None = None,
         dvs: dict[str, dict] | None = None,
     ) -> DataFrame:
         """ONE parquet scan over an explicit live-file list under the
-        version's RECORDED schema (``schema_json`` from :meth:`_schema_at`)
+        RECORDED schema and column mapping of ``snap`` (default: latest)
         — exact Spark types always (no partition-type inference, no INT96
         timestamp ambiguity, no footer sampling), files predating a schema
         evolution null-filled, and no session-conf mutation so concurrent
@@ -1103,14 +1130,9 @@ class TxLogTable:
         from pyspark.sql.types import StructType
 
         paths = [os.path.join(self.path, f) for f in files]
-        pby, pschema = self.partition_meta()
-        if schema_json is None and mapping is _MAPPING_DEFAULT:
-            # one combined log pass for both latest-wins folds
-            schema_json, mapping = schema_and_mapping_at(self.log_dir)
-        elif schema_json is None:
-            schema_json = self._schema_at()
-        elif mapping is _MAPPING_DEFAULT:
-            mapping = self._mapping_at()
+        snap = snap or self._snapshot()
+        pby, pschema = snap.partition()
+        schema_json, mapping = snap.schema, snap.mapping
         dv_df = self._dv_frame(dvs, files) if dvs else None
         if schema_json is not None:
             schema = StructType.fromJson(json.loads(schema_json))
@@ -1167,16 +1189,16 @@ class TxLogTable:
             "__dvg", "__dvf", "__dvi"
         )
 
-    def _empty(self) -> DataFrame:
+    def _empty(self, snap: Snapshot | None = None) -> DataFrame:
         """Zero-row snapshot with the table schema (incl. partition cols)."""
-        schema_json = self._schema_at()
-        if schema_json is not None:
+        snap = snap or self._snapshot()
+        if snap.schema is not None:
             from pyspark.sql.types import StructType
 
             return local_df(self.spark, 
-                [], StructType.fromJson(json.loads(schema_json))
+                [], StructType.fromJson(json.loads(snap.schema))
             )
-        pby, pschema = self.partition_meta()
+        pby, pschema = snap.partition()
         df = self.spark.read.parquet(self.path)
         if pby:
             from pyspark.sql import functions as F
@@ -1188,31 +1210,29 @@ class TxLogTable:
     # -------------------------------------------------------------- state
 
     def _replay(self, as_of: int | None = None) -> tuple[int, list[str]]:
-        """Version + live file list, at the latest version or (time travel)
-        at ``as_of``. Replays from the newest checkpoint (a full-file-list
-        commit) at or before the requested version, not the whole log.
-        Delegates to the module-level :func:`replay_log` (session-free so
-        the ``txlog`` Python DataSource can run it on any process)."""
-        return replay_log(self.log_dir, as_of)
+        """(version, live files) at ``as_of`` (default: latest)."""
+        s = self._snapshot(as_of)
+        return s.version, s.files
 
     def _replay_full(
         self, as_of: int | None = None
     ) -> tuple[int, list[str], dict[str, dict]]:
-        """(version, live files, deletion-vector state) — see
-        :func:`replay_log_full`."""
-        return replay_log_full(self.log_dir, as_of)
+        """(version, live files, deletion-vector state) at ``as_of``."""
+        s = self._snapshot(as_of)
+        return s.version, s.files, dict(s.dvs)
 
     def version(self) -> int:
-        return self._replay()[0]
+        """The newest committed version: one listing, no commit opened."""
+        return latest_version(self.log_dir)
 
     def files(self) -> list[str]:
-        return self._replay()[1]
+        return self._snapshot().files
 
     def dvs(self, as_of: int | None = None) -> dict[str, dict]:
         """Deletion-vector state (file -> descriptor) at ``as_of``
         (default: latest). Empty for tables that never ran merge-on-read
         DML — the common case, zero overhead on every read path."""
-        return self._replay_full(as_of)[2]
+        return dict(self._snapshot(as_of).dvs)
 
     def _sidecar_rows(
         self, sidecar: str, rel_files: list[str], pathkey: str | None
@@ -1338,10 +1358,13 @@ class TxLogTable:
     def read(self) -> DataFrame:
         """Snapshot read: exactly the files the latest commit resolves to,
         minus deletion-vector rows."""
-        _v, files, dvs = self._replay_full()
-        if not files:
-            return self._empty()
-        return self._read_files(files, self._schema_at(), dvs=dvs)
+        return self._rows(self._snapshot())
+
+    def _rows(self, snap: Snapshot) -> DataFrame:
+        """The rows of ``snap``: its live files minus their DV rows."""
+        if not snap.live:
+            return self._empty(snap)
+        return self._read_files(snap.files, snap, dvs=snap.dvs)
 
     def read_version(self, version: int) -> DataFrame:
         """Time travel (Delta paper §4.3, ``VERSION AS OF``): read the table
@@ -1357,27 +1380,15 @@ class TxLogTable:
         version), versions BELOW the adoption commit time-travel the
         pre-adoption Delta history straight from the coexisting
         ``_delta_log`` — the same dispatch :meth:`read_changes` uses."""
-        entries = sorted(
-            f for f in os.listdir(self.log_dir) if f.endswith(".json")
-        )
-        if entries and version < int(entries[0].split(".")[0]):
-            with open(os.path.join(self.log_dir, entries[0])) as fh:
-                c0 = json.load(fh)
-            if c0.get("op") == "convert_delta":
-                from .deltalog import read_delta_snapshot
+        try:
+            snap = self._snapshot(as_of=version)
+        except FileNotFoundError:
+            if oldest_commit(self.log_dir)[1].get("op") != "convert_delta":
+                raise
+            from .deltalog import read_delta_snapshot
 
-                return read_delta_snapshot(
-                    self.spark, self.path, version=version
-                )
-        _v, files, dvs = self._replay_full(as_of=version)
-        if not files:
-            return self._empty()
-        return self._read_files(
-            files,
-            self._schema_at(as_of=version),
-            mapping=self._mapping_at(as_of=version),
-            dvs=dvs,
-        )
+            return read_delta_snapshot(self.spark, self.path, version=version)
+        return self._rows(snap)
 
     def version_at_timestamp(self, timestamp_ms: int) -> int:
         """``TIMESTAMP AS OF`` resolution: the newest version whose
@@ -1402,16 +1413,26 @@ class TxLogTable:
         return version_from_commit_times(raw, timestamp_ms, self.log_dir)
 
     def history(self) -> list[dict]:
+        """One record per retained commit: ``op``, and the TRUE file
+        delta of the commit — one fold pass over the retained range, so
+        a checkpoint commit (whose recorded adds are the whole live list)
+        reports what it changed, not the table. The oldest retained
+        commit after ``cleanup_log`` has no predecessor: it reports its
+        live list as adds. ``n_dvs`` counts the vectors it set."""
         out = []
-        for name in sorted(f for f in os.listdir(self.log_dir) if f.endswith(".json")):
-            with open(os.path.join(self.log_dir, name)) as fh:
-                c = json.load(fh)
+        live: set[str] = set()
+        dvs: dict[str, dict] = {}
+        for v, name in _commit_entries(self.log_dir):
+            c = _load(self.log_dir, name)
+            prev, prev_dvs = live, dvs
+            live, dvs = apply_commit(self.log_dir, c, live, dvs)
+            rec = _commit_record(v, c.get("op"), None, prev, live, prev_dvs, dvs)
             out.append(
                 {
-                    "version": int(name.split(".")[0]),
-                    "op": c.get("op"),
-                    "n_adds": int(c.get("n_adds", len(c["adds"]))),
-                    "n_removes": len(c["removes"]),
+                    "version": v,
+                    "op": rec["op"],
+                    "n_adds": len(rec["adds"]),
+                    "n_removes": len(rec["removes"]),
                     "n_dvs": len(c.get("dvs") or {}),
                 }
             )
@@ -1422,10 +1443,10 @@ class TxLogTable:
     def _write_data(
         self,
         df: DataFrame,
-        _pby: list[str] | None = None,
+        snap: Snapshot | None = None,
         _validate: bool = True,
         _checks: dict[str, str] | None = None,
-        _mapping=_MAPPING_DEFAULT,
+        _mapping: dict | None = None,
     ) -> list[str]:
         """Write ``df`` as new parquet files under the table dir; returns
         their names (relative paths — for partitioned tables these include
@@ -1440,12 +1461,13 @@ class TxLogTable:
         at any table size). On violation the new files are removed and
         :class:`CheckViolation` raised — nothing was committed, so the
         table is untouched. ``_validate=False`` is for row-preserving
-        rewrites (optimize, delete's keep-side) whose rows already passed."""
-        pby = self.partition_meta()[0] if _pby is None else _pby
-        if _mapping is not _MAPPING_DEFAULT:
-            mapping = _mapping
-        else:
-            mapping = self._mapping_at() if os.path.isdir(self.log_dir) else None
+        rewrites (optimize, delete's keep-side) whose rows already passed.
+        ``snap`` (default: latest) supplies the partition spec, mapping,
+        CHECK set and generated columns; ``_checks``/``_mapping``
+        override the last two."""
+        snap = snap or self._snapshot()
+        pby = snap.partition()[0]
+        mapping = _mapping if _mapping is not None else snap.mapping
         if mapping:
             # column-mapped table: files carry PHYSICAL names (renames
             # stay metadata-only; a re-added dropped name writes under a
@@ -1484,27 +1506,27 @@ class TxLogTable:
 
         shutil.rmtree(tmp)
         if _validate:
-            checks = self.checks() if _checks is None else _checks
+            checks = snap.checks if _checks is None else _checks
             # generated columns enforce at the same chokepoint: whatever
             # value a write carries must null-safe-equal the generation
             # expression (Delta's explicit-write rule) — DML/merge paths
             # therefore cannot silently desynchronize a generated column
             # from its sources
-            gen = self.generated_exprs()
+            gen = _generated_of(snap.schema)
             if gen:
                 checks = {**_generated_checks(gen), **checks}
         else:
             checks = {}
         if checks and names:
-            self._enforce_checks(names, checks, pby, mapping=mapping)
+            self._enforce_checks(names, checks, snap, mapping=mapping)
         return names
 
     def _enforce_checks(
         self,
         names: list[str],
         checks: dict[str, str],
-        pby: list[str],
-        mapping=_MAPPING_DEFAULT,
+        snap: Snapshot,
+        mapping: dict | None = None,
     ) -> None:
         """Enforce ``checks`` over the staged files ``names`` with ONE
         aggregate scan (new files only — the table is never re-read). On
@@ -1519,8 +1541,8 @@ class TxLogTable:
         # footer schema of the just-written files (they share one) +
         # recorded partition fields via basePath — NEVER inference
         schema = _footer_schema(paths[0])
+        pby, pschema = snap.partition()
         if pby:
-            pschema = self.partition_meta()[1]
             for fld in pschema.fields:
                 if fld.name not in schema.fieldNames():
                     schema = schema.add(fld)
@@ -1528,8 +1550,7 @@ class TxLogTable:
         if pby:
             reader = reader.option("basePath", self.path)
         scan = reader.parquet(*paths)
-        if mapping is _MAPPING_DEFAULT:
-            mapping = self._mapping_at()
+        mapping = mapping if mapping is not None else snap.mapping
         if mapping:
             # files carry physical names; check exprs reference LOGICAL
             # names — rename back in ONE atomic select (sequential
@@ -1595,10 +1616,14 @@ class TxLogTable:
     def stats_at(self, as_of: int | None = None) -> dict[str, dict]:
         """Per-file recorded statistics at ``as_of`` (default: latest):
         ``{rel_path: {"numRecords", "minValues", "maxValues",
-        "nullCount"}}`` — the log-side fold (:func:`replay_stats`).
-        Files committed before stats recording existed are absent;
-        consumers fall back to footers for those."""
-        return replay_stats(self.log_dir, as_of)
+        "nullCount"}}`` — the snapshot's stats fold: checkpoints carry
+        the full state, removes drop entries, ``stats_reset`` (restore)
+        replaces it and each commit's own ``stats`` merge last. Data files
+        are immutable, so a file's entry is the same in every snapshot
+        that holds it. Files committed before stats recording existed are
+        absent; consumers fall back to footers for those (an optimization
+        degraded, never an answer changed)."""
+        return dict(self._snapshot(as_of).stats)
 
     def row_count(self, as_of: int | None = None) -> int:
         """Exact COUNT(*) of the snapshot at ``as_of`` from METADATA
@@ -1611,11 +1636,10 @@ class TxLogTable:
         holds because every data-adding path records the physical row
         count of its immutable files and merge-on-read deletes are
         exactly the DV cardinalities."""
-        _v, files, dvs = self._replay_full(as_of)
-        stats = self.stats_at(as_of)
+        snap = self._snapshot(as_of)
         total = 0
-        for f in files:
-            n = (stats.get(f) or {}).get("numRecords")
+        for f in snap.live:
+            n = (snap.stats.get(f) or {}).get("numRecords")
             if n is None:
                 import pyarrow.parquet as pq
 
@@ -1623,7 +1647,7 @@ class TxLogTable:
                     os.path.join(self.path, f)
                 ).metadata.num_rows
             total += int(n)
-        total -= sum(int(d.get("cardinality", 0)) for d in dvs.values())
+        total -= sum(int(d.get("cardinality", 0)) for d in snap.dvs.values())
         return total
 
     def read_where(self, column: str, lo, hi) -> DataFrame:
@@ -1641,14 +1665,16 @@ class TxLogTable:
         null never satisfies the range residual."""
         from pyspark.sql import functions as F
 
-        _v, files, dvs = self._replay_full()
-        kept = self._prune_files(files, column, lo, hi)
+        snap = self._snapshot()
+        kept = self._prune_files(snap.files, column, lo, hi, snap=snap)
         if not kept:
-            return self.read().filter(F.lit(False))
-        df = self._read_files(kept, self._schema_at(), dvs=dvs)
+            return self._empty(snap)
+        df = self._read_files(kept, snap, dvs=snap.dvs)
         return df.filter((F.col(column) >= F.lit(lo)) & (F.col(column) <= F.lit(hi)))
 
-    def _prune_files(self, files: list[str], column: str, lo, hi) -> list[str]:
+    def _prune_files(
+        self, files: list[str], column: str, lo, hi, snap: Snapshot | None = None
+    ) -> list[str]:
         """The file subset of ``files`` that may hold rows with ``column``
         in [lo, hi]: directory-name comparison for partition columns (zero
         I/O), footer (min, max) envelopes otherwise (metadata-only reads).
@@ -1657,8 +1683,10 @@ class TxLogTable:
         snapshot they will commit against. String bounds against a
         non-string column are coerced through the partition-value parser
         (the type the SQL front-end cannot know: ``'2024-03-01'`` against
-        a DATE partition compares as a date, not a string)."""
-        pby, pschema = self.partition_meta()
+        a DATE partition compares as a date, not a string). ``snap``
+        (default: latest) supplies the spec, schema, mapping and stats."""
+        snap = snap or self._snapshot()
+        pby, pschema = snap.partition()
         if column in pby:
             fld = pschema[column].dataType
             from pyspark.sql.types import StringType
@@ -1686,8 +1714,8 @@ class TxLogTable:
         # string bounds against a typed non-partition column: coerce via
         # the recorded schema (same promise as the partition branch —
         # footer envelopes are typed values, not strings)
+        sj = snap.schema
         if isinstance(lo, str) or isinstance(hi, str):
-            sj = self._schema_at()
             if sj is not None:
                 from pyspark.sql.types import StringType, StructType
 
@@ -1706,10 +1734,8 @@ class TxLogTable:
                         )
         # stats (log-recorded and footer alike) carry PHYSICAL column
         # names on a column-mapped table
-        mapping = self._mapping_at()
-        phys = (mapping or {}).get(column, column)
+        phys = (snap.mapping or {}).get(column, column)
         dt = None
-        sj = self._schema_at()
         if sj is not None:
             from pyspark.sql.types import StructType
 
@@ -1722,7 +1748,7 @@ class TxLogTable:
         # difference between "plan time opens every footer over the
         # network" and "plan time opens nothing" on a 100 TB table.
         # Files without usable log stats fall back to footer envelopes.
-        log_stats = self.stats_at() if dt is not None else {}
+        log_stats = snap.stats if dt is not None else {}
         keep: set[str] = set()
         need_footer: list[str] = []
         for f in files:
@@ -1764,7 +1790,7 @@ class TxLogTable:
     def _scan_with_filepath(
         self,
         files: list[str],
-        schema_json: str | None,
+        snap: Snapshot,
         dvs: dict[str, dict] | None = None,
         extra_fields: list | None = None,
     ) -> DataFrame:
@@ -1780,10 +1806,8 @@ class TxLogTable:
         from pyspark.sql.types import StructType
 
         paths = [os.path.join(self.path, f) for f in files]
-        pby, pschema = self.partition_meta()
-        if schema_json is None:
-            schema_json = self._schema_at()
-        mapping = self._mapping_at()
+        pby, pschema = snap.partition()
+        schema_json, mapping = snap.schema, snap.mapping
         if schema_json is not None:
             schema = StructType.fromJson(json.loads(schema_json))
         else:
@@ -1837,8 +1861,7 @@ class TxLogTable:
         self,
         files: list[str],
         idx_df: DataFrame,
-        schema_json: str | None,
-        mapping: dict | None,
+        snap: Snapshot,
     ) -> DataFrame:
         """The rows of ``files`` whose (RELATIVE path, in-file row index)
         appears in ``idx_df`` (columns ``file``, ``row_index``) — the
@@ -1848,9 +1871,9 @@ class TxLogTable:
         path."""
         from pyspark.sql.types import StructType
 
-        pby, _pschema = self.partition_meta()
-        schema = StructType.fromJson(json.loads(schema_json))
-        physical = _physical_struct(schema, mapping)
+        pby, _pschema = snap.partition()
+        schema = StructType.fromJson(json.loads(snap.schema))
+        physical = _physical_struct(schema, snap.mapping)
         groups = self._basename_groups(files)
 
         def _scan(subset: list[str], g: int) -> DataFrame:
@@ -1885,7 +1908,7 @@ class TxLogTable:
         ).drop("__dvg", "__dvf", "__dvi")
 
     def _touched_files(
-        self, candidates: list[str], cond, dvs: dict[str, dict] | None = None
+        self, candidates: list[str], cond, snap: Snapshot
     ) -> list[str]:
         """Files among ``candidates`` holding >=1 row where ``cond`` is
         TRUE — Delta's MERGE/DELETE "find touched files" job: ONE scan
@@ -1897,7 +1920,7 @@ class TxLogTable:
         if not candidates:
             return []
         hits = (
-            self._scan_with_filepath(candidates, self._schema_at(), dvs=dvs)
+            self._scan_with_filepath(candidates, snap, dvs=snap.dvs)
             .filter(cond)
             .select("__file")
             .distinct()
@@ -1995,18 +2018,18 @@ class TxLogTable:
         cond = F.expr(condition) if isinstance(condition, str) else condition
         from pyspark.sql.types import StructType
 
-        schema_json0 = self._schema_at()
-        if schema_json0 is not None:
-            target = StructType.fromJson(json.loads(schema_json0))
+        snap = self._snapshot()
+        if snap.schema is not None:
+            target = StructType.fromJson(json.loads(snap.schema))
         else:
             # Legacy log with no recorded schema: the snapshot's schema
             # (footer fallback inside _read_files) is the target types.
-            target = self.read().schema
+            target = self._read_files(snap.files, snap).schema
         fields = {f.name: f.dataType for f in target.fields}
         unknown = sorted(set(assignments) - set(fields))
         if unknown:
             raise ValueError(f"update_where assigns absent columns: {unknown}")
-        ident_assigned = sorted(set(assignments) & set(self.identity_meta()))
+        ident_assigned = sorted(set(assignments) & set(_identity_of(snap.schema)))
         if ident_assigned:
             raise ValueError(
                 f"identity column(s) {ident_assigned} are GENERATED ALWAYS "
@@ -2022,7 +2045,7 @@ class TxLogTable:
         # _write_data chokepoint validates the supplied values)
         recompute = {
             g: F.expr(e).cast(fields[g])
-            for g, e in self._gen_recompute(assignments).items()
+            for g, e in _gen_recompute(_generated_of(snap.schema), assignments).items()
         }
         _check_dml_mode(mode, cdc, "DML")
         if mode == "dv":
@@ -2060,25 +2083,26 @@ class TxLogTable:
         column, no assignment ever touches it, and the rewrite writes it
         back (the change feed carries only the logical columns)."""
         hit = F.coalesce(cond, F.lit(False))
-        rt_on = self.row_tracking_enabled()
         for _attempt in range(max_retries + 1):
-            base_version, base_files, dvs = self._replay_full()
+            snap = self._snapshot()
+            base_files = snap.files
             cands = (
-                self._prune_files(base_files, *prune) if prune else base_files
+                self._prune_files(base_files, *prune, snap=snap)
+                if prune
+                else base_files
             )
-            touched = self._touched_files(cands, cond, dvs=dvs)
-            schema_json = self._schema_at()
+            touched = self._touched_files(cands, cond, snap=snap)
             adds: list[str] = []
             cdc_rel: str | None = None
             if touched:
                 df = (
-                    self._rt_cow_read(touched, schema_json, dvs)
-                    if rt_on
-                    else self._read_files(touched, schema_json, dvs=dvs)
+                    self._rt_cow_read(touched, snap)
+                    if _row_tracking_on(snap)
+                    else self._read_files(touched, snap, dvs=snap.dvs)
                 )
                 if sets is None and not cdc:
                     # kept rows are unchanged — already satisfy every CHECK
-                    adds = self._write_data(df.filter(~hit), _validate=False)
+                    adds = self._write_data(df.filter(~hit), snap, _validate=False)
                 else:
                     flat = _dml_flat(df, hit, sets or {}, recompute)
                     hits, delete = F.col("__hit"), sets is None
@@ -2087,6 +2111,7 @@ class TxLogTable:
                             (flat.filter(~hits) if delete else flat).select(
                                 *df.columns
                             ),
+                            snap,
                             _validate=not delete,
                         )
                         if cdc:
@@ -2097,11 +2122,12 @@ class TxLogTable:
                                     cols,
                                     deleted=hits if delete else None,
                                     updated=None if delete else hits,
-                                )
+                                ),
+                                snap,
                             )
             v = self._commit_attempt(
-                adds=adds, removes=touched, base_version=base_version,
-                op=op, schema=schema_json, cdc=cdc_rel,
+                snap, adds=adds, removes=touched, op=op, schema=snap.schema,
+                cdc=cdc_rel,
             )
             if v is not None:
                 return v
@@ -2143,7 +2169,7 @@ class TxLogTable:
             "dv",
         )
 
-    def _write_cdc(self, df: DataFrame) -> str:
+    def _write_cdc(self, df: DataFrame, snap: Snapshot) -> str:
         """Write one change-data sidecar (this commit's EXACT row-level
         changes: table columns + ``_change_type``) under ``_cdc/`` and
         return its table-relative path — the public Delta CDF
@@ -2155,7 +2181,7 @@ class TxLogTable:
         file per commit: cdc bytes are O(changed rows), and a change set
         big enough for one file to matter means the commit itself
         rewrote that much data — same cost class, 2x the write."""
-        mapping = self._mapping_at()
+        mapping = snap.mapping
         if mapping:
             df = df.select(
                 *[
@@ -2167,9 +2193,7 @@ class TxLogTable:
             )
         return self._write_one(df, "_cdc", "cdc")
 
-    def _read_cdc(
-        self, rel: str, schema_json: str | None, mapping: dict | None, v: int
-    ) -> DataFrame:
+    def _read_cdc(self, rel: str, snap: Snapshot, v: int) -> DataFrame:
         """Read one change-data sidecar back under the FEED's schema
         (``read_changes`` reads every commit under ``to_version``'s
         recorded schema): columns added after the sidecar was written
@@ -2194,6 +2218,7 @@ class TxLogTable:
             .alias("_change_type")
         )
         full = os.path.join(self.path, rel)
+        schema_json, mapping = snap.schema, snap.mapping
         if schema_json is None:
             df = self.spark.read.parquet(full)
             return df.select(
@@ -2244,17 +2269,20 @@ class TxLogTable:
         from pyspark.sql.types import LongType, StructField
 
         hit = F.coalesce(cond, F.lit(False))
-        rt_on = sets is not None and self.row_tracking_enabled()
-        rt = [_ROW_ID_PHYS] if rt_on else []
         for _attempt in range(max_retries + 1):
-            base_version, base_files, dvs = self._replay_full()
+            snap = self._snapshot()
+            dvs = snap.dvs
+            rt_on = sets is not None and _row_tracking_on(snap)
+            rt = [_ROW_ID_PHYS] if rt_on else []
+            base_files = snap.files
             cands = (
-                self._prune_files(base_files, *prune) if prune else base_files
+                self._prune_files(base_files, *prune, snap=snap)
+                if prune
+                else base_files
             )
-            schema_json = self._schema_at()
             scan = self._scan_with_filepath(
                 cands,
-                schema_json,
+                snap,
                 dvs=dvs,
                 extra_fields=(
                     [StructField(_ROW_ID_PHYS, LongType(), True)]
@@ -2265,9 +2293,7 @@ class TxLogTable:
             if rt_on:
                 # row tracking: the UPDATE's post-images carry their OLD
                 # ids (materialized value, else the file's base + index)
-                scan = self._rt_attach(
-                    scan, cands, self.row_tracking_meta()[0], _ROW_ID_PHYS
-                )
+                scan = self._rt_attach(scan, cands, snap.row_bases, _ROW_ID_PHYS)
             cols = [
                 c for c in scan.columns if c not in ("__file", "__ridx", *rt)
             ]
@@ -2289,14 +2315,14 @@ class TxLogTable:
                 adds = (
                     []
                     if sets is None
-                    else self._write_data(moved.select(*cols, *rt))
+                    else self._write_data(moved.select(*cols, *rt), snap)
                 )
                 removes, dv_updates = self._vector_commit(
                     moved.select("__file", "__ridx"), dvs
                 )
             v = self._commit_attempt(
-                adds=adds, removes=removes, base_version=base_version,
-                op=op, schema=schema_json, dvs=dv_updates or None,
+                snap, adds=adds, removes=removes, op=op, schema=snap.schema,
+                dvs=dv_updates or None,
             )
             if v is not None:
                 return v
@@ -2408,15 +2434,16 @@ class TxLogTable:
             os.remove(full)
         return removes, dv_updates
 
-    def _commit_attempt(self, **kw) -> int | None:
-        """Commit one DML attempt through :meth:`_commit_dml` (every
-        row-level route: COW and DV DELETE/UPDATE, COW and DV MERGE).
-        A lost race removes what the attempt wrote — the files its commit
-        would have added: data files, the DV sidecar its descriptors
-        reference, the cdc file — and answers None, so the caller's loop
-        recomputes on the winner's snapshot."""
+    def _commit_attempt(self, snap: Snapshot, **kw) -> int | None:
+        """Commit one DML attempt, computed on ``snap``, through
+        :meth:`_commit_dml` (every row-level route: COW and DV
+        DELETE/UPDATE, COW and DV MERGE). A lost race removes what the
+        attempt wrote — the files its commit would have added: data
+        files, the DV sidecar its descriptors reference, the cdc file —
+        and answers None, so the caller's loop recomputes on the
+        winner's snapshot."""
         try:
-            return self._commit_dml(**kw)
+            return self._commit_dml(snap, **kw)
         except CommitConflict:
             sidecars = {d["sidecar"] for d in (kw.get("dvs") or {}).values()}
             for rel in [*kw["adds"], *sidecars, kw.get("cdc")]:
@@ -2429,7 +2456,7 @@ class TxLogTable:
         files: list[str],
         source: DataFrame,
         keys: list[str],
-        dvs: dict[str, dict] | None = None,
+        snap: Snapshot,
     ) -> list[str]:
         """Files among ``files`` holding >=1 row whose key appears in
         ``source`` — MERGE's touched-file discovery (the Delta MERGE
@@ -2448,7 +2475,7 @@ class TxLogTable:
         dominant cost of a small upsert."""
         if not files:
             return []
-        scan = self._scan_with_filepath(files, self._schema_at(), dvs=dvs)
+        scan = self._scan_with_filepath(files, snap, dvs=snap.dvs)
         hits = (
             scan.select("__file", *keys)
             .join(source.select(*keys).distinct(), keys, "left_semi")
@@ -2469,12 +2496,12 @@ class TxLogTable:
         implementation reads only each side's non-shared files."""
         from pyspark.sql import functions as F
 
-        _va, files_old, dvs_old = self._replay_full(as_of=v_old)
-        _vb, files_new, dvs_new = self._replay_full(as_of=v_new)
+        old, new = self._snapshot(as_of=v_old), self._snapshot(as_of=v_new)
+        files_old, dvs_old = old.files, old.dvs
+        files_new, dvs_new = new.files, new.dvs
         # both sides read under v_new's schema: files predating an
         # evolution null-fill the added columns, so the change feed has
         # ONE schema and an update still cancels into its delete+insert
-        schema_new = self._schema_at(as_of=v_new)
         # a file live in BOTH versions whose deletion vector changed
         # holds row-level differences — read it on both sides (under
         # each side's DV state); files with identical DVs still cancel
@@ -2487,18 +2514,14 @@ class TxLogTable:
         only_old = sorted(set(files_old) - set(files_new)) + dv_changed
         only_new = sorted(set(files_new) - set(files_old)) + dv_changed
 
-        mapping_new = self._mapping_at(as_of=v_new)
-
         def _read(files: list[str], dvs: dict) -> DataFrame | None:
             if not files:
                 return None
-            return self._read_files(
-                files, schema_new, mapping=mapping_new, dvs=dvs
-            )
+            return self._read_files(files, new, dvs=dvs)
 
         old_df, new_df = _read(only_old, dvs_old), _read(only_new, dvs_new)
         if old_df is None and new_df is None:
-            return self.read().limit(0).withColumn("change_type", F.lit(""))
+            return self._empty(new).withColumn("change_type", F.lit(""))
         base = old_df if old_df is not None else new_df
         empty = base.limit(0)
         old_df = old_df if old_df is not None else empty
@@ -2540,7 +2563,8 @@ class TxLogTable:
         files null-fill evolved columns) so the feed has one schema.
         Data-unchanged commits (add_check, restore that alters nothing,
         vacuum audits) contribute no rows."""
-        latest = self.version()
+        head = self._snapshot()
+        latest = head.version
         to_version = latest if to_version is None else int(to_version)
         from_version = int(from_version)
         if not 0 <= from_version <= to_version <= latest:
@@ -2548,8 +2572,13 @@ class TxLogTable:
                 f"invalid change range [{from_version}, {to_version}] "
                 f"for table at version {latest}"
             )
-        schema = self._schema_at(as_of=to_version)
-        mp = self._mapping_at(as_of=to_version)
+        # a range ending below the oldest txlog commit (pre-adoption
+        # Delta history) has no txlog snapshot: the Delta feed's schema
+        if to_version == latest:
+            snap = head
+        else:
+            snap = self._snapshot(to_version) if to_version >= head.oldest else None
+        schema = snap.schema if snap is not None else None
         parts: list[DataFrame] = []
         # CONVERT FROM DELTA keeps ONE continuous version space: the
         # adoption commit sits at the foreign latest version, and every
@@ -2559,14 +2588,9 @@ class TxLogTable:
         # null-fills. The adoption commit itself is included there (its
         # txlog file-delta would be the full snapshot, which is NOT what
         # delta version N changed).
-        entries = sorted(
-            f for f in os.listdir(self.log_dir) if f.endswith(".json")
-        )
-        oldest = int(entries[0].split(".")[0]) if entries else 0
+        oldest = head.oldest
         if from_version <= oldest and oldest > 0:
-            with open(os.path.join(self.log_dir, entries[0])) as fh:
-                c0 = json.load(fh)
-            if c0.get("op") == "convert_delta":
+            if head.origin.get("op") == "convert_delta":
                 from .deltalog import read_delta_changes
 
                 dl = read_delta_changes(
@@ -2615,7 +2639,7 @@ class TxLogTable:
                 # the commit recorded its EXACT changes in a change-data
                 # sidecar: stream O(changed rows) and skip the file-delta
                 # diff AND the rewrite-noise netting entirely
-                parts.append(self._read_cdc(rec["cdc"], schema, mp, v))
+                parts.append(self._read_cdc(rec["cdc"], snap, v))
                 continue
             if op == "optimize":
                 # data-unchanged rewrite (Delta's dataChange=false): the
@@ -2627,14 +2651,12 @@ class TxLogTable:
             # carried BEFORE v — otherwise rows already deleted by an
             # earlier vector would be re-reported as fresh deletes
             ins = (
-                self._read_files(adds, schema, mapping=mp, dvs=rec["dv_added"])
+                self._read_files(adds, snap, dvs=rec["dv_added"])
                 if adds
                 else None
             )
             dels = (
-                self._read_files(
-                    removes, schema, mapping=mp, dvs=rec["dv_removed"]
-                )
+                self._read_files(removes, snap, dvs=rec["dv_removed"])
                 if removes
                 else None
             )
@@ -2682,7 +2704,7 @@ class TxLogTable:
                     if idx_df is None:
                         continue
                     parts.append(
-                        self._rows_at_indices(sorted(fs), idx_df, schema, mp)
+                        self._rows_at_indices(sorted(fs), idx_df, snap)
                         .withColumn("_change_type", F.lit(ct))
                         .withColumn("_commit_version", F.lit(v).cast("int"))
                     )
@@ -2698,7 +2720,7 @@ class TxLogTable:
                     [], StructType.fromJson(json.loads(schema))
                 )
             else:
-                base = self.read().limit(0)  # legacy log: no recorded schema
+                base = self._empty(snap)  # legacy log: no recorded schema
             return base.withColumn("_change_type", F.lit("")).withColumn(
                 "_commit_version", F.lit(0).cast("int")
             )
@@ -2714,13 +2736,17 @@ class TxLogTable:
         removes: list[str],
         op: str,
         extra: dict | None = None,
+        snap: Snapshot | None = None,
     ) -> None:
         """Atomically create commit ``version``; raise CommitConflict if a
         racing writer got there first (O_EXCL create is the arbiter).
-        ``extra`` carries commit-0-only table metadata (partition spec)."""
-        is_ckpt = op in (
-            "create", "convert", "convert_delta", "cleanup_log"
-        ) or (version % _CHECKPOINT_EVERY == 0 and version > 0)
+        ``extra`` carries the op's own payload; ``snap`` is the snapshot
+        at ``version - 1`` the op computed on (default: the latest)."""
+        if snap is None or snap.version != version - 1:
+            snap = self._base_snapshot()
+        is_ckpt = op in _COMMIT0_OPS + ("cleanup_log",) or (
+            version % _CHECKPOINT_EVERY == 0 and version > 0
+        )
         extra = dict(extra or {})
         # per-file statistics stamped at the commit that ADDS the file
         # (Delta's add.stats, one hop earlier than deriving them from
@@ -2741,100 +2767,6 @@ class TxLogTable:
                     st_map[f] = d
             if st_map:
                 extra["stats"] = st_map
-        if is_ckpt and op not in ("create", "convert", "convert_delta"):
-            # checkpoint commits carry the FULL post-commit file list AND
-            # the full post-commit deletion-vector state (so replays
-            # bootstrapping here need no earlier commit)
-            _v, live, dvstate = self._replay_full()
-            new_dvs = dict(dvstate)
-            for f in removes:
-                new_dvs.pop(f, None)
-            if extra.get("dvs_reset") is not None:
-                new_dvs = dict(extra.pop("dvs_reset"))
-            # keep the per-commit "dvs" delta alongside the full state:
-            # every fold reads dvs_state on checkpoints (the delta is
-            # inert there), but history()/DESCRIBE HISTORY/byte probes
-            # report a DV DML landing on a checkpoint boundary from it
-            new_dvs.update(extra.get("dvs") or {})
-            extra["dvs_state"] = new_dvs
-            # the stats fold mirrors the DV fold: full post-commit state
-            # on every checkpoint so bootstrapping folds (and cleanup_log
-            # truncation) never lose a retained file's envelope
-            new_stats = replay_stats(self.log_dir)
-            for f in removes:
-                new_stats.pop(f, None)
-            if extra.get("stats_reset") is not None:
-                new_stats = dict(extra.pop("stats_reset"))
-            new_stats.update(extra.get("stats") or {})
-            extra["stats_state"] = new_stats
-            adds = sorted((set(live) - set(removes)) | set(adds))
-            removes = []
-            # METADATA-COMPLETE checkpoints: also stamp the full
-            # post-commit schema / column mapping / CHECK set / partition
-            # spec / per-app streaming-txn high-waters, so every fold can
-            # bootstrap at this commit alone — the precondition for
-            # :meth:`cleanup_log` deleting the commits below it. setdefault
-            # keeps any state the op itself carries (restore's
-            # checks_reset, rename's column_mapping). The extra folds are
-            # O(commits) small-JSON reads ONCE per _CHECKPOINT_EVERY
-            # commits — same cost class as the _replay_full above.
-            if extra.get("schema") is None:
-                sj = self._schema_at()
-                if sj is not None:
-                    extra["schema"] = sj
-            if "column_mapping" not in extra:
-                m = self._mapping_at()
-                if m is not None:
-                    extra["column_mapping"] = m
-            if "checks_reset" not in extra:
-                cur_checks = self.checks()
-                ck = extra.get("check")
-                if ck and op == "add_check":
-                    cur_checks[ck["name"]] = ck["expr"]
-                elif ck and op == "drop_check":
-                    cur_checks.pop(ck["name"], None)
-                extra["checks_reset"] = cur_checks
-            if "properties_reset" not in extra:
-                # same lifecycle as checks_reset: the checkpoint snapshots
-                # the POST-commit property state (a set/unset landing on a
-                # checkpoint boundary folds its own delta in)
-                cur_props = self.properties()
-                for k, v in (extra.get("properties") or {}).items():
-                    if v is None:
-                        cur_props.pop(k, None)
-                    else:
-                        cur_props[k] = v
-                extra["properties_reset"] = cur_props
-            pby, pschema = self.partition_meta()
-            extra.setdefault("partition_by", pby)
-            extra.setdefault(
-                "partition_schema", pschema.json() if pby else None
-            )
-            txns = self._txns_state()
-            t = extra.get("txn")
-            if t is not None:
-                app, tv = str(t["appId"]), int(t["version"])
-                txns[app] = max(txns.get(app, tv), tv)
-            extra["txns_state"] = txns
-            if "clustering" not in extra:
-                # snapshot even the EMPTY list: an un-cluster commit
-                # truncated by cleanup must not let an older retained
-                # checkpoint's columns resurrect
-                extra["clustering"] = self.clustering_columns()
-            if "converted_from_iceberg" not in extra:
-                # the Iceberg-adoption marker must SURVIVE cleanup_log:
-                # it lives natively only in commit 0, and to_iceberg's
-                # refusal reads the retained log — if truncation lost
-                # it, a re-export would append txlog-version snapshots
-                # into the stale pre-adoption snapshot/sequence space.
-                # Every metadata-complete checkpoint therefore re-stamps
-                # it, and cleanup's horizon is always such a checkpoint,
-                # so the oldest retained commit carries it forever
-                # (induction: at stamping time the oldest retained
-                # commit is commit 0 or an earlier stamped checkpoint).
-                m = self._iceberg_adoption_marker()
-                if m is not None:
-                    extra["converted_from_iceberg"] = m
         # ---- row tracking (Delta rowTracking): baseRowId assignment ----
         # every ADDED file gets base = hw+1 and the watermark advances by
         # its row count (numRecords from the stats just stamped — zero
@@ -2847,53 +2779,36 @@ class TxLogTable:
         # Restore passes row_base_reset (the target version's bases, hw
         # clamped monotone); files it re-adds from a pre-enablement era
         # get fresh bases here.
-        _props_delta = extra.get("properties") or {}
-        _rt_switch = _props_delta.get("delta.enableRowTracking")
-        if _rt_switch is not None:
-            _rt_on = str(_rt_switch) == "true"
+        rt_switch = (extra.get("properties") or {}).get("delta.enableRowTracking")
+        if rt_switch is not None:
+            rt_on = str(rt_switch) == "true"
         elif extra.get("properties_reset") is not None:
-            _rt_on = (
-                extra["properties_reset"].get("delta.enableRowTracking")
-                == "true"
-            )
+            rt_on = extra["properties_reset"].get("delta.enableRowTracking") == "true"
         else:
-            _rt_on = (
-                version > 0
-                and self.properties().get("delta.enableRowTracking")
-                == "true"
-            )
-        if _rt_on:
-            bases, hw = self.row_tracking_meta()
+            rt_on = _row_tracking_on(snap)
+        if rt_on:
+            hw = snap.row_hw
             reset = extra.get("row_base_reset")
-            known = dict(reset) if reset is not None else bases
+            known = dict(reset) if reset is not None else snap.row_bases
             if reset is not None:
                 hw = max(hw, int(extra.get("row_hw", hw)))
             todo = [f for f in adds if f not in known]
-            if str(_rt_switch) == "true":
+            if str(rt_switch) == "true":
                 # enablement backfill: every live file lacking a base
-                _lv, live = self._replay()
-                todo += sorted(
-                    set(live) - set(removes) - set(adds) - set(known)
-                )
+                todo += sorted(snap.live - set(removes) - set(adds) - set(known))
             rb: dict[str, int] = {}
-            if todo:
-                stfold = None
-                for f in todo:
-                    n = (
-                        (extra.get("stats") or {}).get(f) or {}
-                    ).get("numRecords")
-                    if n is None:
-                        if stfold is None:
-                            stfold = replay_stats(self.log_dir)
-                        n = (stfold.get(f) or {}).get("numRecords")
-                    if n is None:
-                        import pyarrow.parquet as _pq
+            for f in todo:
+                n = ((extra.get("stats") or {}).get(f) or {}).get("numRecords")
+                if n is None:
+                    n = (snap.stats.get(f) or {}).get("numRecords")
+                if n is None:
+                    import pyarrow.parquet as _pq
 
-                        n = _pq.ParquetFile(
-                            os.path.join(self.path, f)
-                        ).metadata.num_rows
-                    rb[f] = hw + 1
-                    hw += int(n)
+                    n = _pq.ParquetFile(
+                        os.path.join(self.path, f)
+                    ).metadata.num_rows
+                rb[f] = hw + 1
+                hw += int(n)
             if reset is not None:
                 if rb:
                     extra["row_base_reset"] = {**reset, **rb}
@@ -2901,45 +2816,30 @@ class TxLogTable:
             elif rb:
                 extra["row_base"] = rb
                 extra["row_hw"] = hw
-            _rt_ckpt_bases: dict | None = (
-                {**bases, **(dict(reset) if reset else {}), **rb}
-                if is_ckpt
-                else None
+        if is_ckpt and op not in _COMMIT0_OPS:
+            # METADATA-COMPLETE checkpoint: the snapshot AFTER this
+            # commit, serialized — full file list, DV and stats state,
+            # schema, mapping, CHECK set, properties, partition spec,
+            # txn high-waters, row-tracking state, clustering — so every
+            # fold can bootstrap here alone (the precondition for
+            # cleanup_log truncating below it). The per-commit deltas
+            # stay alongside (history()/DESCRIBE HISTORY report a DV DML
+            # or a set_properties landing on a checkpoint from them);
+            # the resets are folded into the state.
+            post = snap.apply(
+                self.log_dir,
+                version,
+                {"op": op, "adds": adds, "removes": removes, **extra},
             )
-            _rt_ckpt_hw = hw
-        elif is_ckpt:
-            # property currently FALSE but state may exist: row-tracking
-            # state persists on every metadata-complete checkpoint once
-            # it exists, independent of the live property — otherwise
-            # cleanup_log could truncate every commit holding the
-            # watermark, and a later re-enable would backfill from hw=-1
-            # while optimized files still hold old materialized
-            # _rt_row_id values (duplicate ids; watermark monotonicity
-            # silently lost). Review finding, round 11.
-            _ck_bases, _ck_hw = self.row_tracking_meta()
-            _ck_reset = extra.get("row_base_reset")
-            if _ck_reset is not None:
-                _ck_bases = dict(_ck_reset)
-                _ck_hw = max(_ck_hw, int(extra.get("row_hw", _ck_hw)))
-            if _ck_hw >= 0 or _ck_bases:
-                _rt_ckpt_bases = dict(_ck_bases)
-                _rt_ckpt_hw = _ck_hw
-            else:
-                _rt_ckpt_bases = None
-        else:
-            _rt_ckpt_bases = None
-        if is_ckpt and _rt_ckpt_bases is not None:
-            # full-state snapshot for live files, so the fold (and
-            # cleanup_log truncation) never loses a retained file's
-            # base — same lifecycle as dvs_state/stats_state
-            extra["row_base_state"] = {
-                f: _rt_ckpt_bases[f] for f in adds if f in _rt_ckpt_bases
-            }
-            extra["row_hw"] = _rt_ckpt_hw
+            extra.pop("dvs_reset", None)
+            extra.pop("stats_reset", None)
+            full = post.checkpoint_fields()
+            adds, removes = full.pop("adds"), full.pop("removes")
+            extra.update(full)
         ckpt_sidecar: str | None = None
         if (
             is_ckpt
-            and op not in ("create", "convert", "convert_delta")
+            and op not in _COMMIT0_OPS
             and len(adds) >= self.ckpt_sidecar_min_files
         ):
             # huge live-file count: the full list + DV state go to a
@@ -3040,7 +2940,11 @@ class TxLogTable:
         ``cdc`` names a change-data sidecar (``_cdc/...parquet``) holding
         this commit's EXACT row-level changes (the public Delta CDF
         ``_change_data`` design) — feed readers use it instead of
-        diffing the commit's file delta."""
+        diffing the commit's file delta. ``stats`` carries pre-computed
+        per-add stats entries (optimize's clustering tag rides here).
+        One snapshot serves the gate below and the commit payload — a
+        cache hit when the caller's attempt just took it."""
+        snap = self._base_snapshot()
         # Delta's delta.appendOnly contract, enforced at the protocol
         # chokepoint exactly as Delta does: a DML/MERGE commit that
         # retires files or grows deletion vectors is refused; appends,
@@ -3049,7 +2953,7 @@ class TxLogTable:
         if (
             (removes or dvs)
             and op in ("delete", "update", "merge")
-            and self.properties().get("delta.appendOnly") == "true"
+            and snap.properties.get("delta.appendOnly") == "true"
         ):
             raise ValueError(
                 f"{op} refused: it would remove or modify rows and the "
@@ -3068,93 +2972,23 @@ class TxLogTable:
         if cdc is not None:
             extra["cdc"] = cdc
         if stats is not None:
-            # pre-computed per-add stats entries (optimize's clustering
-            # tag rides here) — _try_commit trusts supplied entries and
-            # footer-fills only the missing files
+            # _try_commit trusts supplied entries and footer-fills only
+            # the missing files
             extra["stats"] = stats
         self._try_commit(
-            base_version + 1, adds, removes, op, extra=extra or None
+            base_version + 1, adds, removes, op, extra=extra or None, snap=snap
         )
         return base_version + 1
 
     def last_txn_version(self, app_id: str) -> int | None:
         """The highest streaming-transaction ``version`` committed for
         ``app_id``, or None — Delta's idempotent-writes contract: a sink
-        must skip any batch whose id is <= this. O(commits) small-JSON
-        reads, the same cost class as :meth:`_replay`."""
+        must skip any batch whose id is <= this. Checkpoints carry the
+        high-waters, so the answer survives :meth:`cleanup_log`."""
         try:
-            return self._latest_and_txn(app_id)[1]
+            return self._snapshot().txns.get(str(app_id))
         except FileNotFoundError:
             return None
-
-    def _iceberg_adoption_marker(self) -> dict | None:
-        """``converted_from_iceberg`` payload from the OLDEST retained
-        commit, or None. Commit 0 carries it natively on an adopted
-        table; every metadata-complete checkpoint re-stamps it
-        (:meth:`_try_commit`), and :meth:`cleanup_log`'s horizon is
-        always such a checkpoint — so one oldest-commit read answers
-        "was this table adopted?" even after arbitrary truncation."""
-        names = sorted(
-            f for f in os.listdir(self.log_dir) if f.endswith(".json")
-        )
-        if not names:
-            return None
-        with open(os.path.join(self.log_dir, names[0])) as fh:
-            return json.load(fh).get("converted_from_iceberg")
-
-    def _txns_state(self) -> dict[str, int]:
-        """Per-app streaming-transaction high-water marks (appId -> max
-        committed txn version) folded over the retained log: checkpoint
-        commits' ``txns_state`` snapshots plus every commit's own ``txn``
-        marker — so the fold survives :meth:`cleanup_log` truncating the
-        commits the markers originally rode on."""
-        out: dict[str, int] = {}
-        for name in sorted(
-            f for f in os.listdir(self.log_dir) if f.endswith(".json")
-        ):
-            with open(os.path.join(self.log_dir, name)) as fh:
-                c = json.load(fh)
-            for app, v in (c.get("txns_state") or {}).items():
-                out[app] = max(out.get(app, int(v)), int(v))
-            t = c.get("txn")
-            if t and t.get("appId") is not None:
-                app, v = str(t["appId"]), int(t["version"])
-                out[app] = max(out.get(app, v), v)
-        return out
-
-    def _latest_and_txn(
-        self, app_id: str | None
-    ) -> tuple[int, int | None]:
-        """(latest committed version, highest txn version for ``app_id``)
-        in ONE directory pass — the latest version is the max commit
-        number (no file opened for it), and the txn scan opens each
-        commit json once (checkpoint ``txns_state`` snapshots included,
-        so the answer survives log cleanup). ``app_id=None`` skips the
-        txn scan entirely, so a plain append's per-attempt log cost is
-        one listdir. A streaming sink calling this per micro-batch on a
-        long log pays one small-JSON pass instead of the three full
-        scans the naive version() + last_txn_version() + version()
-        sequence costs."""
-        entries = sorted(
-            f for f in os.listdir(self.log_dir) if f.endswith(".json")
-        )
-        if not entries:
-            raise FileNotFoundError(f"no commits in {self.log_dir}")
-        latest = int(entries[-1].split(".")[0])
-        best: int | None = None
-        if app_id is not None:
-            for name in entries:
-                with open(os.path.join(self.log_dir, name)) as fh:
-                    c = json.load(fh)
-                t = c.get("txn")
-                if t and t.get("appId") == app_id:
-                    v = int(t["version"])
-                    best = v if best is None else max(best, v)
-                ts = c.get("txns_state") or {}
-                if app_id in ts:
-                    v = int(ts[app_id])
-                    best = v if best is None else max(best, v)
-        return latest, best
 
     def append(
         self,
@@ -3173,7 +3007,8 @@ class TxLogTable:
         idempotent (unlike a keyed upsert). The idempotency re-check runs
         inside the retry loop, so two racing instances of the same batch
         cannot both land."""
-        schema_json = self._schema_at()
+        snap = self._snapshot()
+        schema_json = snap.schema
         if schema_json is not None:
             from pyspark.sql.types import StructType
 
@@ -3190,8 +3025,8 @@ class TxLogTable:
             # stored value always re-validates against the stored
             # sources); supplied values pass through and the _write_data
             # chokepoint validates them against the expression
-            gen = self.generated_exprs()
-            ident = self.identity_meta()
+            gen = _generated_of(schema_json)
+            ident = _identity_of(schema_json)
             supplied = sorted(set(ident) & set(df.columns))
             if supplied:
                 raise ValueError(
@@ -3231,10 +3066,11 @@ class TxLogTable:
             # (or capturing at commit time) leaves a window where a
             # racing instance of the SAME batch commits between our check
             # and our commit at the next version: no collision, double
-            # append. One directory pass serves both lookups.
-            base_version, last = self._latest_and_txn(
-                txn[0] if txn is not None else None
-            )
+            # append. One snapshot serves both lookups.
+            if _attempt:
+                snap = self._snapshot()
+            base_version = snap.version
+            last = snap.txns.get(str(txn[0])) if txn is not None else None
             if txn is not None and last is not None and txn[1] <= last:
                 # replayed batch: already committed (possibly by a
                 # racing instance mid-retry) — drop our files, no-op
@@ -3246,7 +3082,7 @@ class TxLogTable:
                 # watermark after our values were assigned, committing
                 # them would duplicate ids — drop the staged files and
                 # reassign beyond the NEW watermark
-                cur_ident = self.identity_meta()
+                cur_ident = _identity_of(snap.schema)
                 if any(
                     cur_ident.get(c, m)["hw"] != m["hw"]
                     for c, m in ident.items()
@@ -3259,8 +3095,8 @@ class TxLogTable:
                         *df.columns
                     )
             if adds is None:
-                validated = self.checks()
-                adds = self._write_data(df, _checks=validated)
+                validated = snap.checks
+                adds = self._write_data(df, snap, _checks=validated)
                 if ident:
                     ident_hws = self._identity_new_hw(adds, ident)
             else:
@@ -3270,16 +3106,14 @@ class TxLogTable:
                 # the old set would commit over a live constraint the
                 # add_check's own existing-row scan could not see (our
                 # staged files were invisible to it)
-                current = self.checks()
+                current = snap.checks
                 if current != validated:
                     fresh = {
                         n: e
                         for n, e in current.items()
                         if validated is None or validated.get(n) != e
                     }
-                    self._enforce_checks(
-                        adds, fresh, self.partition_meta()[0]
-                    )
+                    self._enforce_checks(adds, fresh, snap)
                     validated = current
             try:
                 # record the schema CURRENT at this attempt, not the one
@@ -3287,7 +3121,7 @@ class TxLogTable:
                 # we retried, recording the pre-evolution schema here
                 # would silently roll the evolution back (our old-shape
                 # files are still legal — they null-fill the new column)
-                commit_schema = self._schema_at()
+                commit_schema = snap.schema
                 if ident_hws and commit_schema is not None:
                     commit_schema = _identity_hw_update(
                         commit_schema, ident_hws
@@ -3363,6 +3197,7 @@ class TxLogTable:
         ``zorder_by`` always rewrites its whole selection too."""
         from pyspark.sql import functions as F
 
+        state = self._snapshot()
         if full:
             # Delta's OPTIMIZE ... FULL contract: it IS the clustered
             # table's global maintenance pass — meaningless without
@@ -3374,19 +3209,19 @@ class TxLogTable:
                     "full=True applies to the bare clustered maintenance "
                     "pass — it cannot combine with zorder_by"
                 )
-            if not self.clustering_columns():
+            if not state.clustering:
                 raise ValueError(
                     "OPTIMIZE FULL requires a clustered table "
                     "(cluster_by first)"
                 )
-        base_version, base_files, dvs = self._replay_full()
+        base_version, base_files, dvs = state.version, state.files, state.dvs
         if prune is not None:
-            files = self._prune_files(base_files, *prune)
+            files = self._prune_files(base_files, *prune, snap=state)
             if not files:
                 return base_version  # nothing overlaps: no-op, no commit
         else:
             files = base_files
-        cl_cols = self.clustering_columns()
+        cl_cols = list(state.clustering)
         cl_tag: list[str] | None = None
         if zorder_by is None and cl_cols:
             # clustered table (cluster_by): OPTIMIZE re-clusters along
@@ -3402,11 +3237,10 @@ class TxLogTable:
                 # (checkpoint/restore/clone lifecycle for free; the
                 # Delta export derives add.stats from footers, so the
                 # engine-internal key never leaks to external readers).
-                stfold = replay_stats(self.log_dir)
                 files = [
                     f
                     for f in files
-                    if (stfold.get(f) or {}).get("clusteredBy") != cl_cols
+                    if (state.stats.get(f) or {}).get("clusteredBy") != cl_cols
                 ]
                 if not files:
                     return base_version  # fully clustered: no-op
@@ -3416,7 +3250,7 @@ class TxLogTable:
             # explicit ZORDER BY along the clustering columns still
             # counts as a clustering pass for later incremental runs
             cl_tag = list(cl_cols)
-        rt_on = files and self.row_tracking_enabled()
+        rt_on = files and _row_tracking_on(state)
         if rt_on:
             # row tracking: the rewrite MATERIALIZES every row's stable
             # id into the _rt_row_id physical column (_rt_cow_read) —
@@ -3424,18 +3258,18 @@ class TxLogTable:
             # metadata-derived form alone cannot survive it. The column
             # is physical-only: the recorded schema is unchanged and
             # plain reads never see it.
-            snap = self._rt_cow_read(files, self._schema_at(), dvs)
+            rows = self._rt_cow_read(files, state)
         else:
-            snap = (
-                self._read_files(files, self._schema_at(), dvs=dvs)
+            rows = (
+                self._read_files(files, state, dvs=dvs)
                 if files
-                else self._empty()
+                else self._empty(state)
             )
         if zorder_by:
             from .maintenance import zvalue
 
-            pby, _ = self.partition_meta()
-            absent = [c for c in zorder_by if c not in snap.columns]
+            pby, _ = state.partition()
+            absent = [c for c in zorder_by if c not in rows.columns]
             if absent:
                 raise ValueError(f"zorder_by columns absent from table: {absent}")
             bad = [c for c in zorder_by if c in pby]
@@ -3446,7 +3280,7 @@ class TxLogTable:
                 )
             bits = min(16, 62 // max(len(zorder_by), 1))
             grid = (1 << bits) - 1
-            dtypes = dict(snap.dtypes)
+            dtypes = dict(rows.dtypes)
 
             def _to_long(c: str):
                 t = dtypes[c]
@@ -3483,7 +3317,7 @@ class TxLogTable:
             aggs = []
             for c in zorder_by:
                 aggs += [F.min(longs[c]).alias(f"__lo_{c}"), F.max(longs[c]).alias(f"__hi_{c}")]
-            row = snap.agg(*aggs).collect()[0]
+            row = rows.agg(*aggs).collect()[0]
             quantized = []
             for c in zorder_by:
                 lo, hi = row[f"__lo_{c}"], row[f"__hi_{c}"]
@@ -3499,16 +3333,16 @@ class TxLogTable:
                     )
             z = zvalue(quantized, bits=bits)
             keys = [F.col(c) for c in pby] + [F.col("__z")]
-            snap = (
-                snap.withColumn("__z", z)
+            rows = (
+                rows.withColumn("__z", z)
                 .repartitionByRange(target_files, *keys)
                 .sortWithinPartitions(*keys)
                 .drop("__z")
             )
         else:
-            snap = snap.coalesce(target_files)
+            rows = rows.coalesce(target_files)
         # logical no-op: rows unchanged, every CHECK already holds
-        adds = self._write_data(snap, _validate=False)
+        adds = self._write_data(rows, state, _validate=False)
         stats = None
         if cl_tag is not None and adds:
             # stamp the clustering tag alongside the normal footer stats
@@ -3525,9 +3359,10 @@ class TxLogTable:
             # removal) — _rebase_always skips the property gate; a busy
             # ingest stream no longer forces the whole rewrite to rerun
             return self._commit_dml(
+                state,
                 _rebase_always=True,
-                adds=adds, removes=files, base_version=base_version,
-                op="optimize", schema=self._schema_at() or snap.schema.json(),
+                adds=adds, removes=files,
+                op="optimize", schema=state.schema or rows.schema.json(),
                 stats=stats,
             )
         except CommitConflict:
@@ -3558,9 +3393,8 @@ class TxLogTable:
         version = int(version)
         if not 0 <= version <= self.version():
             raise ValueError(f"version {version} does not exist")
-        _v, want, want_dvs = self._replay_full(as_of=version)
-        schema = self._schema_at(as_of=version)
-        target_checks = self.checks(as_of=version)
+        tgt = self._snapshot(as_of=version)
+        want, want_dvs = tgt.files, tgt.dvs
         # DV sidecars the target version reads through must exist too
         want_with_sidecars = sorted(
             set(want) | {d["sidecar"] for d in want_dvs.values()}
@@ -3583,48 +3417,45 @@ class TxLogTable:
                     f"cannot restore to version {version}: {len(gone)} of "
                     f"its files were vacuumed (first: {gone[0]})"
                 )
-            base_version, live = self._replay()
-            adds = sorted(set(want) - set(live))
-            removes = sorted(set(live) - set(want))
+            cur = self._snapshot()
+            adds = sorted(tgt.live - cur.live)
+            removes = sorted(cur.live - tgt.live)
             # deletion-vector state reverts wholesale with the file set
             # ({} = explicit no-DVs) — rows a later DV deleted resurrect;
             # per-file stats revert the same way (re-added old files get
             # their original envelopes back without a footer re-read)
             extra: dict = {
-                "checks_reset": target_checks,
-                "dvs_reset": want_dvs,
-                "stats_reset": replay_stats(self.log_dir, as_of=version),
+                "checks_reset": dict(tgt.checks),
+                "dvs_reset": dict(want_dvs),
+                "stats_reset": dict(tgt.stats),
                 # table properties revert with the rest of the metadata
                 # (Delta RESTORE restores table configuration too)
-                "properties_reset": self.properties(as_of=version),
+                "properties_reset": dict(tgt.properties),
+                "clustering": list(tgt.clustering),
             }
             # row-tracking bases revert with the file set — a re-added
             # file's rows get their ORIGINAL ids back — but the watermark
             # stays monotone across the restore (Delta's rule: ids
             # assigned after the target version are never reused)
-            extra["clustering"] = self.clustering_columns(as_of=version)
-            tgt_bases, tgt_hw = self.row_tracking_meta(as_of=version)
-            _cb, cur_hw = self.row_tracking_meta()
-            if tgt_hw >= 0 or cur_hw >= 0:
+            if tgt.row_hw >= 0 or cur.row_hw >= 0:
                 extra["row_base_reset"] = {
-                    f: tgt_bases[f] for f in want if f in tgt_bases
+                    f: tgt.row_bases[f] for f in want if f in tgt.row_bases
                 }
-                extra["row_hw"] = max(tgt_hw, cur_hw)
-            if schema is not None:
-                extra["schema"] = schema
+                extra["row_hw"] = max(tgt.row_hw, cur.row_hw)
+            if tgt.schema is not None:
+                extra["schema"] = tgt.schema
             # the column mapping reverts with the schema ({} = explicit
             # identity, for a restore to a pre-mapping version); only
             # recorded when it actually differs, so never-mapped tables
             # stay out of mapping mode
-            tgt_map = self._mapping_at(as_of=version)
-            if self._mapping_at() != tgt_map:
-                extra["column_mapping"] = tgt_map or {}
+            if cur.mapping != tgt.mapping:
+                extra["column_mapping"] = tgt.mapping or {}
             try:
                 self._try_commit(
-                    base_version + 1, adds=adds, removes=removes,
-                    op="restore", extra=extra,
+                    cur.version + 1, adds=adds, removes=removes,
+                    op="restore", extra=extra, snap=cur,
                 )
-                return base_version + 1
+                return cur.version + 1
             except CommitConflict:
                 continue
         raise CommitConflict(f"restore gave up after {max_retries} retries")
@@ -3652,14 +3483,11 @@ class TxLogTable:
         import shutil
 
         dest = TxLogTable(self.spark, dest_path)
-        version, files, clone_dvs = self._replay_full()
-        # all metadata pinned to the SAME captured version: a writer
-        # committing between the replay and these reads must not
-        # produce a torn clone (v files under v+1 schema/checks/mapping)
-        schema_json = self._schema_at(as_of=version)
-        clone_checks = self.checks(as_of=version)
-        clone_mapping = self._mapping_at(as_of=version)
-        pby, pschema = self.partition_meta()
+        # all metadata from ONE snapshot: a writer committing meanwhile
+        # cannot produce a torn clone (v files under v+1 schema/checks)
+        state = self._snapshot()
+        version, files, clone_dvs = state.version, state.files, dict(state.dvs)
+        pby, pschema = state.partition()
         os.makedirs(dest.log_dir, exist_ok=False)  # loudly refuse overwrite
         # deletion-vector sidecars travel with the data files (paths in
         # descriptors are table-relative, so they stay valid)
@@ -3672,15 +3500,9 @@ class TxLogTable:
                 os.link(src, dst)
             except OSError:
                 shutil.copy2(src, dst)  # cross-device fallback
-        dest._pmeta = (pby, pschema)
         # stats carry over by reference (files are the same bytes) —
         # commit 0 re-records them without re-reading any footer
-        fset = set(files)
-        clone_stats = {
-            f: s
-            for f, s in replay_stats(self.log_dir, as_of=version).items()
-            if f in fset
-        }
+        clone_stats = {f: s for f, s in state.stats.items() if f in state.live}
         # row-tracking state carries over BY VALUE: the files are the
         # same bytes, so their materialized _rt_row_id columns hold the
         # SOURCE's ids — re-assigning fresh bases at commit 0 would mix
@@ -3688,15 +3510,14 @@ class TxLogTable:
         # collide with freshly-derived ones). Carrying bases + watermark
         # keeps every id identical to the source and fences the clone's
         # future appends beyond them.
-        rt_bases, rt_hw = self.row_tracking_meta(as_of=version)
         clone_rt = (
             {
                 "row_base_reset": {
-                    f: rt_bases[f] for f in files if f in rt_bases
+                    f: state.row_bases[f] for f in files if f in state.row_bases
                 },
-                "row_hw": rt_hw,
+                "row_hw": state.row_hw,
             }
-            if rt_hw >= 0
+            if state.row_hw >= 0
             else {}
         )
         dest._try_commit(
@@ -3709,15 +3530,15 @@ class TxLogTable:
                 **clone_rt,
                 "partition_by": pby,
                 "partition_schema": pschema.json() if pby else None,
-                "schema": schema_json,
-                "checks_reset": clone_checks,
-                "properties_reset": self.properties(as_of=version),
+                "schema": state.schema,
+                "checks_reset": dict(state.checks),
+                "properties_reset": dict(state.properties),
                 **({"dvs": clone_dvs} if clone_dvs else {}),
                 # a column-mapped source's files carry physical names —
                 # the clone must read them under the same mapping
                 **(
-                    {"column_mapping": clone_mapping}
-                    if clone_mapping is not None
+                    {"column_mapping": state.mapping}
+                    if state.mapping is not None
                     else {}
                 ),
                 "cloned_from": {"path": self.path, "version": version},
@@ -3788,49 +3609,8 @@ class TxLogTable:
         (default: latest) — add_check/drop_check commits folded in
         version order, bootstrapped by any ``checks_reset`` snapshot
         (restore commits and metadata-complete checkpoints carry one, so
-        the fold survives log cleanup). {} mid-create (no commit yet)."""
-        entries = sorted(
-            f for f in os.listdir(self.log_dir) if f.endswith(".json")
-        )
-        if not entries:
-            return {}
-        out: dict[str, str] = {}
-        for name in entries:
-            v = int(name.split(".")[0])
-            if as_of is not None and v > as_of:
-                continue
-            with open(os.path.join(self.log_dir, name)) as fh:
-                c = json.load(fh)
-            cr = c.get("checks_reset")
-            if cr is not None:
-                # restore commit: the constraint set reverts wholesale to
-                # the restored version's (mirrors Delta RESTORE restoring
-                # table metadata, not just the file set)
-                out = dict(cr)
-                continue
-            ck = c.get("check")
-            if not ck:
-                continue
-            if c.get("op") == "add_check":
-                out[ck["name"]] = ck["expr"]
-            elif c.get("op") == "drop_check":
-                out.pop(ck["name"], None)
-        return out
-
-    def _gen_recompute(self, assignments) -> dict[str, str]:
-        """Generated columns an UPDATE must RECOMPUTE: those not assigned
-        explicitly whose generation expression references an assigned
-        column (word-boundary match — the same reference test the
-        rename/drop guards use)."""
-        assigned = set(assignments)
-        return {
-            g: e
-            for g, e in self.generated_exprs().items()
-            if g not in assigned
-            and any(
-                re.search(rf"\b{re.escape(c)}\b", e) for c in assigned
-            )
-        }
+        the fold survives log cleanup)."""
+        return dict(self._snapshot(as_of).checks)
 
     def identity_meta(self, as_of: int | None = None) -> dict[str, dict]:
         """Identity columns (name -> {start, step, hw}) at ``as_of``,
@@ -3838,25 +3618,7 @@ class TxLogTable:
         ``hw`` is the high watermark (None before the first assignment);
         like generation expressions, the schema fold carries identity
         state through evolution, restore, checkpoints, and adoption."""
-        sj = self._schema_at(as_of)
-        if sj is None:
-            return {}
-        from pyspark.sql.types import StructType
-
-        out: dict[str, dict] = {}
-        for f in StructType.fromJson(json.loads(sj)).fields:
-            md = f.metadata or {}
-            if "delta.identity.start" in md:
-                out[f.name] = {
-                    "start": int(md["delta.identity.start"]),
-                    "step": int(md["delta.identity.step"]),
-                    "hw": (
-                        int(md["delta.identity.highWaterMark"])
-                        if "delta.identity.highWaterMark" in md
-                        else None
-                    ),
-                }
-        return out
+        return _identity_of(self._snapshot(as_of).schema)
 
     @staticmethod
     def _assign_identity(df: DataFrame, meta: dict[str, dict]) -> DataFrame:
@@ -3906,10 +3668,7 @@ class TxLogTable:
     # ------------------------------------------------------- row tracking
 
     def row_tracking_enabled(self, as_of: int | None = None) -> bool:
-        return (
-            self.properties(as_of=as_of).get("delta.enableRowTracking")
-            == "true"
-        )
+        return _row_tracking_on(self._snapshot(as_of))
 
     def row_tracking_meta(
         self, as_of: int | None = None
@@ -3918,63 +3677,15 @@ class TxLogTable:
         high_watermark)`` — Delta's rowTracking representation. A file's
         base row id is assigned by the commit that ADDS it (or by the
         property commit's backfill); a fresh row's id is ``base +
-        in-file row index`` — METADATA-derived, zero data writes.
-        Ascending fold: bootstrap at the newest ``row_base_state``
-        snapshot (checkpoint commits carry one, so the fold survives
-        :meth:`cleanup_log`), then apply ``row_base_reset`` replacements
-        (restore) and per-commit ``row_base`` deltas; the watermark is
-        monotone (max recorded ``row_hw``) — it never regresses, even
-        across restore, Delta's own rule.
+        in-file row index`` — METADATA-derived, zero data writes. The
+        fold: checkpoints carry ``row_base_state``, ``row_base_reset``
+        (restore) replaces the bases, ``row_base`` deltas add to them;
+        the watermark is monotone (max recorded ``row_hw``) — it never
+        regresses, even across restore, Delta's own rule."""
+        s = self._snapshot(as_of)
+        return dict(s.row_bases), s.row_hw
 
-        Latest-head fold is CACHED per instance (same head-keyed scheme
-        as :meth:`properties`): checkpoint commits re-fold this on
-        every table — including tables that never enabled tracking —
-        so an uncached fold would charge an O(retained commits) JSON
-        walk to every 20th append of every table (review finding,
-        round 12). Callers must treat the returned map as read-only."""
-        names = sorted(
-            f for f in os.listdir(self.log_dir) if f.endswith(".json")
-        )
-        if as_of is None and names:
-            head = int(names[-1].split(".")[0])
-            cached = getattr(self, "_rt_meta_cache", None)
-            if cached is not None and cached[0] == head:
-                return cached[1]
-        recs: list[dict] = []
-        for name in names:
-            v = int(name.split(".")[0])
-            if as_of is not None and v > as_of:
-                continue
-            with open(os.path.join(self.log_dir, name)) as fh:
-                recs.append(json.load(fh))
-        bases: dict[str, int] = {}
-        hw = -1
-        start = 0
-        for i in range(len(recs) - 1, -1, -1):
-            if recs[i].get("row_base_state") is not None:
-                bases = {
-                    str(k): int(x)
-                    for k, x in recs[i]["row_base_state"].items()
-                }
-                hw = int(recs[i].get("row_hw", -1))
-                start = i + 1
-                break
-        for c in recs[start:]:
-            if c.get("row_base_reset") is not None:
-                bases = {
-                    str(k): int(x) for k, x in c["row_base_reset"].items()
-                }
-            if c.get("row_base"):
-                bases.update(
-                    {str(k): int(x) for k, x in c["row_base"].items()}
-                )
-            if c.get("row_hw") is not None:
-                hw = max(hw, int(c["row_hw"]))
-        if as_of is None and names:
-            self._rt_meta_cache = (int(names[-1].split(".")[0]), (bases, hw))
-        return bases, hw
-
-    def _rt_cow_read(self, files: list[str], schema_json, dvs) -> DataFrame:
+    def _rt_cow_read(self, files: list[str], snap: Snapshot) -> DataFrame:
         """Touched-file read for a COPY-ON-WRITE rewrite on a
         row-tracking table: every row comes back carrying its CONCRETE
         stable id as an ordinary column (``_rt_row_id`` — materialized
@@ -3989,11 +3700,10 @@ class TxLogTable:
         numbering."""
         from pyspark.sql.types import LongType, StructField
 
-        bases, _rhw = self.row_tracking_meta()
         scan = self._scan_with_filepath(
             files,
-            schema_json,
-            dvs=dvs,
+            snap,
+            dvs=snap.dvs,
             extra_fields=[StructField(_ROW_ID_PHYS, LongType(), True)],
         )
         data_cols = [
@@ -4001,7 +3711,7 @@ class TxLogTable:
             for c in scan.columns
             if c not in ("__file", "__ridx", _ROW_ID_PHYS)
         ]
-        return self._rt_attach(scan, files, bases, _ROW_ID_PHYS).select(
+        return self._rt_attach(scan, files, snap.row_bases, _ROW_ID_PHYS).select(
             *data_cols, _ROW_ID_PHYS
         )
 
@@ -4066,30 +3776,29 @@ class TxLogTable:
         identity columns."""
         from pyspark.sql.types import LongType, StructField, StructType
 
-        if not self.row_tracking_enabled(as_of):
+        snap = self._snapshot(as_of)
+        if not _row_tracking_on(snap):
             raise ValueError(
                 "row tracking is not enabled — ALTER TABLE SET "
                 "TBLPROPERTIES ('delta.enableRowTracking'='true') first "
                 "(the property commit backfills existing files)"
             )
-        _v, files, dvs = self._replay_full(as_of=as_of)
-        schema_json = self._schema_at(as_of)
+        files = snap.files
         data_cols = [
             f.name
-            for f in StructType.fromJson(json.loads(schema_json)).fields
+            for f in StructType.fromJson(json.loads(snap.schema)).fields
         ]
         if not files:
-            return self._empty().withColumn(
+            return self._empty(snap).withColumn(
                 "_row_id", F.lit(None).cast("long")
             )
-        bases, _hw = self.row_tracking_meta(as_of=as_of)
         scan = self._scan_with_filepath(
             files,
-            schema_json,
-            dvs=dvs,
+            snap,
+            dvs=snap.dvs,
             extra_fields=[StructField(_ROW_ID_PHYS, LongType(), True)],
         )
-        return self._rt_attach(scan, files, bases, "_row_id").select(
+        return self._rt_attach(scan, files, snap.row_bases, "_row_id").select(
             *data_cols, "_row_id"
         )
 
@@ -4099,16 +3808,7 @@ class TxLogTable:
         field metadata — the schema fold already survives evolution,
         restore, checkpoints, and adoption, so generation needs no fold
         of its own. {} for tables without generated columns."""
-        sj = self._schema_at(as_of)
-        if sj is None:
-            return {}
-        from pyspark.sql.types import StructType
-
-        return {
-            f.name: (f.metadata or {})["delta.generationExpression"]
-            for f in StructType.fromJson(json.loads(sj)).fields
-            if "delta.generationExpression" in (f.metadata or {})
-        }
+        return _generated_of(self._snapshot(as_of).schema)
 
     def add_check(self, name: str, expr: str, max_retries: int = 3) -> int:
         """``ALTER TABLE ADD CONSTRAINT name CHECK (expr)`` (Delta's
@@ -4129,9 +3829,10 @@ class TxLogTable:
             # which re-validates. Validating once up front leaves a
             # window where a concurrent append commits rows the scan
             # never saw and the constraint is born already-violated.
-            base_version = self.version()
+            snap = self._snapshot()
+            base_version = snap.version
             bad = (
-                self.read()
+                self._rows(snap)
                 .filter(~F.coalesce(F.expr(expr), F.lit(True)))
                 .limit(1)
                 .count()
@@ -4166,8 +3867,8 @@ class TxLogTable:
             dtype = _parse_datatype_string(dtype)
         for _attempt in range(max_retries + 1):
             # payload recomputed per attempt — see rename_column
-            base_version = self.version()
-            schema_json = self._schema_at()
+            snap = self._snapshot()
+            base_version, schema_json = snap.version, snap.schema
             if schema_json is None:
                 raise ValueError(
                     "add_column requires a recorded schema (legacy log: "
@@ -4177,7 +3878,7 @@ class TxLogTable:
             if name in schema.fieldNames():
                 raise ValueError(f"column {name!r} already exists")
             extra: dict = {"schema": schema.add(name, dtype, nullable=True).json()}
-            mapping = self._mapping_at()
+            mapping = snap.mapping
             if mapping:
                 # column-mapping mode (a rename/drop happened): the new
                 # column writes under a FRESH physical name — if it
@@ -4222,8 +3923,8 @@ class TxLogTable:
 
         cols = [str(c) for c in cols]
         for _attempt in range(max_retries + 1):
-            base_version = self.version()
-            sj = self._schema_at()
+            snap = self._snapshot()
+            base_version, sj = snap.version, snap.schema
             if sj is None:
                 raise ValueError("cluster_by requires a recorded schema")
             names = StructType.fromJson(json.loads(sj)).fieldNames()
@@ -4232,7 +3933,7 @@ class TxLogTable:
                 raise ValueError(
                     f"clustering column(s) {missing} absent from table"
                 )
-            pby, _ps = self.partition_meta()
+            pby, _ps = snap.partition()
             if pby and cols:
                 raise ValueError(
                     "cluster_by refused: the table is partitioned by "
@@ -4260,20 +3961,7 @@ class TxLogTable:
         newest commit carrying a ``clustering`` payload (latest-wins,
         the schema fold's lifecycle: metadata-complete checkpoints
         snapshot it, so the fold survives log cleanup)."""
-        best: tuple[int, list] | None = None
-        for name in os.listdir(self.log_dir):
-            if not name.endswith(".json"):
-                continue
-            v = int(name.split(".")[0])
-            if as_of is not None and v > as_of:
-                continue
-            if best is not None and v < best[0]:
-                continue
-            with open(os.path.join(self.log_dir, name)) as fh:
-                c = json.load(fh)
-            if c.get("clustering") is not None:
-                best = (v, list(c["clustering"]))
-        return best[1] if best else []
+        return list(self._snapshot(as_of).clustering)
 
     def alter_column_type(
         self, name: str, dtype, max_retries: int = 3
@@ -4344,8 +4032,8 @@ class TxLogTable:
             return False
 
         for _attempt in range(max_retries + 1):
-            base_version = self.version()
-            schema_json = self._schema_at()
+            snap = self._snapshot()
+            base_version, schema_json = snap.version, snap.schema
             if schema_json is None:
                 raise ValueError(
                     "alter_column_type requires a recorded schema"
@@ -4353,17 +4041,16 @@ class TxLogTable:
             schema = StructType.fromJson(json.loads(schema_json))
             if name not in schema.fieldNames():
                 raise ValueError(f"column {name!r} does not exist")
-            pby, _ps = self.partition_meta()
-            if name in pby:
+            if name in snap.partition()[0]:
                 raise ValueError(
                     f"cannot widen partition column {name!r}: directory "
                     "values are serialized under the original type"
                 )
-            if name in self.identity_meta():
+            if name in _identity_of(schema_json):
                 raise ValueError(
                     f"identity column {name!r} must stay BIGINT"
                 )
-            if name in self.generated_exprs():
+            if name in _generated_of(schema_json):
                 raise ValueError(
                     f"generated column {name!r}: its type derives from "
                     "the generation expression — widen the sources"
@@ -4406,7 +4093,9 @@ class TxLogTable:
             f"alter_column_type gave up after {max_retries} retries"
         )
 
-    def _column_mapping_guards(self, name: str, op: str) -> "object":
+    def _column_mapping_guards(
+        self, name: str, op: str, snap: Snapshot
+    ) -> "object":
         """Shared preconditions for rename/drop: column exists, is not a
         partition column (partition dirs embed the name — a metadata-only
         rename cannot hold), and no active CHECK references it (the
@@ -4416,7 +4105,7 @@ class TxLogTable:
 
         from pyspark.sql.types import StructType
 
-        schema_json = self._schema_at()
+        schema_json = snap.schema
         if schema_json is None:
             raise ValueError(
                 f"{op} requires a recorded schema (legacy log: run one "
@@ -4425,7 +4114,7 @@ class TxLogTable:
         schema = StructType.fromJson(json.loads(schema_json))
         if name not in schema.fieldNames():
             raise ValueError(f"no column {name!r}")
-        if name in self.partition_meta()[0]:
+        if name in snap.partition()[0]:
             raise ValueError(
                 f"{op} of partition column {name!r} refused: hive "
                 "directory names embed it — a metadata-only change "
@@ -4433,7 +4122,7 @@ class TxLogTable:
             )
         referencing = [
             n
-            for n, e in self.checks().items()
+            for n, e in snap.checks.items()
             if _re.search(rf"\b{_re.escape(name)}\b", e)
         ]
         if referencing:
@@ -4443,7 +4132,7 @@ class TxLogTable:
             )
         gen_refs = [
             c
-            for c, e in self.generated_exprs().items()
+            for c, e in _generated_of(schema_json).items()
             if c != name and _re.search(rf"\b{_re.escape(name)}\b", e)
         ]
         if gen_refs:
@@ -4452,7 +4141,7 @@ class TxLogTable:
                 f"{gen_refs} derive from it — their expressions would "
                 "silently dangle"
             )
-        if name in self.clustering_columns():
+        if name in snap.clustering:
             # a stale clustering list would make bare OPTIMIZE (which
             # defaults zorder_by to the recorded columns) fail on a
             # nonexistent name, and the Delta export would keep
@@ -4490,11 +4179,12 @@ class TxLogTable:
             # payload recomputed per attempt (like restore): committing a
             # pre-conflict schema/mapping would silently erase whatever
             # the winning commit changed (e.g. a concurrent add_column)
-            base_version = self.version()
-            schema = self._column_mapping_guards(old, "rename_column")
+            snap = self._snapshot()
+            base_version = snap.version
+            schema = self._column_mapping_guards(old, "rename_column", snap)
             if new in schema.fieldNames():
                 raise ValueError(f"column {new!r} already exists")
-            mapping = self._mapping_at()
+            mapping = snap.mapping
             mapping = (
                 {f.name: f.name for f in schema.fields}
                 if mapping is None
@@ -4541,11 +4231,12 @@ class TxLogTable:
 
         for _attempt in range(max_retries + 1):
             # payload recomputed per attempt — see rename_column
-            base_version = self.version()
-            schema = self._column_mapping_guards(name, "drop_column")
+            snap = self._snapshot()
+            base_version = snap.version
+            schema = self._column_mapping_guards(name, "drop_column", snap)
             if len(schema.fields) == 1:
                 raise ValueError("cannot drop the only column")
-            mapping = self._mapping_at()
+            mapping = snap.mapping
             mapping = (
                 {f.name: f.name for f in schema.fields}
                 if mapping is None
@@ -4614,7 +4305,7 @@ class TxLogTable:
         # _commit_dml (loop-invariant there: any interleaved
         # set_properties commit has op != 'append' and blocks the rebase
         # anyway). Latest version via one listdir, not a full log fold.
-        latest = self._latest_and_txn(None)[0]
+        latest = self.version()
         for v in range(base_version + 1, latest + 1):
             try:
                 with open(
@@ -4645,8 +4336,11 @@ class TxLogTable:
     # caller should surface the contention, not spin
     _REBASE_MAX = 64
 
-    def _commit_dml(self, _rebase_always: bool = False, **kw) -> int:
-        """:meth:`commit` plus the WriteSerializable retry-rebase: on
+    def _commit_dml(
+        self, snap: Snapshot, _rebase_always: bool = False, **kw
+    ) -> int:
+        """:meth:`commit` of a payload computed on ``snap`` (the base
+        version) plus the WriteSerializable retry-rebase: on
         CommitConflict, re-commit the SAME payload at the new head when
         :meth:`_rebase_base` allows it; otherwise re-raise so the caller
         recomputes. txn-marked commits never rebase — the idempotency
@@ -4657,14 +4351,18 @@ class TxLogTable:
         correct under any isolation level. The property gate resolves
         ONCE per call (loop-invariant: an interleaved set_properties
         commit is not a blind append, so it blocks the rebase anyway)."""
-        iso_ok: bool | None = True if _rebase_always else None
+        iso_ok = _rebase_always or (
+            snap.properties.get("delta.isolationLevel", "Serializable").lower()
+            == "writeserializable"
+        )
+        kw["base_version"] = snap.version
         for _attempt in range(self._REBASE_MAX):
             try:
                 return self.commit(**kw)
             except CommitConflict:
                 if kw.get("txn") is not None:
                     raise
-                if kw.get("schema") is not None and self.identity_meta():
+                if kw.get("schema") is not None and _identity_of(snap.schema):
                     # identity watermark staleness: an interleaved blind
                     # append may have advanced a high watermark, and re-
                     # committing our captured schema at a newer version
@@ -4672,13 +4370,6 @@ class TxLogTable:
                     # append would assign duplicate ids). Recompute from
                     # the new head instead of rebasing.
                     raise
-                if iso_ok is None:
-                    iso_ok = (
-                        self.properties()
-                        .get("delta.isolationLevel", "Serializable")
-                        .lower()
-                        == "writeserializable"
-                    )
                 if not iso_ok:
                     raise
                 nb = self._rebase_base(kw["base_version"])
@@ -4704,52 +4395,8 @@ class TxLogTable:
         functions/tx_sql) and ``delta.appendOnly`` ('true' refuses DML).
         Everything else is carried metadata — exported into the Delta
         ``metaData.configuration`` and adopted back by
-        :meth:`convert_from_delta`.
-
-        Cost shape: a REVERSE scan that stops at the newest
-        ``properties_reset`` snapshot (every metadata-complete
-        checkpoint carries one since round 10, and create records an
-        empty floor since round 11), so the per-call work is
-        O(checkpoint interval) commits, not O(log) — this runs on every
-        DML commit (the appendOnly gate), every tx_sql DML statement
-        (the dv-routing probe), and every commit attempt (the
-        row-tracking gate). Round 11: the latest-head result is CACHED
-        per instance keyed on the newest commit version — commits are
-        immutable, so the fold at a given head can never change; a
-        racing writer's new commit changes the head and misses the
-        cache. The per-commit cost drops to the one listdir the head
-        check needs anyway."""
-        entries = sorted(
-            f for f in os.listdir(self.log_dir) if f.endswith(".json")
-        )
-        if as_of is None and entries:
-            head = int(entries[-1].split(".")[0])
-            cached = getattr(self, "_props_cache", None)
-            if cached is not None and cached[0] == head:
-                return dict(cached[1])
-        tail: list[dict] = []
-        base: dict[str, str] = {}
-        for name in reversed(entries):
-            v = int(name.split(".")[0])
-            if as_of is not None and v > as_of:
-                continue
-            with open(os.path.join(self.log_dir, name)) as fh:
-                c = json.load(fh)
-            tail.append(c)
-            if c.get("properties_reset") is not None:
-                base = dict(c["properties_reset"])
-                break
-        out = base
-        for c in reversed(tail):  # oldest-first; the snapshot commit's
-            # own per-commit delta re-applies on top (idempotent)
-            for k, val in (c.get("properties") or {}).items():
-                if val is None:
-                    out.pop(k, None)
-                else:
-                    out[k] = str(val)
-        if as_of is None and entries:
-            self._props_cache = (int(entries[-1].split(".")[0]), dict(out))
-        return out
+        :meth:`convert_from_delta`."""
+        return dict(self._snapshot(as_of).properties)
 
     def set_properties(
         self, props: dict[str, str], max_retries: int = 3
@@ -4835,24 +4482,18 @@ class TxLogTable:
         (the export mirrors EVERY version 1:1 and cannot reconstruct
         deleted commits; export BEFORE cleaning up, or CLONE to a fresh
         table and export the clone)."""
-        entries = sorted(
-            f for f in os.listdir(self.log_dir) if f.endswith(".json")
-        )
-        if entries:
+        oldest, origin = oldest_commit(self.log_dir)
+        if "converted_from_delta" in origin:
             # an adopted table's OLDEST commit is the convert_delta
             # snapshot (it sits at the foreign latest version, not 0)
-            with open(os.path.join(self.log_dir, entries[0])) as fh:
-                c_old = json.load(fh)
-            if "converted_from_delta" in c_old:
-                raise ValueError(
-                    "to_delta_log refused: this table was adopted from "
-                    f"an existing _delta_log (at its version "
-                    f"{c_old['converted_from_delta']}) — re-exporting "
-                    "would misalign version numbering with the foreign "
-                    "log's history"
-                )
-        c0_path = os.path.join(self.log_dir, _commit_name(0))
-        if not os.path.exists(c0_path):
+            raise ValueError(
+                "to_delta_log refused: this table was adopted from "
+                f"an existing _delta_log (at its version "
+                f"{origin['converted_from_delta']}) — re-exporting "
+                "would misalign version numbering with the foreign "
+                "log's history"
+            )
+        if oldest != 0:
             raise ValueError(
                 "to_delta_log refused: commit 0 was truncated by "
                 "cleanup_log — the export mirrors every version 1:1 and "
@@ -4900,9 +4541,10 @@ class TxLogTable:
         import time as _time
 
         now = _time.time()
-        latest, live, live_dvs = self._replay_full()
-        referenced = set(live)
-        referenced_sidecars = {d["sidecar"] for d in live_dvs.values()}
+        head = self._snapshot()
+        latest = head.version
+        referenced = set(head.live)
+        referenced_sidecars = {d["sidecar"] for d in head.dvs.values()}
         keep_versions = set(
             range(max(0, latest - max(retain_versions, 1) + 1), latest)
         )
@@ -4911,11 +4553,11 @@ class TxLogTable:
         keep_versions |= set(self.tags().values())
         for v in keep_versions:
             try:
-                _v, vfiles, vdvs = self._replay_full(as_of=v)
+                old = self._snapshot(as_of=v)
             except FileNotFoundError:
                 continue
-            referenced |= set(vfiles)
-            referenced_sidecars |= {d["sidecar"] for d in vdvs.values()}
+            referenced |= old.live
+            referenced_sidecars |= {d["sidecar"] for d in old.dvs.values()}
         deleted = []
         # deletion-vector sidecars referenced by no retained snapshot
         # (superseded vectors, losers of DML races) are orphans too
@@ -5117,13 +4759,6 @@ class TxLogTable:
         tags = self.tags()
         if tags:
             min_keep = min(min_keep, min(tags.values()))
-        required = (
-            "schema",
-            "checks_reset",
-            "partition_by",
-            "txns_state",
-            "dvs_state",
-        )
         horizon = 0
         entries = sorted(
             f for f in os.listdir(self.log_dir) if f.endswith(".json")
@@ -5141,7 +4776,7 @@ class TxLogTable:
                 c = json.load(fh)
             if c.get("adds_sidecar"):
                 sidecars[name] = c["adds_sidecar"]
-            if c.get("checkpoint") and all(k in c for k in required):
+            if metadata_complete(c):
                 horizon = max(horizon, v)
         deleted = []
         for name in entries:
@@ -5156,7 +4791,6 @@ class TxLogTable:
                     except OSError:
                         pass
                 deleted.append(name)
-        self._pmeta = None  # partition cache may now resolve via fallback
         if deleted:
             # best-effort audit commit (same posture as vacuum's): records
             # what was truncated in history, and — because op="cleanup_log"
@@ -5290,13 +4924,12 @@ def _merge_post_image(
     return df
 
 
-def _logical_columns(table: TxLogTable) -> list[str]:
+def _logical_columns(table: TxLogTable, snap: Snapshot) -> list[str]:
     """The table's logical columns: the recorded schema's fields (a
     legacy log without one answers with its snapshot's columns)."""
-    schema_json = table._schema_at()
-    if schema_json is None:
-        return table.read().columns
-    return [f["name"] for f in json.loads(schema_json)["fields"]]
+    if snap.schema is None:
+        return table._rows(snap).columns
+    return [f["name"] for f in json.loads(snap.schema)["fields"]]
 
 
 def _extend_mapping(mapping: dict | None, columns: list[str]) -> dict | None:
@@ -5437,23 +5070,23 @@ def _merge_into_dv(
     inserts from the new files."""
     from pyspark.sql.types import LongType, StructField
 
-    rt_on = table.row_tracking_enabled()
     for _attempt in range(max_retries + 1):
-        base_version, base_files, dvs = table._replay_full()
+        snap = table._snapshot()
         if txn is not None:
-            last = table.last_txn_version(txn[0])
+            last = snap.txns.get(str(txn[0]))
             if last is not None and txn[1] <= last:
-                return table.read()
-        schema_json = table._schema_at()
+                return table._rows(snap)
+        rt_on = _row_tracking_on(snap)
+        base_files, dvs, schema_json = snap.files, snap.dvs, snap.schema
         touched_files = (
             list(base_files)
             if clauses["not_matched_by_source"]
-            else table._touched_by_keys(base_files, source, keys, dvs=dvs)
+            else table._touched_by_keys(base_files, source, keys, snap)
         )
         if touched_files:
             target = table._scan_with_filepath(
                 touched_files,
-                schema_json,
+                snap,
                 dvs=dvs,
                 extra_fields=(
                     [StructField(_ROW_ID_PHYS, LongType(), True)]
@@ -5467,13 +5100,12 @@ def _merge_into_dv(
                 # clause plan then does the rest for free: matched
                 # post-images keep it, inserts get NULL (fresh ids derive
                 # from the new file's base + index at read)
-                rt_bases, _rhw = table.row_tracking_meta()
                 target = table._rt_attach(
-                    target, touched_files, rt_bases, _ROW_ID_PHYS
+                    target, touched_files, snap.row_bases, _ROW_ID_PHYS
                 )
         else:
             target = (
-                table._empty()
+                table._empty(snap)
                 .withColumn("__file", F.lit(None).cast("string"))
                 .withColumn("__ridx", F.lit(None).cast("long"))
             )
@@ -5511,8 +5143,8 @@ def _merge_into_dv(
             ).alias("__upd"),
             plan["inserted"].alias("__ins"),
         ).filter("__del OR __upd OR __ins")
-        cur_ident = table.identity_meta()
-        new_mapping = _extend_mapping(table._mapping_at(), data_cols)
+        cur_ident = _identity_of(schema_json)
+        new_mapping = _extend_mapping(snap.mapping, data_cols)
         with _materialized(flat) as flat:
             # 4: new files — CHECK gate runs here, BEFORE any sidecar
             # exists, so a CheckViolation leaves no orphan metadata.
@@ -5526,12 +5158,7 @@ def _merge_into_dv(
                 gen_recompute,
                 cur_ident,
             )
-            adds = table._write_data(
-                new_rows,
-                _mapping=new_mapping
-                if new_mapping is not None
-                else _MAPPING_DEFAULT,
-            )
+            adds = table._write_data(new_rows, snap, _mapping=new_mapping)
             # 3+5: the positions leaving the table, DISTINCT — duplicate
             # source keys produce one doomed JOIN ROW per duplicate at
             # the SAME (file, row index); counting rows would inflate the
@@ -5552,9 +5179,9 @@ def _merge_into_dv(
         )
         if (
             table._commit_attempt(
-                adds=adds, removes=removes, base_version=base_version,
-                op="merge", schema=commit_schema, txn=txn,
-                column_mapping=new_mapping, dvs=dv_updates or None,
+                snap, adds=adds, removes=removes, op="merge",
+                schema=commit_schema, txn=txn, column_mapping=new_mapping,
+                dvs=dv_updates or None,
             )
             is not None
         ):
@@ -5662,7 +5289,8 @@ def merge_into_txlog(
             "with when_matched/when_not_matched/matched_set/"
             "insert_values (evolve_schema composes with it)"
         )
-    rt_on = table.row_tracking_enabled()
+    snap = table._snapshot()
+    rt_on = _row_tracking_on(snap)
     if rt_on and _ROW_ID_PHYS in source.columns:
         # the physical id column is ENGINE-OWNED (same contract as
         # identity columns): the source may not carry it (SET */INSERT *
@@ -5672,8 +5300,8 @@ def merge_into_txlog(
             "is engine-assigned row-tracking state; rename or drop "
             "it from the source"
         )
-    ident_meta = table.identity_meta()
-    gen_all = table.generated_exprs()
+    ident_meta = _identity_of(snap.schema)
+    gen_all = _generated_of(snap.schema)
     if clauses is None:
         # the simple form becomes its clause list ONCE, here: every route
         # below (COW, cdc, insert-only, DV) sees only clauses. Its
@@ -5681,7 +5309,7 @@ def merge_into_txlog(
         # — identity (matched rows keep their ids, inserts are assigned)
         # and generated (recomputed below)
         clauses = simple_form_clauses(
-            _logical_columns(table), source.columns, when_matched,
+            _logical_columns(table, snap), source.columns, when_matched,
             when_not_matched, matched_set, insert_values, evolve_schema,
             omittable=set(ident_meta) | set(gen_all),
         )
@@ -5756,15 +5384,15 @@ def merge_into_txlog(
         # whole-table path instead)
         insert_only = rewrite != "full" and not (clauses["matched"] or nmbs)
         for _attempt in range(max_retries + 1):
-            # base_version FIRST, txn check SECOND (same reasoning as
-            # TxLogTable.append): a same-batch racer committing after our
-            # check then conflicts with our commit, which re-runs the check.
-            base_version, base_files, dvs = table._replay_full()
+            # base version and txn check from ONE snapshot (same reasoning
+            # as TxLogTable.append): a same-batch racer committing after
+            # it then conflicts with our commit, which re-runs the check.
+            snap = table._snapshot()
             if txn is not None:
-                last = table.last_txn_version(txn[0])
+                last = snap.txns.get(str(txn[0]))
                 if last is not None and txn[1] <= last:
-                    return table.read()
-            schema_json = table._schema_at()
+                    return table._rows(snap)
+            base_files, dvs, schema_json = snap.files, snap.dvs, snap.schema
             src = source
             if rewrite == "full" or nmbs:
                 # a NOT MATCHED BY SOURCE clause can hit any target row:
@@ -5777,35 +5405,35 @@ def merge_into_txlog(
                     # baseline is the target value; inserts surface NULL and
                     # derive fresh ids from their file's base at read)
                     target = (
-                        table._rt_cow_read(base_files, schema_json, dvs)
+                        table._rt_cow_read(base_files, snap)
                         if base_files
-                        else table._empty().withColumn(
+                        else table._empty(snap).withColumn(
                             _ROW_ID_PHYS, F.lit(None).cast("long")
                         )
                     )
                 else:
-                    target = table.read()
+                    target = table._rows(snap)
             elif insert_only:
                 removes = []
-                target = table._empty()
+                target = table._empty(snap)
                 if base_files:
                     src = source.join(
-                        table._read_files(
-                            base_files, schema_json, dvs=dvs
-                        ).select(*keys),
+                        table._read_files(base_files, snap, dvs=dvs).select(
+                            *keys
+                        ),
                         keys,
                         "left_anti",
                     )
             else:
-                removes = table._touched_by_keys(base_files, source, keys, dvs=dvs)
+                removes = table._touched_by_keys(base_files, source, keys, snap)
                 if removes:
                     target = (
-                        table._rt_cow_read(removes, schema_json, dvs)
+                        table._rt_cow_read(removes, snap)
                         if rt_on
-                        else table._read_files(removes, schema_json, dvs=dvs)
+                        else table._read_files(removes, snap, dvs=dvs)
                     )
                 else:
-                    target = table._empty()
+                    target = table._empty(snap)
                     if rt_on:
                         target = target.withColumn(
                             _ROW_ID_PHYS, F.lit(None).cast("long")
@@ -5813,7 +5441,7 @@ def merge_into_txlog(
             # re-read per attempt: a racing commit may have advanced a
             # high watermark — assignment must start beyond the CURRENT
             # one (a lost conflict drops our files and re-runs this)
-            cur_ident = table.identity_meta() if ident_meta else {}
+            cur_ident = _identity_of(schema_json) if ident_meta else {}
 
             def _post(df: DataFrame) -> DataFrame:
                 return _merge_post_image(
@@ -5847,26 +5475,21 @@ def merge_into_txlog(
                     # stable across executions)
                     held = merged
                     cdc_df = merged.withColumn("_change_type", F.lit("insert"))
-            new_mapping = _extend_mapping(table._mapping_at(), merged.columns)
+            new_mapping = _extend_mapping(snap.mapping, merged.columns)
             cdc_rel: str | None = None
             with _materialized(held):
-                adds = table._write_data(
-                    merged,
-                    _mapping=new_mapping
-                    if new_mapping is not None
-                    else _MAPPING_DEFAULT,
-                )
+                adds = table._write_data(merged, snap, _mapping=new_mapping)
                 if cdc_df is not None:
                     # the change feed is LOGICAL rows — drop the physical-
                     # only row-id column (lenient no-op when absent)
-                    cdc_rel = table._write_cdc(cdc_df.drop(_ROW_ID_PHYS))
+                    cdc_rel = table._write_cdc(cdc_df.drop(_ROW_ID_PHYS), snap)
             commit_schema = _merge_commit_schema(
                 table, schema_json, merged.schema.json(), cur_ident, adds
             )
             if (
                 table._commit_attempt(
-                    adds=adds, removes=removes, base_version=base_version,
-                    op="merge", schema=commit_schema, txn=txn,
+                    snap, adds=adds, removes=removes, op="merge",
+                    schema=commit_schema, txn=txn,
                     column_mapping=new_mapping, cdc=cdc_rel,
                 )
                 is not None

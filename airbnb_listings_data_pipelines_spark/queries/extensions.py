@@ -4290,7 +4290,7 @@ def x77_python_datasource_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the rollup's n_null_dates == n_orders PROVES the dropped values "
     "did not resurrect (the Delta re-add rule). The oracle replays the "
     "logical transformations over raw orders. "
-    "operators/txlog.rename_column/drop_column + mapping_at.",
+    "operators/txlog.rename_column/drop_column + the snapshot mapping.",
 )
 def x78_column_mapping_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.txlog import TxLogTable
@@ -6840,7 +6840,7 @@ def x104_type_widening_evolution(
 
     tc = next(
         f
-        for f in _json.loads(t._schema_at())["fields"]
+        for f in _json.loads(t._snapshot().schema)["fields"]
         if f["name"] == "o_orderkey"
     )["metadata"]["delta.typeChanges"]
     if not (tc and tc[0]["fromType"] == "int" and tc[0]["toType"] == "bigint"):

@@ -31,7 +31,9 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    # the cores this process may run on (SPARK_GRAFT_CPUS overrides)
+    cores = len(os.sched_getaffinity(0))
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(cores)
     master = master or f"local[{cpus}]"
     builder = (
         SparkSession.builder.appName(app_name)
@@ -42,7 +44,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config(
             "spark.sql.shuffle.partitions",
-            str(shuffle_partitions or (int(cpus) if str(cpus).isdigit() else 32)),
+            str(shuffle_partitions or (int(cpus) if cpus.isdigit() else cores)),
         )
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -81,6 +81,7 @@ from ..operators.logfold import (
     hive_partition_values,
     is_delta_log,
     latest_version,
+    oldest_commit,
     partition_meta,
     schema_json_at,
     snapshot_at,
@@ -582,11 +583,7 @@ class TxLogStreamReader(DataSourceStreamReader):
             # clamp: logfold.delta_deltas_full bootstraps a synthetic
             # full-snapshot record from the parquet checkpoint when the
             # JSON head expired above the requested floor.)
-            entries = sorted(
-                f for f in os.listdir(self.log_dir) if f.endswith(".json")
-            )
-            if entries:
-                start = max(start, int(entries[0].split(".")[0]))
+            start = max(start, oldest_commit(self.log_dir)[0])
         self._cursor = start - 1
         return {"version": start - 1}
 

@@ -123,10 +123,9 @@ def append_stream_txlog(
         if compact_every:
             since = 0
             for h in reversed(t.history()):
-                # stop at any full-snapshot op; count DATA ops by NAME —
-                # n_adds lies at checkpoint commits (their recorded adds
-                # are the full live list, so even a metadata-only commit
-                # landing on a checkpoint boundary reports adds)
+                # stop at any full-snapshot op; count DATA commits since
+                # — by op, so a metadata commit (which adds no file) and
+                # an empty data batch are told apart
                 if h["op"] in (
                     "optimize", "create", "convert", "convert_delta", "clone",
                 ):

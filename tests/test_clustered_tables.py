@@ -191,7 +191,7 @@ def test_export_domain_physical_names_under_mapping(spark, tmp_path):
     cols = json.loads(
         st.domains["delta.clustering"]["configuration"]
     )["clusteringColumns"]
-    mapping = t._mapping_at()
+    mapping = t._snapshot().mapping
     assert cols == [[mapping["a"]], [mapping["amount"]]]
     # amount's physical name is the pre-rename one
     assert mapping["amount"] == "amt"

@@ -558,7 +558,7 @@ def test_convert_column_mapped_name_mapping(spark, tmp_path):
         map(tuple, t2.read().select("k", "amount", "g").collect())
     )
     assert got == {(k, float(k), "ab"[k % 2]) for k in range(40)}
-    m = t2._mapping_at()
+    m = t2._snapshot().mapping
     assert m and m.get("amount") == "amt"
 
 

@@ -133,3 +133,70 @@ def test_vanilla_session_outside_repo_streams_txlog_and_delta(tmp_path):
     for kind, (streamed, snapshot) in out.items():
         assert len(snapshot) == 4, kind
         assert streamed == snapshot, kind
+
+
+# The per-commit passes that legitimately read the txlog commit by commit
+# (every other piece of table state is a view over logfold.Snapshot):
+# commit mtimes, the cleanup horizon scan, vacuum's GC reference scans,
+# the interleaved-commit check of a rebase, history's per-commit deltas,
+# the Iceberg export's added-version and since-prior-export scans, and
+# the snapshot's own one listing.
+_LOG_WALKS_ALLOWED = {
+    "operators/txlog.py": {
+        "TxLogTable._snapshot",
+        "TxLogTable.version_at_timestamp",
+        "TxLogTable.cleanup_log",
+        "TxLogTable.vacuum",
+        "TxLogTable._rebase_base",
+        "TxLogTable.history",
+    },
+    "operators/iceberg.py": {"_file_added_versions", "_dv_dml_since"},
+    "sources/txlog_source.py": set(),
+}
+
+
+def _log_walks(path: str) -> list[tuple[str, int]]:
+    """(enclosing top-level function or method, line) of every place that
+    lists the log dir or opens a commit: ``os.listdir(...log_dir...)``,
+    ``open(...log_dir...)`` / ``open(..._commit_name...)``, and the
+    logfold commit readers ``_load`` / ``_commit_entries``."""
+    with open(path) as fh:
+        tree = ast.parse(fh.read())
+    scopes: list[tuple[str, ast.AST]] = []
+    for node in tree.body:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            scopes.append((node.name, node))
+        elif isinstance(node, ast.ClassDef):
+            scopes += [
+                (f"{node.name}.{m.name}", m)
+                for m in node.body
+                if isinstance(m, (ast.FunctionDef, ast.AsyncFunctionDef))
+            ]
+    out = []
+    for name, scope in scopes:
+        for call in ast.walk(scope):
+            if not isinstance(call, ast.Call):
+                continue
+            fn = ast.unparse(call.func)
+            args = " ".join(ast.unparse(a) for a in call.args)
+            if (
+                (fn == "os.listdir" and "log_dir" in args)
+                or (fn == "open" and ("log_dir" in args or "_commit_name" in args))
+                or fn in ("_load", "_commit_entries", "logfold._load")
+            ):
+                out.append((name, call.lineno))
+    return out
+
+
+def test_table_state_never_walks_the_log_outside_the_snapshot():
+    """Table state comes from the snapshot: txlog.py, iceberg.py and the
+    DataSource list the log or open a commit only inside the named
+    per-commit passes. An accessor that re-grows its own walk of the log
+    fails here."""
+    pkg = os.path.join(REPO, PACKAGE)
+    for rel, allowed in _LOG_WALKS_ALLOWED.items():
+        walks = _log_walks(os.path.join(pkg, rel))
+        stray = sorted({(n, ln) for n, ln in walks if n not in allowed})
+        assert not stray, f"{rel}: log walks outside the snapshot: {stray}"
+        seen = {n for n, _ in walks}
+        assert allowed <= seen, f"{rel}: stale allow-list {allowed - seen}"

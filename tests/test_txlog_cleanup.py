@@ -274,7 +274,13 @@ def test_parquet_sidecar_checkpoints_roundtrip(spark, driven, tmp_path):
     assert feed.count() == n_range
     assert {r._change_type for r in feed.collect()} == {"insert"}
     hist = {h["version"]: h for h in t2.history()}
-    assert hist[_CHECKPOINT_EVERY]["n_adds"] > 0  # from n_adds, not adds
+    # the checkpoint commit is a metadata-only filler: its TRUE delta is
+    # empty (a sidecar read as an empty list would show every live file
+    # removed), and the next commit is its one-row append
+    assert (
+        hist[_CHECKPOINT_EVERY]["n_adds"], hist[_CHECKPOINT_EVERY]["n_removes"]
+    ) == (0, 0)
+    assert hist[_CHECKPOINT_EVERY + 1]["n_adds"] == 1
     # the DataSource's inlined twin reads the sidecar too
     txlog_source.register(spark)
     ds = spark.read.format("txlog").load(t.path)

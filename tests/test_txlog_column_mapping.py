@@ -330,7 +330,7 @@ def test_evolving_merge_respects_mapping_fresh_name_rule(spark, tmp_path):
     # resurrect; k=2 was rewritten with the merged value
     assert got == {(1, None), (2, 99.0)}, got
     # and the mapping records a fresh physical name for the column
-    m = t._mapping_at()
+    m = t._snapshot().mapping
     assert m["price"] != "price"
 
 

@@ -255,7 +255,7 @@ def test_dv_merge_evolve_schema_and_column_mapping(spark, tmp_path):
         assert (1, 100.0) in got and (77, 777.0) in got
         assert (2, None) in got, "untouched DV'd file null-fills"
         if mapped:
-            mp = t._mapping_at()
+            mp = t._snapshot().mapping
             assert "extra" in mp and mp["extra"].startswith("col_")
 
 

@@ -67,7 +67,7 @@ def test_widen_then_mixed_files_read_and_dml(spark, tmp_path):
     got = {r["k"]: r["v"] for r in t.read().collect()}
     assert 3 not in got and got[4] == 4.5 and got[5] == 100.0 and 77 in got
     # the field metadata records the change (Delta's representation)
-    sj = json.loads(t._schema_at())
+    sj = json.loads(t._snapshot().schema)
     tc = next(f for f in sj["fields"] if f["name"] == "k")["metadata"][
         "delta.typeChanges"
     ]
@@ -78,7 +78,7 @@ def test_time_travel_reads_narrow_schema(spark, tmp_path):
     t = _mk(spark, tmp_path)
     v_narrow = t.version()
     t.alter_column_type("k", "bigint")
-    from airbnb_listings_data_pipelines_spark.operators.txlog import (
+    from airbnb_listings_data_pipelines_spark.operators.logfold import (
         schema_json_at,
     )
     from pyspark.sql.types import StructType
@@ -87,7 +87,7 @@ def test_time_travel_reads_narrow_schema(spark, tmp_path):
         json.loads(schema_json_at(t.log_dir, v_narrow))
     )
     assert old["k"].dataType.typeName() == "integer"
-    now = StructType.fromJson(json.loads(t._schema_at()))
+    now = StructType.fromJson(json.loads(t._snapshot().schema))
     assert now["k"].dataType.typeName() == "long"
 
 
