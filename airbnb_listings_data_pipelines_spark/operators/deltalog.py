@@ -66,8 +66,8 @@ from .logfold import (
     _read_last_checkpoint,
     _replay_delta_log,
     _require_supported_mapping,
-    apply_commit,
     hive_partition_values,
+    walk,
 )
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -298,16 +298,24 @@ def export_delta_log(spark: SparkSession, table) -> int:
     the missing Delta commits; existing ones are immutable and untouched.
 
     Version numbering is preserved 1:1 (txlog version v == Delta version
-    v), so time travel agrees across both readers. txlog checkpoint
-    commits carry the full live list rather than a delta — the exporter
-    therefore re-derives each version's true add/remove sets from
-    consecutive snapshot diffs, which is exactly what the Delta log must
-    carry.
+    v), so time travel agrees across both readers. Every version is one
+    step of :func:`logfold.walk`: its metaData (schema, column mapping,
+    CHECKs as ``delta.constraints.*``, properties), file actions,
+    deletion vectors, row-tracking bases and clustering domain come from
+    the txlog snapshot after the commit, and its add/remove sets are the
+    diff against the snapshot before it (a txlog checkpoint commit
+    re-lists the whole live set; its Delta commit carries only the true
+    delta). The export keeps only the Delta-protocol policy: which table
+    features each version needs (latched on for the rest of the log),
+    column ids, in-commit timestamps and the change-data mirror.
     """
+    from .txlog import _commit_name, _footer_schema
+
     delta_dir = os.path.join(table.path, DELTA_DIR)
     os.makedirs(delta_dir, exist_ok=True)
-    latest, _live = table._replay()
-    pby, _pschema = table.partition_meta()
+    head = table._snapshot()
+    latest = head.version
+    pby, pschema = table.partition_meta()
     now_ms = int(time.time() * 1000)
     # metaData refresh on incremental export: a schema that evolved AFTER
     # the first export would otherwise stay frozen in commit 0 (Delta
@@ -319,9 +327,9 @@ def export_delta_log(spark: SparkSession, table) -> int:
     # is emitted exactly at each version whose schema changed — so
     # VERSION AS OF between evolutions shows exactly the columns that
     # existed then, for any number of evolutions per export. The schema
-    # of a version comes from the txlog commit's recorded payload (exact
-    # Spark types), falling back to one existing file's footer for
-    # legacy logs.
+    # of a version is the txlog snapshot's (exact Spark types, logical
+    # names), falling back to one existing file's footer only for legacy
+    # logs that never recorded one.
     meta_id: str | None = None
     meta_fields: list | None = None
     meta_field_meta: dict | None = None
@@ -339,26 +347,16 @@ def export_delta_log(spark: SparkSession, table) -> int:
         meta_field_meta = _field_meta(meta_schema_str)
         meta_cfg = exported.metadata.get("configuration") or {}
         emitted_proto = dict(exported.protocol)
-    prev: set[str] = set()
-    # running CHECK-constraint set, folded alongside the file set so the
-    # export can mirror constraints as delta.constraints.* configuration
-    # (the protocol's representation) at every metaData emission — and
-    # refresh metaData when the set changes, upgrading minWriterVersion
-    # to 3 (invariants/constraints) the first time one appears
-    cur_checks: dict[str, str] = {}
-    cur_props: dict[str, str] = {}
-    # running column mapping (logical -> physical, latest full payload
-    # wins — txlog's own fold rule). The first NON-identity mapping flips
-    # the export into columnMapping=name mode for the rest of the log
-    # (protocol reader 2 / writer 5 + per-field physicalName metadata —
-    # Delta's own no-downgrade upgrade path, so versions before the flip
-    # stay reader-v1-readable exactly as they were). Column ids are
-    # assigned per PHYSICAL name in first-appearance order over the fold
-    # — deterministic across incremental re-exports because the txlog
+    # The first NON-identity column mapping flips the export into
+    # columnMapping=name mode for the rest of the log (protocol reader 2
+    # / writer 5 + per-field physicalName metadata — Delta's own
+    # no-downgrade upgrade path, so versions before the flip stay
+    # reader-v1-readable exactly as they were). Column ids are assigned
+    # per PHYSICAL name in first-appearance order over the walk —
+    # deterministic across incremental re-exports because the txlog
     # commits below the exported head are immutable, and never reused
     # because a physical name is never recycled (re-ADD mints a fresh
     # one); maxColumnId is the id high-water mark the spec requires.
-    cur_mapping: dict[str, str] | None = None
     mapping_mode = False
     phys_ids: dict[str, int] = {}
     max_id = 0
@@ -370,66 +368,53 @@ def export_delta_log(spark: SparkSession, table) -> int:
             if ph not in phys_ids:
                 max_id += 1
                 phys_ids[ph] = max_id
-    # ONE forward pass over the txlog (applying each commit to a running
-    # file set) instead of table._replay(as_of=v) per version — the latter
-    # re-reads the log from scratch per version, O(V^2) log reads on a
-    # long-lived table. txlog checkpoint commits carry the full list, so
-    # the same fold txlog._replay uses applies here commit by commit.
-    tx_entries = sorted(
-        f for f in os.listdir(table.log_dir) if f.endswith(".json")
-    )
-    tx_state: dict[int, dict] = {}
-    tx_mtime: dict[int, int] = {}
-    for name in tx_entries:
-        full_tx = os.path.join(table.log_dir, name)
-        with open(full_tx) as fh:
-            tx_state[int(name.split(".")[0])] = json.load(fh)
-        # each exported commit's timestamp is ITS txlog commit's mtime,
-        # not the export run's wall clock — TIMESTAMP AS OF on the
-        # exported log then resolves the same instants the native
-        # table's history has, even when one export mirrors many commits
-        tx_mtime[int(name.split(".")[0])] = int(
-            os.path.getmtime(full_tx) * 1000
-        )
-    def _schema_json_at(v: int, cur_files: set) -> str | None:
-        """Exact schema of txlog version ``v``: the commit's recorded
-        payload, else one existing file's footer plus the recorded
-        partition fields (legacy logs), else None (all files vacuumed)."""
-        c = tx_state.get(v) or {}
-        if c.get("schema"):
-            return c["schema"]
+
+    def _schema_json_at(snap) -> str | None:
+        """Exact schema of a txlog snapshot: its recorded schema, else
+        (legacy logs) one existing file's footer plus the recorded
+        partition fields, else None (all files vacuumed)."""
+        if snap.schema is not None:
+            return snap.schema
         sample = next(
             (
                 f
-                for f in sorted(cur_files)
+                for f in snap.files
                 if os.path.exists(os.path.join(table.path, f))
             ),
             None,
         )
         if sample is None:
             return None
-        from .txlog import _footer_schema
-
         schema = _footer_schema(os.path.join(table.path, sample))
-        if pby:
-            _p, pschema = table.partition_meta()
-            for fld in pschema.fields:
-                if fld.name not in schema.fieldNames():
-                    schema = schema.add(fld)
+        for fld in pschema.fields if pby else ():
+            if fld.name not in schema.fieldNames():
+                schema = schema.add(fld)
         return schema.json()
 
-    cur: set[str] = set()
-    # running deletion-vector state (file -> txlog descriptor), folded
-    # by logfold.apply_commit like every txlog fold; dv_prev is the state at
-    # the previously emitted version so each Delta commit carries the
-    # true per-version DV delta. The first nonempty state latches
-    # dv_feature: from that version on the export runs under the
-    # deletionVectors TABLE FEATURE (reader v3 / writer v7 — Delta
-    # PROTOCOL.md), and txlog sidecars are re-encoded as RoaringBitmap
-    # DV files (operators/roaring.py) named in add.deletionVector
-    # descriptors.
-    dv_state: dict[str, dict] = {}
-    dv_prev: dict[str, dict] = {}
+    def _commit_ms(v: int) -> int:
+        """Each exported commit's timestamp is ITS txlog commit's mtime,
+        not the export run's wall clock — TIMESTAMP AS OF on the exported
+        log then resolves the same instants the native table's history
+        has, even when one export mirrors many commits."""
+        try:
+            full = os.path.join(table.log_dir, _commit_name(v))
+            return int(os.path.getmtime(full) * 1000)
+        except OSError:
+            return now_ms
+
+    # ONE logfold.walk over the txlog: each version's table state (files,
+    # deletion vectors, row bases, clustering, mapping, CHECKs,
+    # properties, schema) is the walk's ``after`` snapshot and its true
+    # delta is ``after`` against ``before`` — exactly the state every
+    # txlog reader folds, so the export cannot drift from it. Only the
+    # Delta-protocol latches below are the export's own: the first
+    # version needing a feature turns it on for the rest of the log.
+    #
+    # deletionVectors: the first nonempty vector state (or the
+    # delta.enableDeletionVectors property) latches the TABLE FEATURE
+    # (reader v3 / writer v7 — Delta PROTOCOL.md), and txlog sidecars are
+    # re-encoded as RoaringBitmap DV files (operators/roaring.py) named
+    # in add.deletionVector descriptors.
     dv_feature = False
     # changeDataFeed latch: the first txlog commit carrying a change-data
     # sidecar flips delta.enableChangeDataFeed and the CDF writer
@@ -453,89 +438,45 @@ def export_delta_log(spark: SparkSession, table) -> int:
     ict_since: int | None = None
     ict_enable_ts: int | None = None
     prev_ict: int | None = None
-    # row-tracking fold (PROTOCOL.md "Row Tracking", writer feature):
-    # per-file baseRowId -> add.baseRowId / add.defaultRowCommitVersion,
-    # high watermark -> the delta.rowTracking domainMetadata action
-    rt_bases: dict[str, int] = {}
+    # row tracking (PROTOCOL.md "Row Tracking", writer feature): each
+    # file's baseRowId -> add.baseRowId, the version its base first
+    # appeared -> add.defaultRowCommitVersion, the high watermark -> the
+    # delta.rowTracking domainMetadata action
     rt_dcv: dict[str, int] = {}
-    rt_prev: dict[str, int] = {}
-    # clustered-table fold: the delta.clustering domain mirrors the
-    # recorded clustering columns (writer feature "clustering")
-    cur_clustering: list[str] = []
+    # clustered tables: the delta.clustering domain mirrors the
+    # clustering columns (writer feature "clustering")
     cl_feature = False
-    for v in range(latest + 1):
-        cl_changed = False
-        c = tx_state.get(v)
-        if c is None:
-            raise FileNotFoundError(f"txlog {table.log_dir} missing commit {v}")
-        cur, dv_state = apply_commit(table.log_dir, c, cur, dv_state)
-        if dv_state:
+    for v, c, before, after in walk(table.log_dir, 0, latest):
+        cur, prev = after.live, before.live
+        if after.dvs:
             dv_feature = True
-        if c.get("row_base_state") is not None:
-            rt_bases = {
-                str(k): int(x) for k, x in c["row_base_state"].items()
-            }
-        else:
-            if c.get("row_base_reset") is not None:
-                rt_bases = {
-                    str(k): int(x) for k, x in c["row_base_reset"].items()
-                }
-            for k, x in (c.get("row_base") or {}).items():
-                rt_bases[str(k)] = int(x)
-        for k in rt_bases:
+        for k in after.row_bases:
             rt_dcv.setdefault(k, v)
-        if c.get("clustering") is not None:
-            cl_new = list(c["clustering"])
-            if cl_new != cur_clustering:
-                cur_clustering = cl_new
-                cl_changed = True
-            if cl_new:
-                cl_feature = True
+        cl_changed = after.clustering != before.clustering
+        if after.clustering:
+            cl_feature = True
         if c.get("cdc"):
             cdc_feature = True
         # generatedColumns latch (writer feature, legacy writer v4): the
         # recorded schema carries delta.generationExpression metadata
-        if not gen_feature and '"delta.generationExpression"' in (
-            c.get("schema") or ""
-        ):
+        if '"delta.generationExpression"' in (after.schema or ""):
             gen_feature = True
         # identityColumns latch (writer feature, legacy writer v6)
-        if not ident_feature and '"delta.identity.start"' in (
-            c.get("schema") or ""
-        ):
+        if '"delta.identity.start"' in (after.schema or ""):
             ident_feature = True
-        cm = c.get("column_mapping")
-        if cm is not None:
-            cur_mapping = dict(cm)
-            if not mapping_mode and any(
-                lg != ph for lg, ph in cur_mapping.items()
-            ):
-                mapping_mode = True
-        if c.get("schema"):
-            _ensure_ids(c["schema"], cur_mapping)
-        cr = c.get("checks_reset")
-        ck = c.get("check")
-        if cr is not None:
-            # restore commit: constraint set reverts wholesale (txlog
-            # RESTORE restores metadata like Delta's does) — mirror the
-            # reverted set into delta.constraints.* below
-            cur_checks = dict(cr)
-        elif ck and c.get("op") == "add_check":
-            cur_checks[ck["name"]] = ck["expr"]
-        elif ck and c.get("op") == "drop_check":
-            cur_checks.pop(ck["name"], None)
-        # table properties fold (TBLPROPERTIES) — mirrored verbatim into
+        if not mapping_mode and any(
+            lg != ph for lg, ph in (after.mapping or {}).items()
+        ):
+            mapping_mode = True
+        if after.schema is not None and (
+            after.schema != before.schema or after.mapping != before.mapping
+        ):
+            _ensure_ids(after.schema, after.mapping)
+        # table properties (TBLPROPERTIES) — mirrored verbatim into
         # metaData.configuration; engine-managed keys (constraints,
         # columnMapping, feature flags the export derives itself) win on
         # collision, and set_properties refuses the shadowable ones
-        pr = c.get("properties_reset")
-        if pr is not None:
-            cur_props = dict(pr)
-        for k, val in (c.get("properties") or {}).items():
-            if val is None:
-                cur_props.pop(k, None)
-            else:
-                cur_props[k] = str(val)
+        cur_props = after.properties
         if cur_props.get("delta.enableDeletionVectors") == "true":
             # the property REQUIRES the table feature in the protocol
             # (PROTOCOL.md) even before the first vector exists
@@ -571,12 +512,12 @@ def export_delta_log(spark: SparkSession, table) -> int:
             # higher ICTs (the emission seeds itself from the commit
             # right below the first one it writes)
             _floor = _prev_ict(delta_dir, v, None)
-            ict_enable_ts = max(tx_mtime.get(v, now_ms), (_floor or 0) + 1)
+            ict_enable_ts = max(_commit_ms(v), (_floor or 0) + 1)
         cfg = {
             **dict(sorted(cur_props.items())),
             **{
                 f"delta.constraints.{n}": e
-                for n, e in sorted(cur_checks.items())
+                for n, e in sorted(after.checks.items())
             },
         }
         if mapping_mode:
@@ -638,7 +579,7 @@ def export_delta_log(spark: SparkSession, table) -> int:
             if tw_feature:
                 rf.add("typeWidening")
                 wf.add("typeWidening")
-            if cur_checks:
+            if after.checks:
                 wf.add("checkConstraints")
             if cdc_feature:
                 wf.add("changeDataFeed")
@@ -691,18 +632,17 @@ def export_delta_log(spark: SparkSession, table) -> int:
             }
         target = os.path.join(delta_dir, _delta_commit_name(v))
         if os.path.exists(target):
-            prev = set(cur)
-            dv_prev = dict(dv_state)
-            rt_prev = dict(rt_bases)
             continue
         actions: list[dict] = []
         if v == 0:
-            schema0 = _schema_json_at(0, cur)
+            schema0 = _schema_json_at(after)
             if schema0 is None:
                 # legacy log, v0 files vacuumed: the latest live snapshot
                 # is the only readable schema source left; stated plainly
                 schema_files = [
-                    f for f in _live if os.path.exists(os.path.join(table.path, f))
+                    f
+                    for f in head.files
+                    if os.path.exists(os.path.join(table.path, f))
                 ]
                 if not schema_files:
                     raise FileNotFoundError(
@@ -714,9 +654,11 @@ def export_delta_log(spark: SparkSession, table) -> int:
             meta_fields = _schema_fields(schema0)
             meta_field_meta = _field_meta(schema0)
             if mapping_mode:
-                _ensure_ids(schema0, cur_mapping)
+                _ensure_ids(schema0, after.mapping)
                 cfg["delta.columnMapping.maxColumnId"] = str(max_id)
-                schema0 = _annotated_schema(schema0, cur_mapping or {}, phys_ids)
+                schema0 = _annotated_schema(
+                    schema0, after.mapping or {}, phys_ids
+                )
             meta_schema_str = schema0
             meta_cfg = cfg
             emitted_proto = want_proto
@@ -734,7 +676,7 @@ def export_delta_log(spark: SparkSession, table) -> int:
                 }
             )
         else:
-            sj = _schema_json_at(v, cur)
+            sj = _schema_json_at(after)
             schema_changed = (
                 sj is not None
                 and meta_fields is not None
@@ -770,10 +712,10 @@ def export_delta_log(spark: SparkSession, table) -> int:
                         actions.append({"protocol": upgraded})
                         emitted_proto = upgraded
                 if mapping_mode and sj is not None:
-                    _ensure_ids(sj, cur_mapping)
+                    _ensure_ids(sj, after.mapping)
                     cfg["delta.columnMapping.maxColumnId"] = str(max_id)
                     schema_str = _annotated_schema(
-                        sj, cur_mapping or {}, phys_ids
+                        sj, after.mapping or {}, phys_ids
                     )
                 meta_schema_str = schema_str
                 meta_cfg = cfg
@@ -799,14 +741,33 @@ def export_delta_log(spark: SparkSession, table) -> int:
                 if upgraded != emitted_proto:
                     actions.append({"protocol": upgraded})
                     emitted_proto = upgraded
-        # Delta DV descriptors for every live file whose vector is NEW at
-        # this version (fresh DML, checkpoint/restore state change, or a
-        # file added with a vector). One RoaringBitmap DV file per
-        # exported version packs all of them (Delta's own layout).
+        # a live file whose DV state CHANGED (new/updated vector, or a
+        # restore clearing it) is re-committed: remove + add with the
+        # current descriptor — exactly how Delta's own DML represents a
+        # vector update on an unchanged data file
+        recommit = sorted(
+            f
+            for f in cur & prev
+            if before.dvs.get(f) != after.dvs.get(f)
+            # row-tracking enablement backfills bases for files ALREADY
+            # exported without add.baseRowId — re-commit them so the
+            # mirror's row-id reader (and any external one) can derive
+            # their ids; bases never change once assigned, so this fires
+            # once per file at the enablement version
+            or (
+                rt_feature
+                and before.row_bases.get(f) != after.row_bases.get(f)
+            )
+        )
+        # Delta DV descriptors for every added or re-committed file that
+        # carries a vector — the new add replaces the old one, so it
+        # must carry the vector even when only the row base changed. One
+        # RoaringBitmap DV file per exported version packs all of them
+        # (Delta's own layout).
         dv_new = {
-            f: dv_state[f]
-            for f in cur
-            if dv_state.get(f) is not None and dv_prev.get(f) != dv_state[f]
+            f: after.dvs[f]
+            for f in (cur - prev).union(recommit)
+            if after.dvs.get(f) is not None
         }
         delta_dvs = (
             _materialize_delta_dvs(table, dv_new) if dv_new else {}
@@ -837,8 +798,8 @@ def export_delta_log(spark: SparkSession, table) -> int:
                 else now_ms,
                 "dataChange": True,
             }
-            if rt_feature and f in rt_bases:
-                add["baseRowId"] = rt_bases[f]
+            if rt_feature and f in after.row_bases:
+                add["baseRowId"] = after.row_bases[f]
                 add["defaultRowCommitVersion"] = rt_dcv.get(f, v)
             stats = _file_delta_stats(full) if exists else None
             if stats is not None:
@@ -867,21 +828,7 @@ def export_delta_log(spark: SparkSession, table) -> int:
                     }
                 }
             )
-        # a live file whose DV state CHANGED (new/updated vector, or a
-        # restore clearing it) is re-committed: remove + add with the
-        # current descriptor — exactly how Delta's own DML represents a
-        # vector update on an unchanged data file
-        for f in sorted(
-            f
-            for f in cur & prev
-            if dv_prev.get(f) != dv_state.get(f)
-            # row-tracking enablement backfills bases for files ALREADY
-            # exported without add.baseRowId — re-commit them so the
-            # mirror's row-id reader (and any external one) can derive
-            # their ids; bases never change once assigned, so this fires
-            # once per file at the enablement version
-            or (rt_feature and rt_prev.get(f) != rt_bases.get(f))
-        ):
+        for f in recommit:
             actions.append(
                 {
                     "remove": {
@@ -954,8 +901,8 @@ def export_delta_log(spark: SparkSession, table) -> int:
                         "configuration": json.dumps(
                             {
                                 "clusteringColumns": [
-                                    [(cur_mapping or {}).get(c0, c0)]
-                                    for c0 in cur_clustering
+                                    [(after.mapping or {}).get(c0, c0)]
+                                    for c0 in after.clustering
                                 ]
                             }
                         ),
@@ -972,7 +919,7 @@ def export_delta_log(spark: SparkSession, table) -> int:
                     "domainMetadata": {
                         "domain": "delta.rowTracking",
                         "configuration": json.dumps(
-                            {"rowIdHighWaterMark": int(c["row_hw"])}
+                            {"rowIdHighWaterMark": after.row_hw}
                         ),
                         "removed": False,
                     }
@@ -992,7 +939,7 @@ def export_delta_log(spark: SparkSession, table) -> int:
                 }
             )
         info = {
-            "timestamp": tx_mtime.get(v, now_ms),
+            "timestamp": _commit_ms(v),
             "operation": "txlog-export",
             "operationParameters": {"txlogVersion": str(v)},
         }
@@ -1005,7 +952,7 @@ def export_delta_log(spark: SparkSession, table) -> int:
             # only the first action to resolve the timestamp), so it is
             # inserted at index 0 rather than appended.
             prev_ict = _prev_ict(delta_dir, v, prev_ict)
-            ict = max(tx_mtime.get(v, now_ms), (prev_ict or 0) + 1)
+            ict = max(_commit_ms(v), (prev_ict or 0) + 1)
             info["inCommitTimestamp"] = ict
             prev_ict = ict
             actions.insert(0, {"commitInfo": info})
@@ -1025,15 +972,12 @@ def export_delta_log(spark: SparkSession, table) -> int:
             pass  # a concurrent exporter won this version; theirs stands
         finally:
             os.unlink(tmp)
-        prev = set(cur)
-        dv_prev = dict(dv_state)
-        rt_prev = dict(rt_bases)
     # delta.checkpointInterval (Delta's own auto-checkpoint property):
     # after exporting, if the newest checkpoint lags the head by >= the
     # interval, write one — v2 or classic per delta.checkpointPolicy.
     # Without the property the export never checkpoints (explicit
     # write_delta_checkpoint remains the manual path).
-    interval = (cur_props or {}).get("delta.checkpointInterval")
+    interval = head.properties.get("delta.checkpointInterval")
     if interval is not None:
         iv = int(interval)
         if iv <= 0:
@@ -1049,7 +993,7 @@ def export_delta_log(spark: SparkSession, table) -> int:
     # also refreshes the Iceberg metadata layer — Delta's async iceberg
     # conversion shape, both formats over the same parquet. O(live
     # files) metadata, the same cost class as this export itself.
-    fmts = (cur_props or {}).get("delta.universalFormat.enabledFormats")
+    fmts = head.properties.get("delta.universalFormat.enabledFormats")
     if fmts and "iceberg" in [f.strip() for f in fmts.split(",")]:
         from .iceberg import export_iceberg_metadata
 

@@ -71,6 +71,7 @@ import time
 import uuid
 
 from ..localframe import local_df
+from .logfold import hive_partition_values, walk
 
 
 # --------------------------------------------------------------- avro core
@@ -1073,58 +1074,30 @@ def _file_metrics(
 
 
 def _file_added_versions(log_dir: str) -> dict[str, int]:
-    """Each live-relevant file's ADDING commit version — one O(retained
-    commits) JSON walk (checkpoint commits re-list live files as adds;
-    first-seen wins, so the true adding commit is kept when retained
-    and the checkpoint horizon bounds it after cleanup, exactly the
-    granularity the retained log can support)."""
+    """Each live-relevant file's ADDING commit version — one
+    :func:`logfold.walk` over the retained commits, a file's first
+    version in ``after.live - before.live`` (a checkpoint commit's true
+    delta, not its re-listed live files; after cleanup the oldest
+    retained commit adds its whole live list, exactly the granularity
+    the retained log can support)."""
     added: dict[str, int] = {}
-    for name in sorted(
-        f for f in os.listdir(log_dir) if f.endswith(".json")
-    ):
-        v = int(name.split(".")[0])
-        with open(os.path.join(log_dir, name)) as fh:
-            c = json.load(fh)
-        for f in c.get("adds") or []:
+    for v, _c, before, after in walk(log_dir):
+        for f in after.live - before.live:
             added.setdefault(f, v)
-        sc = c.get("adds_sidecar")
-        if sc:
-            import pyarrow.parquet as pq
-
-            tbl = pq.read_table(
-                os.path.join(log_dir, sc), columns=["file"]
-            )
-            for f in tbl.column("file").to_pylist():
-                added.setdefault(f, v)
     return added
 
 
 def _dv_dml_since(log_dir: str, prev_version: int) -> bool:
     """Whether any commit above ``prev_version`` set a per-commit ``dvs``
-    delta (a DV UPDATE/DELETE) — one pass over the commits since the
-    prior export. When that range was truncated (cleanup_log), answer
-    conservatively True."""
+    delta (a DV UPDATE/DELETE) — one :func:`logfold.walk` over the
+    commits since the prior export. When that range was truncated
+    (cleanup_log: the walk refuses it), answer conservatively True."""
     try:
-        names0 = sorted(
-            f for f in os.listdir(log_dir) if f.endswith(".json")
+        return any(
+            c.get("dvs") for _v, c, _b, _a in walk(log_dir, prev_version + 1)
         )
-        if names0 and int(names0[0].split(".")[0]) > prev_version + 1:
-            # oldest retained commit == prev_version + 1 means the
-            # (prev, current] commit range is FULLY present — only a gap
-            # above prev_version + 1 is real truncation (on the exact
-            # boundary the no_removals fast path has already forced
-            # 'overwrite', since replay at prev_version needs a commit
-            # at or below it)
-            return True
-        for name in names0:
-            if int(name.split(".")[0]) <= prev_version:
-                continue
-            with open(os.path.join(log_dir, name)) as fh:
-                if json.load(fh).get("dvs"):
-                    return True
     except OSError:
         return True
-    return False
 
 
 def _partition_value(raw: str, ice_type: str):
@@ -2536,7 +2509,6 @@ def convert_from_iceberg(spark, path: str):
     txlog is authoritative: ``to_iceberg`` refuses (foreign snapshot
     ids are not txlog versions), while ``to_delta_log`` works — there
     is no pre-existing ``_delta_log`` to collide with."""
-    from .logfold import hive_partition_values
     from .txlog import TxLogTable, footer_stats_dict
 
     t = TxLogTable(spark, path)

@@ -16,9 +16,12 @@ partition spec and adoption markers. :func:`snapshot` builds it from one
 listing of the log: the Delta paper's design (VLDB 2020, §3), the newest
 checkpoint at or below the version plus the commits after it, every
 commit applied by the one step :meth:`Snapshot.apply`. Table state is a
-view over a snapshot; nothing else walks the log for it (the per-commit
-passes that need every commit — history, commit times, cleanup and
-vacuum scans, exports — are named in tests/test_logfold.py). The txlog
+view over a snapshot, and nothing else applies a commit: a per-commit
+pass — ``history()``, the change feeds (:func:`commit_deltas_full`),
+the Delta export, the Iceberg export's added-version and DV-DML scans —
+steps :func:`walk`, which yields each commit with the snapshots before
+and after it. The few raw listings left (commit mtimes, the cleanup and
+vacuum scans) are named in tests/test_logfold.py. The txlog
 checkpoint writer serializes the snapshot after its commit
 (:meth:`Snapshot.checkpoint_fields`), so fold and checkpoint cannot
 drift. Legacy rule: a checkpoint written before the writer stamped some
@@ -51,22 +54,20 @@ from pyspark.sql.types import StructType
 # ------------------------------------------------------------ txlog fold
 
 
-def _checkpoint_state(
-    log_dir: str, c: dict, with_stats: bool = False
-) -> tuple[set, dict, dict]:
+def _checkpoint_state(log_dir: str, c: dict) -> tuple[set, dict, dict]:
     """(live file set, dvs_state, stats_state) carried by a CHECKPOINT
     commit: inline ``adds``/``dvs_state``/``stats_state`` for ordinary
     tables, or the parquet sidecar named by ``adds_sidecar`` for huge
     file counts. The ONE reader every fold must use — reading
     ``c["adds"]`` directly on a sidecar'd checkpoint silently yields an
-    empty table. Sidecar stats are read only ``with_stats`` (a
-    pre-stats sidecar lacks the column: "no stats", footers cover it)."""
+    empty table. A pre-stats sidecar lacks the stats column: "no
+    stats", footers cover it."""
     sc = c.get("adds_sidecar")
     if not sc:
         return (
             set(c["adds"]),
             dict(c.get("dvs_state") or {}),
-            dict(c.get("stats_state") or {}) if with_stats else {},
+            dict(c.get("stats_state") or {}),
         )
     full = os.path.join(log_dir, sc)
     names = pq.read_schema(full).names
@@ -92,34 +93,11 @@ def _checkpoint_state(
                 if pk is not None:
                     dvs[f]["pathkey"] = pk
     stats: dict[str, dict] = {}
-    if with_stats and "stats_json" in names:
+    if "stats_json" in names:
         for f, sj in zip(files, tbl.column("stats_json").to_pylist()):
             if sj is not None:
                 stats[f] = json.loads(sj)
     return set(files), dvs, stats
-
-
-def apply_commit(
-    log_dir: str, c: dict, live: set, dvs: dict
-) -> tuple[set, dict]:
-    """One commit's step of the (live files, deletion-vector state)
-    fold; returns NEW objects and never mutates its inputs, so callers
-    can keep the pre-commit state to diff against. A checkpoint commit
-    carries the full state. Otherwise: removed files leave the live set
-    and drop their DV (the data left the table or was compacted),
-    ``dvs_reset`` (restore) replaces the whole DV state, and ``dvs``
-    entries replace per-file descriptors (a new DV for a file supersedes
-    its old one — DML always writes the union)."""
-    if c.get("checkpoint"):
-        return _checkpoint_state(log_dir, c)[:2]
-    removed = set(c["removes"])
-    live = (live - removed) | set(c["adds"])
-    if c.get("dvs_reset") is not None:
-        dvs = dict(c["dvs_reset"])
-    else:
-        dvs = {f: d for f, d in dvs.items() if f not in removed}
-    dvs.update(c.get("dvs") or {})
-    return live, dvs
 
 
 def _commit_entries(log_dir: str) -> list[tuple[int, str]]:
@@ -218,16 +196,28 @@ class Snapshot:
 
     def apply(self, log_dir: str, v: int, c: dict) -> "Snapshot":
         """The snapshot after commit ``c`` at version ``v`` — the ONE
-        per-commit step of every table-state field. A checkpoint commit
-        replaces live files, vectors and stats wholesale; ``*_reset`` /
-        ``*_state`` payloads replace their field (restore, checkpoints);
-        otherwise each field takes the commit's delta. Never mutates."""
+        per-commit step of every table-state field; nothing else applies
+        a commit (a per-commit pass steps :func:`walk`). A checkpoint
+        commit replaces live files, vectors and stats wholesale;
+        ``*_reset`` / ``*_state`` payloads replace their field (restore,
+        checkpoints); otherwise each field takes the commit's delta.
+        Never mutates."""
         full = metadata_complete(c)
         if c.get("checkpoint"):
-            live, dvs, stats = _checkpoint_state(log_dir, c, with_stats=True)
+            live, dvs, stats = _checkpoint_state(log_dir, c)
         else:
-            live, dvs = apply_commit(log_dir, c, set(self.live), self.dvs)
+            # removed files leave and drop their vector and stats (the
+            # data left the table or was compacted); ``dvs_reset``
+            # (restore) replaces the whole vector state, and ``dvs``
+            # entries replace per-file descriptors (DML always writes
+            # the union, so a new vector supersedes the old one)
             removed = set(c["removes"])
+            live = (self.live - removed) | set(c["adds"])
+            if c.get("dvs_reset") is not None:
+                dvs = dict(c["dvs_reset"])
+            else:
+                dvs = {f: d for f, d in self.dvs.items() if f not in removed}
+            dvs.update(c.get("dvs") or {})
             stats = {f: s for f, s in self.stats.items() if f not in removed}
         if c.get("stats_reset") is not None:
             stats = dict(c["stats_reset"])
@@ -374,6 +364,10 @@ def empty_snapshot(partition_by=(), partition_schema=None) -> Snapshot:
     return Snapshot(version=-1, oldest=0, origin=origin)
 
 
+def _origin(c: dict) -> dict:
+    return {k: c[k] for k in _ORIGIN_KEYS if k in c}
+
+
 def oldest_commit(
     log_dir: str, entries: list[tuple[int, str]] | None = None
 ) -> tuple[int, dict]:
@@ -384,8 +378,7 @@ def oldest_commit(
     if not entries:
         raise FileNotFoundError(f"no commits in {log_dir}")
     v, name = entries[0]
-    c = _load(log_dir, name)
-    return v, {k: c[k] for k in _ORIGIN_KEYS if k in c}
+    return v, _origin(_load(log_dir, name))
 
 
 def snapshot(
@@ -433,13 +426,58 @@ def snapshot(
         if bootstrapped and not need:
             break
     if loaded[-1][0] == oldest:
-        origin = {k: loaded[-1][1][k] for k in _ORIGIN_KEYS if k in loaded[-1][1]}
+        origin = _origin(loaded[-1][1])
     else:
         origin = oldest_commit(log_dir, entries)[1]
     snap = Snapshot(version=-1, oldest=oldest, origin=origin)
     for v, c in reversed(loaded):
         snap = snap.apply(log_dir, v, c)
     return snap
+
+
+def walk(log_dir: str, lo: int | None = None, hi: int | None = None):
+    """Yield ``(v, commit, before, after)`` for every txlog commit in
+    ``[lo, hi]`` (default: the oldest retained commit through the latest),
+    where ``after = before.apply(log_dir, v, commit)`` — the ONE
+    per-commit pass. History, change feeds, the Delta export and the
+    Iceberg scans read ``before``/``after`` instead of folding the log
+    themselves, so they see exactly the state :func:`snapshot` builds.
+
+    ``before`` at ``lo`` is the snapshot at ``lo - 1`` (O(checkpoint
+    interval) loads, never a fold from commit 0); at the oldest retained
+    commit it is the empty state, so after ``cleanup_log`` that commit's
+    delta is the horizon checkpoint's whole live list. Horizon rule: a
+    range starting BELOW the oldest retained commit refuses loudly (its
+    state went with the commits ``cleanup_log`` deleted), and so does a
+    gap inside the range."""
+    entries = _commit_entries(log_dir)
+    if not entries:
+        raise FileNotFoundError(f"no commits in {log_dir}")
+    oldest = entries[0][0]
+    lo = oldest if lo is None else lo
+    hi = entries[-1][0] if hi is None else hi
+    if lo < oldest:
+        raise FileNotFoundError(
+            f"commits from version {lo} are below the retained log head "
+            f"(oldest commit: {oldest}) — they were deleted by cleanup_log;"
+            " the change-feed horizon is the log-retention horizon"
+        )
+    todo = [(v, name) for v, name in entries if lo <= v <= hi]
+    before = (
+        None if lo == oldest or not todo
+        else snapshot(log_dir, lo - 1, entries=entries)
+    )
+    for v, name in todo:
+        c = _load(log_dir, name)
+        if before is None:
+            before = Snapshot(version=v - 1, oldest=v, origin=_origin(c))
+        if v != before.version + 1:
+            raise FileNotFoundError(
+                f"txlog {log_dir} is missing commit {before.version + 1}"
+            )
+        after = before.apply(log_dir, v, c)
+        yield v, c, before, after
+        before = after
 
 
 def replay_log_full(
@@ -498,26 +536,22 @@ def _commit_record(
 def commit_deltas_full(
     log_dir: str, from_version: int, to_version: int
 ) -> list[dict]:
-    """Per-commit deltas over ``[from_version, to_version]``, computed
-    checkpoint-aware in ONE pass (a checkpoint commit's recorded adds are
-    the full live list; its TRUE delta is live(v) - live(v-1)). Shared by
+    """Per-commit deltas over ``[from_version, to_version]``: one
+    :func:`walk`, each record the diff of the snapshots on either side of
+    its commit (a checkpoint commit's recorded adds are the full live
+    list; its TRUE delta is live(v) - live(v-1)). Shared by
     :meth:`TxLogTable.read_changes` and the ``txlog`` DataSource's
     change-feed and streaming planners; a Delta log is served by
-    :func:`delta_deltas_full`.
+    :func:`delta_deltas_full`. A long-lived streaming tail polling this
+    per trigger pays O(commits in range + checkpoint interval), never
+    O(total commits).
 
-    Bootstraps from the newest CHECKPOINT commit (full-file-list) below
-    ``from_version`` — found by a short backward scan (checkpoints land
-    every ~20 commits) — instead of folding from commit 0: a long-lived
-    streaming tail polling this per trigger pays O(commits in range +
-    checkpoint interval), never O(total commits).
-
-    Horizon rule: after ``cleanup_log`` truncated the log head, a range
-    starting BELOW the oldest retained commit refuses loudly. A range
-    starting AT it is served, with that commit's record carrying the
-    horizon checkpoint's full file list as adds — exactly the snapshot
-    a fresh stream bootstraps from. A caller that needs the TRUE delta
-    of that commit (live(v-1) is gone) refuses it itself, as
-    :meth:`TxLogTable.read_changes` does.
+    Horizon rule (the walk's): a range starting BELOW the oldest retained
+    commit refuses loudly. A range starting AT it is served, with that
+    commit's record carrying the horizon checkpoint's full file list as
+    adds — exactly the snapshot a fresh stream bootstraps from. A caller
+    that needs the TRUE delta of that commit (live(v-1) is gone) refuses
+    it itself, as :meth:`TxLogTable.read_changes` does.
 
     Each record is a dict: ``v``, ``adds``/``removes`` (TRUE file
     deltas), ``op`` (lets consumers tell data-unchanged rewrites —
@@ -532,38 +566,13 @@ def commit_deltas_full(
     the DV it carries AFTER (a restore re-adding a DV'd file)."""
     if is_delta_log(log_dir):
         return delta_deltas_full(log_dir, from_version, to_version)
-    entries = _commit_entries(log_dir)
-    if entries and entries[0][0] > from_version:
-        raise FileNotFoundError(
-            f"change feed from version {from_version} is below the "
-            f"retained log head (oldest commit: {entries[0][0]}) — the "
-            "commits were deleted by cleanup_log; the CDF horizon is "
-            "the log-retention horizon"
+    return [
+        _commit_record(
+            v, c.get("op") or "", c.get("cdc"),
+            before.live, after.live, before.dvs, after.dvs,
         )
-    # backward scan for the bootstrap checkpoint strictly below the range
-    start_idx, live, dvs = 0, set(), {}
-    for i in range(len(entries) - 1, -1, -1):
-        if entries[i][0] >= from_version:
-            continue
-        c = _load(log_dir, entries[i][1])
-        if c.get("checkpoint"):
-            start_idx = i + 1
-            live, dvs, _stats = _checkpoint_state(log_dir, c)
-            break
-    out: list[dict] = []
-    for v, name in entries[start_idx:]:
-        if v > to_version:
-            break
-        c = _load(log_dir, name)
-        prev, prev_dvs = live, dvs
-        live, dvs = apply_commit(log_dir, c, live, dvs)
-        if v >= from_version:
-            out.append(
-                _commit_record(
-                    v, c.get("op") or "", c.get("cdc"), prev, live, prev_dvs, dvs
-                )
-            )
-    return out
+        for v, c, before, after in walk(log_dir, from_version, to_version)
+    ]
 
 
 def hive_partition_values(rel_path: str) -> dict[str, str | None]:

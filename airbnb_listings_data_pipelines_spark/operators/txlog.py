@@ -52,9 +52,6 @@ from ..localframe import local_df
 from .logfold import (
     Snapshot,
     _commit_entries,
-    _commit_record,
-    _load,
-    apply_commit,
     commit_deltas_full,
     empty_snapshot,
     hive_partition_values,
@@ -63,6 +60,7 @@ from .logfold import (
     oldest_commit,
     replay_log_full,  # re-exported: perfbench traces txlog.replay_log_full
     snapshot,
+    walk,
 )
 from .merge import (
     change_feed,
@@ -1414,29 +1412,22 @@ class TxLogTable:
 
     def history(self) -> list[dict]:
         """One record per retained commit: ``op``, and the TRUE file
-        delta of the commit — one fold pass over the retained range, so
-        a checkpoint commit (whose recorded adds are the whole live list)
-        reports what it changed, not the table. The oldest retained
-        commit after ``cleanup_log`` has no predecessor: it reports its
-        live list as adds. ``n_dvs`` counts the vectors it set."""
-        out = []
-        live: set[str] = set()
-        dvs: dict[str, dict] = {}
-        for v, name in _commit_entries(self.log_dir):
-            c = _load(self.log_dir, name)
-            prev, prev_dvs = live, dvs
-            live, dvs = apply_commit(self.log_dir, c, live, dvs)
-            rec = _commit_record(v, c.get("op"), None, prev, live, prev_dvs, dvs)
-            out.append(
-                {
-                    "version": v,
-                    "op": rec["op"],
-                    "n_adds": len(rec["adds"]),
-                    "n_removes": len(rec["removes"]),
-                    "n_dvs": len(c.get("dvs") or {}),
-                }
-            )
-        return out
+        delta of the commit — one :func:`logfold.walk` over the retained
+        range, so a checkpoint commit (whose recorded adds are the whole
+        live list) reports what it changed, not the table. The oldest
+        retained commit after ``cleanup_log`` has no predecessor: it
+        reports its live list as adds. ``n_dvs`` counts the vectors it
+        set."""
+        return [
+            {
+                "version": v,
+                "op": c.get("op"),
+                "n_adds": len(after.live - before.live),
+                "n_removes": len(before.live - after.live),
+                "n_dvs": len(c.get("dvs") or {}),
+            }
+            for v, c, before, after in walk(self.log_dir)
+        ]
 
     # ------------------------------------------------------------- commit
 
@@ -4573,98 +4564,68 @@ class TxLogTable:
                 if not dry_run:
                     os.remove(full)
                 deleted.append(rel)
-        # checkpoint live-list sidecars referenced by NO commit (a writer
-        # crashed between sidecar write and commit publish, or lost the
-        # race and its unlink failed) are orphans too — without this
-        # sweep a crash-prone table accumulates full-live-list parquets
-        # under _txlog/ckpt/ forever
-        ckpt_dir = os.path.join(self.log_dir, "ckpt")
-        if os.path.isdir(ckpt_dir):
-
-            def _referenced_ckpts() -> set:
-                refs = set()
-                for name in sorted(
-                    f
-                    for f in os.listdir(self.log_dir)
-                    if f.endswith(".json")
-                ):
-                    try:
-                        with open(os.path.join(self.log_dir, name)) as fh:
-                            sc = json.load(fh).get("adds_sidecar")
-                    except (OSError, ValueError):
-                        continue
-                    if sc:
-                        refs.add(sc)
-                return refs
-
-            candidates = []
-            referenced_ckpts = _referenced_ckpts()
-            for f in sorted(os.listdir(ckpt_dir)):
-                rel = f"ckpt/{f}"
-                full = os.path.join(ckpt_dir, f)
-                if rel in referenced_ckpts:
+        # checkpoint live-list sidecars (``_txlog/ckpt/``) and change-data
+        # sidecars (``_cdc/``) referenced by NO surviving commit JSON are
+        # orphans: a writer crashed between sidecar write and commit
+        # publish, or lost its commit race and its unlink failed, or
+        # (change data) cleanup_log truncated its commit. Without this
+        # sweep a crash-prone table accumulates them forever.
+        def _referenced() -> set:
+            """Every sidecar a commit names, in ONE pass over the raw
+            commit JSONs (a torn or vanished commit names nothing):
+            ``adds_sidecar`` is relative to the log (``ckpt/...``),
+            ``cdc`` to the table (``_cdc/...``), so one set holds both."""
+            refs = set()
+            for name in sorted(
+                f for f in os.listdir(self.log_dir) if f.endswith(".json")
+            ):
+                try:
+                    with open(os.path.join(self.log_dir, name)) as fh:
+                        c = json.load(fh)
+                except (OSError, ValueError):
                     continue
-                if min_age_s > 0 and now - os.path.getmtime(full) < min_age_s:
-                    continue  # possibly staged by an in-flight checkpoint
-                candidates.append((rel, full))
+                refs |= {c.get("adds_sidecar"), c.get("cdc")} - {None}
+            return refs
+
+        ckpt_dir = os.path.join(self.log_dir, "ckpt")
+        cdc_dir = os.path.join(self.path, "_cdc")
+        has_ckpt, has_cdc = os.path.isdir(ckpt_dir), os.path.isdir(cdc_dir)
+        if has_ckpt or has_cdc:
+            refs = _referenced()
+            # (reference, path, reported name) of every sidecar on disk
+            candidates = [
+                (f"ckpt/{f}", os.path.join(ckpt_dir, f), f"_txlog/ckpt/{f}")
+                for f in sorted(os.listdir(ckpt_dir) if has_ckpt else [])
+            ] + [
+                (f"_cdc/{f}", os.path.join(cdc_dir, f), f"_cdc/{f}")
+                for f in sorted(os.listdir(cdc_dir) if has_cdc else [])
+                if f.endswith(".parquet")
+            ]
+            candidates = [
+                (ref, full, shown)
+                for ref, full, shown in candidates
+                if ref not in refs
+                # possibly staged by an in-flight checkpoint or DML
+                and not (
+                    min_age_s > 0 and now - os.path.getmtime(full) < min_age_s
+                )
+            ]
             if candidates:
-                # a checkpoint commit can PUBLISH between the commit-JSON
-                # listing above and the ckpt/ listing: its just-written
-                # sidecar would look unreferenced even though a committed
-                # checkpoint now points at it. Re-list the commit JSONs
-                # immediately before deleting and only remove sidecars
-                # that are STILL unreferenced — this closes the
+                # a commit naming a sidecar can PUBLISH between the
+                # commit-JSON listing above and the sidecar listing: its
+                # just-written sidecar would look unreferenced. Re-list
+                # the commit JSONs immediately before deleting and remove
+                # only sidecars STILL unreferenced — this closes the
                 # list-order race down to the publish-vs-remove instant
                 # (callers who vacuum concurrently with live writers
                 # should additionally pass min_age_s > 0).
-                referenced_ckpts = _referenced_ckpts()
-                for rel, full in candidates:
-                    if rel in referenced_ckpts:
+                refs = _referenced()
+                for ref, full, shown in candidates:
+                    if ref in refs:
                         continue
                     if not dry_run:
                         os.remove(full)
-                    deleted.append(f"_txlog/{rel}")
-        # change-data sidecars referenced by NO surviving commit JSON
-        # (their commit was truncated by cleanup_log, or a writer lost
-        # its commit race and the unlink failed) are orphans — same
-        # re-list-before-delete discipline as the ckpt sweep above
-        cdc_dir = os.path.join(self.path, "_cdc")
-        if os.path.isdir(cdc_dir):
-
-            def _referenced_cdc() -> set:
-                refs = set()
-                for name in sorted(
-                    f
-                    for f in os.listdir(self.log_dir)
-                    if f.endswith(".json")
-                ):
-                    try:
-                        with open(os.path.join(self.log_dir, name)) as fh:
-                            c = json.load(fh).get("cdc")
-                    except (OSError, ValueError):
-                        continue
-                    if c:
-                        refs.add(c)
-                return refs
-
-            cdc_candidates = []
-            refs = _referenced_cdc()
-            for f in sorted(os.listdir(cdc_dir)):
-                rel = f"_cdc/{f}"
-                full = os.path.join(cdc_dir, f)
-                if not f.endswith(".parquet") or rel in refs:
-                    continue
-                if min_age_s > 0 and now - os.path.getmtime(full) < min_age_s:
-                    continue  # possibly staged by an in-flight DML
-                cdc_candidates.append((rel, full))
-            if cdc_candidates:
-                refs = _referenced_cdc()
-                for rel, full in cdc_candidates:
-                    if rel in refs:
-                        continue
-                    if not dry_run:
-                        os.remove(full)
-                    deleted.append(rel)
+                    deleted.append(shown)
         # abandoned staging temp files from crashed sidecar writes
         for f in sorted(os.listdir(self.log_dir)):
             if f.startswith(".ckpt-stage-"):

@@ -135,12 +135,15 @@ def test_vanilla_session_outside_repo_streams_txlog_and_delta(tmp_path):
         assert streamed == snapshot, kind
 
 
-# The per-commit passes that legitimately read the txlog commit by commit
-# (every other piece of table state is a view over logfold.Snapshot):
-# commit mtimes, the cleanup horizon scan, vacuum's GC reference scans,
-# the interleaved-commit check of a rebase, history's per-commit deltas,
-# the Iceberg export's added-version and since-prior-export scans, and
-# the snapshot's own one listing.
+# The places that legitimately list the txlog or open a commit (every
+# piece of table state is a view over logfold.Snapshot, and every
+# per-commit pass — history, change feeds, the Delta export, the Iceberg
+# export's scans — steps logfold.walk): commit mtimes, the cleanup
+# horizon scan, vacuum's one GC reference scan (raw, so a torn commit
+# cannot stop it), the interleaved-commit check of a rebase, and the
+# snapshot's own one listing. ``Snapshot.apply`` is the one step that
+# applies a commit; outside logfold.py only the checkpoint writer calls
+# it, to serialize the snapshot after the commit it publishes.
 _LOG_WALKS_ALLOWED = {
     "operators/txlog.py": {
         "TxLogTable._snapshot",
@@ -148,9 +151,10 @@ _LOG_WALKS_ALLOWED = {
         "TxLogTable.cleanup_log",
         "TxLogTable.vacuum",
         "TxLogTable._rebase_base",
-        "TxLogTable.history",
+        "TxLogTable._try_commit",
     },
-    "operators/iceberg.py": {"_file_added_versions", "_dv_dml_since"},
+    "operators/iceberg.py": set(),
+    "operators/deltalog.py": set(),
     "sources/txlog_source.py": set(),
 }
 
@@ -158,8 +162,9 @@ _LOG_WALKS_ALLOWED = {
 def _log_walks(path: str) -> list[tuple[str, int]]:
     """(enclosing top-level function or method, line) of every place that
     lists the log dir or opens a commit: ``os.listdir(...log_dir...)``,
-    ``open(...log_dir...)`` / ``open(..._commit_name...)``, and the
-    logfold commit readers ``_load`` / ``_commit_entries``."""
+    ``open(...log_dir...)`` / ``open(..._commit_name...)``, the logfold
+    commit readers ``_load`` / ``_commit_entries`` — or applies a commit
+    itself: ``apply_commit(...)`` / ``<snapshot>.apply(...)``."""
     with open(path) as fh:
         tree = ast.parse(fh.read())
     scopes: list[tuple[str, ast.AST]] = []
@@ -183,16 +188,19 @@ def _log_walks(path: str) -> list[tuple[str, int]]:
                 (fn == "os.listdir" and "log_dir" in args)
                 or (fn == "open" and ("log_dir" in args or "_commit_name" in args))
                 or fn in ("_load", "_commit_entries", "logfold._load")
+                or fn.split(".")[-1] in ("apply_commit", "_apply_commit")
+                or fn.endswith(".apply")
             ):
                 out.append((name, call.lineno))
     return out
 
 
 def test_table_state_never_walks_the_log_outside_the_snapshot():
-    """Table state comes from the snapshot: txlog.py, iceberg.py and the
-    DataSource list the log or open a commit only inside the named
-    per-commit passes. An accessor that re-grows its own walk of the log
-    fails here."""
+    """Table state comes from the snapshot and per-commit state from
+    logfold.walk: txlog.py, iceberg.py, deltalog.py and the DataSource
+    list the log, open a commit or apply one only inside the named
+    places. An accessor or export that re-grows its own walk or fold of
+    the log fails here."""
     pkg = os.path.join(REPO, PACKAGE)
     for rel, allowed in _LOG_WALKS_ALLOWED.items():
         walks = _log_walks(os.path.join(pkg, rel))

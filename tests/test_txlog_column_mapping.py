@@ -133,8 +133,9 @@ def test_delta_export_of_mapped_table_roundtrips(spark, tmp_path):
     reader 2 / writer 5, columnMapping=name): the independent log-replay
     reader matches the native reader row-for-row at EVERY version, the
     upgrade commit carries the mode=name configuration + per-field
-    physicalName metadata, and incremental re-export after further DML
-    stays green. Reference: delta.io PROTOCOL.md 'Column Mapping'."""
+    physicalName metadata, a commit that records no schema keeps the
+    logical names, and incremental re-export after further DML stays
+    green. Reference: delta.io PROTOCOL.md 'Column Mapping'."""
     import json as _json
 
     from airbnb_listings_data_pipelines_spark.operators.deltalog import (
@@ -145,13 +146,16 @@ def test_delta_export_of_mapped_table_roundtrips(spark, tmp_path):
     t = _t(spark, tmp_path)
     t.to_delta_log()  # v0 exported pre-mapping (stays reader v1)
     t.rename_column("price", "amount")  # v1: activates columnMapping
-    t.drop_column("k")  # v2: schema narrows to [amount]
-    t.add_column("note", "string")  # v3
+    # v2 records no schema: its exported metaData must still carry the
+    # table's schema (logical names), not a data file's physical footer
+    t.set_properties({"team": "core"})
+    t.drop_column("k")  # v3: schema narrows to [amount]
+    t.add_column("note", "string")  # v4
     t.append(
         spark.createDataFrame(
             [(30.0, "x")], "amount double, note string"
         ).coalesce(1)
-    )  # v4
+    )  # v5
     t.to_delta_log()
     for v in range(t.version() + 1):
         d = read_delta_snapshot(spark, str(tmp_path / "t"), version=v)

@@ -20,6 +20,9 @@ import pytest
 from pyspark.sql import functions as F
 
 import airbnb_listings_data_pipelines_spark.operators.txlog as txmod
+from airbnb_listings_data_pipelines_spark.operators.deltalog import (
+    read_delta_snapshot,
+)
 from airbnb_listings_data_pipelines_spark.operators.txlog import (
     TxLogTable,
     merge_into_txlog,
@@ -184,10 +187,20 @@ def _head(t: TxLogTable) -> dict:
     }
 
 
+def _feed(t: TxLogTable, head: int) -> list:
+    """The change feed over every commit, as row counts per (version,
+    change type) — file names differ between the tables, rows do not."""
+    df = t.read_changes(1, head)
+    return sorted(
+        map(tuple, df.groupBy("_commit_version", "_change_type").count().collect())
+    )
+
+
 def test_checkpointed_fold_equals_uncheckpointed_fold(spark, tmp_path, monkeypatch):
     """One op sequence on two tables, one checkpointed every 5 commits
-    and one never: every accessor agrees at every version, and again on
-    the versions the checkpointed table retains after cleanup_log."""
+    and one never: every accessor, history, the change feed and the Delta
+    export agree at every version, and the accessors again on the
+    versions the checkpointed table retains after cleanup_log."""
     every = {"ck": 5, "flat": 10**6}
     tables = {
         name: _table(spark, tmp_path / name, n=60, files=3) for name in every
@@ -241,6 +254,18 @@ def test_checkpointed_fold_equals_uncheckpointed_fold(spark, tmp_path, monkeypat
         assert _view(ck, v) == _view(flat, v), f"version {v}"
     assert _head(ck) == _head(flat)
     assert _head(ck)["txn"] == 8
+    # the per-commit passes (logfold.walk) agree too: history, the
+    # change feed and the Delta export, at every version
+    assert ck.history() == flat.history()
+    assert _feed(ck, head) == _feed(flat, head)
+    for t in (ck, flat):
+        assert t.to_delta_log() == head
+        for v in range(head + 1):
+            d, n = read_delta_snapshot(spark, t.path, version=v), t.read_version(v)
+            assert d.columns == n.columns, f"delta export v{v} columns"
+            assert sorted(map(tuple, d.collect())) == sorted(
+                map(tuple, n.collect())
+            ), f"delta export v{v} rows"
 
     monkeypatch.setattr(txmod, "_CHECKPOINT_EVERY", every["ck"])
     deleted = ck.cleanup_log(retain_versions=6)
