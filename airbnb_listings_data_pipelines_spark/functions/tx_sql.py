@@ -39,7 +39,7 @@ VACUUM), and ANSI for the rest:
   is a catalog/temp-view name or a parenthesized subquery.
 - ``OPTIMIZE t [WHERE col = v | WHERE col BETWEEN lo AND hi]
   [ZORDER BY (c1, c2)] [FULL]`` — WHERE scopes the compaction to
-  overlapping files (partition dirs / footer envelopes), Delta's
+  overlapping files (partition dirs / recorded stats), Delta's
   partition-scoped OPTIMIZE; on a clustered table the bare form is the
   INCREMENTAL liquid maintenance pass and ``FULL`` forces the global
   whole-snapshot recluster (Delta's ``OPTIMIZE ... FULL``)

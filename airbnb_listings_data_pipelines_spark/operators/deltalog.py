@@ -89,85 +89,49 @@ def _schema_string(spark: SparkSession, table, files: list[str]) -> str:
     return table._read_files(files).schema.json()
 
 
-def _file_delta_stats(full_path: str) -> str | None:
-    """Per-file statistics for an ``add`` action (the protocol's optional
-    ``stats`` JSON: numRecords / minValues / maxValues / nullCount),
-    derived from the parquet footer — metadata-only, no row groups read.
-    External Delta readers use these for data skipping. Columns whose
-    parquet stats are absent or non-JSON-representable are omitted (the
-    spec allows partial stats)."""
-    import pyarrow.parquet as pq
-
-    try:
-        md = pq.ParquetFile(full_path).metadata
-    except Exception:
-        return None
-    # a column's envelope is published ONLY if every row group contributed
-    # (min/max resp. null_count): a partial envelope would be NARROWER than
-    # the file's true range and make an external reader data-skip a file
-    # that contains matching rows — silent wrong results. Coverage is
-    # counted per column; under-covered columns are dropped.
-    mins: dict = {}
-    maxs: dict = {}
-    nulls: dict = {}
-    mm_cover: dict[str, int] = {}
-    null_cover: dict[str, int] = {}
-    n_rg = md.num_row_groups
-    for rg in range(n_rg):
-        row_group = md.row_group(rg)
-        for ci in range(row_group.num_columns):
-            col = row_group.column(ci)
-            name = col.path_in_schema
-            if "." in name:  # nested columns: skip (flat-schema envelope)
-                continue
-            st = col.statistics
-            if st is None:
-                continue
-            if st.null_count is not None:
-                nulls[name] = nulls.get(name, 0) + st.null_count
-                null_cover[name] = null_cover.get(name, 0) + 1
-            if not st.has_min_max:
-                # an ALL-NULL row group legitimately has no min/max and
-                # contributes nothing to the non-null envelope — count it
-                # covered so the other row groups' exact range survives
-                if st.null_count is not None and st.null_count == row_group.num_rows:
-                    mm_cover[name] = mm_cover.get(name, 0) + 1
-                continue
-            try:
-                lo, hi = st.min, st.max
-            except Exception:
-                # pyarrow cannot decode every physical type's statistics
-                # (e.g. some decimal encodings raise
-                # ArrowNotImplementedError) — partial stats are legal,
-                # omit the column rather than fail the export
-                continue
-            if isinstance(lo, bytes) or isinstance(hi, bytes):
-                try:
-                    lo, hi = lo.decode("utf-8"), hi.decode("utf-8")
-                except (UnicodeDecodeError, AttributeError):
-                    continue
-            if not (isinstance(lo, (int, float, str, bool)) and isinstance(hi, (int, float, str, bool))):
-                continue  # non-JSON-primitive types (date/timestamp): omit
-            if any(
-                isinstance(x, float) and not math.isfinite(x) for x in (lo, hi)
-            ):
-                # json.dumps would emit the non-standard Infinity/NaN
-                # tokens, which strict external parsers reject — omit
-                continue
-            mins[name] = lo if name not in mins else min(mins[name], lo)
-            maxs[name] = hi if name not in maxs else max(maxs[name], hi)
-            mm_cover[name] = mm_cover.get(name, 0) + 1
-    mins = {k: v for k, v in mins.items() if mm_cover.get(k) == n_rg}
-    maxs = {k: v for k, v in maxs.items() if mm_cover.get(k) == n_rg}
-    nulls = {k: v for k, v in nulls.items() if null_cover.get(k) == n_rg}
-    return json.dumps(
-        {
-            "numRecords": md.num_rows,
-            "minValues": mins,
-            "maxValues": maxs,
-            "nullCount": nulls,
-        }
+def _bound_ok(dtype: str | None, v) -> bool:
+    """Whether ``v`` is a publishable ``add.stats`` bound for a column of
+    type ``dtype``: numbers (finite only — NaN/Infinity are not JSON,
+    strict external parsers reject them), booleans, strings and dates
+    (the recorded ISO date string is already Delta's form), each with
+    its JSON kind. Timestamps and decimals stay unpublished."""
+    if dtype == "boolean":
+        return isinstance(v, bool)
+    if dtype in ("string", "date"):
+        return isinstance(v, str)
+    return (
+        dtype in ("byte", "short", "integer", "long", "float", "double")
+        and isinstance(v, (int, float))
+        and not isinstance(v, bool)
+        and math.isfinite(v)
     )
+
+
+def _add_stats(entry: dict, types: dict[str, str], dv: bool) -> str:
+    """A file's recorded stats entry (``Snapshot.stats``) as Delta's
+    ``add.stats`` JSON, which external readers data-skip on: the
+    protocol keys only (never the ``clusteredBy`` tag), bounds only
+    where :func:`_bound_ok` allows for the column's type in ``types``
+    (physical name -> type name). A DV-carrying file's stats describe
+    the PHYSICAL file, deleted rows included: ``tightBounds: false`` is
+    how the protocol marks its min/max as possibly wider than the live
+    rows."""
+
+    def part(k: str, bounds: bool) -> dict:
+        m = entry.get(k)
+        if not isinstance(m, dict):
+            return {}
+        return {c: v for c, v in m.items() if not bounds or _bound_ok(types.get(c), v)}
+
+    out = {
+        "numRecords": entry.get("numRecords"),
+        "minValues": part("minValues", True),
+        "maxValues": part("maxValues", True),
+        "nullCount": part("nullCount", False),
+    }
+    if dv:
+        out["tightBounds"] = False
+    return json.dumps({k: v for k, v in out.items() if v is not None})
 
 
 def _schema_fields(schema_string: str) -> list[tuple[str, object]]:
@@ -309,7 +273,12 @@ def export_delta_log(spark: SparkSession, table) -> int:
     features each version needs (latched on for the rest of the log),
     column ids, in-commit timestamps and the change-data mirror.
     """
-    from .txlog import _commit_name, _footer_schema
+    from .txlog import (
+        _commit_name,
+        _footer_schema,
+        _stats_entry,
+        footer_stats_dict,
+    )
 
     delta_dir = os.path.join(table.path, DELTA_DIR)
     os.makedirs(delta_dir, exist_ok=True)
@@ -773,6 +742,13 @@ def export_delta_log(spark: SparkSession, table) -> int:
             _materialize_delta_dvs(table, dv_new) if dv_new else {}
         )
 
+        # add.stats bounds are typed by the schema this version exports
+        stat_types = {
+            (after.mapping or {}).get(fd["name"], fd["name"]): fd["type"]
+            for fd in json.loads(meta_schema_str)["fields"]
+            if isinstance(fd["type"], str)
+        }
+
         def _add_action(f: str, dv: dict | None) -> dict:
             full = os.path.join(table.path, f)
             # a file can be gone already if this version predates a vacuum;
@@ -801,17 +777,13 @@ def export_delta_log(spark: SparkSession, table) -> int:
             if rt_feature and f in after.row_bases:
                 add["baseRowId"] = after.row_bases[f]
                 add["defaultRowCommitVersion"] = rt_dcv.get(f, v)
-            stats = _file_delta_stats(full) if exists else None
-            if stats is not None:
-                if dv is not None:
-                    # stats on a DV-carrying file describe the PHYSICAL
-                    # file (deleted rows included): tightBounds=false is
-                    # how the protocol marks min/max as possibly wider
-                    # than the live rows
-                    s = json.loads(stats)
-                    s["tightBounds"] = False
-                    stats = json.dumps(s)
-                add["stats"] = stats
+            # the stats the txlog recorded when it added the file; only a
+            # legacy file committed before stats recording reads its footer
+            entry = _stats_entry(after.stats, f) or (
+                footer_stats_dict(full) if exists else None
+            )
+            if entry:
+                add["stats"] = _add_stats(entry, stat_types, dv is not None)
             if dv is not None:
                 add["deletionVector"] = dv
             return add
@@ -2065,14 +2037,15 @@ def read_delta_where(
     """Snapshot read with FILE-LEVEL data skipping driven by the Delta
     log's ``add.stats`` (the numbers :func:`export_delta_log` writes and
     external Delta writers ship): only files whose stats envelope for
-    ``column`` overlaps ``[lo, hi]`` are handed to the scan, with the
+    ``column`` may overlap ``[lo, hi]`` are handed to the scan, with the
     residual row filter applied on top — skipping is an optimization,
-    never a semantics change. Conservative-keep rules: files lacking
-    stats, lacking min/max for the column (including null-only files,
-    which stay in the scan and simply contribute no rows past the
-    residual filter), carrying malformed stats of ANY shape, or carrying
-    NaN bounds are all KEPT — the overlap test is written in the
-    NaN-safe negated form so an unordered comparison can never skip.
+    never a semantics change. The decision is
+    ``txlog.overlapping_files``, the rule ``TxLogTable.read_where``
+    applies to the txlog's recorded stats: string bounds parse as the
+    column's type; files lacking stats, lacking min/max for the column,
+    carrying malformed stats of ANY shape, or carrying NaN bounds are
+    KEPT; a file whose column is all null (nullCount == numRecords) is
+    skipped.
 
     On a PARTITION column the skip uses ``add.partitionValues`` instead:
     the string value is parsed to the schemaString type and compared
@@ -2082,56 +2055,42 @@ def read_delta_where(
     conservatively; a null partition value is skipped (null never
     satisfies the range residual).
 
-    This is the Delta-native twin of ``txlog.TxLogTable.read_where``
-    (which derives the same envelopes from parquet footers at query
-    time): here the log IS the statistics store, so skipping needs no
-    footer reads at all — the 100 TB point of stats-in-log.
+    Here the log IS the statistics store, so skipping needs no footer
+    reads at all — the 100 TB point of stats-in-log.
     """
     from pyspark.sql import functions as F
-    from pyspark.sql.types import StructType
+
+    from .txlog import overlapping_files
 
     path = path.rstrip("/")
     delta_dir = os.path.join(path, DELTA_DIR)
     state = _replay_delta_log(delta_dir, version)
     live, metadata = state.live, state.metadata
-    pcols = metadata.get("partitionColumns") or []
     # stats and partitionValues are keyed by PHYSICAL column name under
     # columnMapping (they describe the parquet layout); identity for
     # unmapped tables
     _require_supported_mapping(metadata)
     phys_col = _physical_names(metadata).get(column, column)
-    kept: dict[str, dict] = {}
-    if column in pcols:
-        from .txlog import _parse_partition_value
+    partition = column in (metadata.get("partitionColumns") or [])
+    schema = _logical_schema(metadata)
+    dtype = schema[column].dataType if column in schema.fieldNames() else None
 
-        dtype = _logical_schema(metadata)[column].dataType
-        for f, add in sorted(live.items()):
+    def entry(f: str):
+        add = live[f]
+        if partition:
             pv = add.get("partitionValues") or {}
+            # a foreign log may key the value by its logical name
             key = phys_col if phys_col in pv else column
-            if key not in pv:
-                kept[f] = add  # foreign log without the value: never skip
-                continue
-            if pv[key] is None:
-                continue  # null partition: fails the range residual anyway
-            v = _parse_partition_value(pv[key], dtype)
-            if v is None or lo <= v <= hi:
-                kept[f] = add
-    else:
-        for f, add in sorted(live.items()):
-            stats_raw = add.get("stats")
-            keep = True
-            if stats_raw:
-                try:
-                    stats = json.loads(stats_raw)
-                    mn = stats.get("minValues", {}).get(phys_col)
-                    mx = stats.get("maxValues", {}).get(phys_col)
-                    if mn is not None and mx is not None:
-                        # negated form: NaN makes both comparisons False -> keep
-                        keep = not (mn > hi or mx < lo)
-                except (json.JSONDecodeError, TypeError, AttributeError):
-                    keep = True  # malformed stats of any shape: never skip
-            if keep:
-                kept[f] = add
+            return {phys_col: pv[key]} if key in pv else {}
+        try:
+            return json.loads(add.get("stats") or "null")
+        except (ValueError, TypeError):
+            return None  # malformed stats of any shape: never skip
+
+    ok, unknown = overlapping_files(
+        sorted(live), phys_col, dtype, lo, hi, entry, partition
+    )
+    kept = {f: live[f] for f in sorted({*ok, *unknown})}
     residual = (F.col(column) >= F.lit(lo)) & (F.col(column) <= F.lit(hi))
     if not kept:
         # same residual filter on the empty frame so a typo'd column name

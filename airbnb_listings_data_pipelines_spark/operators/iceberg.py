@@ -1274,6 +1274,8 @@ def export_iceberg_metadata(table, format_version: int | None = None) -> int:
         schemas = prev_schemas + [ice_schema]
     field_ids = {f["name"]: f["id"] for f in ice_schema["fields"]}
 
+    from .txlog import _file_rows
+
     stats = snap.stats
     added_at = _file_added_versions(table.log_dir)
 
@@ -1391,13 +1393,7 @@ def export_iceberg_metadata(table, format_version: int | None = None) -> int:
     row_cursor = int((prev or {}).get("next-row-id", 0))
     row_budget_start = row_cursor
     for f in sorted(set(files) - accounted):
-        n = (stats.get(f) or {}).get("numRecords")
-        if n is None:
-            import pyarrow.parquet as pq
-
-            n = pq.ParquetFile(
-                os.path.join(table.path, f)
-            ).metadata.num_rows
+        n = _file_rows(table.path, f, stats)
         added_v = added_at.get(f, version)
         part_rec = {}
         if pby:

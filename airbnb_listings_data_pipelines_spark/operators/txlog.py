@@ -509,13 +509,37 @@ def footer_stats_dict(
     return out
 
 
+def _stats_entry(stats: dict, f: str) -> dict:
+    """``f``'s entry in a per-file stats map; ``{}`` when it is missing
+    or not a dict (a malformed foreign entry says nothing)."""
+    e = stats.get(f)
+    return e if isinstance(e, dict) else {}
+
+
+def _file_rows(root: str, f: str, *stats: dict) -> int:
+    """Data file ``f``'s row count: the first recorded ``numRecords``
+    among the ``stats`` maps, else its parquet footer's ``num_rows`` (one
+    metadata-only open, for files committed before stats recording)."""
+    for m in stats:
+        n = _stats_entry(m, f).get("numRecords")
+        if n is not None:
+            return int(n)
+    import pyarrow.parquet as pq
+
+    return pq.ParquetFile(os.path.join(root, f)).metadata.num_rows
+
+
 def _coerce_stat(v, dtype):
     """A recorded stats value re-typed against the table schema for a
     driver-side range comparison: numerics/bools/strings pass through;
     ISO/decimal strings parse via the partition-value rules. None =
-    unusable (the consumer conservatively keeps the file)."""
+    unusable (the consumer conservatively keeps the file). With no
+    known type only numbers are comparable (a string may be a decimal,
+    whose text order is not its value order)."""
     if v is None:
         return None
+    if dtype is None:
+        return v if isinstance(v, (int, float)) else None
     name = dtype.typeName()
     if name in ("byte", "short", "integer", "long", "float", "double"):
         return v if isinstance(v, (int, float)) else None
@@ -535,6 +559,78 @@ def _coerce_stat(v, dtype):
             )
         return parsed
     return None
+
+
+def overlapping_files(
+    files, key: str, dtype, lo, hi, entry, partition: bool = False
+) -> tuple[list[str], list[str]]:
+    """Data skipping's one rule (Delta paper §4.4), shared by the txlog
+    and Delta skippers: ``(kept, unknown)`` — the ``files`` that may hold
+    rows with the column in ``[lo, hi]``, and those whose entry says
+    nothing usable about it (keep them, or ask their footers). Every
+    other file provably holds no such row.
+
+    ``entry(f)`` is the file's partition-values map when the column is a
+    partition column (``partition=True``), else its stats entry; ``key``
+    names the column in it (the physical name under column mapping).
+    ``dtype`` is the column's type, None when unknown. String bounds
+    against a non-string column parse as that type (``'2024-03-01'``
+    against a DATE compares as a date); a bound that does not parse
+    raises ValueError. Values compare in the NaN-safe negated form
+    ``not (min > hi or max < lo)``, and a TypeError between kinds keeps
+    the file, so an unordered comparison never skips.
+
+    - partition: a missing value keeps, a null one skips (a null never
+      satisfies the range), an unparseable one keeps;
+    - stats: an all-null column (``nullCount == numRecords``) skips; a
+      missing, malformed or non-dict entry, or a missing or mistyped
+      bound, is unknown."""
+    from pyspark.sql.types import StringType
+
+    def bound(b):
+        if not isinstance(b, str) or dtype is None or isinstance(dtype, StringType):
+            return b
+        v = _parse_partition_value(b, dtype)
+        if v is None:
+            raise ValueError(f"prune bounds for {key!r} do not parse as {dtype}")
+        return v
+
+    lo, hi = bound(lo), bound(hi)
+
+    def overlaps(mn, mx) -> bool:
+        try:
+            return not (mn > hi or mx < lo)
+        except TypeError:
+            return True
+
+    kept: list[str] = []
+    unknown: list[str] = []
+    for f in files:
+        e = entry(f)
+        if not isinstance(e, dict):
+            unknown.append(f)
+        elif partition:
+            if key not in e:
+                kept.append(f)
+            elif e[key] is not None:
+                v = e[key] if dtype is None else _parse_partition_value(e[key], dtype)
+                if v is None or overlaps(v, v):
+                    kept.append(f)
+        else:
+            nulls, mins, maxs = (
+                e.get(k) if isinstance(e.get(k), dict) else {}
+                for k in ("nullCount", "minValues", "maxValues")
+            )
+            n = e.get("numRecords")
+            if n is not None and nulls.get(key) == n:
+                continue
+            mn = _coerce_stat(mins.get(key), dtype)
+            mx = _coerce_stat(maxs.get(key), dtype)
+            if mn is None or mx is None:
+                unknown.append(f)
+            elif overlaps(mn, mx):
+                kept.append(f)
+    return kept, unknown
 
 
 # commits that create a table: checkpoint-flagged, and they carry their
@@ -747,6 +843,7 @@ class TxLogTable:
             _checks=gen_checks or None,
         )
         schema_json = df.schema.json()
+        stats0: dict[str, dict] = {}
         if gen:
             schema_json = _annotate_generated(schema_json, gen)
         if ident:
@@ -756,9 +853,8 @@ class TxLogTable:
                 for c, (s, st) in ident.items()
             }
             if files:
-                schema_json = _identity_hw_update(
-                    schema_json, t._identity_new_hw(files, meta0)
-                )
+                hws, stats0 = t._identity_new_hw(files, meta0)
+                schema_json = _identity_hw_update(schema_json, hws)
         t._try_commit(
             0,
             adds=files,
@@ -774,6 +870,7 @@ class TxLogTable:
                 # those folds per commit — appendOnly/dv-routing/row-
                 # tracking gates)
                 "properties_reset": {},
+                **({"stats": stats0} if stats0 else {}),
             },
         )
         return t
@@ -986,16 +1083,18 @@ class TxLogTable:
         )
         os.makedirs(t.log_dir, exist_ok=False)
         # foreign per-file statistics adopt as-is (Delta's add.stats is
-        # the same envelope this log records); files the foreign writer
-        # left statless get footer-derived entries stamped by the commit
+        # the same envelope this log records; overlapping_files reads
+        # any bounds in it NaN-safely); files the foreign writer left
+        # statless, or with stats that are not a JSON object, get
+        # footer-derived entries stamped by the commit
         stats0: dict[str, dict] = {}
         for f, a in st.live.items():
             s = a.get("stats")
-            if not s:
-                continue
             try:
-                d = json.loads(s) if isinstance(s, str) else dict(s)
-            except (ValueError, TypeError):
+                d = json.loads(s) if isinstance(s, str) else s
+            except ValueError:
+                continue
+            if not isinstance(d, dict):
                 continue
             ent = {
                 k: d[k]
@@ -1572,37 +1671,24 @@ class TxLogTable:
     def file_stats(
         self, columns: list[str] | None = None, files: list[str] | None = None
     ) -> dict[str, dict]:
-        """Per-file column (min, max) envelopes from the parquet footers —
-        the statistics Delta stores per add-entry for data skipping (Delta
-        paper §4.4). Derived here from footers at query time; persisting
-        them into the commit at write time is the same information one hop
-        earlier. Footer reads are metadata-only (no row groups touched).
-        ``files`` defaults to the latest snapshot's live list; DML passes
-        an explicit replay-consistent list so retry loops stat the exact
-        snapshot they are about to commit against."""
-        import pyarrow.parquet as pq
-
-        stats: dict[str, dict] = {}
-        for f in self.files() if files is None else files:
-            md = pq.ParquetFile(os.path.join(self.path, f)).metadata
-            env: dict[str, tuple] = {}
-            for rg in range(md.num_row_groups):
-                row_group = md.row_group(rg)
-                for ci in range(row_group.num_columns):
-                    col = row_group.column(ci)
-                    name = col.path_in_schema
-                    if columns is not None and name not in columns:
-                        continue
-                    st = col.statistics
-                    if st is None or not st.has_min_max:
-                        continue
-                    lo, hi = st.min, st.max
-                    if name in env:
-                        env[name] = (min(env[name][0], lo), max(env[name][1], hi))
-                    else:
-                        env[name] = (lo, hi)
-            stats[f] = env
-        return stats
+        """Per-file ``{column: (min, max)}`` envelopes, a view over the
+        snapshot's recorded stats (:meth:`stats_at`, values as recorded:
+        dates as ISO strings); a file with no entry reads its footer
+        (:func:`footer_stats_dict`). ``files`` defaults to the latest
+        snapshot's live list; ``columns`` to every bounded column."""
+        snap = self._snapshot()
+        out: dict[str, dict] = {}
+        for f in snap.files if files is None else files:
+            e = _stats_entry(snap.stats, f) or footer_stats_dict(
+                os.path.join(self.path, f)
+            ) or {}
+            mins, maxs = e.get("minValues") or {}, e.get("maxValues") or {}
+            out[f] = {
+                c: (mins[c], maxs[c])
+                for c in mins
+                if c in maxs and (columns is None or c in columns)
+            }
+        return out
 
     def stats_at(self, as_of: int | None = None) -> dict[str, dict]:
         """Per-file recorded statistics at ``as_of`` (default: latest):
@@ -1628,27 +1714,18 @@ class TxLogTable:
         count of its immutable files and merge-on-read deletes are
         exactly the DV cardinalities."""
         snap = self._snapshot(as_of)
-        total = 0
-        for f in snap.live:
-            n = (snap.stats.get(f) or {}).get("numRecords")
-            if n is None:
-                import pyarrow.parquet as pq
-
-                n = pq.ParquetFile(
-                    os.path.join(self.path, f)
-                ).metadata.num_rows
-            total += int(n)
+        total = sum(_file_rows(self.path, f, snap.stats) for f in snap.live)
         total -= sum(int(d.get("cardinality", 0)) for d in snap.dvs.values())
         return total
 
     def read_where(self, column: str, lo, hi) -> DataFrame:
-        """Snapshot read with FILE-LEVEL skipping: only files whose footer
-        (min, max) envelope for ``column`` overlaps [lo, hi] are handed to
-        the scan; the residual row filter is applied on top (skipping is an
-        optimization, never a semantics change). Files lacking stats for
-        the column are conservatively kept.
+        """Snapshot read with FILE-LEVEL skipping: only files whose
+        recorded (min, max) envelope for ``column`` overlaps [lo, hi] are
+        handed to the scan; the residual row filter is applied on top
+        (skipping is an optimization, never a semantics change). Files
+        lacking stats for the column are conservatively kept.
 
-        On a PARTITION column the skip needs no footers at all: the value
+        On a PARTITION column the skip needs no stats at all: the value
         is parsed from the file's ``col=value`` directory name and compared
         driver-side — untouched partitions are never listed, opened, or
         read, the partition-pruning contract a 100 TB fact table relies on.
@@ -1667,103 +1744,43 @@ class TxLogTable:
         self, files: list[str], column: str, lo, hi, snap: Snapshot | None = None
     ) -> list[str]:
         """The file subset of ``files`` that may hold rows with ``column``
-        in [lo, hi]: directory-name comparison for partition columns (zero
-        I/O), footer (min, max) envelopes otherwise (metadata-only reads).
-        Shared by :meth:`read_where` and the DML prune hints; takes the
-        file list explicitly so DML retry loops prune the replay-consistent
-        snapshot they will commit against. String bounds against a
-        non-string column are coerced through the partition-value parser
-        (the type the SQL front-end cannot know: ``'2024-03-01'`` against
-        a DATE partition compares as a date, not a string). ``snap``
-        (default: latest) supplies the spec, schema, mapping and stats."""
+        in [lo, hi], by :func:`overlapping_files`: directory names for
+        partition columns, the snapshot's recorded stats otherwise — zero
+        I/O, the difference between "plan time opens every footer over
+        the network" and "plan time opens nothing" on a 100 TB table.
+        Only a file with no entry, or no usable bounds for the column,
+        falls back to its footer (:func:`footer_stats_dict`). Shared by
+        :meth:`read_where` and the DML prune hints; takes the file list
+        explicitly so DML retry loops prune the replay-consistent
+        snapshot they will commit against. ``snap`` (default: latest)
+        supplies the spec, schema, mapping and stats."""
         snap = snap or self._snapshot()
         pby, pschema = snap.partition()
         if column in pby:
-            fld = pschema[column].dataType
-            from pyspark.sql.types import StringType
-
-            if not isinstance(fld, StringType):
-                if isinstance(lo, str):
-                    lo = _parse_partition_value(lo, fld)
-                if isinstance(hi, str):
-                    hi = _parse_partition_value(hi, fld)
-                if lo is None or hi is None:
-                    raise ValueError(
-                        f"prune bounds for {column!r} do not parse as {fld}"
-                    )
-            kept = []
-            for f in files:
-                raw = hive_partition_values(f).get(column)
-                if raw is None:
-                    continue
-                v = _parse_partition_value(raw, fld)
-                if v is None:
-                    kept.append(f)  # unparseable: conservatively keep
-                elif lo <= v <= hi:
-                    kept.append(f)
-            return kept
-        # string bounds against a typed non-partition column: coerce via
-        # the recorded schema (same promise as the partition branch —
-        # footer envelopes are typed values, not strings)
-        sj = snap.schema
-        if isinstance(lo, str) or isinstance(hi, str):
-            if sj is not None:
-                from pyspark.sql.types import StringType, StructType
-
-                schema = StructType.fromJson(json.loads(sj))
-                if column in schema.fieldNames() and not isinstance(
-                    schema[column].dataType, StringType
-                ):
-                    dt = schema[column].dataType
-                    if isinstance(lo, str):
-                        lo = _parse_partition_value(lo, dt)
-                    if isinstance(hi, str):
-                        hi = _parse_partition_value(hi, dt)
-                    if lo is None or hi is None:
-                        raise ValueError(
-                            f"prune bounds for {column!r} do not parse as {dt}"
-                        )
-        # stats (log-recorded and footer alike) carry PHYSICAL column
-        # names on a column-mapped table
-        phys = (snap.mapping or {}).get(column, column)
+            return overlapping_files(
+                files, column, pschema[column].dataType, lo, hi,
+                hive_partition_values, partition=True,
+            )[0]
         dt = None
-        if sj is not None:
+        if snap.schema is not None:
             from pyspark.sql.types import StructType
 
-            schema = StructType.fromJson(json.loads(sj))
+            schema = StructType.fromJson(json.loads(snap.schema))
             if column in schema.fieldNames():
                 dt = schema[column].dataType
-        # LOG-RECORDED envelopes first: zero I/O of any kind — the prune
-        # decision for a stats-carrying file is a driver-side compare
-        # against state already folded from the commit log, which is the
-        # difference between "plan time opens every footer over the
-        # network" and "plan time opens nothing" on a 100 TB table.
-        # Files without usable log stats fall back to footer envelopes.
-        log_stats = snap.stats if dt is not None else {}
-        keep: set[str] = set()
-        need_footer: list[str] = []
-        for f in files:
-            env = log_stats.get(f)
-            if env is None:
-                need_footer.append(f)
-                continue
-            n = env.get("numRecords")
-            nc = (env.get("nullCount") or {}).get(phys)
-            if n is not None and nc is not None and int(nc) == int(n):
-                # every value is NULL: no row can satisfy a range
-                # residual, drop the file without touching it
-                continue
-            slo = _coerce_stat((env.get("minValues") or {}).get(phys), dt)
-            shi = _coerce_stat((env.get("maxValues") or {}).get(phys), dt)
-            if slo is None or shi is None:
-                need_footer.append(f)
-                continue
-            if slo <= hi and shi >= lo:
-                keep.add(f)
-        for f, env in self.file_stats([phys], files=need_footer).items():
-            if phys not in env or (env[phys][0] <= hi and env[phys][1] >= lo):
-                keep.add(f)
-        return [f for f in files if f in keep]
+        # stats carry PHYSICAL column names on a column-mapped table
+        phys = (snap.mapping or {}).get(column, column)
+        kept, unknown = overlapping_files(
+            files, phys, dt, lo, hi, lambda f: _stats_entry(snap.stats, f)
+        )
+        if unknown:
+            footer, unknown = overlapping_files(
+                unknown, phys, dt, lo, hi,
+                lambda f: footer_stats_dict(os.path.join(self.path, f)),
+            )
+            keep = {*kept, *footer, *unknown}
+            kept = [f for f in files if f in keep]
+        return kept
 
     # ----------------------------------------------------- row-level DML
 
@@ -2309,7 +2326,7 @@ class TxLogTable:
                     else self._write_data(moved.select(*cols, *rt), snap)
                 )
                 removes, dv_updates = self._vector_commit(
-                    moved.select("__file", "__ridx"), dvs
+                    moved.select("__file", "__ridx"), snap
                 )
             v = self._commit_attempt(
                 snap, adds=adds, removes=removes, op=op, schema=snap.schema,
@@ -2322,12 +2339,12 @@ class TxLogTable:
     def _vector_commit(
         self,
         positions: DataFrame,
-        dvs: dict[str, dict],
+        snap: Snapshot,
         files: list[str] | None = None,
     ) -> tuple[list[str], dict[str, dict]]:
         """The deletion-vector half of one DV commit, shared by
         :meth:`_dml_dv` and the DV MERGE: ``positions`` (the scan's
-        ``__file`` URI and ``__ridx``, distinct) leave the table.
+        ``__file`` URI and ``__ridx``, distinct) leave ``snap``'s table.
         Returns ``(removes, dv_updates)`` for :meth:`_commit_dml`.
 
         1. Resolve each position's file to its RELATIVE path. Fast path
@@ -2347,12 +2364,14 @@ class TxLogTable:
            the collected counts, or on the fast path one driver-side
            pyarrow read of the sidecar just written; a file holding only
            its priors keeps its old descriptor.
-        4. A file whose vector covers every row is retired outright (no
-           all-rows-deleted DV); a sidecar nothing references is
-           removed. No position leaving: no sidecar at all."""
+        4. A file whose vector covers every row (its recorded row
+           count) is retired outright (no all-rows-deleted DV); a
+           sidecar nothing references is removed. No position
+           leaving: no sidecar at all."""
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
+        dvs = snap.dvs
         rel_of: dict[str, str] | None = None
         if files is not None:
             rel_of = {}
@@ -2410,10 +2429,7 @@ class TxLogTable:
         removes: list[str] = []
         dv_updates: dict[str, dict] = {}
         for rel in sorted(card):
-            nrows = pq.ParquetFile(
-                os.path.join(self.path, rel)
-            ).metadata.num_rows
-            if card[rel] >= nrows:
+            if card[rel] >= _file_rows(self.path, rel, snap.stats):
                 removes.append(rel)
             else:
                 dv_updates[rel] = {
@@ -2740,9 +2756,9 @@ class TxLogTable:
         )
         extra = dict(extra or {})
         # per-file statistics stamped at the commit that ADDS the file
-        # (Delta's add.stats, one hop earlier than deriving them from
-        # footers at query time): numRecords powers metadata-only
-        # COUNT(*), min/max envelopes power zero-I/O file skipping. The
+        # (Delta's add.stats): numRecords powers metadata-only COUNT(*),
+        # min/max envelopes power zero-I/O file skipping, and the Delta
+        # export publishes them as add.stats. The
         # footers were just written (or adopted) by this very op, so the
         # reads are warm metadata-only opens, O(this commit's adds).
         # Restore re-adds OLD files — their entries arrive via
@@ -2789,17 +2805,10 @@ class TxLogTable:
                 todo += sorted(snap.live - set(removes) - set(adds) - set(known))
             rb: dict[str, int] = {}
             for f in todo:
-                n = ((extra.get("stats") or {}).get(f) or {}).get("numRecords")
-                if n is None:
-                    n = (snap.stats.get(f) or {}).get("numRecords")
-                if n is None:
-                    import pyarrow.parquet as _pq
-
-                    n = _pq.ParquetFile(
-                        os.path.join(self.path, f)
-                    ).metadata.num_rows
                 rb[f] = hw + 1
-                hw += int(n)
+                hw += _file_rows(
+                    self.path, f, extra.get("stats") or {}, snap.stats
+                )
             if reset is not None:
                 if rb:
                     extra["row_base_reset"] = {**reset, **rb}
@@ -3049,6 +3058,7 @@ class TxLogTable:
         adds: list[str] | None = None
         validated: dict[str, str] | None = None
         ident_hws: dict[str, int] | None = None
+        ident_stats: dict[str, dict] | None = None
         for _attempt in range(max_retries + 1):
             # ORDER MATTERS: capture base_version BEFORE the txn check.
             # The check then covers every commit at/below base_version,
@@ -3089,7 +3099,7 @@ class TxLogTable:
                 validated = snap.checks
                 adds = self._write_data(df, snap, _checks=validated)
                 if ident:
-                    ident_hws = self._identity_new_hw(adds, ident)
+                    ident_hws, ident_stats = self._identity_new_hw(adds, ident)
             else:
                 # files already staged from a lost race: if an add_check
                 # landed since they were validated, re-validate against
@@ -3120,6 +3130,7 @@ class TxLogTable:
                 return self.commit(
                     adds=adds, removes=[], base_version=base_version,
                     op="append", schema=commit_schema, txn=txn,
+                    stats=ident_stats,
                 )
             except CommitConflict:
                 continue
@@ -3150,7 +3161,7 @@ class TxLogTable:
         ``prune=(column, lo, hi)`` SCOPES the compaction to files
         overlapping the range — Delta's ``OPTIMIZE ... WHERE`` (partition
         predicates resolve by DIRECTORY NAME, zero I/O; other columns by
-        footer envelopes). At 100 TB nobody compacts the whole table: the
+        recorded stats envelopes). At 100 TB nobody compacts the whole table: the
         operational shape is "optimize yesterday's partition", which
         reads and rewrites that partition only — cost O(selected files),
         table size never enters. Selecting zero files returns the current
@@ -3226,8 +3237,9 @@ class TxLogTable:
                 # — cost tracks bytes added since the last pass, never
                 # the table. The tag rides the per-file stats fold
                 # (checkpoint/restore/clone lifecycle for free; the
-                # Delta export derives add.stats from footers, so the
-                # engine-internal key never leaks to external readers).
+                # Delta export publishes only the protocol's stats keys,
+                # so the engine-internal key never leaks to external
+                # readers).
                 files = [
                     f
                     for f in files
@@ -3635,14 +3647,16 @@ class TxLogTable:
 
     def _identity_new_hw(
         self, adds: list[str], meta: dict[str, dict]
-    ) -> dict[str, int]:
+    ) -> tuple[dict[str, int], dict[str, dict]]:
         """New high watermarks after writing ``adds``: the furthest
         assigned value per identity column, read from the new files'
         parquet FOOTER STATS (no data scan — the stats are already
-        computed by the write)."""
+        computed by the write). Also returns those stats entries, for
+        the commit to record instead of opening each footer again."""
         hws: dict[str, int] = {}
+        stats: dict[str, dict] = {}
         for f in adds:
-            d = footer_stats_dict(os.path.join(self.path, f))
+            d = stats[f] = footer_stats_dict(os.path.join(self.path, f))
             for c, m in meta.items():
                 key = "maxValues" if m["step"] > 0 else "minValues"
                 v = (d.get(key) or {}).get(c)
@@ -3654,7 +3668,7 @@ class TxLogTable:
                 cur = hws.get(c)
                 far = max if m["step"] > 0 else min
                 hws[c] = int(v) if cur is None else far(cur, int(v))
-        return hws
+        return hws, stats
 
     # ------------------------------------------------------- row tracking
 
@@ -4835,19 +4849,21 @@ def _merge_commit_schema(
     out_json: str,
     ident: dict[str, dict],
     adds: list[str],
-) -> str:
+) -> tuple[str, dict[str, dict] | None]:
     """The schema a MERGE commit records (:func:`_dml_evolved_schema`)
     plus any identity high-watermark advance, read from the new files'
     footer stats and clamped monotone: a no-insert merge's files hold
-    only preserved ids at/below the current watermark."""
+    only preserved ids at/below the current watermark. Returns the
+    schema and the footer stats read (None when none were), for the
+    commit to record."""
     schema = _dml_evolved_schema(stored_json, out_json)
     if not (ident and adds):
-        return schema
-    hws = table._identity_new_hw(adds, ident)
+        return schema, None
+    hws, stats = table._identity_new_hw(adds, ident)
     for c, m in ident.items():
         if m["hw"] is not None:
             hws[c] = (max if m["step"] > 0 else min)(m["hw"], hws[c])
-    return _identity_hw_update(schema, hws)
+    return _identity_hw_update(schema, hws), stats
 
 
 def _merge_post_image(
@@ -5130,19 +5146,19 @@ def _merge_into_dv(
                 flat.filter("__del OR __upd")
                 .select("__file", "__ridx")
                 .distinct(),
-                dvs,
+                snap,
                 touched_files,
             )
         # stored schema (metadata intact) + evolution + watermark advance
         # — same rule as copy-on-write (see merge_into_txlog)
-        commit_schema = _merge_commit_schema(
+        commit_schema, ident_stats = _merge_commit_schema(
             table, schema_json, new_rows.schema.json(), cur_ident, adds
         )
         if (
             table._commit_attempt(
                 snap, adds=adds, removes=removes, op="merge",
                 schema=commit_schema, txn=txn, column_mapping=new_mapping,
-                dvs=dv_updates or None,
+                dvs=dv_updates or None, stats=ident_stats,
             )
             is not None
         ):
@@ -5444,7 +5460,7 @@ def merge_into_txlog(
                     # the change feed is LOGICAL rows — drop the physical-
                     # only row-id column (lenient no-op when absent)
                     cdc_rel = table._write_cdc(cdc_df.drop(_ROW_ID_PHYS), snap)
-            commit_schema = _merge_commit_schema(
+            commit_schema, ident_stats = _merge_commit_schema(
                 table, schema_json, merged.schema.json(), cur_ident, adds
             )
             if (
@@ -5452,6 +5468,7 @@ def merge_into_txlog(
                     snap, adds=adds, removes=removes, op="merge",
                     schema=commit_schema, txn=txn,
                     column_mapping=new_mapping, cdc=cdc_rel,
+                    stats=ident_stats,
                 )
                 is not None
             ):

@@ -357,6 +357,34 @@ def test_random_operation_sequences_roundtrip(spark, tmp_path):
             ), (seed, v)
 
 
+def _two_range_table(spark, path) -> TxLogTable:
+    """Two exported files with disjoint id ranges: 0-9 and 100-109."""
+    lo_df = spark.createDataFrame([(i, "lo") for i in range(10)], ["id", "v"]).coalesce(1)
+    t = TxLogTable.create(spark, path, lo_df)
+    hi_df = spark.createDataFrame([(i, "hi") for i in range(100, 110)], ["id", "v"]).coalesce(1)
+    adds = t._write_data(hi_df)
+    t.commit(adds=adds, removes=[], base_version=0, op="append")
+    t.to_delta_log()
+    return t
+
+
+def _corrupt_add_stats(path, version, stats):
+    """Rewrite every ``add.stats`` of Delta commit ``version`` to
+    ``stats``, as a defective foreign writer would have logged them."""
+    c = os.path.join(path, "_delta_log", f"{version:020d}.json")
+    lines = open(c).read().splitlines()
+    for i, line in enumerate(lines):
+        a = json.loads(line)
+        if "add" in a:
+            a["add"]["stats"] = stats
+            lines[i] = json.dumps(a)
+    with open(c, "w") as fh:
+        fh.write("\n".join(lines) + "\n")
+
+
+_NAN_STATS = '{"minValues":{"id":NaN},"maxValues":{"id":NaN},"nullCount":{}}'
+
+
 def test_read_delta_where_skips_files_by_log_stats(spark, tmp_path):
     """Stats-driven skipping: two disjoint-range files; a range query must
     read ONLY the overlapping file (verified via the input_file_name set)
@@ -366,12 +394,7 @@ def test_read_delta_where_skips_files_by_log_stats(spark, tmp_path):
     )
 
     path = str(tmp_path / "t")
-    lo_df = spark.createDataFrame([(i, "lo") for i in range(10)], ["id", "v"]).coalesce(1)
-    t = TxLogTable.create(spark, path, lo_df)
-    hi_df = spark.createDataFrame([(i, "hi") for i in range(100, 110)], ["id", "v"]).coalesce(1)
-    adds = t._write_data(hi_df)
-    t.commit(adds=adds, removes=[], base_version=0, op="append")
-    t.to_delta_log()
+    _two_range_table(spark, path)
     got = read_delta_where(spark, path, "id", 100, 105)
     rows = got.collect()
     assert {r.id for r in rows} == set(range(100, 106))
@@ -388,31 +411,103 @@ def test_read_delta_where_skips_files_by_log_stats(spark, tmp_path):
     assert read_delta_where(spark, path, "id", 50, 60).count() == 0
     # NaN bounds in foreign stats must KEEP the file (negated-form test):
     # corrupt the hi file's stats to NaN and re-read — rows still found
-    import json as _json
-
-    c1 = os.path.join(path, "_delta_log", "0" * 19 + "1.json")
-    lines = open(c1).read().splitlines()
-    for i, line in enumerate(lines):
-        a = _json.loads(line)
-        if "add" in a:
-            a["add"]["stats"] = '{"minValues":{"id":NaN},"maxValues":{"id":NaN},"nullCount":{}}'
-            lines[i] = _json.dumps(a)
-    with open(c1, "w") as fh:
-        fh.write("\n".join(lines) + "\n")
+    _corrupt_add_stats(path, 1, _NAN_STATS)
     assert {r.id for r in read_delta_where(spark, path, "id", 100, 105).collect()} == set(
         range(100, 106)
     )
     # malformed non-dict stats: conservative keep, no crash
-    for i, line in enumerate(lines):
-        a = _json.loads(line)
-        if "add" in a:
-            a["add"]["stats"] = "4"
-            lines[i] = _json.dumps(a)
-    with open(c1, "w") as fh:
-        fh.write("\n".join(lines) + "\n")
+    _corrupt_add_stats(path, 1, "4")
     assert {r.id for r in read_delta_where(spark, path, "id", 100, 105).collect()} == set(
         range(100, 106)
     )
+
+
+def _adopt_with_stats(spark, tmp_path, stats) -> TxLogTable:
+    """:func:`_two_range_table` adopted back as a foreign Delta table
+    whose second commit's ``add.stats`` are ``stats``."""
+    import shutil
+
+    path = str(tmp_path / "t")
+    t = _two_range_table(spark, path)
+    shutil.rmtree(t.log_dir)
+    _corrupt_add_stats(path, 1, stats)
+    return TxLogTable.convert_from_delta(spark, path)
+
+
+def test_adopted_nan_stats_keep_rows_for_read_where(spark, tmp_path):
+    """NaN bounds adopted from a foreign log cannot rule a file out: the
+    pruned read returns the rows of the unpruned filter."""
+    c = _adopt_with_stats(spark, tmp_path, _NAN_STATS)
+    got = c.read_where("id", 100, 105)
+    assert _rows(got) == _rows(c.read().filter("id BETWEEN 100 AND 105"))
+    assert len(_rows(got)) == 6
+
+
+def test_adopted_nan_stats_keep_rows_for_pruned_delete(spark, tmp_path):
+    """The same NaN bounds under a DML prune hint: the delete reaches
+    every matching row."""
+    c = _adopt_with_stats(spark, tmp_path, _NAN_STATS)
+    c.delete_where("id BETWEEN 100 AND 105", prune=("id", 100, 105))
+    assert c.read().filter("id BETWEEN 100 AND 105").count() == 0
+    assert c.read().count() == 14
+
+
+def test_adopted_non_dict_stats_count_as_absent(spark, tmp_path):
+    """A foreign ``add.stats`` that is JSON but not an object adopts as
+    no stats: the commit fills the entry from the footer, so the
+    metadata-only count stays exact."""
+    c = _adopt_with_stats(spark, tmp_path, "4")
+    assert c.row_count() == c.read().count() == 20
+
+
+def test_txlog_and_delta_skippers_agree(spark, tmp_path):
+    """The txlog skipper (recorded stats) and the Delta skipper (the
+    exported add.stats) are one rule: on int, string and DATE columns,
+    string bounds on a DATE partition and an empty range, they return
+    the same rows from the same number of files."""
+    import datetime
+
+    from airbnb_listings_data_pipelines_spark.operators.deltalog import (
+        read_delta_where,
+    )
+
+    D = datetime.date
+    schema = "id int, name string, d date, day date"
+
+    def batch(k):
+        day = D(2024, 1, 1) if k < 2 else D(2024, 2, 1)
+        return spark.createDataFrame(
+            [
+                (100 * k + i, f"{chr(97 + k)}-{i}", D(2024, 1 + k, 1 + i), day)
+                for i in range(10)
+            ],
+            schema,
+        ).coalesce(1)
+
+    path = str(tmp_path / "t")
+    t = TxLogTable.create(spark, path, batch(0), partition_by=["day"])
+    for k in (1, 2, 3):
+        t.append(batch(k))
+    t.to_delta_log()
+    assert len(t.files()) == 4
+    cols = ["id", "name", "d", "day"]
+    cases = [
+        ("id", 105, 205, 2),
+        ("name", "b", "b~", 1),
+        ("d", D(2024, 3, 1), D(2024, 3, 5), 1),
+        ("d", "2024-03-01", "2024-03-05", 1),
+        ("day", "2024-02-01", "2024-02-01", 2),
+        ("day", D(2024, 1, 1), D(2024, 1, 1), 2),
+        ("id", 5000, 6000, 0),
+    ]
+    for column, lo, hi, n_files in cases:
+        tx = t.read_where(column, lo, hi)
+        dl = read_delta_where(spark, path, column, lo, hi)
+        case = (column, lo, hi)
+        assert sorted(map(tuple, tx.select(cols).collect())) == sorted(
+            map(tuple, dl.select(cols).collect())
+        ), case
+        assert len(tx.inputFiles()) == len(dl.inputFiles()) == n_files, case
 
 
 # ---------------------------------------------------- CONVERT FROM DELTA

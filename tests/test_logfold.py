@@ -208,3 +208,34 @@ def test_table_state_never_walks_the_log_outside_the_snapshot():
         assert not stray, f"{rel}: log walks outside the snapshot: {stray}"
         seen = {n for n, _ in walks}
         assert allowed <= seen, f"{rel}: stale allow-list {allowed - seen}"
+
+
+def test_only_footer_stats_dict_reads_parquet_column_statistics():
+    """Per-file statistics come from the snapshot's recorded stats;
+    ``txlog.footer_stats_dict`` is the one reader of parquet column
+    statistics (for files with no recorded entry). A skipper, export or
+    accessor that grows its own footer loop reads ``.statistics`` and
+    fails here."""
+    stray, inside = [], 0
+    for root, _dirs, names in os.walk(os.path.join(REPO, PACKAGE)):
+        for name in names:
+            if not name.endswith(".py"):
+                continue
+            path = os.path.join(root, name)
+            with open(path) as fh:
+                tree = ast.parse(fh.read())
+            allowed = set()
+            for node in ast.walk(tree):
+                if (
+                    isinstance(node, ast.FunctionDef)
+                    and node.name == "footer_stats_dict"
+                ):
+                    allowed |= {id(n) for n in ast.walk(node)}
+            for node in ast.walk(tree):
+                if isinstance(node, ast.Attribute) and node.attr == "statistics":
+                    if id(node) in allowed:
+                        inside += 1
+                    else:
+                        stray.append((os.path.relpath(path, REPO), node.lineno))
+    assert not stray, f"parquet statistics read outside footer_stats_dict: {stray}"
+    assert inside, "footer_stats_dict no longer reads parquet statistics"
