@@ -3130,7 +3130,7 @@ class TxLogTable:
                 return self.commit(
                     adds=adds, removes=[], base_version=base_version,
                     op="append", schema=commit_schema, txn=txn,
-                    stats=ident_stats,
+                    **({"stats": ident_stats} if ident_stats else {}),
                 )
             except CommitConflict:
                 continue
